@@ -188,7 +188,8 @@ def blocklist_filter(df: DataFrame, blocked=None,
             lambda h: h.rlike(ABS_HTTP_RE)
             & registrable_domain(url_host(url_canonicalize(h)))
             .isin(*blocked))
-        return df.filter(~hit)
+        # NULL text -> NULL hit; coalesce so the turn passes (no links)
+        return df.filter(~F.coalesce(hit, F.lit(False)))
     links = extract_links(df, id_cols=id_cols, text_col=text_col) \
         .filter(F.col("href").rlike(ABS_HTTP_RE))
     canon = url_canonicalize(F.col("href"))

@@ -28,6 +28,7 @@ import re
 import numpy as np
 import pandas as pd
 
+from pdf_parser_spark.operators.html import strip_html
 from pdf_parser_spark.oracle.boilerplate import strip_boilerplate
 from pdf_parser_spark.oracle.extractor import VARIANTS, extract_turn
 from pdf_parser_spark.payload import unescape_text
@@ -865,43 +866,36 @@ def _rows_from_oracle(pairs) -> pd.DataFrame:
     return pd.DataFrame(recs, columns=["rid"] + LAYOUT_FIELDS)
 
 
+def _html_row(turn_idx: int, header: str = "", footer: str = "",
+              left_column: str = "", metadata: dict | None = None) -> dict:
+    """One html/v1 layout row: there is no page, so the geometry is fixed
+    and ``right_column`` is always empty."""
+    return {
+        "page_number": turn_idx + 1,
+        "header": header, "footer": footer,
+        "left_column": left_column, "right_column": "",
+        "page_width": 0.0, "page_height": 0.0,
+        "column_separator_position": np.nan,
+        "metadata": metadata,
+    }
+
+
 def _extract_html_rows(rows: pd.DataFrame) -> pd.DataFrame:
     """tool='html/v1': DOM boilerplate stripping (north-rule addition).
 
-    The stack-based tokenizer is irreducibly sequential per payload; it runs
-    per turn (not per block-row) inside the Arrow batch, mirroring how
-    pandas str ops iterate internally."""
+    Each turn goes through the engine core ``operators/html.strip_html``
+    (a stack parse per payload; ``tests/test_fuzz.py`` checks it equals
+    the oracle's ``strip_boilerplate``). A core exception is not caught
+    here: it sends the whole batch to the per-turn oracle, like the page
+    path (``extract_batch``)."""
     if rows.empty:
         return _empty_layout_frame()
     recs = []
     for rid, turn_idx, text in rows[["rid", "turn_idx", "text"]].itertuples(index=False):
-        try:
-            res = strip_boilerplate(text)
-            recs.append(
-                {
-                    "rid": rid,
-                    "page_number": int(turn_idx) + 1,
-                    "header": res["header"],
-                    "footer": res["footer"],
-                    "left_column": res["left_column"],
-                    "right_column": res["right_column"],
-                    "page_width": 0.0,
-                    "page_height": 0.0,
-                    "column_separator_position": np.nan,
-                    "metadata": res["metadata"],
-                }
-            )
-        except Exception as exc:  # noqa: BLE001 — degrade per turn
-            recs.append(
-                {
-                    "rid": rid,
-                    "page_number": int(turn_idx) + 1,
-                    "header": "", "footer": "", "left_column": "", "right_column": "",
-                    "page_width": 0.0, "page_height": 0.0,
-                    "column_separator_position": np.nan,
-                    "metadata": {"error": json.dumps(str(exc), ensure_ascii=False)},
-                }
-            )
+        header, footer, main, _spans, metadata = strip_html(text)
+        rec = _html_row(int(turn_idx), header, footer, main, metadata)
+        rec["rid"] = rid
+        recs.append(rec)
     return pd.DataFrame(recs, columns=["rid"] + LAYOUT_FIELDS)
 
 
@@ -942,22 +936,11 @@ def extract_batch(pdf: pd.DataFrame, variant: str = "a003",
 def _html_oracle(text: str, turn_idx: int) -> dict:
     try:
         res = strip_boilerplate(text)
-        return {
-            "page_number": turn_idx + 1,
-            "header": res["header"], "footer": res["footer"],
-            "left_column": res["left_column"], "right_column": res["right_column"],
-            "page_width": 0.0, "page_height": 0.0,
-            "column_separator_position": None,
-            "metadata": res["metadata"],
-        }
-    except Exception as exc:  # noqa: BLE001
-        return {
-            "page_number": turn_idx + 1,
-            "header": "", "footer": "", "left_column": "", "right_column": "",
-            "page_width": 0.0, "page_height": 0.0,
-            "column_separator_position": None,
-            "metadata": {"error": json.dumps(str(exc), ensure_ascii=False)},
-        }
+    except Exception as exc:  # noqa: BLE001 — degrade per turn
+        return _html_row(turn_idx, metadata={
+            "error": json.dumps(str(exc), ensure_ascii=False)})
+    return _html_row(turn_idx, res["header"], res["footer"],
+                     res["left_column"], res["metadata"])
 
 
 _LAYOUT_FIELD_DDL = {

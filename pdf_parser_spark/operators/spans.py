@@ -3,9 +3,10 @@
 The north rule requires "cleaned main-content text and span offsets per
 turn" (BASELINE.json:north_star). ``extract_layouts`` emits the cleaned
 text; this operator emits the span offsets of each kept content block
-inside that cleaned text, as exploded rows. Offsets come from the same
-single source of truth (oracle/boilerplate.strip_boilerplate), so text and
-spans can never drift apart.
+inside that cleaned text, as exploded rows. Text and offsets come from the
+same engine core (``operators/html.strip_html``), so they cannot drift
+apart; ``tests/test_fuzz.py`` checks the core, offsets and ``block_md5``
+against the oracle (``oracle/boilerplate.strip_boilerplate``).
 """
 
 from __future__ import annotations
@@ -17,7 +18,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 
-from pdf_parser_spark.oracle.boilerplate import strip_boilerplate
+from pdf_parser_spark.operators.html import strip_html
 
 SPANS_SCHEMA = (
     "conv_id string, turn_idx long, span_idx long, start_offset long, "
@@ -30,8 +31,7 @@ def _span_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         recs = []
         for conv_id, turn_idx, text in pdf[["conv_id", "turn_idx", "text"]].itertuples(index=False):
             try:
-                res = strip_boilerplate(text)
-                main = res["left_column"]
+                _header, _footer, main, spans, _metadata = strip_html(text)
                 # accumulate locally and extend() only after the whole
                 # turn succeeds — a failure mid-span-list (encode error,
                 # int cast) must not leave the turn partially emitted
@@ -39,7 +39,7 @@ def _span_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                 turn_recs = [
                     (conv_id, int(turn_idx), i, start, end,
                      hashlib.md5(main[start:end].encode("utf-8")).hexdigest())
-                    for i, (start, end) in enumerate(res["spans"])
+                    for i, (start, end) in enumerate(spans)
                 ]
                 recs.extend(turn_recs)
             except Exception:  # noqa: BLE001 — degrade per turn (D1)

@@ -1234,3 +1234,19 @@ def test_blocklist_filter_both_paths(spark):
         blocklist_filter(df)
     with pytest.raises(ValueError, match="exactly one"):
         blocklist_filter(df, blocked=["x.com"], blocked_df=bdf)
+
+
+def test_blocklist_filter_keeps_null_text(spark):
+    """A NULL-text turn has no links, so both paths keep it. The inline
+    path's exists() over a NULL href array is NULL, and a bare ``~hit``
+    filter dropped the row."""
+    from pdf_parser_spark.corpus.links import blocklist_filter
+
+    df = _domain_fixture(spark).union(spark.createDataFrame(
+        [("c4", 0, None)], "conv_id string, turn_idx int, text string"))
+    want = [("c1", 0), ("c2", 0), ("c3", 0), ("c4", 0)]
+    kept_lit = blocklist_filter(df, blocked=["ads.io"])
+    assert sorted((r.conv_id, r.turn_idx) for r in kept_lit.collect()) == want
+    bdf = spark.createDataFrame([("ads.io",)], "domain string")
+    kept_df = blocklist_filter(df, blocked_df=bdf)
+    assert sorted((r.conv_id, r.turn_idx) for r in kept_df.collect()) == want

@@ -9,10 +9,14 @@ exactly the code mapInPandas runs per Arrow batch.
 import math
 
 import pandas as pd
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from pdf_parser_spark.generator import make_html_payload
 from pdf_parser_spark.operators.extract import extract_batch
+from pdf_parser_spark.operators.html import strip_html
+from pdf_parser_spark.operators.spans import _span_batches
 from pdf_parser_spark.oracle.boilerplate import strip_boilerplate
 from pdf_parser_spark.oracle.extractor import extract_turn
 
@@ -56,8 +60,33 @@ _page_payload = st.builds(
              max_size=12),
 )
 
-_html_payload = st.text(
-    alphabet=st.sampled_from(list("<>/abp div nav&;\"'= ")), max_size=200)
+# html/v1 payloads are joined from single characters and whole markup
+# fragments, so the parser's hard cases are reachable: raw-text elements
+# holding tag-like strings, comments / CDATA / doctype, entities (double
+# escaped too), self-closed block and void tags, an unquoted href ending
+# in '/', implied-close li/p/td chains, unclosed <a>, nesting past
+# MAX_CONTENT_DEPTH, the header/footer/nav/aside contexts, mixed case
+_HTML_FRAGMENTS = (
+    list("<>/abp div nav&;\"'= \n\t") + [
+        "<script>", "</script>", "<style>", "</style>", "</SCRIPT>",
+        'var s = "<p>x</p>";', "<Style>p{}</style>",
+        "<!-- <p>hidden</p> -->", "<![CDATA[<div>]]>", "<!DOCTYPE html>",
+        "&amp;lt;", "&nbsp;", "&lt;b&gt;", "&quot;&#39;",
+        "<div/>", "<br/>", "<br>", "<img src=x>", "<p />",
+        "one<br>two", "a<img src=x>b", "word<br/>word",
+        "<a href=foo/>", '<a href="/x">', "<a href='y'>", "</a>", "<A>",
+        "<li>", "<p>", "<td>", "<tr>", "</li>", "</p>", "<ul>", "</ul>",
+        "".join(f"<li>item {i} of an implied-close chain" for i in range(12)),
+        "<p>para<p>graph<P>chain", "<td>a<td>b<td>c",
+        "<div>" * 9, "<div>" * 10, "<div>" * 11, "</div>" * 4,
+        "<div>", "</div>", "<DIV>",
+        "<header>", "</header>", "<footer>", "</footer>",
+        "<aside>", "</aside>", "<nav>", "</nav>", "<main>", "</main>",
+        "<span>", "</span>", "<h1>", "</h1>",
+        "tiny", "main content words long enough to keep a block",
+    ])
+_html_payload = st.lists(st.sampled_from(_HTML_FRAGMENTS),
+                         max_size=60).map("".join)
 
 _any_payload = st.one_of(
     _page_payload, _html_payload, _text, st.none(),
@@ -154,6 +183,52 @@ def test_vectorized_equals_oracle_on_fuzz(rows):
         for k in ("page_width", "page_height", "column_separator_position"):
             assert _norm_float(g[k]) == _norm_float(want[k]), (k, text, tool)
         assert dict(g["metadata"]) == want["metadata"], (text, tool)
+
+
+def _assert_html_core_equals_oracle(payload):
+    """The engine core equals ``strip_boilerplate`` on every field, and
+    ``boilerplate_spans`` emits the oracle's offsets and block hashes."""
+    import hashlib
+
+    want = strip_boilerplate(payload)
+    header, footer, main, spans, metadata = strip_html(payload)
+    assert header == want["header"], payload
+    assert footer == want["footer"], payload
+    assert main == want["left_column"], payload
+    assert want["right_column"] == ""
+    assert spans == want["spans"], payload
+    assert metadata == want["metadata"], payload
+    assert list(metadata) == list(want["metadata"])
+
+    rows = pd.DataFrame({"conv_id": ["c"], "turn_idx": [0], "text": [payload]})
+    got = pd.concat(list(_span_batches(iter([rows]))))
+    want_main = want["left_column"]
+    assert list(zip(got["start_offset"], got["end_offset"])) == want["spans"]
+    assert list(got["block_md5"]) == [
+        hashlib.md5(want_main[a:b].encode("utf-8")).hexdigest()
+        for a, b in want["spans"]]
+
+
+@settings(max_examples=500, deadline=None)
+@given(st.one_of(_html_payload, _text, st.none()))
+def test_html_core_equals_oracle_on_fuzz(payload):
+    _assert_html_core_equals_oracle(payload)
+
+
+@pytest.mark.parametrize("payload", [
+    "<div>" * 9 + "<p>" + "x" * 30,  # depth 10: MAX_CONTENT_DEPTH, kept
+    "<div>" * 10 + "<p>" + "x" * 30,  # depth 11: stripped
+    "<p>" + "x" * 24, "<p>" + "x" * 25,  # MIN_CONTENT_CHARS boundary
+    "<p><a>" + "a" * 10 + "</a>" + "b" * 20,  # link density exactly 1/3
+    "<p><a>" + "a" * 11 + "</a>" + "b" * 19,
+])
+def test_html_core_equals_oracle_at_thresholds(payload):
+    _assert_html_core_equals_oracle(payload)
+
+
+def test_html_core_equals_oracle_on_generator_payloads():
+    for i in range(300):
+        _assert_html_core_equals_oracle(make_html_payload(f"g{i}", i % 17))
 
 
 # --- repetition counters (corpus/textstats.py) ---------------------------

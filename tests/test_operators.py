@@ -196,13 +196,13 @@ def test_span_batches_all_or_nothing(monkeypatch):
     partially emitted (per-turn all-or-nothing degrade, D1 semantics)."""
     import pdf_parser_spark.operators.spans as spans_mod
 
-    def fake_strip(text):
+    def fake_core(text):
         if text == "bad":
             # second span is malformed -> unpack raises mid-turn
-            return {"left_column": "abcdef", "spans": [(0, 3), (3,)]}
-        return {"left_column": "abcdef", "spans": [(0, 3), (3, 6)]}
+            return "", "", "abcdef", [(0, 3), (3,)], {}
+        return "", "", "abcdef", [(0, 3), (3, 6)], {}
 
-    monkeypatch.setattr(spans_mod, "strip_boilerplate", fake_strip)
+    monkeypatch.setattr(spans_mod, "strip_html", fake_core)
     pdf = pd.DataFrame({
         "conv_id": ["c1", "c2"],
         "turn_idx": [0, 1],
@@ -213,6 +213,68 @@ def test_span_batches_all_or_nothing(monkeypatch):
     # turn emits both spans
     assert list(out["conv_id"]) == ["c1", "c1"]
     assert list(out["span_idx"]) == [0, 1]
+
+
+@pytest.mark.parametrize("poison", ["core_raises", "non_string_payload"])
+def test_extract_batch_falls_back_to_oracle(monkeypatch, poison):
+    """A batch whose vectorized path raises is extracted again turn by
+    turn by the oracle: every row of a mixed page/html/plain batch equals
+    the per-turn oracle, and an html payload the oracle cannot parse
+    becomes an error row instead of failing the batch."""
+    import json
+
+    import pdf_parser_spark.operators.extract as extract_mod
+    from pdf_parser_spark.generator import make_html_payload, make_page_payload
+    from pdf_parser_spark.oracle.boilerplate import strip_boilerplate
+    from pdf_parser_spark.oracle.extractor import extract_turn
+
+    texts = [make_page_payload("p", 0, "two_col_line"), make_html_payload("h", 1),
+             "plain words", make_page_payload("p", 3, "malformed"),
+             make_html_payload("h", 4), None]
+    tools = ["page/v1", "html/v1", "plain", "page/v1", "html/v1", None]
+    calls = []
+    if poison == "core_raises":
+        def broken_core(text):
+            calls.append(text)
+            raise RuntimeError("engine html core bug")
+
+        monkeypatch.setattr(extract_mod, "strip_html", broken_core)
+    else:
+        texts[4] = 3.5  # not a string: both the core and the oracle raise
+    pdf = pd.DataFrame({
+        "conv_id": [f"c{i}" for i in range(len(texts))],
+        "turn_idx": list(range(len(texts))),
+        "role": ["user"] * len(texts),
+        "text": texts,
+        "tool": tools,
+    })
+    got = extract_mod.extract_batch(pdf.copy())
+    assert poison != "core_raises" or calls  # the engine path ran first
+    assert list(got["turn_idx"]) == list(range(len(texts)))
+    for i, (text, tool) in enumerate(zip(texts, tools)):
+        g = got.iloc[i]
+        if tool == "html/v1":
+            try:
+                res = strip_boilerplate(text)
+                want = {"page_number": i + 1, "header": res["header"],
+                        "footer": res["footer"],
+                        "left_column": res["left_column"],
+                        "right_column": "", "metadata": res["metadata"]}
+            except TypeError as exc:
+                want = {"page_number": i + 1, "header": "", "footer": "",
+                        "left_column": "", "right_column": "",
+                        "metadata": {"error": json.dumps(str(exc))}}
+            assert (g["page_width"], g["page_height"]) == (0.0, 0.0)
+            assert pd.isna(g["column_separator_position"])
+        else:
+            want = extract_turn(text, tool if tool == "page/v1" else "plain", i)
+            for k in ("page_width", "page_height"):
+                assert g[k] == pytest.approx(want[k]), (i, k)
+        for k in ("page_number", "header", "footer", "left_column",
+                  "right_column", "metadata"):
+            assert g[k] == want[k], (i, k)
+    if poison == "non_string_payload":
+        assert "error" in got.iloc[4]["metadata"]
 
 
 def test_lineage_error_rows_accounted(spark, transcripts_sf0001, tmp_path):
