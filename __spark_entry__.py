@@ -14,7 +14,7 @@ transcripts (the reference's EP1 path, SURVEY.md section 3).
     tables, with exact ANSI-SQL twins.
   * training-data corpus ops (dedup exact / n-gram Jaccard / MinHash-LSH /
     SimHash / SemDeDup / incremental batch-vs-store; ANN brute-force /
-    LSH / IVF / PQ / SQ8; BM25 + hybrid RRF retrieval; language ID,
+    LSH / IVF / SQ8; BM25 + hybrid RRF retrieval; language ID,
     quality scores + classifier apply, token/PMI/DF stats, surprisal,
     winnowing, DSIR; PII scrub, deterministic/stratified/weighted/
     temperature sampling, leakage-safe splits, decontamination, packing;
@@ -47,7 +47,6 @@ from pdf_parser_spark.corpus import packing as PK  # noqa: E402
 from pdf_parser_spark.corpus import scrub as SC  # noqa: E402
 from pdf_parser_spark.corpus import similarity as S  # noqa: E402
 from pdf_parser_spark.corpus import textstats as TS  # noqa: E402
-from pdf_parser_spark.corpus import transforms as TR  # noqa: E402
 from pdf_parser_spark.generator import sf_from_dir, transcripts_path  # noqa: E402
 from pdf_parser_spark.goldens import ensure_goldens, golden_dir  # noqa: E402
 from pdf_parser_spark.operators import convstats as CS  # noqa: E402
@@ -282,7 +281,6 @@ _ZORDER_SQL = _zvalue_sql("zx", "zy", bits=8)
 # (a real deployment fits these driver-side over a labeled sample)
 QMODEL_W = [round(((i * 37) % 21 - 10) / 10, 2) for i in range(64)]
 _QMODEL_SQL = ", ".join(repr(float(w)) for w in QMODEL_W)
-_JL_SIGNS = TR.jl_signs_sql(in_dims=64, out_dims=16)
 # The synthetic embeddings have no true near-duplicates (max pairwise
 # cosine ~0.51 at sf0.01), so the demo threshold sits below that; a real
 # dedup run would use ~0.95.
@@ -1306,40 +1304,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["ann_sq8_topk"] = q_sq8_topk
 
-    # PQ gates run the fold-based exact twins (pq_encode_exact /
-    # pq_adc_topk_exact) whose arithmetic an ANSI-SQL engine reproduces
-    # term-for-term, upgrading all three from rows-only to full
-    # value-hash checks; the production NumPy paths are pinned byte-equal
-    # to the twins on fixture data by tests/test_corpus.py, and the PQ
-    # codebooks are reproduced sparklessly for the oracle via
-    # tools/annoracle.pq_books (same lloyd_pq code object).
-    def q_pq_encode(spark, sf_dir):
-        embs = _tbl(spark, sf_dir, "embeddings")
-        cb = S.pq_codebooks(embs)
-        return _longify(_vec_long(S.pq_encode_exact(embs, cb), "codes"))
-
-    q["ann_pq_encode"] = q_pq_encode
-
-    def q_pq_adc_topk(spark, sf_dir):
-        embs = _tbl(spark, sf_dir, "embeddings")
-        cb = S.pq_codebooks(embs)
-        return _longify(S.pq_adc_topk_exact(embs, k=10, codebooks=cb))
-
-    q["ann_pq_adc_topk"] = q_pq_adc_topk
-
     def q_ivf_sq8_topk(spark, sf_dir):
         return _longify(S.ivf_sq8_topk(
             _tbl(spark, sf_dir, "embeddings"), k=10, n_probe=1))
 
     q["ann_ivf_sq8_topk"] = q_ivf_sq8_topk
-
-    def q_ivf_pq_topk(spark, sf_dir):
-        embs = _tbl(spark, sf_dir, "embeddings")
-        return _longify(S.ivf_pq_topk(
-            embs, k=10, n_probe=2, codebook=S.kmeans_codebook(embs),
-            pq_cb=S.pq_codebooks(embs), exact=True))
-
-    q["ann_ivf_pq_topk"] = q_ivf_pq_topk
 
     # --- multimodal plumbing ----------------------------------------------
     def q_multimodal(spark, sf_dir):
@@ -1481,36 +1450,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["link_extract"] = q_link_extract
 
-    def q_link_pagerank(spark, sf_dir):
-        from pdf_parser_spark.corpus import links as LK
-        tr = _transcripts(spark, sf_dir).filter(F.col("tool") == "html/v1")
-        edges = LK.extract_links(tr).select(
-            F.col("conv_id").alias("src"), F.col("href").alias("dst"))
-        return _longify(LK.pagerank(edges, iters=2))
-
-    q["link_pagerank"] = q_link_pagerank
-
     def q_quality_model_score(spark, sf_dir):
         return _longify(TS.linear_quality_score(
             _tbl(spark, sf_dir, "documents"), QMODEL_W, bias=-0.1))
 
     q["quality_model_score"] = q_quality_model_score
 
-    def q_link_hits(spark, sf_dir):
-        from pdf_parser_spark.corpus import links as LK
-        tr = _transcripts(spark, sf_dir).filter(F.col("tool") == "html/v1")
-        edges = LK.extract_links(tr).select(
-            F.col("conv_id").alias("src"), F.col("href").alias("dst"))
-        return _longify(LK.hits(edges, iters=1))
-
-    q["link_hits"] = q_link_hits
-
-    # Converged-variant gates (round-4 verdict #4): the production
-    # early-stop paths pinned against the fixed-iteration relational
-    # twins — tol=0.0 makes the loop run exactly max_iters iterations,
-    # so pagerank_converged(max_iters=2) must hash-match the unrolled
-    # 2-iteration oracle, and the delta sequence itself becomes a
-    # scalar relation the oracle re-derives in exact 1e-9 units.
+    # Graph gates: tol=0.0 makes the converged loop run exactly
+    # max_iters iterations, so pagerank_converged(max_iters=2) must
+    # hash-match the unrolled 2-iteration oracle, and the delta
+    # sequence itself becomes a scalar relation the oracle re-derives
+    # in exact 1e-9 units.
     def q_link_pagerank_converged(spark, sf_dir):
         from pdf_parser_spark.corpus import links as LK
         tr = _transcripts(spark, sf_dir).filter(F.col("tool") == "html/v1")
@@ -1598,17 +1548,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             _tbl(spark, sf_dir, "events"), alpha=0.1, window=24))
 
     q["ewma_hourly"] = q_ewma_hourly
-
-    def q_jl_project(spark, sf_dir):
-        # demoted from the ann_* retrieval family: JL's measured top-10
-        # recall on this fixture is 0.125–0.295 (BASELINE.md), so it
-        # lives in corpus.transforms as a geometry transform, not an
-        # ANN path — the gate verifies the transform's arithmetic only
-        return _longify(_vec_long(TR.jl_project(
-            _tbl(spark, sf_dir, "embeddings"), in_dims=64, out_dims=16),
-            "projected"))
-
-    q["jl_project_transform"] = q_jl_project
 
     def q_hist_quantiles_by(spark, sf_dir):
         from pdf_parser_spark.plans import stats as ST
@@ -1778,54 +1717,10 @@ def oracle_sql() -> dict[str, str]:
     # Python xxhash64 sample order + the same lloyd_spherical) and
     # embedded as literals — upgrades the k-means ANN gates from
     # rows-only to full value-hash checks (see tools/annoracle.py)
-    from tools.annoracle import (centroid_values_sql, kmeans_centroids,
-                                 pq_books, pq_values_sql)
+    from tools.annoracle import centroid_values_sql, kmeans_centroids
     km_values = centroid_values_sql(kmeans_centroids(
         f"/root/testdata/sf{ORACLE_SF}/embeddings.parquet"))
-    pq_values = pq_values_sql(pq_books(
-        f"/root/testdata/sf{ORACLE_SF}/embeddings.parquet"))
 
-    def _pq_code_ctes(src: str) -> str:
-        """PQ encode CTE chain over `src` (a (vec_id, e, norm) relation):
-        unit-normalize, slice into 8 subvectors, score every sub-centroid
-        with the same 6dp-rounded squared distance the engine folds, and
-        keep the argmin code per (vec_id, subspace)."""
-        return f"""
-            pqc AS (SELECT j, code, cvec FROM {pq_values}),
-            u AS (SELECT vec_id, [x / norm FOR x IN e] AS ue FROM {src}),
-            subv AS (
-                SELECT u.vec_id, js.j AS j,
-                       u.ue[js.j * 8 + 1 : js.j * 8 + 8] AS s
-                FROM u, (SELECT unnest(range(0, 8)) AS j) js),
-            pscored AS (
-                SELECT sv.vec_id, sv.j, p.code,
-                       round(list_sum([ (sv.s[i] - p.cvec[i])
-                                        * (sv.s[i] - p.cvec[i])
-                                        FOR i IN range(1, 9) ]), 6) AS d2
-                FROM subv sv JOIN pqc p ON sv.j = p.j),
-            pbest AS (
-                SELECT vec_id, j, code,
-                       row_number() OVER (PARTITION BY vec_id, j
-                                          ORDER BY d2 ASC, code ASC) AS rn
-                FROM pscored),
-            codes AS (SELECT vec_id, j, code FROM pbest WHERE rn = 1)"""
-
-    _PQ_ADC_TAIL = """
-            qsub AS (SELECT j, s AS qs FROM subv WHERE vec_id = 0),
-            persub AS (
-                SELECT c.vec_id, c.j,
-                       list_sum([ q.qs[i] * p.cvec[i]
-                                  FOR i IN range(1, 9) ]) AS sj
-                FROM codes c
-                JOIN pqc p ON c.j = p.j AND c.code = p.code
-                JOIN qsub q ON c.j = q.j
-                WHERE c.vec_id <> 0),
-            adc AS (
-                SELECT vec_id, round(list_sum(list(sj ORDER BY j)), 6)
-                           AS score
-                FROM persub GROUP BY vec_id)
-            SELECT vec_id, score FROM adc
-            ORDER BY score DESC, vec_id ASC LIMIT 10"""
     km_cents = f"""
             kraw AS (SELECT centroid_id, cvec FROM {km_values}),
             cents AS (
@@ -4064,46 +3959,6 @@ def oracle_sql() -> dict[str, str]:
             SELECT e.vec_id, e.label
             FROM embeddings e ANTI JOIN drops d ON e.vec_id = d.vec_id
         """,
-        "ann_pq_encode": f"""
-            WITH {_VEC_CTES},
-            {_pq_code_ctes("nrm")}
-            SELECT vec_id, j::BIGINT AS dim, code::BIGINT AS val
-            FROM codes
-        """,
-        "ann_pq_adc_topk": f"""
-            WITH {_VEC_CTES},
-            {_pq_code_ctes("nrm")},
-            {_PQ_ADC_TAIL}
-        """,
-        "ann_ivf_pq_topk": f"""
-            WITH {_VEC_CTES},
-            {km_cents},
-            kscored AS (
-                SELECT n.vec_id, c.centroid_id,
-                       round(list_inner_product(n.e, c.cvec)
-                             / (n.norm * c.cnorm), 6) AS cscore
-                FROM nrm n, cents c),
-            kbest AS (
-                SELECT vec_id, centroid_id,
-                       row_number() OVER (PARTITION BY vec_id
-                                          ORDER BY cscore DESC, centroid_id ASC) AS rn
-                FROM kscored),
-            kassign AS (SELECT vec_id, centroid_id FROM kbest WHERE rn = 1),
-            kq AS (SELECT e AS qe, norm AS qn FROM nrm WHERE vec_id = 0),
-            qprobe AS (
-                SELECT c.centroid_id
-                FROM cents c, kq
-                ORDER BY round(list_inner_product(c.cvec, kq.qe)
-                               / (c.cnorm * kq.qn), 6) DESC, c.centroid_id ASC
-                LIMIT 2),
-            cand AS (
-                SELECT n.vec_id, n.e, n.norm
-                FROM nrm n
-                JOIN kassign a ON n.vec_id = a.vec_id
-                JOIN qprobe p ON a.centroid_id = p.centroid_id),
-            {_pq_code_ctes("cand")},
-            {_PQ_ADC_TAIL}
-        """,
         "multimodal_decode_meta": """
             SELECT doc_id,
                    octet_length(encode(text))::BIGINT AS n_bytes,
@@ -4180,26 +4035,6 @@ def oracle_sql() -> dict[str, str]:
                                    + (p * n - (cum - cnt)) / cnt
                                      * ((hi - lo) / 64) END, 6) AS est
             FROM j WHERE rn = 1
-        """,
-        # JL projection: the SAME ±1 sign literals (TR.jl_signs_sql, one
-        # code path) per output dim; float32 inputs widened to DOUBLE on
-        # both sides; scale 1/sqrt(16) = 0.25 exact.
-        "jl_project_transform": f"""
-            WITH ve AS (
-                SELECT vec_id, [x::DOUBLE FOR x IN embedding] AS e
-                FROM embeddings
-                WHERE embedding IS NOT NULL AND len(embedding) = 64),
-            p AS (
-                SELECT vec_id,
-                       [{", ".join(
-                           f"round(list_inner_product(e, {sl}) * 0.25, 6)"
-                           for sl in _JL_SIGNS)}] AS proj
-                FROM ve),
-            pl AS (SELECT vec_id, unnest(range(1, len(proj) + 1)) AS i,
-                          proj
-                   FROM p)
-            SELECT vec_id, (i - 1)::BIGINT AS dim, proj[i] AS val
-            FROM pl
         """,
         # EWMA over the trailing 24 observed buckets: list() over the
         # ordered frame -> list_reduce replays Spark's aggregate() fold
@@ -4455,55 +4290,6 @@ def oracle_sql() -> dict[str, str]:
                    unnest(hs) AS href, unnest(ans) AS anchor
             FROM h
         """,
-        # PageRank, 2 iterations UNROLLED (the kmeans_refine protocol):
-        # ranks rounded 9dp at every boundary; the dangling mass is a
-        # sum of exact 1e-9 integer units so it cannot drift ulps.
-        "link_pagerank": f"""
-            WITH e AS (
-                SELECT conv_id AS src,
-                       unnest(regexp_extract_all(text,
-                           '<a href="([^"]*)">([^<]*)</a>', 1)) AS dst
-                FROM read_parquet(
-                    '{transcripts_path(ORACLE_SF)}/*.parquet')
-                WHERE tool = 'html/v1'),
-            nd AS (SELECT src AS node FROM e
-                   UNION SELECT dst FROM e),
-            cnt AS (SELECT count(*)::BIGINT AS n FROM nd),
-            deg AS (SELECT src AS node, count(*)::BIGINT AS outdeg
-                    FROM e GROUP BY 1),
-            r0 AS (SELECT node,
-                          round(1.0 / (SELECT n FROM cnt), 9) AS r
-                   FROM nd),
-            d1 AS (SELECT coalesce(sum(CAST(round(r * 1e9) AS BIGINT)),
-                                   0) AS u
-                   FROM r0 LEFT JOIN deg USING (node)
-                   WHERE outdeg IS NULL),
-            c1 AS (SELECT e.dst AS node, sum(r0.r / deg.outdeg) AS s
-                   FROM e JOIN r0 ON r0.node = e.src
-                          JOIN deg ON deg.node = e.src
-                   GROUP BY 1),
-            r1 AS (SELECT nd.node,
-                          round((((1.0 - 0.85) / (SELECT n FROM cnt))
-                                 + (0.85 * (((SELECT u FROM d1)::DOUBLE
-                                             / 1e9)
-                                            / (SELECT n FROM cnt))))
-                                + 0.85 * coalesce(c1.s, 0.0), 9) AS r
-                   FROM nd LEFT JOIN c1 ON c1.node = nd.node),
-            d2 AS (SELECT coalesce(sum(CAST(round(r * 1e9) AS BIGINT)),
-                                   0) AS u
-                   FROM r1 LEFT JOIN deg USING (node)
-                   WHERE outdeg IS NULL),
-            c2 AS (SELECT e.dst AS node, sum(r1.r / deg.outdeg) AS s
-                   FROM e JOIN r1 ON r1.node = e.src
-                          JOIN deg ON deg.node = e.src
-                   GROUP BY 1)
-            SELECT nd.node,
-                   round((((1.0 - 0.85) / (SELECT n FROM cnt))
-                          + (0.85 * (((SELECT u FROM d2)::DOUBLE / 1e9)
-                                     / (SELECT n FROM cnt))))
-                         + 0.85 * coalesce(c2.s, 0.0), 9) AS r
-            FROM nd LEFT JOIN c2 ON c2.node = nd.node
-        """,
         # Semi-structured rollup: one lazy JSONPath + TRY_CAST (malformed
         # JSON / missing field / wrong type -> NULL, counted, never
         # failures), NULL group kept; integers only.
@@ -4596,43 +4382,6 @@ def oracle_sql() -> dict[str, str]:
                       ORDER BY pmi DESC, x ASC, y ASC) AS rank
                   FROM scored)
             WHERE rank <= 100
-        """,
-        # HITS hubs/authorities, 1 iteration unrolled: each half-step
-        # rounds 9dp then L1-normalizes by an exact integer-unit sum.
-        "link_hits": f"""
-            WITH e AS (
-                SELECT conv_id AS src,
-                       unnest(regexp_extract_all(text,
-                           '<a href="([^"]*)">([^<]*)</a>', 1)) AS dst
-                FROM read_parquet(
-                    '{transcripts_path(ORACLE_SF)}/*.parquet')
-                WHERE tool = 'html/v1'),
-            nd AS (SELECT src AS node FROM e UNION SELECT dst FROM e),
-            h0 AS (SELECT node, 1.0 AS hub FROM nd),
-            ar AS (SELECT e.dst AS node, sum(h0.hub) AS raw
-                   FROM e JOIN h0 ON h0.node = e.src GROUP BY 1),
-            a9 AS (SELECT nd.node, round(coalesce(ar.raw, 0.0), 9)
-                          AS auth
-                   FROM nd LEFT JOIN ar USING (node)),
-            ua AS (SELECT sum(CAST(round(auth * 1e9) AS BIGINT)) AS u
-                   FROM a9),
-            an AS (SELECT node,
-                          round(auth / ((SELECT u FROM ua)::DOUBLE
-                                        / 1e9), 9) AS auth
-                   FROM a9),
-            hr AS (SELECT e.src AS node, sum(an.auth) AS raw
-                   FROM e JOIN an ON an.node = e.dst GROUP BY 1),
-            h9 AS (SELECT nd.node, round(coalesce(hr.raw, 0.0), 9)
-                          AS hub
-                   FROM nd LEFT JOIN hr USING (node)),
-            uh AS (SELECT sum(CAST(round(hub * 1e9) AS BIGINT)) AS u
-                   FROM h9),
-            hn AS (SELECT node,
-                          round(hub / ((SELECT u FROM uh)::DOUBLE
-                                       / 1e9), 9) AS hub
-                   FROM h9)
-            SELECT hn.node, hn.hub, an.auth
-            FROM hn JOIN an USING (node)
         """,
         # Equi-width histogram quantiles: bin rule + interpolation are
         # plain IEEE arithmetic both engines replay; p cast DOUBLE
@@ -4825,11 +4574,10 @@ def oracle_sql() -> dict[str, str]:
     # the SQL makes that invariant structural
     oracles["conv_windows_salted"] = oracles["conv_context_windows"]
 
-    # same idea for the converged graph path: pagerank_converged with
-    # tol=0 and max_iters=2 is DEFINED to be pagerank(iters=2), so the
-    # converged gate reuses the unrolled 2-iteration oracle verbatim
-    oracles["link_pagerank_converged"] = oracles["link_pagerank"]
-
+    # PageRank, 2 iterations UNROLLED (the kmeans_refine protocol):
+    # ranks rounded 9dp at every boundary; the dangling mass is a sum of
+    # exact 1e-9 integer units so it cannot drift ulps. One CTE chain
+    # serves both the ranks gate and the deltas gate.
     _PR_EDGE_CTES = f"""e AS (
                 SELECT conv_id AS src,
                        unnest(regexp_extract_all(text,
@@ -4876,6 +4624,12 @@ def oracle_sql() -> dict[str, str]:
                                 + 0.85 * coalesce(c2.s, 0.0), 9) AS r
                    FROM nd LEFT JOIN c2 ON c2.node = nd.node)"""
 
+    # pagerank_converged(max_iters=2, tol=0.0) runs exactly two rounds
+    oracles["link_pagerank_converged"] = f"""
+            WITH {_PR_EDGE_CTES}
+            SELECT node, r FROM r2
+        """
+
     # the delta sequence re-derived relationally: per iteration the L1
     # distance of the 9dp rank state in exact 1e-9 integer units — the
     # same scalar the engine's convergence loop computes per round
@@ -4894,10 +4648,9 @@ def oracle_sql() -> dict[str, str]:
             FROM r2 a JOIN r1 b USING (node)
         """
 
-    # hits_converged's one deliberate difference from fixed-iters hits
-    # is the L1-normalized start (hub0 = 1/N): one iteration unrolled
-    # with that start, each half-step rounded 9dp then normalized by an
-    # exact integer-unit sum
+    # HITS hubs/authorities, one iteration unrolled from the
+    # L1-normalized start (hub0 = 1/N), each half-step rounded 9dp then
+    # normalized by an exact integer-unit sum
     oracles["link_hits_converged"] = f"""
             WITH e AS (
                 SELECT conv_id AS src,
@@ -4943,31 +4696,33 @@ def oracle_sql() -> dict[str, str]:
     # regexp_replace is always global, and '\\1' where Spark says '$1'.
     def _url_ctes(rel: str) -> str:
         return f"""cu AS (
+                SELECT *, regexp_replace(href, '#.*$', '') AS u
+                FROM {rel}),
+            cb AS (
                 SELECT *,
+                       coalesce(regexp_extract(u, '^([^?]*)', 1), '')
+                           AS base,
                        regexp_replace(
                            regexp_replace(
-                               regexp_replace(href, '#.*$', ''),
-                               '[?&]utm_[^&]*', '', 'g'),
-                           '^([^?]*)&', '\\1?') AS u
-                FROM {rel}),
+                               '&' || coalesce(regexp_extract(u,
+                                   '^[^?]*[?](.*)$', 1), ''),
+                               '&utm_[^&]*', '', 'g'),
+                           '^&', '') AS q
+                FROM cu),
             hp AS (
                 SELECT *,
-                       coalesce(regexp_extract(u,
+                       coalesce(regexp_extract(base,
                            '^([a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*)', 1),
                            '') AS head
-                FROM cu),
+                FROM cb),
             h2 AS (
                 SELECT *,
                        regexp_replace(
                            regexp_replace(lower(head),
                                '^(http://[^:/]+):80$', '\\1'),
                            '^(https://[^:/]+):443$', '\\1') AS headc,
-                       coalesce(regexp_extract(
-                           substr(u, length(head) + 1),
-                           '^([^?]*)', 1), '') AS pth,
-                       coalesce(regexp_extract(
-                           substr(u, length(head) + 1),
-                           '([?].*)$', 1), '') AS qs
+                       substr(base, length(head) + 1) AS pth,
+                       CASE WHEN q = '' THEN '' ELSE '?' || q END AS qs
                 FROM hp),
             canon AS (
                 SELECT *,

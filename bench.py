@@ -136,11 +136,12 @@ def main() -> None:
                 [(0, "spark join window"), (1, "customer query fast"),
                  (2, "vector scan stream")],
                 "query_id long, query string"), k=10)),
-        "link_pagerank": lambda: force_count(LK.pagerank(
+        "link_pagerank": lambda: force_count(LK.pagerank_converged(
             LK.extract_links(
                 transcripts.filter(F.col("tool") == "html/v1"))
             .select(F.col("conv_id").alias("src"),
-                    F.col("href").alias("dst")), iters=2)),
+                    F.col("href").alias("dst")),
+            max_iters=2, tol=0.0)[0]),
         "hybrid_rrf_topk": lambda: force_count(TS.hybrid_rrf_topk(
             docs, spark.createDataFrame(
                 [(0, "spark join window"), (1, "customer query fast")],
@@ -155,11 +156,12 @@ def main() -> None:
             TS.linear_quality_score(
                 docs, [round(((i * 37) % 21 - 10) / 10, 2)
                        for i in range(64)], bias=-0.1)),
-        "link_hits": lambda: force_count(LK.hits(
+        "link_hits": lambda: force_count(LK.hits_converged(
             LK.extract_links(
                 transcripts.filter(F.col("tool") == "html/v1"))
             .select(F.col("conv_id").alias("src"),
-                    F.col("href").alias("dst")), iters=1)),
+                    F.col("href").alias("dst")),
+            max_iters=1, tol=0.0)[0]),
         "dedup_incremental": lambda: force_count(D.incremental_dedup_keep(
             docs.filter(F.col("doc_id") % 3 == 0),
             docs.filter(F.col("doc_id") % 3 != 0), threshold=0.5)),

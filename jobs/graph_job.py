@@ -14,16 +14,16 @@ Writes:
 and prints a one-line JSON summary with the top authorities — the
 crawl-prioritization / quality-prior report a 100 TB corpus build runs
 after ingest. The edge relation is written BEFORE iterating (the same
-materialize-once rule `pagerank` enforces internally): at cluster scale
-the edge table is a product, not a temporary.
+materialize-once rule `pagerank_converged` enforces internally): at
+cluster scale the edge table is a product, not a temporary.
 
 PageRank runs to CONVERGENCE by default (`pagerank_converged`: early
 stop when the per-iteration L1 delta drops below --tol, capped at
 --max-iters), and the report carries the full delta sequence as the
-convergence evidence. The library's fixed-`iters` `pagerank`/`hits`
-defaults (2/1) are gate-shaped — sized so an unrolled SQL twin can
-replay them hash-for-hash — not production settings; this CLI is the
-production surface.
+convergence evidence. The gates run the same functions at `tol=0.0`
+with 2/1 iterations — sized so an unrolled SQL twin can replay them
+hash-for-hash — not production settings; this CLI is the production
+surface.
 """
 
 from __future__ import annotations

@@ -2,9 +2,9 @@
 
 The web-scale corpus primitives the HTML side of the north rule implies:
 `extract_links` turns the raw HTML turns into an edge relation (the
-link graph every crawl pipeline materializes), and `pagerank` runs the
-canonical iterative graph centrality over it — the classic quality
-prior for crawl corpora (and the original reason MapReduce-style
+link graph every crawl pipeline materializes), and `pagerank_converged`
+runs the canonical iterative graph centrality over it — the classic
+quality prior for crawl corpora (and the original reason MapReduce-style
 engines exist). Extraction is one codegen regexp pass (the reference's
 DOM tokenizer handles layout; links only need the anchor-tag grammar,
 ref /root/reference/pdf_extractor_protocol.py HTML handling); PageRank
@@ -59,8 +59,9 @@ def url_canonicalize(url) -> "F.Column":
     no lazy quantifiers — RE2-compatible so the DuckDB twin replays it):
 
       1. strip the fragment (`#...`)
-      2. drop `utm_*` tracking params wherever they sit, then repair a
-         query that lost its leading `?`
+      2. drop `utm_*` tracking params from the query (the part after
+         the first `?`); the path is never touched, and a query left
+         empty loses its `?`
       3. lowercase scheme://host[:port] (authority only — paths stay
          case-sensitive)
       4. strip the scheme's default port (:80 http, :443 https)
@@ -69,17 +70,20 @@ def url_canonicalize(url) -> "F.Column":
     Accepts a column or column name; returns the canonical-url column.
     """
     u = F.regexp_replace(url, "#.*$", "")
-    u = F.regexp_replace(u, "[?&]utm_[^&]*", "")
-    u = F.regexp_replace(u, "^([^?]*)&", "$1?")
-    head = F.regexp_extract(u, "^([a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*)", 1)
-    tail = u.substr(F.length(head) + F.lit(1), F.length(u))
+    base = F.regexp_extract(u, "^([^?]*)", 1)
+    # "&" + query makes every param, the first included, "&name=..."
+    query = F.regexp_replace(F.regexp_replace(
+        F.concat(F.lit("&"), F.regexp_extract(u, "^[^?]*[?](.*)$", 1)),
+        "&utm_[^&]*", ""), "^&", "")
+    head = F.regexp_extract(base, "^([a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*)", 1)
+    path = base.substr(F.length(head) + F.lit(1), F.length(base))
     head = F.lower(head)
     head = F.regexp_replace(head, "^(http://[^:/]+):80$", "$1")
     head = F.regexp_replace(head, "^(https://[^:/]+):443$", "$1")
-    path = F.regexp_extract(tail, "^([^?]*)", 1)
-    query = F.regexp_extract(tail, "([?].*)$", 1)
     path = F.when(path == "", F.lit("/")) \
         .otherwise(F.regexp_replace(path, "(.)/+$", "$1"))
+    query = F.when(query == "", F.lit("")) \
+        .otherwise(F.concat(F.lit("?"), query))
     return F.concat(head, path, query)
 
 
@@ -201,71 +205,45 @@ def blocklist_filter(df: DataFrame, blocked=None,
     return df.join(hits, list(id_cols), "left_anti")
 
 
-def pagerank(edges: DataFrame, iters: int = 2, d: float = 0.85,
-             src_col: str = "src", dst_col: str = "dst") -> DataFrame:
-    """PageRank with uniform teleport and dangling-mass redistribution:
+def pagerank_converged(edges: DataFrame, max_iters: int = 20,
+                       tol: float = 1e-6, d: float = 0.85,
+                       src_col: str = "src",
+                       dst_col: str = "dst") -> tuple:
+    """PageRank with uniform teleport and dangling-mass redistribution,
+    with per-iteration convergence reporting and early stop:
 
         r'(v) = (1-d)/N + d * (sum_{u->v} r(u)/outdeg(u) + D/N)
 
     where D is the total rank sitting on dangling nodes (no out-edges).
+    Returns ``(ranks, deltas)`` where ``deltas[i]`` is the L1 distance
+    Σ|r'(v) - r(v)| after iteration i+1. Iteration stops when the delta
+    drops below ``tol`` or at ``max_iters``; ``tol=0`` runs exactly
+    ``max_iters`` iterations, the form the gate's unrolled SQL twin
+    replays.
 
     Distributed shape (the `connected_components` discipline): each
     iteration is ONE contribution shuffle keyed on dst — the edge
     relation joins the current ranks (broadcast when small, hash-join
     otherwise) and partially aggregates r/outdeg per dst; the dangling
-    mass D is ONE driver scalar per iteration, summed as exact 1e-9
-    integer units (ranks are 9dp-rounded state, so D is
+    mass D and the delta are collected scalars summed as exact 1e-9
+    integer units (ranks are 9dp-rounded state, so both are
     order-independent and engine-exact where a float sum would drift
     ulps into the boundary). Ranks are rounded 9dp at every iteration
     boundary — the `kmeans_refine` protocol that lets an UNROLLED SQL
     twin replay an iterative distributed algorithm hash-for-hash.
     State is localCheckpointed per iteration (lineage would otherwise
-    double per round). Duplicate edges count twice by design (parallel
-    links = stronger endorsement); pre-`distinct` to change that."""
+    double per round); each delta costs one extra bounded-size join
+    over that checkpointed state. Duplicate edges count twice by design
+    (parallel links = stronger endorsement); pre-`distinct` to change
+    that."""
+    if max_iters < 1:
+        raise ValueError(f"max_iters must be >= 1, got {max_iters}")
     # materialize the edge relation ONCE: every iteration (plus the
     # node set and degree frame) re-reads it, so an expensive upstream
     # lineage — extract_links' regexp scan here — would otherwise
-    # re-run 2+iters times (measured 11x wall at sf1 before this:
+    # re-run every round (measured 11x wall at sf1 before this:
     # 102 s -> 9.3 s). At cluster scale this is "write the edge table
     # before iterating", which every graph engine does.
-    edges = edges.localCheckpoint()
-    nodes = (edges.select(F.col(src_col).alias("node"))
-             .union(edges.select(F.col(dst_col).alias("node")))
-             .distinct().localCheckpoint())
-    n = nodes.count()
-    deg = (edges.groupBy(F.col(src_col).alias("node"))
-           .agg(F.count(F.lit(1)).alias("outdeg"))
-           .localCheckpoint())
-    ranks = nodes.select("node", F.round(F.lit(1.0 / n), 9).alias("r")) \
-        .localCheckpoint()
-
-    for _ in range(iters):
-        ranks = _pagerank_iteration(
-            nodes, edges, deg, ranks, d, n,
-            src_col=src_col, dst_col=dst_col).localCheckpoint()
-    return ranks
-
-
-def pagerank_converged(edges: DataFrame, max_iters: int = 20,
-                       tol: float = 1e-6, d: float = 0.85,
-                       src_col: str = "src",
-                       dst_col: str = "dst") -> tuple:
-    """`pagerank` with per-iteration convergence reporting and early
-    stop: returns ``(ranks, deltas)`` where ``deltas[i]`` is the L1
-    distance Σ|r'(v) - r(v)| after iteration i+1, summed as exact 1e-9
-    integer units over the 9dp-rounded state (same order-independent
-    scalar discipline as the dangling mass). Iteration stops when the
-    delta drops below ``tol`` or at ``max_iters``.
-
-    This is the production entry (`jobs/graph_job.py` default): the
-    fixed-`iters` `pagerank` stays the hash-exact gate/oracle surface
-    (an unrolled SQL twin needs a static iteration count), while a real
-    crawl-prioritization run wants to *observe* convergence — the delta
-    sequence is the evidence the ranking is stable, and each delta
-    costs one extra bounded-size join over state already checkpointed
-    that round."""
-    if max_iters < 1:
-        raise ValueError(f"max_iters must be >= 1, got {max_iters}")
     edges = edges.localCheckpoint()
     nodes = (edges.select(F.col(src_col).alias("node"))
              .union(edges.select(F.col(dst_col).alias("node")))
@@ -322,70 +300,29 @@ def _pagerank_iteration(nodes: DataFrame, edges: DataFrame,
                             9).alias("r")))
 
 
-def hits(edges: DataFrame, iters: int = 1,
-         src_col: str = "src", dst_col: str = "dst") -> DataFrame:
+def hits_converged(edges: DataFrame, max_iters: int = 20,
+                   tol: float = 1e-6, src_col: str = "src",
+                   dst_col: str = "dst") -> tuple:
     """HITS hubs-and-authorities (Kleinberg 1999) — PageRank's
     bipartite sibling, the natural centrality for link graphs where
     sources and targets play different roles (conversations CITE
     section pages; pages are ENDORSED): per iteration, authority(v) =
     Σ hub(u) over u→v, then hub(u) = Σ authority(v) over u→v, each
-    L1-normalized.
+    L1-normalized, starting from hub = 1/N.
 
-    Same distributed discipline as `pagerank`: edges/nodes
+    Returns ``(scores, deltas)`` with scores (node, hub, auth), both
+    rounded 9dp, and ``deltas[i]`` the L1 distance of the HUB vector
+    after full iteration i+1 (hub moves second, so its delta bounds the
+    authority delta one half-step earlier). Iteration stops when the
+    delta drops below ``tol`` or at ``max_iters``; ``tol=0`` runs
+    exactly ``max_iters`` iterations, the form the gate's unrolled SQL
+    twin replays.
+
+    Same distributed discipline as `pagerank_converged`: edges/nodes
     materialized once, each half-step is ONE contribution shuffle, and
-    the L1 normalizer is a driver scalar summed as exact 1e-9 integer
-    units over the 9dp-rounded scores (order-independent, so the
-    unrolled SQL twin replays every stage hash-for-hash). Output:
-    (node, hub, auth), both rounded 9dp."""
-    edges = edges.localCheckpoint()
-    nodes = (edges.select(F.col(src_col).alias("node"))
-             .union(edges.select(F.col(dst_col).alias("node")))
-             .distinct().localCheckpoint())
-
-    def _normalize(scores: DataFrame, col: str) -> DataFrame:
-        units = (scores.agg(F.sum(F.round(F.col(col) * 1e9)
-                                  .cast("long")).alias("u"))
-                 .first()["u"]) or 0
-        s = float(units) / 1e9
-        if s == 0.0:
-            return scores
-        return scores.select("node",
-                             F.round(F.col(col) / s, 9).alias(col))
-
-    def _step(scores: DataFrame, score_col: str, key_in: str,
-              key_out: str, out_col: str) -> DataFrame:
-        raw = (edges.join(scores, edges[key_in] == F.col("node"))
-               .groupBy(F.col(key_out).alias("n2"))
-               .agg(F.sum(score_col).alias("raw")))
-        nine = (nodes.join(raw, nodes["node"] == F.col("n2"), "left")
-                .select("node",
-                        F.round(F.coalesce(F.col("raw"), F.lit(0.0)), 9)
-                        .alias(out_col)))
-        return _normalize(nine, out_col).localCheckpoint()
-
-    h = nodes.select("node", F.lit(1.0).alias("hub")).localCheckpoint()
-    a = None
-    for _ in range(iters):
-        a = _step(h, "hub", src_col, dst_col, "auth")
-        h = _step(a, "auth", dst_col, src_col, "hub")
-    return (h.join(a, "node")
-            .select("node", "hub", "auth"))
-
-
-def hits_converged(edges: DataFrame, max_iters: int = 20,
-                   tol: float = 1e-6, src_col: str = "src",
-                   dst_col: str = "dst") -> tuple:
-    """`hits` with per-iteration convergence reporting and early stop —
-    the `pagerank_converged` protocol applied to the bipartite scores:
-    returns ``(scores, deltas)`` where ``deltas[i]`` is the L1 distance
-    of the HUB vector after full iteration i+1 (hub moves second, so
-    its delta bounds the authority delta one half-step earlier),
-    summed as exact 1e-9 integer units over the 9dp-rounded state.
-    Same one-shuffle half-steps as the fixed-iters `hits`, which stays
-    the gate/oracle surface; the only deliberate difference is the
-    L1-normalized start (hub = 1/N, so the delta sequence is on the
-    normalized scale from iteration 1), which follows the same
-    trajectory up to 9dp rounding of intermediate sums."""
+    the L1 normalizer and the delta are collected scalars summed as exact
+    1e-9 integer units over the 9dp-rounded scores (order-independent,
+    so the unrolled SQL twin replays every stage hash-for-hash)."""
     if max_iters < 1:
         raise ValueError(f"max_iters must be >= 1, got {max_iters}")
     edges = edges.localCheckpoint()

@@ -2,12 +2,10 @@
 with typed metadata.
 
 The Spark-side machinery is real — binary columns, Arrow-batched
-`mapInPandas` with explicit schemas, deterministic partition-friendly
-shapes; the *codec* step is stubbed because the container ships no
-image/audio libraries. Each stub either raises a clearly-marked
-``NotImplementedError`` (strict mode) or produces a deterministic fake
-derived from the payload bytes (default), so pipelines and tests exercise
-the full dataflow. Swapping a stub for Pillow/torchaudio/decord is a
+`mapInPandas` with an explicit schema, deterministic partition-friendly
+shapes; the *codec* step is stubbed because no image/audio library is
+available, so `decode_meta` derives deterministic fake dimensions from
+the payload bytes. Swapping the stub for Pillow/soundfile is a
 one-function change with the same schema.
 
 Layout of a multimodal record: ``(doc_id, kind, payload binary, meta map)``
@@ -19,7 +17,6 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
@@ -28,13 +25,6 @@ from pyspark.sql import functions as F
 DECODE_SCHEMA = (
     "doc_id long, kind string, n_bytes long, width long, height long, "
     "channels long, ok boolean")
-RESIZE_SCHEMA = (
-    "doc_id long, kind string, out_width long, out_height long, "
-    "thumb binary")
-FRAMES_SCHEMA = (
-    "doc_id long, frame_idx long, frame_offset long, frame_md5 string")
-FEATURE_DIM = 16
-FEATURES_SCHEMA = "doc_id long, feature array<float>"
 
 
 def attach_binary(df: DataFrame, text_col: str = "text",
@@ -52,22 +42,16 @@ def _fake_dims(n: int) -> tuple:
     return (n % 640) + 16, ((n * 7) % 480) + 16, 3
 
 
-def decode_meta(df: DataFrame, strict: bool = False) -> DataFrame:
+def decode_meta(df: DataFrame) -> DataFrame:
     """Decode header metadata from the binary payload.
 
-    STUB: real decoding (PIL.Image.open / soundfile / PyAV) is unavailable
-    in this container. strict=True raises NotImplementedError per batch —
-    the marker for where the codec integrates; the default emits
-    deterministic fake dims derived from the byte length, keeping the
-    Arrow plumbing and downstream schema real.
+    STUB: real decoding (PIL.Image.open / soundfile / PyAV) is not
+    available, so this emits deterministic fake dims derived from the
+    byte length, keeping the Arrow plumbing and downstream schema real.
     """
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if strict:
-                raise NotImplementedError(
-                    "media codec not available in this container; "
-                    "integrate PIL/soundfile here")
             # degrade-don't-fail (D1): a NULL payload (failed fetch,
             # tombstoned blob) emits a row with null metadata and
             # ok=False — it must never kill the task (found by the
@@ -86,67 +70,3 @@ def decode_meta(df: DataFrame, strict: bool = False) -> DataFrame:
             })
 
     return df.mapInPandas(run, schema=DECODE_SCHEMA)
-
-
-def resize_stub(df: DataFrame, out_w: int = 64, out_h: int = 64) -> DataFrame:
-    """Thumbnail 'resize': STUB producing a deterministic byte digest of
-    the payload at the target size (real impl: vectorized PIL thumbnail
-    per Arrow batch — same signature, same schema)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            thumbs = [
-                bytes(bytearray((payload[i % len(payload)] if payload else 0)
-                                for i in range(32)))
-                for payload in pdf["payload"]
-            ]
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "kind": pdf["kind"],
-                "out_width": out_w, "out_height": out_h,
-                "thumb": thumbs,
-            })
-
-    return df.mapInPandas(run, schema=RESIZE_SCHEMA)
-
-
-def frame_sample(df: DataFrame, every_n_bytes: int = 4096,
-                 max_frames: int = 8) -> DataFrame:
-    """'Frame sampling' over a video-like byte stream: one row per sampled
-    offset (STUB digesting the chunk; real impl: keyframe extraction with
-    the same exploded output shape)."""
-    import hashlib
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = []
-            for doc_id, payload in pdf[["doc_id", "payload"]].itertuples(index=False):
-                n = len(payload) if payload is not None else 0
-                for i, off in enumerate(range(0, n, every_n_bytes)):
-                    if i >= max_frames:
-                        break
-                    chunk = bytes(payload[off:off + every_n_bytes])
-                    recs.append((doc_id, i, off,
-                                 hashlib.md5(chunk).hexdigest()))
-            yield pd.DataFrame(
-                recs, columns=["doc_id", "frame_idx", "frame_offset", "frame_md5"])
-
-    return df.mapInPandas(run, schema=FRAMES_SCHEMA)
-
-
-def feature_extract(df: DataFrame) -> DataFrame:
-    """Embedding-style feature vector per payload: STUB via a byte
-    histogram folded to FEATURE_DIM floats (real impl: a predict_batch
-    UDF over a vision/audio encoder; identical schema)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = []
-            for payload in pdf["payload"]:
-                arr = np.frombuffer(bytes(payload or b""), dtype=np.uint8)
-                hist = np.bincount(arr % FEATURE_DIM, minlength=FEATURE_DIM)
-                total = max(hist.sum(), 1)
-                feats.append((hist / total).astype(np.float32))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "feature": feats})
-
-    return df.mapInPandas(run, schema=FEATURES_SCHEMA)

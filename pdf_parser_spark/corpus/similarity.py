@@ -489,61 +489,27 @@ def ivf_sq8_topk(df: DataFrame, query_id: int = 0, k: int = 10,
                  codebook: list | None = None, id_col: str = "vec_id",
                  vec_col: str = "embedding") -> DataFrame:
     """IVF + SQ8: cell restriction, then int8 asymmetric scoring within
-    the probed cells — the third point of the quantization×IVF matrix
-    (exact rescore = `ivf_topk`, 8-byte PQ codes = `ivf_pq_topk`, this
-    is the 1-byte/dim middle): ~n_probe·N/C candidates touched, each at
-    a quarter of the float32 bytes, with SQ8's near-exact ranking
-    (recall table in BASELINE.md). ``codebook`` as in `ivf_assign`."""
+    the probed cells (`ivf_topk` is the exact-rescore form):
+    ~n_probe·N/C candidates touched, each at a quarter of the float32
+    bytes, with SQ8's near-exact ranking (recall table in BASELINE.md).
+    ``codebook`` as in `ivf_assign`."""
     cand = _ivf_probe_candidates(df, query_id, n_centroids, n_probe,
                                  id_col, vec_col, codebook)
     return sq8_topk(cand, query_id=query_id, k=k, id_col=id_col,
                     vec_col=vec_col)
 
 
-def ivf_pq_topk(df: DataFrame, query_id: int = 0, k: int = 10,
-                n_centroids: int = 16, n_probe: int = 2,
-                codebook: list | None = None, pq_cb: list | None = None,
-                id_col: str = "vec_id", vec_col: str = "embedding",
-                exact: bool = False) -> DataFrame:
-    """IVFADC (Jégou et al., TPAMI'11): IVF cell restriction, then PQ
-    asymmetric-distance scoring WITHIN the probed cells — the composition
-    run at cluster scale, where neither a full scan (pq_adc_topk) nor
-    exact re-scoring of a whole cell (ivf_topk) is affordable: the probe
-    join prunes to ~n_probe*N/C rows and ADC touches only their m-byte
-    codes. Both codebooks default to their sampled-k-means builders.
-    ``exact=True`` routes the ADC stage through the fold-based SQL twin
-    (`pq_adc_topk_exact`) — the oracle-gated verification path."""
-    cand = _ivf_probe_candidates(df, query_id, n_centroids, n_probe,
-                                 id_col, vec_col, codebook)
-    if pq_cb is None:
-        pq_cb = pq_codebooks(df, id_col=id_col, vec_col=vec_col)
-    if exact:
-        return pq_adc_topk_exact(cand, query_id=query_id, k=k,
-                                 codebooks=pq_cb, id_col=id_col,
-                                 vec_col=vec_col)
-    # Fetch the query vector from the BASE table (a pushed-down id-filter
-    # scan) and hand it down: letting pq_adc_topk .first() the candidate
-    # frame would execute the whole IVF assign+probe pipeline as an extra
-    # job just to collect one row, then re-execute it for the top-k.
-    qrow = df.filter(F.col(id_col) == query_id).select(vec_col).first()
-    if qrow is None or qrow[vec_col] is None or not len(qrow[vec_col]):
-        return df.sparkSession.createDataFrame([], f"{id_col} long, score double")
-    return pq_adc_topk(cand, query_id=query_id, k=k, codebooks=pq_cb,
-                       id_col=id_col, vec_col=vec_col, qvec=qrow[vec_col])
-
-
 def sq8_encode(df: DataFrame, id_col: str = "vec_id",
                vec_col: str = "embedding") -> DataFrame:
     """Scalar int8 quantization: each unit-normalized component maps to
     ``floor(u * 127 + 0.5)`` — an integer in [-127, 127], i.e. 1 byte
-    per dimension (4× smaller than float32, the standard memory lever
-    between full-precision and PQ's m-bytes-per-VECTOR). Max component
-    error 0.5/127 ≈ 0.4%, so SQ8 top-k tracks exact cosine far closer
-    than PQ (recall measured in BASELINE.md).
+    per dimension (4× smaller than float32). Max component error
+    0.5/127 ≈ 0.4%, so SQ8 top-k tracks exact cosine closely (recall
+    measured in BASELINE.md).
 
-    Unlike `pq_encode` there is no codebook search, so the encoder is a
-    single whole-stage-codegen `transform` — zero Python, zero shuffle,
-    no separate "exact twin" needed: this IS the SQL-expressible form.
+    There is no codebook search, so the encoder is a single
+    whole-stage-codegen `transform` — zero Python, zero shuffle, no
+    separate "exact twin" needed: this IS the SQL-expressible form.
     The tie rule is floor(x + 0.5) (round-half-up), NOT round(): Spark
     rounds doubles half-away-from-zero and other engines half-to-even,
     so round() is exactly the kind of silent cross-engine fork this
@@ -586,245 +552,6 @@ def sq8_topk(df: DataFrame, query_id: int = 0, k: int = 10,
                           / F.lit(127.0), 6).alias("score")))
     return scored.orderBy(F.col("score").desc(), F.col(id_col).asc()) \
         .limit(k)
-
-
-def pq_codebooks(df: DataFrame, m: int = 8, ksub: int = 256, iters: int = 10,
-                 sample_cap: int = 4096, id_col: str = "vec_id",
-                 vec_col: str = "embedding") -> list:
-    """Driver-side product-quantization codebooks (Jégou et al., TPAMI'11):
-    split every (unit-normalized) vector into ``m`` equal subvectors and
-    run an L2 Lloyd k-means with ``ksub`` centroids per subspace over the
-    same bounded, hash-ordered sample ``kmeans_codebook`` uses.
-
-    Deterministic end to end (hash-ordered sample, first-k init, argmin
-    ties toward the lower code, empty cells keep their centroid). Returns
-    ``m`` lists of ``ksub`` sub-centroids; total size m*ksub*(d/m) floats
-    — a broadcast-trivial object even for 1024-dim embeddings."""
-    x = _hash_sample(df, sample_cap, id_col, vec_col)
-    return lloyd_pq(x, m, ksub, iters)
-
-
-def lloyd_pq(x: "np.ndarray", m: int, ksub: int, iters: int) -> list:
-    """The pure-NumPy Lloyd step of `pq_codebooks`, factored out (exactly
-    like `lloyd_spherical`) so tools/annoracle.py can reproduce the
-    IDENTICAL codebooks from the same sample without Spark and embed
-    them as SQL literals for the full-value PQ gates."""
-    norms = np.linalg.norm(x, axis=1)
-    x = x[norms > 0] / norms[norms > 0, None]
-    d = x.shape[1]
-    if d % m:
-        raise ValueError(f"pq_codebooks: dims {d} not divisible by m={m}")
-    sub = d // m
-    books = []
-    for j in range(m):
-        xs = x[:, j * sub:(j + 1) * sub]
-        k = min(ksub, len(xs))
-        cents = xs[:k].copy()
-        for _ in range(iters):
-            d2 = ((xs[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-            assign = np.argmin(d2, axis=1)  # ties -> lower code
-            moved = False
-            for c in range(k):
-                members = xs[assign == c]
-                if len(members):
-                    nc = members.mean(axis=0)
-                    if not np.allclose(nc, cents[c]):
-                        cents[c] = nc
-                        moved = True
-            if not moved:
-                break
-        books.append([[float(v) for v in c] for c in cents])
-    return books
-
-
-def pq_encode(df: DataFrame, codebooks: list, id_col: str = "vec_id",
-              vec_col: str = "embedding") -> DataFrame:
-    """PQ-encode every vector: (id, codes array<int> of length m).
-
-    Map-side only — the codebooks ride into the Arrow-batched pandas UDF
-    as a closure (broadcast by task serialization); per batch the
-    distance to all sub-centroids is one vectorized NumPy pass per
-    subspace. At 100 TB this is the compression step that turns a
-    4 KB float vector into m bytes of codes resident in memory."""
-    m = len(codebooks)
-    subdim = len(codebooks[0][0])
-    cents = [np.array(b, dtype=np.float64) for b in codebooks]
-
-    @pandas_udf("array<int>")
-    def encode_udf(vecs: pd.Series) -> pd.Series:
-        if not len(vecs):
-            return pd.Series([], dtype=object)
-        x = np.stack(vecs.to_numpy()).astype(np.float64)
-        n = np.linalg.norm(x, axis=1)
-        n[n == 0] = 1.0
-        x = x / n[:, None]
-        codes = np.empty((len(x), m), dtype=np.int32)
-        for j in range(m):
-            xs = x[:, j * subdim:(j + 1) * subdim]
-            # ||xs - c||^2 = ||xs||^2 - 2 xs.c + ||c||^2; argmin drops ||xs||^2
-            d2 = -2.0 * (xs @ cents[j].T) + (cents[j] ** 2).sum(axis=1)[None, :]
-            codes[:, j] = np.argmin(d2, axis=1)
-        return pd.Series(list(codes))
-
-    return (
-        df.filter(F.col(vec_col).isNotNull()
-                  & (F.size(F.col(vec_col)) == m * subdim))
-        .select(F.col(id_col), encode_udf(F.col(vec_col)).alias("codes"))
-    )
-
-
-def pq_encode_exact(df: DataFrame, codebooks: list,
-                    id_col: str = "vec_id",
-                    vec_col: str = "embedding") -> DataFrame:
-    """The SQL-expressible twin of `pq_encode`: identical codes computed
-    entirely with JVM-side left-fold expressions (no NumPy, no BLAS), so
-    an independent ANSI-SQL engine can reproduce every code and the PQ
-    gates get full value-hash checks instead of rows-only ones.
-
-    Per vector: unit-normalize (fold norm), posexplode into the m
-    subvectors, broadcast-join the m×ksub sub-centroid relation, score
-    each alternative with the left-fold squared distance rounded to 6dp
-    (one total order both engines agree on; argmin ties break toward the
-    lower code, matching `lloyd_pq`'s np.argmin), and reassemble the
-    code array in subspace order. Cost is m×ksub fold evaluations per
-    vector — the verification path; `pq_encode`'s vectorized NumPy
-    matmul remains the production encoder, and
-    `test_pq_encode_exact_matches_numpy` pins the two to byte-equal
-    output on the fixture corpus. Degenerate (null/empty/zero-norm)
-    vectors are excluded, consistent with the module contract."""
-    m = len(codebooks)
-    subdim = len(codebooks[0][0])
-    spark = df.sparkSession
-    cents = spark.createDataFrame(
-        [(j, c, [float(v) for v in vec])
-         for j, b in enumerate(codebooks) for c, vec in enumerate(b)],
-        "j int, code int, cvec array<double>")
-    d2_expr = ("aggregate(zip_with(sub, cvec, (x, y) -> (x - y) * (x - y)), "
-               "cast(0.0 as double), (acc, v) -> acc + v)")
-    base = with_norm(df.filter(F.size(F.col(vec_col)) == m * subdim),
-                     vec_col)
-    subs = (base
-            .select(id_col,
-                    F.expr(f"transform({vec_col}, v -> cast(v as double)"
-                           " / nullif(norm, cast(0.0 as double)))")
-                    .alias("ue"))
-            .select(id_col, F.posexplode(F.expr(
-                f"transform(sequence(0, {m - 1}), "
-                f"j -> slice(ue, j * {subdim} + 1, {subdim}))"))
-                .alias("j", "sub")))
-    scored = (subs.join(F.broadcast(cents), "j")
-              .select(id_col, "j", "code",
-                      F.round(F.expr(d2_expr), 6).alias("d2")))
-    best = (scored.groupBy(id_col, "j")
-            .agg(F.min(F.struct("d2", "code")).alias("b"))
-            .select(id_col, "j", F.col("b.code").alias("code")))
-    return (best.groupBy(id_col)
-            .agg(F.expr(
-                "transform(sort_array(collect_list(struct(j, code))), "
-                "x -> cast(x.code as int))").alias("codes")))
-
-
-def pq_adc_topk_exact(df: DataFrame, query_id: int = 0, k: int = 10,
-                      codebooks: list | None = None, m: int = 8,
-                      ksub: int = 256, id_col: str = "vec_id",
-                      vec_col: str = "embedding") -> DataFrame:
-    """The SQL-expressible twin of `pq_adc_topk` (see `pq_encode_exact`
-    for the why): codes from the exact fold encoder, per-subspace query
-    dots as left-fold expressions, and the m per-subspace scores summed
-    IN SUBSPACE ORDER (sorted collect_list fold) so the final 6dp-rounded
-    ADC score is bit-stable across engines and partitionings. Production
-    retrieval stays on `pq_adc_topk`'s NumPy LUT; the fixture equality of
-    the two is pinned by a unit test."""
-    if codebooks is None:
-        codebooks = pq_codebooks(df, m=m, ksub=ksub, id_col=id_col,
-                                 vec_col=vec_col)
-    m = len(codebooks)
-    subdim = len(codebooks[0][0])
-    spark = df.sparkSession
-    cents = spark.createDataFrame(
-        [(j, c, [float(v) for v in vec])
-         for j, b in enumerate(codebooks) for c, vec in enumerate(b)],
-        "j int, code int, cvec array<double>")
-    qsubs = (with_norm(df.filter(F.col(id_col) == query_id), vec_col)
-             .select(F.expr(f"transform({vec_col}, v -> cast(v as double)"
-                            " / nullif(norm, cast(0.0 as double)))")
-                     .alias("ue"))
-             .select(F.posexplode(F.expr(
-                 f"transform(sequence(0, {m - 1}), "
-                 f"j -> slice(ue, j * {subdim} + 1, {subdim}))"))
-                 .alias("j", "qsub")))
-    dot = ("aggregate(zip_with(qsub, cvec, (x, y) -> x * y), "
-           "cast(0.0 as double), (acc, v) -> acc + v)")
-    per = (pq_encode_exact(df, codebooks, id_col=id_col, vec_col=vec_col)
-           .filter(F.col(id_col) != query_id)
-           .select(id_col, F.posexplode("codes").alias("j", "code"))
-           .join(F.broadcast(cents), ["j", "code"])
-           .join(F.broadcast(qsubs), "j")
-           .select(id_col, "j", F.expr(dot).alias("s")))
-    return (per.groupBy(id_col)
-            .agg(F.round(F.expr(
-                "aggregate(transform(sort_array(collect_list(struct(j, s))),"
-                " x -> x.s), cast(0.0 as double), (acc, v) -> acc + v)"), 6)
-                .alias("score"))
-            .orderBy(F.col("score").desc(), F.col(id_col).asc())
-            .limit(k))
-
-
-def pq_adc_topk(df: DataFrame, query_id: int = 0, k: int = 10,
-                codebooks: list | None = None, m: int = 8, ksub: int = 256,
-                id_col: str = "vec_id", vec_col: str = "embedding",
-                qvec=None) -> DataFrame:
-    """Asymmetric-distance top-k over PQ codes: the query stays a full
-    vector; every candidate's (approximate, unit-normalized) cosine is a
-    sum of ``m`` lookup-table entries LUT[j, code_j] where
-    LUT[j] = q_j · codebook_j — built once on the driver (m × ksub dots)
-    from the single collected query row.
-
-    The scan side only ever touches the m-byte codes (the full embedding
-    column never moves after encoding), scoring is a NumPy take+sum per
-    Arrow batch, and the global top-k compiles to TakeOrdered. Ranking is
-    deterministic: 6dp-rounded score desc, id asc."""
-    if codebooks is None:
-        codebooks = pq_codebooks(df, m=m, ksub=ksub, id_col=id_col,
-                                 vec_col=vec_col)
-    if qvec is None:
-        qrow = df.filter(F.col(id_col) == query_id).select(vec_col).first()
-        if qrow is None or qrow[vec_col] is None or not len(qrow[vec_col]):
-            # consistent with brute_topk/lsh_topk: a missing (or
-            # direction-free) query ranks nothing, it doesn't crash
-            return df.sparkSession.createDataFrame(
-                [], f"{id_col} long, score double")
-        qvec = qrow[vec_col]
-    q = np.asarray(qvec, dtype=np.float64)
-    qn = np.linalg.norm(q)
-    if qn == 0:
-        # all-zero query has no direction: rank nothing, matching
-        # brute_topk/lsh_topk (whose with_norm drops the query row)
-        # instead of returning k rows all scored 0.0
-        return df.sparkSession.createDataFrame(
-            [], f"{id_col} long, score double")
-    q = q / qn
-    subdim = len(codebooks[0][0])
-    lut = np.stack([
-        np.asarray(b, dtype=np.float64) @ q[j * subdim:(j + 1) * subdim]
-        for j, b in enumerate(codebooks)
-    ])  # m x ksub
-
-    @pandas_udf("double")
-    def adc_udf(codes: pd.Series) -> pd.Series:
-        if not len(codes):
-            return pd.Series([], dtype="float64")
-        c = np.stack(codes.to_numpy()).astype(np.int64)
-        return pd.Series(
-            np.take_along_axis(lut, c.T, axis=1).sum(axis=0))
-
-    return (
-        pq_encode(df, codebooks, id_col=id_col, vec_col=vec_col)
-        .filter(F.col(id_col) != query_id)
-        .select(F.col(id_col), F.round(adc_udf(F.col("codes")), 6).alias("score"))
-        .orderBy(F.col("score").desc(), F.col(id_col).asc())
-        .limit(k)
-    )
 
 
 def _blocked_self_join_sides(base: DataFrame, id_col: str,

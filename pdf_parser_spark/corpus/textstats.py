@@ -757,7 +757,7 @@ def hashed_bow_embeddings(df: DataFrame, dims: int = 64,
     assemble into a dense vector, L2-normalized and rounded to 6dp —
     a deterministic, engine-portable featurizer that turns ANY text
     relation into an `embedding array<double>` the whole
-    `corpus.similarity` stack (brute/LSH/IVF/PQ/SQ8, SemDeDup,
+    `corpus.similarity` stack (brute/LSH/IVF/SQ8, SemDeDup,
     centroids) consumes directly. Real pipelines swap in a neural
     encoder behind the same (id, embedding) contract; this one exists
     so retrieval compositions are testable END TO END in-engine with

@@ -24,17 +24,13 @@ from pdf_parser_spark.oracle.extractor import VARIANTS
 DEFAULT_VARIANT = "a003"  # EXTRACTOR_MAP default (extractor_config.py:45)
 
 
-def registered_variants() -> tuple:
-    return tuple(sorted(VARIANTS))
-
-
 def get_variant(name: str | None) -> str:
     """Registry lookup with default (extractor_config.py:48-79)."""
     if name is None:
         return DEFAULT_VARIANT
     if name not in VARIANTS:
         raise KeyError(f"unknown extractor variant {name!r}; "
-                       f"registered: {registered_variants()}")
+                       f"registered: {tuple(sorted(VARIANTS))}")
     return name
 
 

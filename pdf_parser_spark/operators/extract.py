@@ -752,22 +752,10 @@ def _classify_stage_a000(state: dict) -> pd.DataFrame:
         region_counts, build_metadata)
 
 
-def _extract_page_rows(rows: pd.DataFrame, variant: str) -> pd.DataFrame:
-    """Vectorized A003-family extraction for tool='page/v1' rows.
-
-    ``rows``: columns rid (batch-local int64), turn_idx, text.
-    Returns one layout row per rid.
-    """
-    state, out_parts = _tokenize_stage(rows)
-    if state is not None:
-        out_parts = out_parts + [_classify_stage(state, variant)]
-    if not out_parts:
-        return _empty_layout_frame()
-    return pd.concat(out_parts, ignore_index=True)
-
-
 def _extract_page_rows_multi(rows: pd.DataFrame, variants) -> dict:
-    """One tokenize, N classifications: variant -> layout frame.
+    """Vectorized A003-family extraction of tool='page/v1' rows (columns
+    rid, turn_idx, text): one tokenize, N classifications, returning
+    variant -> layout frame with one row per rid.
 
     The D4 comparison fan-out previously re-tokenized identical payloads
     once per variant; the span-tree parse is variant-independent
@@ -912,13 +900,15 @@ def extract_batch(pdf: pd.DataFrame, variant: str = "a003",
     tool = pdf["tool"].fillna("plain")
 
     try:
-        parts = []
-        parts.append(_extract_page_rows(pdf[tool == "page/v1"][["rid", "turn_idx", "text"]], variant))
-        parts.append(_extract_html_rows(pdf[tool == "html/v1"][["rid", "turn_idx", "text"]]))
-        parts.append(_extract_plain_rows(
-            pdf[~tool.isin(["page/v1", "html/v1"])][["rid", "turn_idx", "text"]],
-            variant=variant))
-        layouts = pd.concat(parts, ignore_index=True)
+        page = _extract_page_rows_multi(
+            pdf[tool == "page/v1"][["rid", "turn_idx", "text"]], (variant,))[variant]
+        layouts = pd.concat([
+            page,
+            _extract_html_rows(pdf[tool == "html/v1"][["rid", "turn_idx", "text"]]),
+            _extract_plain_rows(
+                pdf[~tool.isin(["page/v1", "html/v1"])][["rid", "turn_idx", "text"]],
+                variant=variant),
+        ], ignore_index=True)
     except Exception:  # noqa: BLE001 — batch-level degrade: per-turn oracle
         pairs = [
             (rid, extract_turn(text, t if t in ("page/v1", "plain") else "plain", int(turn_idx), variant)
@@ -927,7 +917,13 @@ def extract_batch(pdf: pd.DataFrame, variant: str = "a003",
             .assign(tool=tool).itertuples(index=False)
         ]
         layouts = _rows_from_oracle(pairs)
+    return _merge_layouts(pdf, layouts, columns)
 
+
+def _merge_layouts(pdf: pd.DataFrame, layouts: pd.DataFrame,
+                   columns: list | None = None) -> pd.DataFrame:
+    """Join layout rows back onto the batch's passthrough columns by rid,
+    in input row order; ``columns`` restricts the output."""
     merged = pdf.drop(columns=["text"]).merge(layouts, on="rid").sort_values("rid")
     cols = columns or ([c for c in PASSTHROUGH if c in merged.columns] + LAYOUT_FIELDS)
     return merged[cols].reset_index(drop=True)
@@ -1065,12 +1061,9 @@ def extract_batch_multi(pdf: pd.DataFrame, variants) -> pd.DataFrame:
         for v in variants:
             # plain rows carry variant-keyed metadata (a000 differs), so
             # they are per-variant; html rows are variant-independent
-            layouts = pd.concat(
+            out = _merge_layouts(pdf, pd.concat(
                 [per_variant[v], html, _extract_plain_rows(plain_src, variant=v)],
-                ignore_index=True)
-            merged = pdf.drop(columns=["text"]).merge(layouts, on="rid").sort_values("rid")
-            cols = [c for c in PASSTHROUGH if c in merged.columns] + LAYOUT_FIELDS
-            out = merged[cols].reset_index(drop=True)
+                ignore_index=True))
             out["extractor_name"] = v
             frames.append(out)
         return pd.concat(frames, ignore_index=True)

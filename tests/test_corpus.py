@@ -5,6 +5,8 @@ import hashlib
 import math
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
 
@@ -229,8 +231,6 @@ def test_kmeans_codebook_deterministic_and_separating(spark):
 
 
 def test_multimodal_plumbing(spark, docs):
-    import pytest as _pytest
-
     from pdf_parser_spark.corpus import multimodal as M
 
     binr = M.attach_binary(docs)
@@ -239,24 +239,6 @@ def test_multimodal_plumbing(spark, docs):
         m = meta[doc_id]
         assert m.n_bytes == len(text.encode())
         assert m.width == (m.n_bytes % 640) + 16 and m.ok
-    with _pytest.raises(Exception, match="codec not available"):
-        M.decode_meta(binr, strict=True).collect()
-
-    thumbs = M.resize_stub(binr).collect()
-    assert all(len(r.thumb) == 32 and r.out_width == 64 for r in thumbs)
-
-    frames = M.frame_sample(binr, every_n_bytes=16, max_frames=3).collect()
-    per_doc = {}
-    for r in frames:
-        per_doc.setdefault(r.doc_id, []).append(r)
-    for doc_id, rows in per_doc.items():
-        assert [r.frame_idx for r in sorted(rows, key=lambda r: r.frame_idx)] == list(range(len(rows)))
-        assert len(rows) <= 3
-
-    feats = {r.doc_id: r.feature for r in M.feature_extract(binr).collect()}
-    for doc_id, _ in DOCS:
-        assert len(feats[doc_id]) == M.FEATURE_DIM
-        assert abs(sum(feats[doc_id]) - 1.0) < 1e-5
 
 
 def test_dup_clusters_connected_components(spark):
@@ -555,63 +537,6 @@ def test_topk_terms(spark, docs):
         "completely different text about spark dataframes here".split())[:5]
 
 
-def test_pq_encode_and_adc_topk(spark):
-    """PQ: deterministic codebooks, valid code ranges, ADC ranking finds
-    the true cluster, and exact-duplicate vectors share identical codes."""
-    rows = ([(i, [1.0, 0.01 * i, 0.0, 0.0]) for i in range(20)]
-            + [(100 + i, [0.0, 0.01 * i, 0.0, 1.0]) for i in range(20)])
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    cb1 = S.pq_codebooks(df, m=2, ksub=4)
-    cb2 = S.pq_codebooks(df, m=2, ksub=4)
-    assert cb1 == cb2  # deterministic
-    assert len(cb1) == 2 and all(len(b) <= 4 for b in cb1)
-    assert all(len(c) == 2 for b in cb1 for c in b)  # subdim = 4/2
-
-    codes = {r.vec_id: list(r.codes) for r in S.pq_encode(df, cb1).collect()}
-    assert set(codes) == {vid for vid, _ in rows}
-    assert all(len(c) == 2 and all(0 <= v < 4 for v in c)
-               for c in codes.values())
-    # vectors of the same geometric cluster agree on subspace 2 (the
-    # (0,0)/(0,1) halves differ only in the shared y coordinate)
-    assert len({tuple(codes[i]) for i in (0, 1, 2)}) <= 2
-
-    top = [r.vec_id for r in S.pq_adc_topk(df, query_id=0, k=5, codebooks=cb1).collect()]
-    assert len(top) == 5 and all(v < 100 for v in top)  # stays in-cluster
-    # exact duplicate of the query scores max possible
-    df2 = spark.createDataFrame(
-        rows + [(999, [1.0, 0.0, 0.0, 0.0])], "vec_id long, embedding array<float>")
-    cb = S.pq_codebooks(df2, m=2, ksub=4)
-    top2 = S.pq_adc_topk(df2, query_id=0, k=40, codebooks=cb).collect()
-    scores = {r.vec_id: r.score for r in top2}
-    assert 999 in scores
-    assert scores[999] == max(scores.values())
-
-
-def test_pq_wrong_dim_and_null_excluded(spark):
-    df = spark.createDataFrame(
-        [(0, [1.0, 0.0, 0.0, 0.0]), (1, None), (2, [1.0, 0.0])],
-        "vec_id long, embedding array<float>")
-    cb = [[[1.0, 0.0]], [[0.0, 0.0]]]  # m=2, subdim=2 -> expects dim 4
-    out = {r.vec_id for r in S.pq_encode(df, cb).collect()}
-    assert out == {0}
-
-
-def test_ivf_pq_topk_composition(spark):
-    """IVFADC: probe restriction + ADC scoring stays in the query's
-    geometric cluster and never returns the query itself."""
-    rows = ([(i, [1.0, 0.01 * i, 0.0, 0.0]) for i in range(20)]
-            + [(100 + i, [0.0, 0.01 * i, 0.0, 1.0]) for i in range(20)])
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    cb = S.kmeans_codebook(df, n_centroids=2)
-    pq_cb = S.pq_codebooks(df, m=2, ksub=8)
-    top = [r.vec_id for r in
-           S.ivf_pq_topk(df, query_id=0, k=5, n_probe=1,
-                         codebook=cb, pq_cb=pq_cb).collect()]
-    assert len(top) == 5
-    assert 0 not in top
-    assert all(v < 100 for v in top)  # probe-1 keeps the query's own cell
-
-
 def test_dup_passage_stats(spark):
     """Window dup counts equal a brute-force recomputation, including
     within-doc repeats and the short-doc whole-text window."""
@@ -706,8 +631,8 @@ def test_similarity_guards_zero_and_null_vectors(spark):
               for r in S.ivf_assign(df, n_centroids=2).collect()}
     assert sorted(assign) == [1, 2, 6]
     # missing / direction-free query: empty result, not a crash
-    assert S.pq_adc_topk(df, query_id=99, m=2, ksub=4).count() == 0
-    assert S.pq_adc_topk(df, query_id=3, m=2, ksub=4).count() == 0
+    assert S.brute_topk(df, query_id=99, k=10).count() == 0
+    assert S.brute_topk(df, query_id=3, k=10).count() == 0
 
 
 def test_centroid_by_label(spark):
@@ -792,15 +717,6 @@ def test_semantic_decontamination(spark):
     assert kept_strict == {3, 4, 5}
 
 
-def test_pq_adc_topk_zero_norm_query_ranks_nothing(spark):
-    """An all-zero query vector has no direction: pq_adc_topk must return
-    an empty frame (matching brute_topk/lsh_topk whose with_norm drops
-    the query row), not k rows all scored 0.0."""
-    rows = [(i, [float(i + 1), 1.0]) for i in range(6)] + [(9, [0.0, 0.0])]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    assert S.pq_adc_topk(df, query_id=9, m=2, ksub=4).count() == 0
-
-
 def test_batch_topk_matches_per_query_brute(spark, vecs):
     """batch_topk over a query set == brute_topk run per query; the
     per-partition local truncation must not lose a global winner even
@@ -813,23 +729,6 @@ def test_batch_topk_matches_per_query_brute(spark, vecs):
         want = [(r.vec_id, r.score)
                 for r in S.brute_topk(vecs, query_id=qid, k=3).collect()]
         assert sorted(got[qid], key=lambda t: (-t[1], t[0])) == want
-
-
-def test_pq_exact_twins_match_numpy_paths(spark):
-    """The fold-based SQL twins (the oracle-gated verification paths)
-    produce byte-identical output to the production NumPy paths on real
-    fixture data — codes AND the rounded ADC ranking."""
-    embs = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    cb = S.pq_codebooks(embs, m=8, ksub=64)
-    fast = {r.vec_id: list(r.codes) for r in S.pq_encode(embs, cb).collect()}
-    slow = {r.vec_id: list(r.codes)
-            for r in S.pq_encode_exact(embs, cb).collect()}
-    assert fast == slow and len(fast) > 0
-    a = [(r.vec_id, r.score)
-         for r in S.pq_adc_topk(embs, k=10, codebooks=cb).collect()]
-    b = [(r.vec_id, r.score)
-         for r in S.pq_adc_topk_exact(embs, k=10, codebooks=cb).collect()]
-    assert a == b and len(a) == 10
 
 
 def test_sq8_encode_contract(spark):
@@ -945,13 +844,15 @@ def test_pagerank_properties(spark):
     """PageRank invariants on a known graph: total mass conserved
     (teleport + dangling redistribution), the hub-endorsed node
     outranks peers, extraction feeds it end to end."""
-    from pdf_parser_spark.corpus.links import extract_links, pagerank
+    from pdf_parser_spark.corpus.links import (
+        extract_links, pagerank_converged)
 
     # a,b,c all -> d; d dangles; e -> a
     edges = spark.createDataFrame(
         [("a", "d"), ("b", "d"), ("c", "d"), ("e", "a")],
         "src string, dst string")
-    r = {row.node: row.r for row in pagerank(edges, iters=3).collect()}
+    ranks, _ = pagerank_converged(edges, max_iters=3, tol=0.0)
+    r = {row.node: row.r for row in ranks.collect()}
     assert abs(sum(r.values()) - 1.0) < 1e-6     # mass conserved
     assert r["d"] == max(r.values())             # 3 in-links wins
     assert r["a"] > r["b"]                       # endorsed > plain
@@ -965,16 +866,42 @@ def test_pagerank_properties(spark):
         == [("c1", 0, "/x", "one"), ("c1", 1, "/y", "two")]
 
 
+def _round9(x: float) -> float:
+    """Spark's F.round(x, 9) on a double: HALF_UP on the shortest
+    decimal form of x."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    return float(Decimal(repr(x)).quantize(Decimal("1e-9"), ROUND_HALF_UP))
+
+
+def _power_iteration(edge_list, iters, d=0.85):
+    """PageRank in plain Python, rounded to 9 dp after every step:
+    r'(v) = (1-d)/N + d * (sum_{u->v} r(u)/outdeg(u) + D/N)."""
+    nodes = sorted({n for e in edge_list for n in e})
+    n = len(nodes)
+    outdeg = {}
+    for src, _ in edge_list:
+        outdeg[src] = outdeg.get(src, 0) + 1
+    r = {v: _round9(1.0 / n) for v in nodes}
+    for _ in range(iters):
+        dangling = sum(round(r[v] * 1e9) for v in nodes if v not in outdeg)
+        s = {}
+        for src, dst in edge_list:
+            s[dst] = s.get(dst, 0.0) + r[src] / outdeg[src]
+        base = (1.0 - d) / n + d * ((dangling / 1e9) / n)
+        r = {v: _round9(base + d * s.get(v, 0.0)) for v in nodes}
+    return r
+
+
 def test_pagerank_converged(spark):
     """pagerank_converged: deltas shrink monotonically (after the first
     step), a loose tol early-stops before max_iters, the converged
-    ranks agree with fixed-iters pagerank at the same depth, and mass
-    stays conserved."""
-    from pdf_parser_spark.corpus.links import pagerank, pagerank_converged
+    ranks equal a plain-Python power iteration run to the same depth,
+    and mass stays conserved."""
+    from pdf_parser_spark.corpus.links import pagerank_converged
 
-    edges = spark.createDataFrame(
-        [("a", "d"), ("b", "d"), ("c", "d"), ("e", "a"), ("d", "e")],
-        "src string, dst string")
+    edge_list = [("a", "d"), ("b", "d"), ("c", "d"), ("e", "a"), ("d", "e")]
+    edges = spark.createDataFrame(edge_list, "src string, dst string")
     # deltas decay ~d=0.85 per iter from ~0.5, so tol=0.05 stops ~14
     # iterations in — well inside the 30 cap (the early-stop assert)
     ranks, deltas = pagerank_converged(edges, max_iters=30, tol=0.05)
@@ -985,25 +912,22 @@ def test_pagerank_converged(spark):
     r = {row.node: row.r for row in ranks.collect()}
     assert abs(sum(r.values()) - 1.0) < 1e-6
 
-    # same graph, fixed pagerank run to the converged depth: identical
-    # 9dp state (pagerank_converged iterates the same _pagerank_iteration)
-    fixed = {row.node: row.r
-             for row in pagerank(edges, iters=len(deltas)).collect()}
-    assert fixed == r
+    # same graph, same formula and per-step 9dp rounding, no Spark
+    assert _power_iteration(edge_list, len(deltas)) == r
 
 
 def test_hits_properties(spark):
     """HITS invariants: the most-cited target has the top authority,
     the node citing the best targets has the top hub score, both
     scores L1-normalize to 1."""
-    from pdf_parser_spark.corpus.links import hits
+    from pdf_parser_spark.corpus.links import hits_converged
 
     # h1 cites both hot targets; h2 cites one; h3 cites a cold one
     edges = spark.createDataFrame(
         [("h1", "t1"), ("h1", "t2"), ("h2", "t1"), ("h3", "t3")],
         "src string, dst string")
-    r = {row.node: (row.hub, row.auth)
-         for row in hits(edges, iters=2).collect()}
+    scores, _ = hits_converged(edges, max_iters=2, tol=0.0)
+    r = {row.node: (row.hub, row.auth) for row in scores.collect()}
     hubs = {k: v[0] for k, v in r.items()}
     auths = {k: v[1] for k, v in r.items()}
     assert abs(sum(hubs.values()) - 1.0) < 1e-6
@@ -1038,37 +962,6 @@ def test_temperature_mixture_upsamples_tail(spark):
     ident = temperature_mixture(df, tau=1.0).collect()
     assert len(ident) == 100
     assert all(r.repeats == 1 and r.copy_idx == 1 for r in ident)
-
-
-def test_jl_project_norm_preservation(spark):
-    """JL invariants: width/null contract, E[||y||^2] = ||x||^2 — the
-    realized norm ratios concentrate around 1 (±1 matrix, k=16 =>
-    relative std ~ sqrt(2/k) ~ 0.35), and the projection is a pure
-    deterministic function (same rows twice)."""
-    import numpy as np
-
-    from pdf_parser_spark.corpus.transforms import jl_project
-
-    embs = spark.read.parquet(
-        "/root/testdata/sf0.01/embeddings.parquet")
-    out = jl_project(embs, in_dims=64, out_dims=16)
-    rows = out.collect()
-    assert len(rows) == embs.filter(
-        "embedding IS NOT NULL AND size(embedding) = 64").count()
-    assert all(len(r.projected) == 16 for r in rows)
-
-    src = {r.vec_id: np.array(r.embedding, dtype=float)
-           for r in embs.limit(200).collect()}
-    proj = {r.vec_id: np.array(r.projected) for r in rows}
-    ratios = [np.linalg.norm(proj[v]) / np.linalg.norm(src[v])
-              for v in src if np.linalg.norm(src[v]) > 0]
-    ratios = np.array(ratios)
-    assert 0.85 < float(np.median(ratios)) < 1.15
-    assert float(((ratios > 0.5) & (ratios < 1.7)).mean()) > 0.9
-
-    again = {r.vec_id: list(r.projected)
-             for r in jl_project(embs, 64, 16).collect()}
-    assert again == {k: list(v) for k, v in proj.items()}
 
 
 def test_semdedup_auto_centroids(spark):
@@ -1151,11 +1044,57 @@ def test_url_canonicalize_cases(spark):
         ("http://tracker.ads.io/p?utm_a=1&utm_b=2",
          "http://tracker.ads.io/p"),
         ("https://example.com", "https://example.com/"),
+        # `&` and `utm_` inside the PATH are path, not query
+        ("http://h/a&b", "http://h/a&b"),
+        ("http://h/a&b?utm_x=1&c=2", "http://h/a&b?c=2"),
+        ("http://h/a&utm_x/b", "http://h/a&utm_x/b"),
+        ("http://h/p?utm_a=1&utm_b=2&c=3", "http://h/p?c=3"),
+        ("http://h/p?utm_a=1", "http://h/p"),
     ]
     df = spark.createDataFrame([(u,) for u, _ in cases], "url string")
     got = [r.c for r in
            df.select(url_canonicalize(F.col("url")).alias("c")).collect()]
     assert got == [want for _, want in cases]
+
+
+_URL_BITS = ["a", "B", "0", "&", "=", "_", ".", "-", "%2F", "utm_",
+             "utm_x=1", "x=utm_y", "/", "//"]
+_url_text = st.lists(st.sampled_from(_URL_BITS), max_size=8).map("".join)
+_url_parts = st.tuples(
+    st.sampled_from(["http", "HTTPS", "Http", "ftp"]),
+    st.from_regex(r"[a-zA-Z0-9.-]{1,10}", fullmatch=True),
+    st.one_of(st.just(""), _url_text.map(lambda t: "/" + t)),
+    st.one_of(st.just(""),
+              st.lists(st.sampled_from(_URL_BITS + ["?"]), max_size=8)
+              .map(lambda b: "?" + "".join(b))),
+    st.one_of(st.just(""), _url_text.map(lambda t: "#" + t + "?utm_z")))
+
+
+@settings(max_examples=40, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(st.lists(_url_parts, min_size=1, max_size=25))
+def test_url_canonicalize_properties(spark, parts):
+    """Properties from the URL grammar, not from either engine's code:
+    canonicalize is idempotent; the path survives untouched apart from
+    trailing slashes (`&` and `utm_` in it included); the query keeps
+    every non-`utm_` param in order and loses its `?` only when empty."""
+    from pdf_parser_spark.corpus.links import url_canonicalize
+
+    urls = [f"{scheme}://{''.join(rest)}" for scheme, *rest in parts]
+    df = spark.createDataFrame([(u,) for u in urls], "url string")
+    once = url_canonicalize(F.col("url"))
+    rows = df.select(once.alias("c1"),
+                     url_canonicalize(once).alias("c2")).collect()
+    for (scheme, host, path, query, _), r in zip(parts, rows):
+        assert r.c2 == r.c1, (r.c1, r.c2)
+        prefix = f"{scheme.lower()}://{host.lower()}"
+        assert r.c1.startswith(prefix), r.c1
+        out_path, _, out_query = r.c1[len(prefix):].partition("?")
+        assert out_path == (path.rstrip("/") or "/"), (path, r.c1)
+        kept = "&".join(p for p in query[1:].split("&")
+                        if not p.startswith("utm_"))
+        assert out_query == kept, (query, r.c1)
+        assert ("?" in r.c1) == (kept != ""), (query, r.c1)
 
 
 def test_registrable_domain_cases(spark):

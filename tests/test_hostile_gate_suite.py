@@ -8,7 +8,7 @@ duplicate and near-duplicate rows, null/empty/zero-norm embeddings.
 The fixture-distribution gates can only certify the contracts on the
 generator's vocabulary; this suite certifies them where engines actually
 fork (it is how the Java-vs-RE2 \\s split was found). Gates whose oracle
-embeds literals derived from the real sf0.01 parquet (k-means / PQ
+embeds literals derived from the real sf0.01 parquet (k-means
 codebooks) are excluded — their literals cannot describe this data."""
 
 import os
@@ -40,7 +40,6 @@ DOC_GATES = [
     "winnow_fingerprints",
 ]
 EMB_GATES = [
-    "jl_project_transform",
     "ann_sq8_encode", "ann_sq8_topk", "ann_ivf_sq8_topk",
     "ann_batch_topk", "ann_ivf_assign", "ann_ivf_topk",
     "ann_ivf_topk_probe2", "ann_lsh_buckets", "ann_lsh_topk",

@@ -103,17 +103,7 @@ def main() -> None:
             embs, query_id=q, k=k, n_probe=1, codebook=kmeans_cb),
         "ivf_km_probe2": lambda q: S.ivf_topk(
             embs, query_id=q, k=k, n_probe=2, codebook=kmeans_cb),
-        # PQ scans every code (scan fraction 1.0 by construction) but each
-        # "scan" touches m ints instead of d floats — the relevant number
-        # is recall at that compression, recorded alongside
-        "pq_adc": lambda q: S.pq_adc_topk(embs, query_id=q, k=k,
-                                          codebooks=pq_cb),
-        # IVFADC: km-probe-2 cell restriction + ADC within the cells
-        "ivfpq_km_probe2": lambda q: S.ivf_pq_topk(
-            embs, query_id=q, k=k, n_probe=2, codebook=kmeans_cb,
-            pq_cb=pq_cb),
     }
-    pq_cb = S.pq_codebooks(embs)
     recalls = {m: [] for m in methods}
     scanned = {m: [] for m in methods}
     for q in query_ids:
@@ -129,9 +119,6 @@ def main() -> None:
             sum(cell_sizes.get(c, 0) for c in probe2_cells(q)) / n_vecs)
         scanned["ivf_km_probe1"].append(km_sizes.get(km_of[q], 0) / n_vecs)
         scanned["ivf_km_probe2"].append(
-            sum(km_sizes.get(c, 0) for c in km_probe2_cells(q)) / n_vecs)
-        scanned["pq_adc"].append(1.0)  # full scan of m-byte codes
-        scanned["ivfpq_km_probe2"].append(
             sum(km_sizes.get(c, 0) for c in km_probe2_cells(q)) / n_vecs)
 
     out = {"sf_dir": sf_dir, "n_vecs": n_vecs, "k": k, "n_queries": n_queries}

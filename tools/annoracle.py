@@ -76,37 +76,3 @@ def centroid_values_sql(cents: list) -> str:
         f"({i}, [{', '.join(repr(float(v)) for v in c)}])"
         for i, c in enumerate(cents))
     return f"(VALUES {rows}) AS t(centroid_id, cvec)"
-
-
-def _hash_sample_pd(parquet_path: str, sample_cap: int,
-                    id_col: str, vec_col: str) -> np.ndarray:
-    """The engine's `_hash_sample` contract without Spark: same filter,
-    same (xxhash64(id), id) order, same cap."""
-    df = pd.read_parquet(parquet_path, columns=[id_col, vec_col])
-    df = df[df[vec_col].map(lambda v: v is not None and len(v) > 0)]
-    order = df[id_col].map(xxhash64_long)
-    df = (df.assign(_h=order)
-          .sort_values(["_h", id_col], kind="mergesort")
-          .head(sample_cap))
-    return np.array([np.asarray(v, dtype=np.float64) for v in df[vec_col]])
-
-
-def pq_books(parquet_path: str, m: int = 8, ksub: int = 256,
-             iters: int = 10, sample_cap: int = 4096,
-             id_col: str = "vec_id", vec_col: str = "embedding") -> list:
-    """The engine's PQ codebooks (`similarity.pq_codebooks`), reproduced
-    byte-identically without Spark: same sample contract, same
-    `lloyd_pq` code object."""
-    from pdf_parser_spark.corpus.similarity import lloyd_pq
-
-    x = _hash_sample_pd(parquet_path, sample_cap, id_col, vec_col)
-    return lloyd_pq(x, m, ksub, iters)
-
-
-def pq_values_sql(books: list) -> str:
-    """`(VALUES (j, code, [..]), ...) AS t(j, code, cvec)` over every
-    (subspace, code) sub-centroid, repr-precision floats."""
-    rows = ", ".join(
-        f"({j}, {c}, [{', '.join(repr(float(v)) for v in vec)}])"
-        for j, b in enumerate(books) for c, vec in enumerate(b))
-    return f"(VALUES {rows}) AS t(j, code, cvec)"

@@ -435,21 +435,6 @@ def main() -> None:
     )
 
     audit(
-        "PQ asymmetric-distance top-k (ANN compression path)",
-        S.pq_adc_topk(embs, k=10,
-                      codebooks=S.pq_codebooks(embs, m=8, ksub=16)),
-        requires=[r"TakeOrderedAndProject", r"ArrowEvalPython"],
-        forbids=[r"^\(\d+\) Sort\b"],
-        note=("Encode + ADC scoring are two Arrow-batched map stages (one "
-              "NumPy argmin / take+sum per batch) with the m x ksub lookup "
-              "table a closure constant; the global top-k compiles to "
-              "TakeOrderedAndProject (per-partition heap + driver merge) — "
-              "no full Sort (asserted), no shuffle of the codes. At scale "
-              "the scan side touches m ints per vector, never the float "
-              "embedding column."),
-    )
-
-    audit(
         "Batched ANN top-k (query-set retrieval)",
         S.batch_topk(embs, embs.filter(F.col("vec_id") < 20), k=10),
         requires=[r"BroadcastNestedLoopJoin|BroadcastExchange",
