@@ -3,7 +3,8 @@
 ``entry(spark)`` — flagship: layout extraction over the sf0.001 synthetic
 transcripts (the reference's EP1 path, SURVEY.md section 3).
 
-``queries()`` — one entry per implemented operator family:
+``queries()`` — one entry per implemented operator family; ``BENCH``
+names the gates bench.py times (the registry both read):
   * extraction (layouts a002/a003/a004, question spans, HTML boilerplate
     spans, markdown sinks, conversation reassembly, lineage) — verified
     against the pure-Python reference-semantics oracle goldens
@@ -47,7 +48,9 @@ from pdf_parser_spark.corpus import packing as PK  # noqa: E402
 from pdf_parser_spark.corpus import scrub as SC  # noqa: E402
 from pdf_parser_spark.corpus import similarity as S  # noqa: E402
 from pdf_parser_spark.corpus import textstats as TS  # noqa: E402
-from pdf_parser_spark.generator import sf_from_dir, transcripts_path  # noqa: E402
+from pdf_parser_spark.generator import (  # noqa: E402
+    sf_from_dir, table_path, transcripts_path,
+)
 from pdf_parser_spark.goldens import ensure_goldens, golden_dir  # noqa: E402
 from pdf_parser_spark.operators import convstats as CS  # noqa: E402
 from pdf_parser_spark.operators import funnel as FN  # noqa: E402
@@ -67,7 +70,7 @@ ORACLE_SF = 0.01  # the driver's correctness scale factor
 
 
 def _tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return spark.read.parquet(table_path(sf_dir, name))
 
 
 def _transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -293,6 +296,38 @@ COSINE_DUP_THRESHOLD = 0.3
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full layout extraction (EP1) on the sf0.001 transcripts."""
     return _layout_query("a003", page_only=False)(spark, "/root/testdata/sf0.001")
+
+
+# The gates bench.py times at $SPARK_GRAFT_SF_DIR, in suite order: the
+# bench runs these registered queries themselves, so a timed row is
+# always the checked query. layout_extract_a003 is the turns/sec headline.
+BENCH = (
+    "layout_extract_a003", "question_spans", "html_content_spans",
+    "markdown_c001", "conv_reassembly",
+    "dedup_minhash_lsh", "dedup_simhash", "dedup_exact",
+    "text_quality_scores",
+    "ann_lsh_topk", "ann_sq8_topk", "ann_kmeans_refine", "centroid_by_label",
+    "semdedup_keep", "ann_batch_topk",
+    "near_dedup_keep", "winnow_fingerprints", "cms_heavy_hitters",
+    "table_stats", "skew_report", "bm25_topk", "link_pagerank_converged",
+    "hybrid_rrf_topk", "weighted_sample", "temperature_mixture",
+    "pmi_cooccurrence", "quality_model_score", "link_hits_converged",
+    "dedup_incremental", "bloom_prune_join",
+    "repetition_stats", "quality_filter_keep", "winnow_containment",
+    "topk_terms", "dup_passage_stats", "dup_passage_scrub",
+    "funnel_stages", "pricing_summary", "local_supplier_volume",
+    "retention_cohorts", "split_assign", "leakage_safe_split",
+    "conv_stats", "conv_dup_groups", "session_stats",
+    "conv_context_windows", "conv_windows_salted",
+    "decontaminate", "contamination_spans",
+    "pack_sequences", "chunk_documents",
+    "unigram_surprisal", "bigram_surprisal", "curriculum_bins",
+    "pii_scrub", "stratified_sample", "mixture_sample",
+    "asof_join_latest", "hyper_rollup", "rate_anomaly", "distinct_kmv",
+    "dsir_weights", "hashed_bow", "quality_probe_weights",
+    "domain_stats", "blocklist_filter", "quality_probe_scores",
+    "near_dedup_keep_best", "semantic_decontam", "rag_chunk_topk",
+)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -1179,7 +1214,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def q_semdedup_keep(spark, sf_dir):
         embs = _tbl(spark, sf_dir, "embeddings")
-        cb = S.kmeans_codebook(embs)
+        # production config: cells scale with the corpus (auto == 16 up
+        # to 4,800 vectors, so the oracle's 16-cell codebook still holds)
+        cb = S.kmeans_codebook(embs, n_centroids=S.auto_centroids(embs))
         return _longify(S.semdedup_keep(
             embs, threshold=COSINE_DUP_THRESHOLD, codebook=cb)
             .select("vec_id", "label"))
@@ -1187,14 +1224,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["semdedup_keep"] = q_semdedup_keep
 
     def q_semantic_decontam(spark, sf_dir):
-        # embedding-space eval-overlap: eval set = vec_id % 50 == 0,
-        # corpus = the rest; per-doc max cosine vs the eval set + the
-        # keep decision at a fixture-calibrated threshold (max observed
-        # cos on this fixture is 0.453, so 0.25 is strongly non-vacuous:
-        # 120 of 490 rows drop)
+        # embedding-space eval-overlap: eval set = vec_id % 50 == 0 AND
+        # vec_id < 2000 (a fixed cap, so replicated fixtures grow only
+        # the corpus side), corpus = the rest; per-doc max cosine vs the
+        # eval set + the keep decision at a fixture-calibrated threshold
+        # (max observed cos on this fixture is 0.453, so 0.25 is strongly
+        # non-vacuous: 120 of 490 rows drop)
         embs = _tbl(spark, sf_dir, "embeddings")
-        ev = embs.filter(F.col("vec_id") % 50 == 0)
-        corpus = embs.filter(F.col("vec_id") % 50 != 0)
+        is_eval = (F.col("vec_id") % 50 == 0) & (F.col("vec_id") < 2000)
+        ev = embs.filter(is_eval)
+        corpus = embs.filter(~is_eval)
         return (S.semantic_contamination(corpus, ev)
                 .withColumn("keep",
                             (F.col("max_eval_cos") < F.lit(0.25))
@@ -3892,12 +3931,12 @@ def oracle_sql() -> dict[str, str]:
             SELECT query_id, vec_id, score FROM r WHERE rn <= 10
         """,
         # embedding-space decontamination: max cosine of each non-eval
-        # vector vs the eval subset (vec_id % 50 = 0), 4dp-rounded before
-        # the max so both engines reduce identical numbers
+        # vector vs the eval subset (vec_id % 50 = 0 AND vec_id < 2000),
+        # 4dp-rounded before the max so both engines reduce identical numbers
         "semantic_decontam": f"""
             WITH {_VEC_CTES},
             ev AS (SELECT e AS qe, norm AS qn
-                   FROM nrm WHERE vec_id % 50 = 0)
+                   FROM nrm WHERE vec_id % 50 = 0 AND vec_id < 2000)
             SELECT n.vec_id,
                    max(round(list_inner_product(n.e, ev.qe)
                              / (n.norm * ev.qn), 4)) AS max_eval_cos,
@@ -3905,7 +3944,7 @@ def oracle_sql() -> dict[str, str]:
                                        / (n.norm * ev.qn), 4)) < 0.25
                         THEN 1 ELSE 0 END AS keep
             FROM nrm n, ev
-            WHERE n.vec_id % 50 <> 0
+            WHERE NOT (n.vec_id % 50 = 0 AND n.vec_id < 2000)
             GROUP BY n.vec_id
         """,
         "semdedup_pairs": f"""

@@ -349,6 +349,17 @@ def transcripts_path(sf: float, base_dir: str = "/root/repo/data/transcripts") -
     return generate_transcripts(sf, os.path.join(base_dir, name, "transcripts_ds"))
 
 
+def table_path(sf_dir: str, name: str) -> str:
+    """Parquet path of table ``name`` in ``sf_dir``, preferring
+    ``{name}_nonrep.parquet`` when present (data/sf1 only): plain 10x
+    offset-replicas keep text/vectors byte-identical across reps, which
+    inflates near-dup PAIR counts quadratically (FIXTURES.md section 6)."""
+    nonrep = os.path.join(sf_dir, f"{name}_nonrep.parquet")
+    if os.path.exists(nonrep):
+        return nonrep
+    return os.path.join(sf_dir, f"{name}.parquet")
+
+
 def sf_from_dir(sf_dir: str) -> float:
     """Map a driver sf dir (/root/testdata/sf0.01) to a scale factor.
 

@@ -62,12 +62,13 @@ def main() -> int:
     only = set(sys.argv[2:])
 
     import __spark_entry__ as E
+    from pdf_parser_spark.generator import table_path
     from pdf_parser_spark.session import get_spark
 
     spark = get_spark("check-correctness", cpus=os.environ.get("SPARK_GRAFT_CPUS", "8"))
     con = duckdb.connect()
     for t in TABLES:
-        path = os.path.join(sf_dir, f"{t}.parquet")
+        path = table_path(sf_dir, t)
         if os.path.exists(path):
             con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
 

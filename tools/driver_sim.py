@@ -28,6 +28,7 @@ def main() -> int:
 
     import __spark_entry__ as E
     from check_correctness import TABLES, value_hash
+    from pdf_parser_spark.generator import table_path
 
     spark = (
         SparkSession.builder.master("local[8]")
@@ -39,7 +40,7 @@ def main() -> int:
     )
     con = duckdb.connect()
     for t in TABLES:
-        p = os.path.join(sf_dir, f"{t}.parquet")
+        p = table_path(sf_dir, t)
         if os.path.exists(p):
             con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
 
