@@ -56,19 +56,6 @@ def _layout_row(conv_id, turn_idx, lay) -> dict:
     }
 
 
-def _oracle_layout(text, tool, turn_idx, variant):
-    if tool == "html/v1":
-        res = strip_boilerplate(text)
-        return {
-            "page_number": turn_idx + 1,
-            "header": res["header"], "footer": res["footer"],
-            "left_column": res["left_column"], "right_column": res["right_column"],
-            "page_width": 0.0, "page_height": 0.0,
-            "column_separator_position": None, "metadata": res["metadata"],
-        }
-    return extract_turn(text, tool if tool == "page/v1" else "plain", turn_idx, variant)
-
-
 def markdown_c001(n, header, footer, left, right) -> str:
     """Python twin of operators/markdown.markdown_c001_col
     (C001_create_markdown.py:30-49)."""
@@ -139,7 +126,7 @@ def ensure_goldens(sf: float) -> str:
         ["conv_id", "turn_idx", "text", "tool"]
     ].itertuples(index=False):
         t = int(turn_idx)
-        lay = _oracle_layout(text, tool, t, "a003")
+        lay = extract_turn(text, tool, t, "a003")
         layouts.append(_layout_row(conv_id, t, lay))
         if "error" in lay["metadata"]:
             # golden for the S8 error-row JSON shape: the raw metadata

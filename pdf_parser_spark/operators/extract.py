@@ -15,9 +15,12 @@ Scale design:
   for the map phase, so mega-conversation skew cannot serialize it
 * the only Python<->JVM boundary is Arrow batch transport (mapInPandas)
 * per-turn error handling degrades to error rows, never fails the task
-  (D1 semantics, A003:328-341); if the vectorized path itself raises on a
-  pathological batch, the batch falls back to the per-turn oracle (slow but
-  identical semantics), preserving degrade-don't-fail at batch granularity
+  (D1 semantics, A003:328-341)
+* one batch-level degrade: ``_extract_variants`` splits a batch by tool
+  once and runs the vectorized core for every requested variant; if the
+  core raises on a pathological batch, every turn of the batch goes to the
+  per-turn oracle ``extract_turn`` instead (slow but identical semantics).
+  ``extract_batch`` and ``extract_batch_multi`` are thin merges over it.
 """
 
 from __future__ import annotations
@@ -29,9 +32,13 @@ import numpy as np
 import pandas as pd
 
 from pdf_parser_spark.operators.html import strip_html
-from pdf_parser_spark.oracle.boilerplate import strip_boilerplate
-from pdf_parser_spark.oracle.extractor import VARIANTS, extract_turn
-from pdf_parser_spark.payload import unescape_text
+from pdf_parser_spark.oracle.extractor import (
+    DEFAULT_PAGE_H,
+    DEFAULT_PAGE_W,
+    VARIANTS,
+    extract_turn,
+)
+from pdf_parser_spark.payload import A000_KEEP_TYPES, stub_block_type, unescape_text
 
 PASSTHROUGH = ["conv_id", "turn_idx", "role", "tool", "ts"]
 LAYOUT_FIELDS = [
@@ -46,9 +53,6 @@ LAYOUT_SCHEMA_DDL = (
     "page_width double, page_height double, "
     "column_separator_position double, metadata map<string,string>"
 )
-
-DEFAULT_PAGE_W = 612.0
-DEFAULT_PAGE_H = 792.0
 
 # Record grammar shared with the oracle parser (payload.py) — both sides
 # accept exactly the same strict language, so tokenize-failure semantics
@@ -69,38 +73,25 @@ def _unescape_series(s: pd.Series) -> pd.Series:
     return s
 
 
-def _empty_layout_frame() -> pd.DataFrame:
-    return pd.DataFrame(
-        {
-            "rid": pd.Series([], dtype=np.int64),
-            "page_number": pd.Series([], dtype=np.int64),
-            "header": pd.Series([], dtype=object),
-            "footer": pd.Series([], dtype=object),
-            "left_column": pd.Series([], dtype=object),
-            "right_column": pd.Series([], dtype=object),
-            "page_width": pd.Series([], dtype=np.float64),
-            "page_height": pd.Series([], dtype=np.float64),
-            "column_separator_position": pd.Series([], dtype=np.float64),
-            "metadata": pd.Series([], dtype=object),
-        }
-    )
-
-
 def _error_frame(rids: np.ndarray, turn_idx: pd.Series, messages) -> pd.DataFrame:
-    """D1 error rows (A003:328-341), vectorized."""
+    """D1 error rows (A003:328-341), vectorized; on zero rows, the empty
+    layout frame."""
     n = len(rids)
+    empty = np.full(n, "", dtype=object)
     return pd.DataFrame(
         {
             "rid": rids,
             "page_number": turn_idx.to_numpy() + 1,
-            "header": [""] * n,
-            "footer": [""] * n,
-            "left_column": [""] * n,
-            "right_column": [""] * n,
+            "header": empty,
+            "footer": empty,
+            "left_column": empty,
+            "right_column": empty,
             "page_width": np.zeros(n),
             "page_height": np.zeros(n),
             "column_separator_position": np.full(n, np.nan),
-            "metadata": [{"error": json.dumps(m, ensure_ascii=False)} for m in messages],
+            "metadata": pd.Series(
+                [{"error": json.dumps(m, ensure_ascii=False)} for m in messages],
+                dtype=object),
         }
     )
 
@@ -627,8 +618,6 @@ def _classify_stage_a000(state: dict) -> pd.DataFrame:
     the stub-assigned types: Table/Figure blocks never reach separator
     search, classification or the block counts (a local filtered copy —
     ``state`` is shared with the other variants in the fused fan-out)."""
-    from pdf_parser_spark.payload import A000_KEEP_TYPES, stub_block_type
-
     rows = state["rows"]
     blocks = state["blocks"]
     if len(blocks):
@@ -752,27 +741,6 @@ def _classify_stage_a000(state: dict) -> pd.DataFrame:
         region_counts, build_metadata)
 
 
-def _extract_page_rows_multi(rows: pd.DataFrame, variants) -> dict:
-    """Vectorized A003-family extraction of tool='page/v1' rows (columns
-    rid, turn_idx, text): one tokenize, N classifications, returning
-    variant -> layout frame with one row per rid.
-
-    The D4 comparison fan-out previously re-tokenized identical payloads
-    once per variant; the span-tree parse is variant-independent
-    (/root/reference/pdf_layout_tester.py:325-365 runs extractors on the
-    same already-opened pages), so only ``_classify_stage`` repeats."""
-    state, out_parts = _tokenize_stage(rows)
-    result = {}
-    for v in variants:
-        parts = list(out_parts)
-        if state is not None:
-            parts.append(_classify_stage(state, v))
-        result[v] = (
-            pd.concat(parts, ignore_index=True) if parts else _empty_layout_frame()
-        )
-    return result
-
-
 _PAGE_RECT_JSON = json.dumps([0.0, 0.0, DEFAULT_PAGE_W, DEFAULT_PAGE_H])
 _META_PLAIN_BLOCK = {
     "total_text_blocks": "1", "header_blocks": "0", "footer_blocks": "0",
@@ -787,9 +755,10 @@ _META_PLAIN_EMPTY = {
     "has_footer": "false", "page_rect": _PAGE_RECT_JSON,
 }
 _META_NULL_PAYLOAD = {"error": json.dumps("null payload")}
-# A000's metadata keys for the same plain-fallback geometry (separator,
-# classification and text are identical — n=1 block can never satisfy the
-# 10%-each-side grid test, so the separator stays w/2 for both families)
+# A000's metadata keys for the same plain-fallback geometry. The separator
+# stays w/2 for both families (n=1 block can never satisfy the
+# 10%-each-side grid test), but A000's P8 filter drops the block when its
+# stub type is Table/Figure, which leaves an empty page
 _META_PLAIN_BLOCK_A000 = {
     "total_text_blocks_layoutlm": "1", "header_blocks": "0",
     "footer_blocks": "0", "left_column_blocks": "0",
@@ -812,16 +781,18 @@ def _extract_plain_rows(rows: pd.DataFrame, variant: str = "a003") -> pd.DataFra
     (A003:94-108). Note the faithful quirk: the block's center_x equals the
     default separator w/2, and the classifier's strict `<` routes the text
     to right_column (A003:239-242). Fully vectorized; the possible
-    metadata dicts are shared constants (read-only downstream) — the a000
-    variant differs ONLY in its metadata key set."""
-    if rows.empty:
-        return _empty_layout_frame()
+    metadata dicts are shared constants (read-only downstream). The a000
+    variant differs in its metadata key set and in its P8 type filter,
+    which drops a block typed Table/Figure (A000:80-82)."""
     a000 = VARIANTS[variant].footer_mode == "line_extent"
     n = len(rows)
     txt = rows["text"]
     is_null = txt.isna().to_numpy()
     stripped = txt.fillna("").str.strip()
     has_block = (~is_null) & (stripped != "").to_numpy()
+    if a000 and has_block.any():
+        has_block[has_block] = (
+            stripped[has_block].map(stub_block_type).isin(A000_KEEP_TYPES).to_numpy())
     meta = np.empty(n, dtype=object)
     meta[:] = _META_PLAIN_EMPTY_A000 if a000 else _META_PLAIN_EMPTY
     meta[has_block] = _META_PLAIN_BLOCK_A000 if a000 else _META_PLAIN_BLOCK
@@ -854,37 +825,65 @@ def _rows_from_oracle(pairs) -> pd.DataFrame:
     return pd.DataFrame(recs, columns=["rid"] + LAYOUT_FIELDS)
 
 
-def _html_row(turn_idx: int, header: str = "", footer: str = "",
-              left_column: str = "", metadata: dict | None = None) -> dict:
-    """One html/v1 layout row: there is no page, so the geometry is fixed
-    and ``right_column`` is always empty."""
-    return {
-        "page_number": turn_idx + 1,
-        "header": header, "footer": footer,
-        "left_column": left_column, "right_column": "",
-        "page_width": 0.0, "page_height": 0.0,
-        "column_separator_position": np.nan,
-        "metadata": metadata,
-    }
-
-
 def _extract_html_rows(rows: pd.DataFrame) -> pd.DataFrame:
     """tool='html/v1': DOM boilerplate stripping (north-rule addition).
 
     Each turn goes through the engine core ``operators/html.strip_html``
     (a stack parse per payload; ``tests/test_fuzz.py`` checks it equals
-    the oracle's ``strip_boilerplate``). A core exception is not caught
-    here: it sends the whole batch to the per-turn oracle, like the page
-    path (``extract_batch``)."""
+    the oracle's ``strip_boilerplate``). There is no page, so the geometry
+    is fixed and ``right_column`` is always empty. A core exception is not
+    caught here: it sends the whole batch to the per-turn oracle
+    (``_extract_variants``)."""
     if rows.empty:
-        return _empty_layout_frame()
+        return _error_frame(rows["rid"].to_numpy(), rows["turn_idx"], [])
     recs = []
-    for rid, turn_idx, text in rows[["rid", "turn_idx", "text"]].itertuples(index=False):
+    for rid, turn_idx, text in rows.itertuples(index=False):
         header, footer, main, _spans, metadata = strip_html(text)
-        rec = _html_row(int(turn_idx), header, footer, main, metadata)
-        rec["rid"] = rid
-        recs.append(rec)
+        recs.append((rid, turn_idx + 1, header, footer, main, "",
+                     0.0, 0.0, np.nan, metadata))
     return pd.DataFrame(recs, columns=["rid"] + LAYOUT_FIELDS)
+
+
+def _split_tools(pdf: pd.DataFrame):
+    """Number the batch's rows (``rid``) and split them by tool once:
+    returns ``(pdf, page, html, plain)``, the last three with columns rid,
+    turn_idx, text. A null or unknown tool counts as plain."""
+    pdf = pdf.reset_index(drop=True)
+    pdf["rid"] = np.arange(len(pdf), dtype=np.int64)
+    rows = pdf[["rid", "turn_idx", "text"]]
+    is_page = (pdf["tool"] == "page/v1").to_numpy()
+    is_html = (pdf["tool"] == "html/v1").to_numpy()
+    return pdf, rows[is_page], rows[is_html], rows[~(is_page | is_html)]
+
+
+def _extract_variants(pdf: pd.DataFrame, variants) -> tuple:
+    """The one batch driver: layout rows (columns rid + LAYOUT_FIELDS) of
+    every turn of the batch, per variant. Page payloads are tokenized once
+    and classified per variant; html rows are variant-independent and
+    extracted once; plain rows carry variant-keyed metadata and the a000
+    type filter, so they are per variant. If the vectorized core raises,
+    every turn of the batch goes to the per-turn oracle for every variant
+    (degrade-don't-fail at batch granularity). Returns ``(pdf, layouts)``
+    with ``pdf`` rid-numbered and ``layouts`` a dict variant -> frame."""
+    pdf, page, html, plain = _split_tools(pdf)
+    try:
+        state, errors = _tokenize_stage(page)
+        html_rows = _extract_html_rows(html)
+        layouts = {}
+        for v in variants:
+            parts = errors + [html_rows, _extract_plain_rows(plain, v)]
+            if state is not None:
+                parts.append(_classify_stage(state, v))
+            layouts[v] = pd.concat(parts, ignore_index=True)
+    except Exception:  # noqa: BLE001 — batch-level degrade: per-turn oracle
+        turns = list(pdf[["rid", "turn_idx", "text", "tool"]].itertuples(index=False))
+        layouts = {
+            v: _rows_from_oracle(
+                (rid, extract_turn(text, tool, int(turn_idx), v))
+                for rid, turn_idx, text, tool in turns)
+            for v in variants
+        }
+    return pdf, layouts
 
 
 def extract_batch(pdf: pd.DataFrame, variant: str = "a003",
@@ -895,29 +894,8 @@ def extract_batch(pdf: pd.DataFrame, variant: str = "a003",
     Output: passthrough + LAYOUT_FIELDS, in input row order; ``columns``
     restricts the output (manual pruning — see ``extract_layouts``).
     """
-    pdf = pdf.reset_index(drop=True)
-    pdf["rid"] = np.arange(len(pdf), dtype=np.int64)
-    tool = pdf["tool"].fillna("plain")
-
-    try:
-        page = _extract_page_rows_multi(
-            pdf[tool == "page/v1"][["rid", "turn_idx", "text"]], (variant,))[variant]
-        layouts = pd.concat([
-            page,
-            _extract_html_rows(pdf[tool == "html/v1"][["rid", "turn_idx", "text"]]),
-            _extract_plain_rows(
-                pdf[~tool.isin(["page/v1", "html/v1"])][["rid", "turn_idx", "text"]],
-                variant=variant),
-        ], ignore_index=True)
-    except Exception:  # noqa: BLE001 — batch-level degrade: per-turn oracle
-        pairs = [
-            (rid, extract_turn(text, t if t in ("page/v1", "plain") else "plain", int(turn_idx), variant)
-             if t != "html/v1" else _html_oracle(text, int(turn_idx)))
-            for rid, turn_idx, text, t in pdf[["rid", "turn_idx", "text", "tool"]]
-            .assign(tool=tool).itertuples(index=False)
-        ]
-        layouts = _rows_from_oracle(pairs)
-    return _merge_layouts(pdf, layouts, columns)
+    pdf, layouts = _extract_variants(pdf, (variant,))
+    return _merge_layouts(pdf, layouts[variant], columns)
 
 
 def _merge_layouts(pdf: pd.DataFrame, layouts: pd.DataFrame,
@@ -927,16 +905,6 @@ def _merge_layouts(pdf: pd.DataFrame, layouts: pd.DataFrame,
     merged = pdf.drop(columns=["text"]).merge(layouts, on="rid").sort_values("rid")
     cols = columns or ([c for c in PASSTHROUGH if c in merged.columns] + LAYOUT_FIELDS)
     return merged[cols].reset_index(drop=True)
-
-
-def _html_oracle(text: str, turn_idx: int) -> dict:
-    try:
-        res = strip_boilerplate(text)
-    except Exception as exc:  # noqa: BLE001 — degrade per turn
-        return _html_row(turn_idx, metadata={
-            "error": json.dumps(str(exc), ensure_ascii=False)})
-    return _html_row(turn_idx, res["header"], res["footer"],
-                     res["left_column"], res["metadata"])
 
 
 _LAYOUT_FIELD_DDL = {
@@ -1000,10 +968,7 @@ def blocks_batch(pdf: pd.DataFrame) -> pd.DataFrame:
     rows for unparseable turns — exactly the reference's
     ``get_text_blocks`` protocol method
     (/root/reference/A003_colored_footer.py:66-110) exposed as a scan."""
-    pdf = pdf.reset_index(drop=True)
-    pdf["rid"] = np.arange(len(pdf), dtype=np.int64)
-    tool = pdf["tool"].fillna("plain")
-    page_rows = pdf[tool == "page/v1"][["rid", "turn_idx", "text"]]
+    pdf, page_rows, _html, _plain = _split_tools(pdf)
     cols = ["conv_id", "turn_idx", "block_idx", "x0", "y0", "x1", "y1",
             "font_size", "font_name", "text"]
     state, _errs = _tokenize_stage(page_rows)
@@ -1045,36 +1010,13 @@ def clip_blocks(blocks, x0: float, y0: float, x1: float, y1: float):
 
 
 def extract_batch_multi(pdf: pd.DataFrame, variants) -> pd.DataFrame:
-    """Multi-variant extraction for one Arrow batch: tokenize the page
-    payloads once, classify per variant; html/plain rows are
-    variant-independent and computed once, replicated per variant. Output
-    adds ``extractor_name``."""
-    pdf = pdf.reset_index(drop=True)
-    pdf["rid"] = np.arange(len(pdf), dtype=np.int64)
-    tool = pdf["tool"].fillna("plain")
-    try:
-        per_variant = _extract_page_rows_multi(
-            pdf[tool == "page/v1"][["rid", "turn_idx", "text"]], variants)
-        html = _extract_html_rows(pdf[tool == "html/v1"][["rid", "turn_idx", "text"]])
-        plain_src = pdf[~tool.isin(["page/v1", "html/v1"])][["rid", "turn_idx", "text"]]
-        frames = []
-        for v in variants:
-            # plain rows carry variant-keyed metadata (a000 differs), so
-            # they are per-variant; html rows are variant-independent
-            out = _merge_layouts(pdf, pd.concat(
-                [per_variant[v], html, _extract_plain_rows(plain_src, variant=v)],
-                ignore_index=True))
-            out["extractor_name"] = v
-            frames.append(out)
-        return pd.concat(frames, ignore_index=True)
-    except Exception:  # noqa: BLE001 — batch-level degrade: per-variant oracle
-        src = pdf.drop(columns=["rid"])
-        frames = []
-        for v in variants:
-            out = extract_batch(src.copy(), variant=v)
-            out["extractor_name"] = v
-            frames.append(out)
-        return pd.concat(frames, ignore_index=True)
+    """Multi-variant extraction for one Arrow batch (``_extract_variants``:
+    page payloads tokenized once and classified per variant). Output is
+    each variant's ``extract_batch`` rows in turn, plus ``extractor_name``."""
+    pdf, layouts = _extract_variants(pdf, variants)
+    return pd.concat(
+        [_merge_layouts(pdf, layouts[v]).assign(extractor_name=v) for v in variants],
+        ignore_index=True)
 
 
 def extract_layouts_multi(df, variants=("a002", "a003", "a004")):

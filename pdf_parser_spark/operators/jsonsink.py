@@ -24,10 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-PAGE_FIELDS = (
-    "page_number", "header", "footer", "left_column", "right_column",
-    "page_width", "page_height", "column_separator_position", "metadata",
-)
+from pdf_parser_spark.operators.extract import LAYOUT_FIELDS
 
 
 def _sep_nan_to_null() -> F.Column:
@@ -43,7 +40,7 @@ def _sep_nan_to_null() -> F.Column:
 def layout_struct() -> F.Column:
     cols = [
         _sep_nan_to_null() if c == "column_separator_position" else F.col(c)
-        for c in PAGE_FIELDS
+        for c in LAYOUT_FIELDS
     ]
     return F.struct(*cols)
 
@@ -70,10 +67,10 @@ def conversation_json(layouts: DataFrame) -> DataFrame:
                 # explicit comparator: default struct ordering can't sort a
                 # struct containing the MAP-typed metadata field
                 "transform(array_sort(collect_list(struct(turn_idx, "
-                + ", ".join(PAGE_FIELDS)
+                + ", ".join(LAYOUT_FIELDS)
                 + ")), (a, b) -> case when a.turn_idx < b.turn_idx then -1 "
                 "when a.turn_idx > b.turn_idx then 1 else 0 end), s -> struct("
-                + ", ".join(f"s.{c} as {c}" for c in PAGE_FIELDS)
+                + ", ".join(f"s.{c} as {c}" for c in LAYOUT_FIELDS)
                 + "))"
             ).alias("pages"),
         )

@@ -31,6 +31,7 @@ from __future__ import annotations
 import json
 from dataclasses import dataclass
 
+from pdf_parser_spark.oracle.boilerplate import strip_boilerplate
 from pdf_parser_spark.payload import (
     A000_KEEP_TYPES,
     Block,
@@ -378,12 +379,32 @@ def extract_turn(
     /root/reference/tests/extractor_config.py:33-45):
 
     * ``page/v1`` — full layout payload, tokenized per payload.py
+    * ``html/v1`` — DOM boilerplate stripping (``strip_boilerplate``):
+      header/footer/main text on a zero-size page, ``right_column`` empty,
+      no separator; the same for every variant
     * ``plain``   — raw text; handled like the reference's get_text()
       fallback: one whole-page block (612x792, size 12.0, font "Unknown")
-    * anything else falls back to ``plain`` semantics
+    * anything else (including a null tool) falls back to ``plain``
+
+    A payload that raises on any path becomes the D1 error row. This is
+    the one per-turn entry for every tool: goldens, tests and the
+    batch-level degrade in ``operators/extract.py`` all call it.
     """
     cfg = VARIANTS[variant]
     try:
+        if tool == "html/v1":
+            res = strip_boilerplate(payload)
+            return {
+                "page_number": turn_idx + 1,
+                "header": res["header"],
+                "footer": res["footer"],
+                "left_column": res["left_column"],
+                "right_column": "",
+                "page_width": 0.0,
+                "page_height": 0.0,
+                "column_separator_position": None,
+                "metadata": res["metadata"],
+            }
         if tool == "page/v1":
             try:
                 page = parse_payload(payload)

@@ -14,6 +14,9 @@ per tool with a configurable lateness bound.
 
 from __future__ import annotations
 
+import os
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -241,75 +244,36 @@ def stream_merge_changes(changes: DataFrame, base: DataFrame,
     deletes replace (`io.py`'s catalog seam); the per-key window logic
     stays identical, only the sink changes. Read the live snapshot with
     `merged_snapshot`."""
-    import os
-    import shutil
+    from pyspark.sql import Window
 
     from pdf_parser_spark.operators.funnel import _epoch_us
 
-    spark = changes.sparkSession
     cols = [f.name for f in base.schema.fields]
-    ptr = os.path.join(state_dir, "_LATEST")
-    if not os.path.exists(ptr):
-        os.makedirs(state_dir, exist_ok=True)
-        v0 = os.path.join(state_dir, "v0")
-        (base.select(*cols)
-         .withColumn("_rank_ts", F.lit(None).cast("long"))
-         .withColumn("_del", F.lit(0))
-         .write.mode("overwrite").parquet(v0))
-        tmp = ptr + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as f:
-            f.write("v0")
-        os.replace(tmp, ptr)
+    v0 = (base.select(*cols)
+          .withColumn("_rank_ts", F.lit(None).cast("long"))
+          .withColumn("_del", F.lit(0)))
 
-    def _merge_batch(batch: DataFrame, epoch_id: int) -> None:
-        from pyspark.sql import Window
-
-        with open(ptr, encoding="utf-8") as f:
-            cur = f.read().strip()
-        state = spark.read.parquet(os.path.join(state_dir, cur))
+    def _merge(state: DataFrame, batch: DataFrame) -> DataFrame:
         ch = batch.select(
             *cols, _epoch_us(ts_col).alias("_rank_ts"),
             (F.col(op_col) == "d").cast("int").alias("_del"))
         w = (Window.partitionBy(key_col)
              .orderBy(F.col("_rank_ts").desc_nulls_last(),
                       F.col("_del").desc()))
-        nxt = (state.unionByName(ch)
-               .withColumn("_rn", F.row_number().over(w))
-               .filter(F.col("_rn") == 1).drop("_rn"))
-        cur_n = int(cur[1:])
-        nxt_name = f"v{cur_n + 1}"
-        nxt.write.mode("overwrite").parquet(
-            os.path.join(state_dir, nxt_name))
-        tmp = ptr + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as f:
-            f.write(nxt_name)
-        os.replace(tmp, ptr)
-        # prune superseded versions, keeping the committed one and its
-        # predecessor (readers that grabbed `cur` before the swap)
-        for name in os.listdir(state_dir):
-            if (name.startswith("v") and name[1:].isdigit()
-                    and int(name[1:]) < cur_n):
-                shutil.rmtree(os.path.join(state_dir, name),
-                              ignore_errors=True)
+        return (state.unionByName(ch)
+                .withColumn("_rn", F.row_number().over(w))
+                .filter(F.col("_rn") == 1).drop("_rn"))
 
-    writer = (changes.writeStream
-              .foreachBatch(_merge_batch)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _run_versioned_state(changes, state_dir, checkpoint_dir, v0,
+                                _merge, available_now)
 
 
 def merged_snapshot(spark: SparkSession, state_dir: str,
                     cols: list | None = None) -> DataFrame:
     """The live table `stream_merge_changes` maintains: latest state
     version minus delete tombstones and rank bookkeeping."""
-    import os
-
-    with open(os.path.join(state_dir, "_LATEST"), encoding="utf-8") as f:
-        cur = f.read().strip()
-    df = (spark.read.parquet(os.path.join(state_dir, cur))
-          .filter(F.col("_del") == 0).drop("_rank_ts", "_del"))
+    _, state = _latest_state(spark, state_dir)
+    df = state.filter(F.col("_del") == 0).drop("_rank_ts", "_del")
     return df.select(*cols) if cols else df
 
 
@@ -334,55 +298,68 @@ def stream_sketch_counts(stream: DataFrame, state_dir: str,
     flow: rewriting it per batch costs a constant ~1024 rows. Query the
     live sketch with `plans.sketch.cms_estimate` over the `_LATEST`
     version."""
-    import os
-    import shutil
-
     from pdf_parser_spark.plans.sketch import cms_sketch
 
-    spark = stream.sparkSession
-    ptr = os.path.join(state_dir, "_LATEST")
-    if not os.path.exists(ptr):
-        os.makedirs(state_dir, exist_ok=True)
-        spark.createDataFrame(
-            [], "row long, cell long, cnt long"
-        ).write.mode("overwrite").parquet(os.path.join(state_dir, "v0"))
-        with open(ptr, "w", encoding="utf-8") as f:
-            f.write("v0")
+    v0 = stream.sparkSession.createDataFrame([], "row long, cell long, cnt long")
 
-    def _sketch_batch(batch: DataFrame, epoch_id: int) -> None:
-        with open(ptr, encoding="utf-8") as f:
-            cur = f.read().strip()
-        state = spark.read.parquet(os.path.join(state_dir, cur))
+    def _add_sketch(state: DataFrame, batch: DataFrame) -> DataFrame:
         bs = cms_sketch(batch, key_col, depth=depth, width=width)
-        nxt = (state.unionByName(bs)
-               .groupBy("row", "cell")
-               .agg(F.sum("cnt").alias("cnt")))
-        cur_n = int(cur[1:])
-        nxt_name = f"v{cur_n + 1}"
-        nxt.write.mode("overwrite").parquet(
-            os.path.join(state_dir, nxt_name))
-        tmp = ptr + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as f:
-            f.write(nxt_name)
-        os.replace(tmp, ptr)
-        for name in os.listdir(state_dir):
-            if (name.startswith("v") and name[1:].isdigit()
-                    and int(name[1:]) < cur_n):
-                shutil.rmtree(os.path.join(state_dir, name),
-                              ignore_errors=True)
+        return (state.unionByName(bs)
+                .groupBy("row", "cell")
+                .agg(F.sum("cnt").alias("cnt")))
 
-    writer = (stream.writeStream
-              .foreachBatch(_sketch_batch)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _run_versioned_state(stream, state_dir, checkpoint_dir, v0,
+                                _add_sketch, available_now)
 
 
 def sketch_snapshot(spark: SparkSession, state_dir: str) -> DataFrame:
     """Read the live CMS state (the `_LATEST` version)."""
-    import os
+    return _latest_state(spark, state_dir)[1]
 
+
+def _latest_state(spark: SparkSession, state_dir: str):
+    """The one reader of the `_LATEST` pointer: (version number, that
+    committed version's DataFrame)."""
     with open(os.path.join(state_dir, "_LATEST"), encoding="utf-8") as f:
-        cur = f.read().strip()
-    return spark.read.parquet(os.path.join(state_dir, cur))
+        name = f.read().strip()
+    return int(name[1:]), spark.read.parquet(os.path.join(state_dir, name))
+
+
+def _commit_version(state_dir: str, n: int, state: DataFrame) -> None:
+    """Write state version ``v{n}`` to a fresh directory, swap the
+    `_LATEST` pointer to it (tmp file + ``os.replace``: the swap is the
+    commit point, and a crash mid-write leaves the old pointer intact),
+    then prune every version older than its predecessor (kept for
+    readers that grabbed the old pointer before the swap)."""
+    state.write.mode("overwrite").parquet(os.path.join(state_dir, f"v{n}"))
+    ptr = os.path.join(state_dir, "_LATEST")
+    with open(ptr + ".tmp", "w", encoding="utf-8") as f:
+        f.write(f"v{n}")
+    os.replace(ptr + ".tmp", ptr)
+    for name in os.listdir(state_dir):
+        if name.startswith("v") and name[1:].isdigit() and int(name[1:]) < n - 1:
+            shutil.rmtree(os.path.join(state_dir, name), ignore_errors=True)
+
+
+def _run_versioned_state(stream: DataFrame, state_dir: str,
+                         checkpoint_dir: str, v0: DataFrame, step,
+                         available_now: bool):
+    """The versioned-pointer state protocol shared by the streaming state
+    operators: commit ``v0`` if no pointer exists yet, then per
+    micro-batch read the committed version, compute
+    ``step(state, batch)`` and commit it as the next version. Versions
+    advance from the pointer, never from the stream's epoch id."""
+    if not os.path.exists(os.path.join(state_dir, "_LATEST")):
+        os.makedirs(state_dir, exist_ok=True)
+        _commit_version(state_dir, 0, v0)
+
+    def _batch(batch: DataFrame, epoch_id: int) -> None:
+        n, state = _latest_state(stream.sparkSession, state_dir)
+        _commit_version(state_dir, n + 1, step(state, batch))
+
+    writer = (stream.writeStream
+              .foreachBatch(_batch)
+              .option("checkpointLocation", checkpoint_dir))
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()

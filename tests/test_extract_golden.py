@@ -8,23 +8,9 @@ import pytest
 
 from pdf_parser_spark.generator import transcripts_path
 from pdf_parser_spark.operators.extract import extract_layouts
-from pdf_parser_spark.oracle.boilerplate import strip_boilerplate
 from pdf_parser_spark.oracle.extractor import extract_turn, normalize_layout
 
 TEXT_FIELDS = ["header", "footer", "left_column", "right_column"]
-
-
-def _oracle_layout(text, tool, turn_idx):
-    if tool == "html/v1":
-        res = strip_boilerplate(text)
-        return {
-            "page_number": turn_idx + 1,
-            "header": res["header"], "footer": res["footer"],
-            "left_column": res["left_column"], "right_column": res["right_column"],
-            "page_width": 0.0, "page_height": 0.0,
-            "column_separator_position": None, "metadata": res["metadata"],
-        }
-    return extract_turn(text, tool if tool == "page/v1" else "plain", turn_idx)
 
 
 @pytest.fixture(scope="module")
@@ -52,7 +38,7 @@ def test_per_turn_text_equality_vs_oracle(golden_frames):
     for i in range(len(src)):
         s = src.iloc[i]
         g = got.iloc[i]
-        want = normalize_layout(_oracle_layout(s["text"], s["tool"], int(s["turn_idx"])))
+        want = normalize_layout(extract_turn(s["text"], s["tool"], int(s["turn_idx"])))
         have = normalize_layout(
             {
                 "page_number": int(g["page_number"]),

@@ -18,7 +18,7 @@ from pdf_parser_spark.operators.extract import extract_batch
 from pdf_parser_spark.operators.html import strip_html
 from pdf_parser_spark.operators.spans import _span_batches
 from pdf_parser_spark.oracle.boilerplate import strip_boilerplate
-from pdf_parser_spark.oracle.extractor import extract_turn
+from pdf_parser_spark.oracle.extractor import VARIANTS, extract_turn
 
 # --- payload-ish text strategies -----------------------------------------
 
@@ -104,32 +104,6 @@ def _norm_float(v):
     return round(float(v), 6)
 
 
-def _oracle_row(text, tool, turn_idx):
-    if tool == "html/v1":
-        try:
-            res = strip_boilerplate(text)
-            return {
-                "page_number": turn_idx + 1,
-                "header": res["header"], "footer": res["footer"],
-                "left_column": res["left_column"],
-                "right_column": res["right_column"],
-                "page_width": 0.0, "page_height": 0.0,
-                "column_separator_position": None,
-                "metadata": res["metadata"],
-            }
-        except Exception as exc:  # noqa: BLE001
-            import json
-
-            return {
-                "page_number": turn_idx + 1,
-                "header": "", "footer": "", "left_column": "",
-                "right_column": "", "page_width": 0.0, "page_height": 0.0,
-                "column_separator_position": None,
-                "metadata": {"error": json.dumps(str(exc), ensure_ascii=False)},
-            }
-    return extract_turn(text, tool if tool == "page/v1" else "plain", turn_idx)
-
-
 @settings(max_examples=100, deadline=None)
 @given(st.lists(_page_payload, min_size=1, max_size=6))
 def test_a000_vectorized_equals_oracle_on_fuzz(payloads):
@@ -172,17 +146,18 @@ def test_vectorized_equals_oracle_on_fuzz(rows):
             "ts": [pd.Timestamp("2024-01-01")] * len(rows),
         }
     )
-    got = extract_batch(pdf.copy())  # must not raise
-    assert len(got) == len(rows)
-    assert list(got["turn_idx"]) == list(range(len(rows)))
-    for i, (text, tool) in enumerate(rows):
-        want = _oracle_row(text, tool, i)
-        g = got.iloc[i]
-        for k in ("page_number", "header", "footer", "left_column", "right_column"):
-            assert g[k] == want[k], (k, text, tool)
-        for k in ("page_width", "page_height", "column_separator_position"):
-            assert _norm_float(g[k]) == _norm_float(want[k]), (k, text, tool)
-        assert dict(g["metadata"]) == want["metadata"], (text, tool)
+    for variant in VARIANTS:
+        got = extract_batch(pdf.copy(), variant=variant)  # must not raise
+        assert len(got) == len(rows)
+        assert list(got["turn_idx"]) == list(range(len(rows)))
+        for i, (text, tool) in enumerate(rows):
+            want = extract_turn(text, tool, i, variant)
+            g = got.iloc[i]
+            for k in ("page_number", "header", "footer", "left_column", "right_column"):
+                assert g[k] == want[k], (variant, k, text, tool)
+            for k in ("page_width", "page_height", "column_separator_position"):
+                assert _norm_float(g[k]) == _norm_float(want[k]), (variant, k, text, tool)
+            assert dict(g["metadata"]) == want["metadata"], (variant, text, tool)
 
 
 def _assert_html_core_equals_oracle(payload):

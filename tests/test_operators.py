@@ -215,17 +215,21 @@ def test_span_batches_all_or_nothing(monkeypatch):
     assert list(out["span_idx"]) == [0, 1]
 
 
-@pytest.mark.parametrize("poison", ["core_raises", "non_string_payload"])
-def test_extract_batch_falls_back_to_oracle(monkeypatch, poison):
+@pytest.mark.parametrize("poison,variants", [
+    pytest.param("core_raises", ("a003",), id="core_raises"),
+    pytest.param("non_string_payload", ("a003",), id="non_string_payload"),
+    pytest.param("core_raises", ("a000", "a003"), id="core_raises-multi"),
+    pytest.param("non_string_payload", ("a000", "a003"), id="non_string_payload-multi"),
+])
+def test_extract_batch_falls_back_to_oracle(monkeypatch, poison, variants):
     """A batch whose vectorized path raises is extracted again turn by
     turn by the oracle: every row of a mixed page/html/plain batch equals
     the per-turn oracle, and an html payload the oracle cannot parse
-    becomes an error row instead of failing the batch."""
-    import json
-
+    becomes an error row instead of failing the batch. The multi-variant
+    driver degrades the same way, running the engine core once per batch,
+    not once per variant."""
     import pdf_parser_spark.operators.extract as extract_mod
     from pdf_parser_spark.generator import make_html_payload, make_page_payload
-    from pdf_parser_spark.oracle.boilerplate import strip_boilerplate
     from pdf_parser_spark.oracle.extractor import extract_turn
 
     texts = [make_page_payload("p", 0, "two_col_line"), make_html_payload("h", 1),
@@ -248,33 +252,29 @@ def test_extract_batch_falls_back_to_oracle(monkeypatch, poison):
         "text": texts,
         "tool": tools,
     })
-    got = extract_mod.extract_batch(pdf.copy())
-    assert poison != "core_raises" or calls  # the engine path ran first
-    assert list(got["turn_idx"]) == list(range(len(texts)))
-    for i, (text, tool) in enumerate(zip(texts, tools)):
-        g = got.iloc[i]
-        if tool == "html/v1":
-            try:
-                res = strip_boilerplate(text)
-                want = {"page_number": i + 1, "header": res["header"],
-                        "footer": res["footer"],
-                        "left_column": res["left_column"],
-                        "right_column": "", "metadata": res["metadata"]}
-            except TypeError as exc:
-                want = {"page_number": i + 1, "header": "", "footer": "",
-                        "left_column": "", "right_column": "",
-                        "metadata": {"error": json.dumps(str(exc))}}
-            assert (g["page_width"], g["page_height"]) == (0.0, 0.0)
-            assert pd.isna(g["column_separator_position"])
-        else:
-            want = extract_turn(text, tool if tool == "page/v1" else "plain", i)
+    if len(variants) == 1:
+        got = {variants[0]: extract_mod.extract_batch(pdf.copy(), variants[0])}
+    else:
+        multi = extract_mod.extract_batch_multi(pdf.copy(), variants)
+        assert list(multi["extractor_name"]) == [v for v in variants for _ in texts]
+        got = {v: multi[multi["extractor_name"] == v].reset_index(drop=True)
+               for v in variants}
+    if poison == "core_raises":
+        assert len(calls) == 1  # the engine path ran first, once per batch
+    for v, out in got.items():
+        assert list(out["turn_idx"]) == list(range(len(texts)))
+        for i, (text, tool) in enumerate(zip(texts, tools)):
+            g, want = out.iloc[i], extract_turn(text, tool, i, v)
+            for k in ("page_number", "header", "footer", "left_column",
+                      "right_column", "metadata"):
+                assert g[k] == want[k], (v, i, k)
             for k in ("page_width", "page_height"):
-                assert g[k] == pytest.approx(want[k]), (i, k)
-        for k in ("page_number", "header", "footer", "left_column",
-                  "right_column", "metadata"):
-            assert g[k] == want[k], (i, k)
-    if poison == "non_string_payload":
-        assert "error" in got.iloc[4]["metadata"]
+                assert g[k] == pytest.approx(want[k]), (v, i, k)
+            sep = want["column_separator_position"]
+            assert (pd.isna(g["column_separator_position"]) if sep is None
+                    else g["column_separator_position"] == pytest.approx(sep)), (v, i)
+        if poison == "non_string_payload":
+            assert "error" in out.iloc[4]["metadata"]
 
 
 def test_lineage_error_rows_accounted(spark, transcripts_sf0001, tmp_path):

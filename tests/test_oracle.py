@@ -1,7 +1,14 @@
 """Unit tests on the oracle extractor: threshold micro-cases lifted from the
 reference's exact boundaries (SURVEY.md section 5)."""
 
+import json
+
+import pytest
+
+from pdf_parser_spark.generator import make_html_payload
+from pdf_parser_spark.oracle.boilerplate import strip_boilerplate
 from pdf_parser_spark.oracle.extractor import (
+    VARIANTS,
     blocks_to_text,
     extract_turn,
     find_column_separator,
@@ -193,6 +200,27 @@ class TestVariants:
         a004 = extract_turn(payload, "page/v1", 0, variant="a004")
         assert a003["header"] == "subtitle"
         assert a004["header"] == ""
+
+
+def test_extract_turn_html_dispatch_every_variant():
+    """``html/v1`` goes to ``strip_boilerplate`` on a zero-size page for
+    every variant; a payload the stripper cannot take is the D1 error row."""
+    payload = make_html_payload("h", 0)
+    res = strip_boilerplate(payload)
+    assert res["left_column"] and res["header"] and res["footer"]
+    with pytest.raises(TypeError) as err:
+        strip_boilerplate(3.5)
+    zero_page = {"right_column": "", "page_width": 0.0, "page_height": 0.0,
+                 "column_separator_position": None}
+    for i, v in enumerate(VARIANTS):
+        assert extract_turn(payload, "html/v1", i, v) == {
+            "page_number": i + 1, "header": res["header"],
+            "footer": res["footer"], "left_column": res["left_column"],
+            "metadata": res["metadata"], **zero_page}
+        assert extract_turn(3.5, "html/v1", i, v) == {
+            "page_number": i + 1, "header": "", "footer": "", "left_column": "",
+            "metadata": {"error": json.dumps(str(err.value), ensure_ascii=False)},
+            **zero_page}
 
 
 class TestBoilerplateTokenizer:

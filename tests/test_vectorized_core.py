@@ -65,12 +65,8 @@ def test_mixed_batch_all_tools_order_preserved():
     assert len(out) == len(rows)
     assert list(out["turn_idx"]) == [r[1] for r in rows]
     for i, (conv, turn_idx, _, text, tool) in enumerate(rows):
-        if tool == "html/v1":
-            want_main = strip_boilerplate(text)["left_column"]
-            assert out.iloc[i]["left_column"] == want_main
-        else:
-            want = extract_turn(text, tool if tool == "page/v1" else "plain", turn_idx)
-            _assert_layout_equal(out.iloc[i], want, f"mixed[{i}] tool={tool}")
+        want = extract_turn(text, tool, turn_idx)
+        _assert_layout_equal(out.iloc[i], want, f"mixed[{i}] tool={tool}")
 
 
 def test_html_batch_spans_and_labels():
