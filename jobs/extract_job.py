@@ -17,9 +17,12 @@ is consistent for a given page spec.
 from __future__ import annotations
 
 import argparse
+import os
+import shutil
 import sys
 
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -49,8 +52,6 @@ def main(argv=None) -> int:
     if args.pages:
         src = select_turns(src, args.pages)
     if args.no_resume:
-        import shutil, os  # noqa: E401
-
         shutil.rmtree(os.path.join(args.output, "_manifests"),
                       ignore_errors=True)
 
@@ -63,10 +64,14 @@ def main(argv=None) -> int:
     )
     metrics = lineage_metrics(spark, args.output)
     metrics.orderBy("bucket").show(args.n_buckets, truncate=False)
-    total = metrics.groupBy().sum("rows_out", "error_rows", "wall_ms").first()
+    # every bucket carries the wall time of the job that committed it:
+    # dividing by job_buckets counts each job once, across resumed runs too
+    total = metrics.agg(
+        F.sum("rows_out"), F.sum("error_rows"),
+        F.sum(F.col("wall_ms") / F.col("job_buckets"))).first()
     print(f"extract-job done: buckets processed={len(result['processed'])} "
           f"resumed-skip={len(result['skipped'])} rows={total[0]} "
-          f"errors={total[1]} wall_ms={total[2]}")
+          f"errors={total[1]} wall_ms={round(total[2])}")
     return 0
 
 

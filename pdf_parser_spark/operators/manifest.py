@@ -15,11 +15,14 @@ Protocol:
   manifest units (exact resume can then guarantee no duplicate / missing
   *turns*).
 * **one Spark job per (re)submission**: all pending buckets are extracted
-  in a single pass over the input and written with
-  ``partitionBy("bucket")`` + dynamic partition overwrite, so input IO is
-  independent of ``n_buckets`` (a 64-bucket run reads the input once, not
-  64 times). Per-bucket row/error counts come from a post-write listing
-  scan of just the written partitions (columnar count-only read).
+  in a single pass over the input, so input IO is independent of
+  ``n_buckets`` (a 64-bucket run reads the input once, not 64 times).
+  Extraction keeps the input's split parallelism; its output is then
+  hash-clustered by bucket and written with ``partitionBy("bucket")`` +
+  dynamic partition overwrite, so each committed bucket is one file
+  instead of one file per extraction task. Per-bucket row/error counts
+  come from a post-write listing scan of just the written partitions
+  (columnar count-only read).
 * ``rows_in`` is **observed**, not assumed: the input side of the job
   carries an ``Observation`` counting rows actually fed to extraction;
   the job fails fast if the observed total disagrees with the written
@@ -51,9 +54,11 @@ import json
 import os
 import shutil
 import time
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.utils import AnalysisException
 
 from pdf_parser_spark.io import get_table_io
 from pdf_parser_spark.operators.extract import extract_layouts
@@ -124,15 +129,49 @@ def bucket_job_plan(
 ) -> DataFrame:
     """The single-job plan for a set of pending buckets.
 
-    Shape (asserted by plan audit + test): exactly one input Scan, zero
-    Exchange — the bucket predicate rides the one scan, extraction is one
-    MapInPandas, the partition column is recomputed map-side.
+    Shape (asserted by plan audit + test): exactly one input Scan and
+    exactly one Exchange, ``hashpartitioning(bucket, ...)``, above the
+    one extraction MapInPandas. The bucket predicate rides the scan and
+    extraction runs on the input splits, so skew (the mega-conversation)
+    stays on the split-parallel side; only the cheap write is regrouped.
+    Every row of a bucket lands in one write task, so each bucket is
+    written as one file. The partition count is explicit so AQE cannot
+    coalesce the write into a single task.
+
+    With an Exchange above it, the ``rows_in`` Observation's CollectMetrics
+    node sits in a shuffle stage that AQE's ``AQEPropagateEmptyRelation``
+    drops when the input is empty, and ``obs.get`` then fails;
+    ``_run_bucket_job`` runs the write with that rule excluded.
     """
     part = src.filter(F.col("bucket").isin([int(k) for k in buckets])).drop("bucket")
     if obs is not None:
         part = part.observe(obs, F.count(F.lit(1)).alias("rows_in"))
     layouts = extract_layouts(part, variant=variant)
-    return layouts.withColumn("bucket", bucket_expr(n_buckets))
+    n_parts = min(len(buckets), src.sparkSession.sparkContext.defaultParallelism)
+    return layouts.withColumn("bucket", bucket_expr(n_buckets)).repartition(
+        n_parts, "bucket")
+
+
+_EXCLUDED_RULES = "spark.sql.adaptive.optimizer.excludedRules"
+_EMPTY_RELATION_RULE = (
+    "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation")
+
+
+@contextmanager
+def _keep_empty_stages(spark: SparkSession):
+    """Exclude AQE's empty-relation rule for the duration of one write, so
+    an empty shuffle stage keeps the ``rows_in`` CollectMetrics node below
+    it (a missing metric must fail the run, never read as 0)."""
+    prev = spark.conf.get(_EXCLUDED_RULES, None)
+    rules = f"{prev},{_EMPTY_RELATION_RULE}" if prev else _EMPTY_RELATION_RULE
+    spark.conf.set(_EXCLUDED_RULES, rules)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(_EXCLUDED_RULES)
+        else:
+            spark.conf.set(_EXCLUDED_RULES, prev)
 
 
 def _run_bucket_job(
@@ -157,13 +196,14 @@ def _run_bucket_job(
 
     io = get_table_io()
     obs = Observation(f"rows_in_{buckets[0]}_{buckets[-1]}")
-    io.write(
-        bucket_job_plan(src, buckets, n_buckets, variant, obs=obs),
-        out_dir,
-        mode="overwrite",
-        partition_by=("bucket",),
-        dynamic_overwrite=True,
-    )
+    with _keep_empty_stages(spark):
+        io.write(
+            bucket_job_plan(src, buckets, n_buckets, variant, obs=obs),
+            out_dir,
+            mode="overwrite",
+            partition_by=("bucket",),
+            dynamic_overwrite=True,
+        )
     rows_in_total = int(obs.get["rows_in"])
     if rows_in_total == 0:
         # zero input rows -> the dynamic-overwrite write emitted no data
@@ -173,21 +213,28 @@ def _run_bucket_job(
 
     # Post-write listing scan: counts only, partition-pruned to the
     # buckets this job wrote.
-    counts = {
-        int(r["bucket"]): (int(r["rows_out"]), int(r["error_rows"]))
-        for r in (
-            io.read(spark, out_dir)
-            .filter(F.col("bucket").isin([int(k) for k in buckets]))
-            .groupBy("bucket")
-            .agg(
-                F.count(F.lit(1)).alias("rows_out"),
-                F.sum(
-                    F.map_contains_key(F.col("metadata"), "error").cast("long")
-                ).alias("error_rows"),
+    try:
+        written = io.read(spark, out_dir)
+    except AnalysisException:
+        # not one data file under out_dir (no schema to infer): every
+        # observed row was dropped, which the invariant below reports
+        counts = {}
+    else:
+        counts = {
+            int(r["bucket"]): (int(r["rows_out"]), int(r["error_rows"]))
+            for r in (
+                written
+                .filter(F.col("bucket").isin([int(k) for k in buckets]))
+                .groupBy("bucket")
+                .agg(
+                    F.count(F.lit(1)).alias("rows_out"),
+                    F.sum(
+                        F.map_contains_key(F.col("metadata"), "error").cast("long")
+                    ).alias("error_rows"),
+                )
+                .collect()
             )
-            .collect()
-        )
-    }
+        }
     rows_out_total = sum(c[0] for c in counts.values())
     if rows_in_total != rows_out_total:
         raise RuntimeError(

@@ -142,8 +142,9 @@ def test_manifest_resume_validation(spark, transcripts_sf0001, tmp_path):
 
 
 def test_manifest_job_is_single_scan(spark, transcripts_sf0001):
-    """The whole-run plan reads the input exactly once, shuffle-free,
-    for ANY bucket count — the per-bucket rescan loop is gone."""
+    """The whole-run plan reads the input exactly once for ANY bucket
+    count, and its one shuffle is the bucket clustering of the write,
+    above extraction: the MapInPandas keeps the input-split parallelism."""
     from pdf_parser_spark.operators.manifest import bucket_expr, bucket_job_plan
 
     src = spark.read.parquet(transcripts_sf0001).withColumn(
@@ -154,7 +155,12 @@ def test_manifest_job_is_single_scan(spark, transcripts_sf0001):
     import re
 
     assert len(re.findall(r"^\(\d+\) Scan parquet", plan, re.M)) == 1
-    assert "Exchange" not in plan
+    assert len(re.findall(r"^\(\d+\) Exchange", plan, re.M)) == 1
+    assert len(re.findall(
+        r"^\(\d+\) Exchange\n.*\nArguments: hashpartitioning\(bucket#",
+        plan, re.M)) == 1
+    tree = plan.split("\n\n", 1)[0]
+    assert re.search(r"Exchange \(\d+\)\n(?:.*\n)*.*\+- MapInPandas", tree)
 
 
 def test_manifest_empty_input(spark, transcripts_sf0001, tmp_path):
@@ -189,6 +195,56 @@ def test_manifest_empty_schema_matches_nonempty(spark, transcripts_sf0001, tmp_p
     assert [f.name for f in empty_schema] == [f.name for f in full_schema]
     assert "ts" not in [f.name for f in empty_schema]
     assert [f.dataType for f in empty_schema] == [f.dataType for f in full_schema]
+
+
+def test_manifest_writes_one_file_per_bucket(spark, transcripts_sf0001, tmp_path):
+    """Several extraction tasks feed each bucket, yet each committed
+    bucket is one parquet file, and the output equals plain extraction."""
+    out_dir = str(tmp_path / "one_file")
+    src = spark.read.parquet(transcripts_sf0001).repartition(3)
+    run_with_manifest(spark, src, out_dir, n_buckets=4)
+    for k in range(4):
+        files = [f for f in os.listdir(os.path.join(out_dir, f"bucket={k}"))
+                 if f.endswith(".parquet")]
+        assert len(files) == 1, (k, files)
+
+    def by_key(df):
+        return {(r.conv_id, r.turn_idx): r.asDict(recursive=True)
+                for r in df.collect()}
+
+    got = read_output(spark, out_dir)
+    want = extract_layouts(src)
+    assert got.count() == want.count()
+    assert by_key(got) == by_key(want)
+
+
+def test_manifest_runtime_empty_input(spark, transcripts_sf0001, tmp_path):
+    """An input that is empty only at run time (the parquet stats cannot
+    prune the filter) commits empty manifests and reads back as the
+    stable empty relation — the empty shuffle stage keeps its metric."""
+    out_dir = str(tmp_path / "runtime_empty")
+    src = spark.read.parquet(transcripts_sf0001).filter(F.col("text") == "__none__")
+    res = run_with_manifest(spark, src, out_dir, n_buckets=4)
+    assert res["processed"] == [0, 1, 2, 3]
+    assert lineage_metrics(spark, out_dir).toPandas()["rows_out"].sum() == 0
+    out = read_output(spark, out_dir)
+    assert out.count() == 0
+    assert out.columns == extract_layouts(src).columns
+
+
+def test_manifest_dropped_rows_fail_the_run(spark, transcripts_sf0001, tmp_path,
+                                            monkeypatch):
+    """An extractor that drops every row must break the observed row
+    invariant (D1), not pass as an empty run."""
+    import pdf_parser_spark.operators.manifest as manifest
+
+    def dropping(df, variant="a003"):
+        return extract_layouts(df, variant=variant).filter(F.col("turn_idx") < 0)
+
+    monkeypatch.setattr(manifest, "extract_layouts", dropping)
+    src = spark.read.parquet(transcripts_sf0001)
+    with pytest.raises(RuntimeError, match="extraction row invariant broken"):
+        run_with_manifest(spark, src, str(tmp_path / "dropped"), n_buckets=4)
 
 
 def test_span_batches_all_or_nothing(monkeypatch):
@@ -359,6 +415,28 @@ def test_extract_job_cli_and_resume(spark, transcripts_sf0001, tmp_path):
                    "--n-buckets", "4", "--pages", "1-4"])  # full resume skip
     assert rc == 0
     assert read_output(spark, out).count() == n1
+
+
+def test_extract_job_cli_wall_ms_counts_each_job_once(
+        spark, transcripts_sf0001, tmp_path, capsys):
+    """Every bucket's manifest carries its job's wall time; the printed
+    total must count that job once, not once per bucket."""
+    import re
+    import sys
+
+    sys.path.insert(0, os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "jobs"))
+    from extract_job import main as job_main
+
+    out = str(tmp_path / "cli_wall")
+    assert job_main(["--input", transcripts_sf0001, "--output", out,
+                     "--n-buckets", "4"]) == 0
+    printed = re.search(r"extract-job done: .* wall_ms=(\d+)",
+                        capsys.readouterr().out)
+    walls = {m["wall_ms"] for m in
+             committed_buckets(os.path.join(out, "_manifests")).values()}
+    assert len(walls) == 1  # one job committed all four buckets
+    assert int(printed.group(1)) == walls.pop()
 
 
 def test_io_roundtrip(spark, tmp_path):

@@ -72,16 +72,26 @@ def main() -> None:
     manifest_plan = formatted(manifest_plan_df)
     assert len(re.findall(r"^\(\d+\) Scan parquet", manifest_plan, re.M)) == 1, \
         "manifest job: more than one input scan"
-    assert "Exchange" not in manifest_plan, "manifest job: unexpected shuffle"
+    assert len(re.findall(r"^\(\d+\) Exchange", manifest_plan, re.M)) == 1, \
+        "manifest job: not exactly one shuffle"
+    assert len(re.findall(
+        r"^\(\d+\) Exchange\n.*\nArguments: hashpartitioning\(bucket#",
+        manifest_plan, re.M)) == 1, "manifest job: shuffle is not by bucket"
+    assert re.search(r"Exchange \(\d+\)\n(?:.*\n)*.*\+- MapInPandas",
+                     manifest_plan.split("\n\n", 1)[0]), \
+        "manifest job: extraction is not below the bucket shuffle"
     sections.append((
         "Manifest single-pass job (checkpoint/resume write path)",
         ("ALL pending buckets are extracted in ONE job: exactly one input "
-         "Scan (asserted), zero Exchange (asserted). The bucket predicate "
-         "rides the scan's codegen filter; the partition column is "
-         "recomputed map-side and the write is partitionBy(bucket) with "
-         "dynamic overwrite — input IO is independent of n_buckets "
-         "(previously the per-bucket driver loop rescanned the input "
-         "n_buckets times)."),
+         "Scan (asserted) and exactly one Exchange, hashpartitioning(bucket) "
+         "above the MapInPandas (asserted). The bucket predicate rides the "
+         "one scan and extraction runs on the input splits, so "
+         "the mega-conversation cannot serialize it; only its output is "
+         "clustered by bucket (min(buckets, defaultParallelism) partitions, "
+         "explicit so AQE cannot coalesce the write into one task) before "
+         "the partitionBy(bucket) dynamic-overwrite write, which then "
+         "commits one file per bucket instead of one per extraction task "
+         "per bucket. Input IO is independent of n_buckets."),
         compact(manifest_plan)))
 
     audit(
