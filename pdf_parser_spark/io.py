@@ -24,6 +24,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 class ParquetTableIO:
@@ -36,8 +37,14 @@ class ParquetTableIO:
 
     format = "parquet"
 
-    def read(self, spark: SparkSession, target: str) -> DataFrame:
-        return spark.read.parquet(target)
+    def read(self, spark: SparkSession, target: str,
+             schema: StructType | None = None) -> DataFrame:
+        """Read a parquet dataset. ``schema`` is the caller's recorded
+        schema (the manifest's ``_schema.json`` plus partition columns);
+        given one, Spark reads no file footer to infer it. Without it
+        Spark infers the schema from the files."""
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(target)
 
     def write(
         self,
@@ -96,9 +103,13 @@ class IcebergTableIO:
     def _is_path(self, target: str) -> bool:
         return target.startswith(self._PATHY)
 
-    def read(self, spark: SparkSession, target: str) -> DataFrame:
+    def read(self, spark: SparkSession, target: str,
+             schema: StructType | None = None) -> DataFrame:
+        """A path reads as parquet with ``schema`` (see
+        ``ParquetTableIO.read``); a catalog table carries its own schema
+        in its metadata, so ``schema`` is not used for it."""
         if self._is_path(target):
-            return self._fallback.read(spark, target)
+            return self._fallback.read(spark, target, schema=schema)
         return spark.read.format("iceberg").load(target)
 
     def write(

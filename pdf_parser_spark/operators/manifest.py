@@ -21,8 +21,14 @@ Protocol:
   hash-clustered by bucket and written with ``partitionBy("bucket")`` +
   dynamic partition overwrite, so each committed bucket is one file
   instead of one file per extraction task. Per-bucket row/error counts
-  come from a post-write listing scan of just the written partitions
-  (columnar count-only read).
+  come from a post-write count-only scan that reads with the recorded
+  schema (no footer inference) and is pruned to the written buckets.
+* the written schema is **recorded**: before its write, each job stores
+  its plan's schema in ``_manifests/_schema.json``. Committed reads
+  (the count scan, ``read_output``) plan from the manifests and this
+  schema instead of rediscovering them from the files, as Delta Lake
+  and Iceberg readers plan from table metadata; only output dirs that
+  predate the sidecar fall back to schema inference.
 * ``rows_in`` is **observed**, not assumed: the input side of the job
   carries an ``Observation`` counting rows actually fed to extraction;
   the job fails fast if the observed total disagrees with the written
@@ -58,10 +64,10 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.utils import AnalysisException
+from pyspark.sql.types import IntegerType, StructType
 
 from pdf_parser_spark.io import get_table_io
-from pdf_parser_spark.operators.extract import extract_layouts
+from pdf_parser_spark.operators.extract import LAYOUT_SCHEMA_DDL, extract_layouts
 
 
 def bucket_expr(n_buckets: int) -> F.Column:
@@ -106,18 +112,35 @@ def _validate_resume(done: dict, run_config: dict) -> None:
             )
 
 
-def _write_schema_sidecar(manifest_dir: str, schema_json: str) -> None:
-    """Record the run's written schema (job plan sans the bucket column) so
-    ``read_output``'s empty branch surfaces the SAME relation shape as a
-    non-empty run — whose schema comes from the files actually written and
-    therefore depends on the input's columns (e.g. ``ts`` present or not).
+_SCHEMA_FILE = "_schema.json"
+
+
+def _write_schema_sidecar(manifest_dir: str, schema: StructType) -> None:
+    """Record the schema a job is about to write: its own job plan without
+    the ``bucket`` column, taken before the write. It depends on the
+    input's columns (e.g. ``ts`` present or not), so every committed read
+    and the empty-output relation take it from here, not from the files.
     Same tmp+os.replace atomic-commit idiom as the bucket manifests."""
     os.makedirs(manifest_dir, exist_ok=True)
-    path = os.path.join(manifest_dir, "_schema.json")
+    path = os.path.join(manifest_dir, _SCHEMA_FILE)
     tmp = path + ".tmp"
     with open(tmp, "w", encoding="utf-8") as f:
-        f.write(schema_json)
+        f.write(schema.json())
     os.replace(tmp, path)
+
+
+def _recorded_schema(manifest_dir: str) -> StructType | None:
+    """The recorded layout schema plus the ``bucket int`` partition
+    column, or None for an output dir written before the sidecar existed
+    (its readers infer the schema from the files).
+
+    ``bucket`` must be part of it: a dir holding no data file has no
+    partition to infer that column from, and the readers filter on it."""
+    path = os.path.join(manifest_dir, _SCHEMA_FILE)
+    if not os.path.exists(path):
+        return None
+    with open(path, encoding="utf-8") as f:
+        return StructType.fromJson(json.load(f)).add("bucket", IntegerType())
 
 
 def bucket_job_plan(
@@ -196,9 +219,12 @@ def _run_bucket_job(
 
     io = get_table_io()
     obs = Observation(f"rows_in_{buckets[0]}_{buckets[-1]}")
+    plan = bucket_job_plan(src, buckets, n_buckets, variant, obs=obs)
+    manifest_dir = os.path.join(out_dir, "_manifests")
+    _write_schema_sidecar(manifest_dir, plan.drop("bucket").schema)
     with _keep_empty_stages(spark):
         io.write(
-            bucket_job_plan(src, buckets, n_buckets, variant, obs=obs),
+            plan,
             out_dir,
             mode="overwrite",
             partition_by=("bucket",),
@@ -211,30 +237,24 @@ def _run_bucket_job(
         wall_ms = int((time.monotonic() - t0) * 1000)
         return {}, wall_ms
 
-    # Post-write listing scan: counts only, partition-pruned to the
-    # buckets this job wrote.
-    try:
-        written = io.read(spark, out_dir)
-    except AnalysisException:
-        # not one data file under out_dir (no schema to infer): every
-        # observed row was dropped, which the invariant below reports
-        counts = {}
-    else:
-        counts = {
-            int(r["bucket"]): (int(r["rows_out"]), int(r["error_rows"]))
-            for r in (
-                written
-                .filter(F.col("bucket").isin([int(k) for k in buckets]))
-                .groupBy("bucket")
-                .agg(
-                    F.count(F.lit(1)).alias("rows_out"),
-                    F.sum(
-                        F.map_contains_key(F.col("metadata"), "error").cast("long")
-                    ).alias("error_rows"),
-                )
-                .collect()
+    # Post-write scan: counts only, with the recorded schema, pruned to
+    # the buckets this job wrote. A dir with no data file at all (every
+    # observed row dropped) reads as empty, which the invariant reports.
+    counts = {
+        int(r["bucket"]): (int(r["rows_out"]), int(r["error_rows"]))
+        for r in (
+            io.read(spark, out_dir, schema=_recorded_schema(manifest_dir))
+            .filter(F.col("bucket").isin([int(k) for k in buckets]))
+            .groupBy("bucket")
+            .agg(
+                F.count(F.lit(1)).alias("rows_out"),
+                F.sum(
+                    F.map_contains_key(F.col("metadata"), "error").cast("long")
+                ).alias("error_rows"),
             )
-        }
+            .collect()
+        )
+    }
     rows_out_total = sum(c[0] for c in counts.values())
     if rows_in_total != rows_out_total:
         raise RuntimeError(
@@ -277,11 +297,6 @@ def run_with_manifest(
     pending = [k for k in range(n_buckets) if k not in done]
     skipped = sorted(done)
     src = transcripts.withColumn("bucket", bucket_expr(n_buckets))
-    # schema analysis only (no job): the empty-output read path must
-    # return exactly the schema this run would have written
-    _write_schema_sidecar(
-        manifest_dir,
-        bucket_job_plan(src, [0], n_buckets, variant).drop("bucket").schema.json())
 
     processed: list = []
     job_plan = [pending[:fail_after]] if fail_after is not None else [pending]
@@ -320,31 +335,27 @@ def run_with_manifest(
 def read_output(spark: SparkSession, out_dir: str) -> DataFrame:
     """Read every committed bucket's layouts as one DataFrame.
 
-    Partition discovery on the base dir + an ``isin`` filter on the
-    ``bucket`` partition column prunes uncommitted partitions at the file
-    index, then the column is dropped to keep the layout schema stable.
+    Planned from the manifests and the recorded schema, so it starts no
+    Spark job (no footer read to infer the schema; a ``get_spark``
+    session lists the partitions on the driver). An ``isin`` filter on
+    the ``bucket`` partition column prunes uncommitted partitions at the
+    file index, then the column is dropped to keep the layout schema
+    stable. Output dirs without the sidecar infer the schema.
     """
-    from pdf_parser_spark.operators.extract import LAYOUT_SCHEMA_DDL
-
     manifest_dir = os.path.join(out_dir, "_manifests")
     done = committed_buckets(manifest_dir)
+    schema = _recorded_schema(manifest_dir)
     if not done or all(m.get("rows_out", 0) == 0 for m in done.values()):
         # an all-empty run writes no data files (dynamic overwrite emits
-        # nothing) — surface the stable empty relation, not a scan error.
-        # The schema comes from the run's recorded plan schema so empty and
-        # non-empty paths of the same pipeline agree column-for-column
-        # (LAYOUT_SCHEMA_DDL is only the legacy fallback for pre-sidecar
-        # output dirs).
-        schema_path = os.path.join(manifest_dir, "_schema.json")
-        if os.path.exists(schema_path):
-            from pyspark.sql.types import StructType
-
-            with open(schema_path, encoding="utf-8") as f:
-                return spark.createDataFrame(
-                    [], StructType.fromJson(json.load(f)))
-        return spark.createDataFrame([], LAYOUT_SCHEMA_DDL)
+        # nothing) — surface the stable empty relation, not a scan error,
+        # in the run's recorded schema so empty and non-empty paths of the
+        # same pipeline agree column-for-column (LAYOUT_SCHEMA_DDL is only
+        # the fallback for output dirs without the sidecar).
+        if schema is None:
+            return spark.createDataFrame([], LAYOUT_SCHEMA_DDL)
+        return spark.createDataFrame([], schema).drop("bucket")
     return (
-        get_table_io().read(spark, out_dir)
+        get_table_io().read(spark, out_dir, schema=schema)
         .filter(F.col("bucket").isin([int(k) for k in sorted(done)]))
         .drop("bucket")
     )

@@ -5,6 +5,16 @@ Tuned for the sandbox (local[N], single JVM) but written for a
 splitting), Arrow transport for every pandas UDF boundary, bounded Arrow
 batch sizes so a mega-turn batch cannot blow Python worker memory, and
 shuffle partitions sized to cores (overridable per job at real scale).
+
+File listing runs on the driver: above
+``spark.sql.sources.parallelPartitionDiscovery.threshold`` subdirectories
+(32 by default) Spark lists a partitioned dataset with a Spark job, one
+task per directory. On a cluster those tasks spread the listing calls
+over executors; in a ``local[N]`` session they run in the driver's own
+JVM, so the job only adds scheduling overhead (a 64-bucket output read
+cost a 64-task job per read). The factory therefore raises the threshold
+past any directory count. A cluster session (``jobs/*.py`` under
+spark-submit builds its own) should keep Spark's default.
 """
 
 from __future__ import annotations
@@ -12,6 +22,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+LISTING_THRESHOLD_CONF = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+# no directory count reaches it: a local session always lists on the driver
+DRIVER_LISTING_THRESHOLD = str(2**31 - 1)
 
 
 def get_spark(app: str = "pdf-parser-spark", cpus: str | None = None) -> SparkSession:
@@ -33,6 +47,7 @@ def get_spark(app: str = "pdf-parser-spark", cpus: str | None = None) -> SparkSe
         .config("spark.sql.files.maxPartitionBytes",
                 os.environ.get("SPARK_GRAFT_MAX_PART_BYTES", "4194304"))
         .config("spark.sql.files.openCostInBytes", "262144")
+        .config(LISTING_THRESHOLD_CONF, DRIVER_LISTING_THRESHOLD)
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
         # Long single-JVM sessions accumulate shuffle state whose cleanup
         # piggybacks on driver GC; force it periodically so back-to-back

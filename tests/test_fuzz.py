@@ -22,11 +22,24 @@ from pdf_parser_spark.oracle.extractor import VARIANTS, extract_turn
 
 # --- payload-ish text strategies -----------------------------------------
 
+# Numbers outside ASCII: Python's ``\d`` and ``float()`` accept any Unicode
+# decimal digit (Arabic-Indic, Persian, fullwidth), so both parsers read
+# these as numbers; digit-like characters that are not decimal digits
+# (superscripts, vulgar fractions) fail the grammar like any other junk.
+# An RE2-based tokenize (``[0-9]``-only ``\d``) would disagree here.
+_NON_ASCII_NUMS = {
+    "arabic_indic": "\u0663\u0660",  # ٣٠
+    "persian": "\u06f1\u06f2.\u06f5",  # ۱۲.۵
+    "fullwidth": "\uff11\uff12",  # １２
+    "superscript": "\u00b30",  # ³0
+    "vulgar_fraction": "\u00bd",  # ½
+}
+
 _num = st.one_of(
     st.integers(-1000, 1000).map(str),
     st.floats(-1000, 1000, allow_nan=False, allow_infinity=False).map(
         lambda v: f"{v:.3f}"),
-    st.sampled_from(["nan", "x", "", "1e3", "-0"]),
+    st.sampled_from(["nan", "x", "", "1e3", "-0", *_NON_ASCII_NUMS.values()]),
 )
 _text = st.text(
     alphabet=st.characters(blacklist_categories=("Cs",),
@@ -104,6 +117,15 @@ def _norm_float(v):
     return round(float(v), 6)
 
 
+def _assert_row_equals_oracle(g, want, *ctx):
+    """One vectorized output row equals the oracle's on every field."""
+    for k in ("page_number", "header", "footer", "left_column", "right_column"):
+        assert g[k] == want[k], (*ctx, k)
+    for k in ("page_width", "page_height", "column_separator_position"):
+        assert _norm_float(g[k]) == _norm_float(want[k]), (*ctx, k)
+    assert dict(g["metadata"]) == want["metadata"], ctx
+
+
 @settings(max_examples=100, deadline=None)
 @given(st.lists(_page_payload, min_size=1, max_size=6))
 def test_a000_vectorized_equals_oracle_on_fuzz(payloads):
@@ -125,12 +147,7 @@ def test_a000_vectorized_equals_oracle_on_fuzz(payloads):
     assert len(got) == len(payloads)
     for i, text in enumerate(payloads):
         want = extract_turn(text, "page/v1", i, variant="a000")
-        g = got.iloc[i]
-        for k in ("page_number", "header", "footer", "left_column", "right_column"):
-            assert g[k] == want[k], (k, text)
-        for k in ("page_width", "page_height", "column_separator_position"):
-            assert _norm_float(g[k]) == _norm_float(want[k]), (k, text)
-        assert dict(g["metadata"]) == want["metadata"], text
+        _assert_row_equals_oracle(got.iloc[i], want, text)
 
 
 @settings(max_examples=200, deadline=None)
@@ -152,12 +169,50 @@ def test_vectorized_equals_oracle_on_fuzz(rows):
         assert list(got["turn_idx"]) == list(range(len(rows)))
         for i, (text, tool) in enumerate(rows):
             want = extract_turn(text, tool, i, variant)
-            g = got.iloc[i]
-            for k in ("page_number", "header", "footer", "left_column", "right_column"):
-                assert g[k] == want[k], (variant, k, text, tool)
-            for k in ("page_width", "page_height", "column_separator_position"):
-                assert _norm_float(g[k]) == _norm_float(want[k]), (variant, k, text, tool)
-            assert dict(g["metadata"]) == want["metadata"], (variant, text, tool)
+            _assert_row_equals_oracle(got.iloc[i], want, variant, text, tool)
+
+
+# A well-formed two-column page: a header span, one span per column, the
+# separator line and a colored footer rect. Each case below replaces ONE
+# numeric field of one record with a non-ASCII number.
+_PAGE_RECORDS = (
+    ("PAGE w={} h={}", ("w", "h"), ("612.0", "792.0")),
+    ("SPAN {} {} {} {} size={} font=F2 text=Quarterly report",
+     ("x0", "y0", "x1", "y1", "size"), ("60.0", "40.0", "300.0", "52.0", "14.0")),
+    ("SPAN {} {} {} {} size={} font=F1 text=left column words",
+     ("x0", "y0", "x1", "y1", "size"), ("50.0", "140.0", "270.0", "152.0", "10.0")),
+    ("SPAN {} {} {} {} size={} font=F1 text=right column words",
+     ("x0", "y0", "x1", "y1", "size"), ("340.0", "140.0", "560.0", "152.0", "10.0")),
+    ("LINE {} {} {} {}", ("x1", "y1", "x2", "y2"), ("306.0", "100.0", "306.0", "700.0")),
+    ("RECT {} {} {} {} fill={},{},{}", ("x0", "y0", "x1", "y1", "r", "g", "b"),
+     ("40.0", "740.0", "572.0", "770.0", "0.2", "0.3", "0.8")),
+)
+
+
+@pytest.mark.parametrize("rec,field,value", [
+    pytest.param(r, f, v, id=f"{fmt.split()[0]}{r}.{name}-{label}")
+    for r, (fmt, names, _) in enumerate(_PAGE_RECORDS)
+    for f, name in enumerate(names)
+    for label, v in _NON_ASCII_NUMS.items()
+])
+def test_non_ascii_numbers_equal_oracle(rec, field, value):
+    """Every numeric field of PAGE, SPAN, LINE and RECT: the vectorized
+    core reads a non-ASCII number exactly as the oracle does, in every
+    variant. Pins the behaviour an Arrow/RE2 tokenize must keep."""
+    lines = []
+    for r, (fmt, _names, nums) in enumerate(_PAGE_RECORDS):
+        nums = list(nums)
+        if r == rec:
+            nums[field] = value
+        lines.append(fmt.format(*nums))
+    payload = "\n".join(lines)
+    pdf = pd.DataFrame({"conv_id": ["n"], "turn_idx": [0], "role": ["user"],
+                        "text": [payload], "tool": ["page/v1"],
+                        "ts": [pd.Timestamp("2024-01-01")]})
+    for variant in VARIANTS:
+        got = extract_batch(pdf.copy(), variant=variant)
+        want = extract_turn(payload, "page/v1", 0, variant)
+        _assert_row_equals_oracle(got.iloc[0], want, variant, payload)
 
 
 def _assert_html_core_equals_oracle(payload):

@@ -208,14 +208,15 @@ def test_manifest_writes_one_file_per_bucket(spark, transcripts_sf0001, tmp_path
                  if f.endswith(".parquet")]
         assert len(files) == 1, (k, files)
 
-    def by_key(df):
-        return {(r.conv_id, r.turn_idx): r.asDict(recursive=True)
-                for r in df.collect()}
-
     got = read_output(spark, out_dir)
     want = extract_layouts(src)
     assert got.count() == want.count()
-    assert by_key(got) == by_key(want)
+    assert _by_key(got) == _by_key(want)
+
+
+def _by_key(df):
+    return {(r.conv_id, r.turn_idx): r.asDict(recursive=True)
+            for r in df.collect()}
 
 
 def test_manifest_runtime_empty_input(spark, transcripts_sf0001, tmp_path):
@@ -245,6 +246,73 @@ def test_manifest_dropped_rows_fail_the_run(spark, transcripts_sf0001, tmp_path,
     src = spark.read.parquet(transcripts_sf0001)
     with pytest.raises(RuntimeError, match="extraction row invariant broken"):
         run_with_manifest(spark, src, str(tmp_path / "dropped"), n_buckets=4)
+
+
+def test_read_output_starts_no_spark_job(spark, transcripts_sf0001, tmp_path):
+    """A committed read plans from the manifests and the recorded schema:
+    with ``get_spark``'s listing threshold, reading more partitions than
+    Spark's default parallel-listing threshold (32) starts neither a
+    listing job nor a schema-inference footer job."""
+    import uuid
+
+    from pdf_parser_spark.session import (
+        DRIVER_LISTING_THRESHOLD,
+        LISTING_THRESHOLD_CONF,
+    )
+
+    # the fixture's 50 conversations populate only 30 of 40 buckets; four
+    # renamed copies populate more than Spark's listing threshold of 32
+    base = spark.read.parquet(transcripts_sf0001)
+    src = base
+    for i in range(1, 4):
+        src = src.unionByName(base.withColumn(
+            "conv_id", F.concat("conv_id", F.lit(f"-{i}"))))
+    out_dir = str(tmp_path / "forty")
+    run_with_manifest(spark, src, out_dir, n_buckets=40)
+    assert len([d for d in os.listdir(out_dir) if d.startswith("bucket=")]) > 32
+
+    sc = spark.sparkContext
+    group = f"read-output-{uuid.uuid4().hex}"
+    prev = spark.conf.get(LISTING_THRESHOLD_CONF, None)
+    spark.conf.set(LISTING_THRESHOLD_CONF, DRIVER_LISTING_THRESHOLD)
+    sc.setJobGroup(group, "read_output")
+    try:
+        out = read_output(spark, out_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        if prev is None:
+            spark.conf.unset(LISTING_THRESHOLD_CONF)
+        else:
+            spark.conf.set(LISTING_THRESHOLD_CONF, prev)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert out.count() == src.count()
+
+
+@pytest.mark.parametrize("drop", [(), ("ts",)], ids=["with_ts", "without_ts"])
+def test_read_output_recorded_schema_equals_inference(
+        spark, transcripts_sf0001, tmp_path, drop):
+    """Reading with the recorded schema gives the schema and rows Spark's
+    own inference gives; a dir without the sidecar still reads (legacy
+    path, schema inferred)."""
+    src = spark.read.parquet(transcripts_sf0001).drop(*drop)
+    out_dir = str(tmp_path / "recorded")
+    run_with_manifest(spark, src, out_dir, n_buckets=4)
+    done = sorted(committed_buckets(os.path.join(out_dir, "_manifests")))
+    inferred = (spark.read.parquet(out_dir)
+                .filter(F.col("bucket").isin(done)).drop("bucket"))
+    want = _by_key(inferred)
+
+    got = read_output(spark, out_dir)
+    assert got.schema == inferred.schema
+    assert _by_key(got) == want
+    assert got.count() == len(want) == src.count()
+
+    os.remove(os.path.join(out_dir, "_manifests", "_schema.json"))
+    legacy = read_output(spark, out_dir)
+    assert legacy.schema == inferred.schema
+    assert _by_key(legacy) == want
 
 
 def test_span_batches_all_or_nothing(monkeypatch):
