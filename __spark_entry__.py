@@ -1046,13 +1046,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # whole training loop relationally (no literals cross engines)
     def q_probe_weights(spark, sf_dir):
         return _longify(TS.quality_probe_weights_df(
-            _tbl(spark, sf_dir, "documents"), rule_feats=True))
+            _tbl(spark, sf_dir, "documents"), head="rule"))
 
     q["quality_probe_weights"] = q_probe_weights
 
     def q_probe_agreement(spark, sf_dir):
         return _longify(TS.quality_probe_agreement(
-            _tbl(spark, sf_dir, "documents"), rule_feats=True))
+            _tbl(spark, sf_dir, "documents"), head="rule"))
 
     q["quality_probe_agreement"] = q_probe_agreement
 
@@ -1068,9 +1068,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def q_probe_scores_cg(spark, sf_dir):
         docs = _tbl(spark, sf_dir, "documents")
-        w, b, _ = TS.train_quality_probe(docs, iters=4, codegen_feats=True)
-        return _longify(TS.quality_probe_scores(docs, w, b,
-                                                codegen_feats=True))
+        w, b, _ = TS.train_quality_probe(docs, iters=4, head="codegen")
+        return _longify(TS.quality_probe_scores(docs, w, b, head="codegen"))
 
     q["quality_probe_scores"] = q_probe_scores_cg
 
@@ -1421,8 +1420,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def q_cms_heavy(spark, sf_dir):
         docs = _tbl(spark, sf_dir, "documents")
-        toks = docs.select(F.explode(F.split(F.trim(F.regexp_replace(
-            F.lower(F.col("text")), D.WS + "+", " ")), " ")).alias("term"))
+        toks = docs.select(F.explode(D.canonical_tokens("text")).alias("term"))
         tf = toks.groupBy("term").agg(F.count(F.lit(1)).alias("exact"))
         top = tf.orderBy(F.col("exact").desc(), F.col("term").asc()) \
             .limit(20)

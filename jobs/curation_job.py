@@ -114,21 +114,18 @@ def main(argv=None) -> int:
 
         head = args.quality_probe
         iters = (args.probe_iters if args.probe_iters is not None
-                 else {"codegen": 4, "rule": 2}[head])
+                 else TS.PROBE_DEFAULT_ITERS[head])
         # train ONCE on the scrubbed corpus; the agreement report, the
         # published scores, and the keep filter all derive from this
         # single (w, b) — the probe_job publishing contract
         w, b, _n = TS.train_quality_probe(
-            scrubbed, iters=iters, rule_feats=(head == "rule"),
-            codegen_feats=(head == "codegen"),
+            scrubbed, iters=iters, head=head,
             id_col=args.id_col, text_col=args.text_col)
         agree = TS.quality_probe_agreement_for(
-            scrubbed, w, b, rule_feats=(head == "rule"),
-            codegen_feats=(head == "codegen"),
+            scrubbed, w, b, head=head,
             id_col=args.id_col, text_col=args.text_col).first()
         scores = TS.quality_probe_scores(
-            scrubbed, w, b, rule_feats=(head == "rule"),
-            codegen_feats=(head == "codegen"),
+            scrubbed, w, b, head=head,
             id_col=args.id_col, text_col=args.text_col)
         write_table(scores, os.path.join(args.output + "_probe", "scores"))
         scores_m = read_table(

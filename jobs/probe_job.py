@@ -19,7 +19,9 @@ and prints a one-line JSON summary with the rule-agreement counts —
 the number a pipeline owner reads before trusting the probe as the
 cheap pre-filter in front of the full rule at 100 TB.
 
-Heads (feature blocks appended to the hashed BoW):
+Heads (feature blocks appended to the hashed BoW; `--head` passes
+straight through as the `head` argument of the textstats probe
+functions):
     codegen  (default) the 6 UDF-free `quality_codegen_features` —
              scoring is a pure whole-stage-codegen projection, no
              pandas UDF anywhere in the apply path. Measured 0.842
@@ -34,9 +36,10 @@ Heads (feature blocks appended to the hashed BoW):
 Each extra iteration is one partial-agg corpus pass, but MORE is not
 better: fast-sigmoid GD drifts from the centroid init toward the
 soft-loss optimum through an agreement dip, so each head defaults to
-its measured-best point (codegen 4, rule 2) and the report prints the
-numbers to re-check on new data. BASELINE.md records the ladders and
-the ~95% offline linear ceiling on the fixture.
+its measured-best point, `textstats.PROBE_DEFAULT_ITERS` (codegen 4,
+rule 2, bow 2), and the report prints the numbers to re-check on new
+data. BASELINE.md records the ladders and the ~95% offline linear
+ceiling on the fixture.
 """
 
 from __future__ import annotations
@@ -46,8 +49,6 @@ import json
 import os
 
 from pyspark.sql import SparkSession
-
-HEAD_DEFAULT_ITERS = {"codegen": 4, "rule": 2, "bow": 2}
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -82,31 +83,26 @@ def main(argv=None) -> int:
     from pdf_parser_spark.io import read_table, write_table
 
     docs = read_table(spark, args.input)
-    rule_feats = args.head == "rule"
-    codegen_feats = args.head == "codegen"
     iters = (args.iters if args.iters is not None
-             else HEAD_DEFAULT_ITERS[args.head])
+             else TS.PROBE_DEFAULT_ITERS[args.head])
 
     # train ONCE; everything below — weights/, the agreement report,
     # and scores/ — derives from this single (w, b), so the published
     # artifact IS the model the report card describes.
     w, b, n = TS.train_quality_probe(
         docs, iters=iters, lr=args.lr, dims=args.dims,
-        rule_feats=rule_feats, codegen_feats=codegen_feats,
-        init_scale=args.init_scale,
+        head=args.head, init_scale=args.init_scale,
         id_col=args.id_col, text_col=args.text_col)
     weights = spark.createDataFrame(
         [(-1, b)] + list(enumerate(w)), "dim long, weight double")
     write_table(weights, os.path.join(args.output, "weights"))
 
     agree = TS.quality_probe_agreement_for(
-        docs, w, b, dims=args.dims, rule_feats=rule_feats,
-        codegen_feats=codegen_feats,
+        docs, w, b, dims=args.dims, head=args.head,
         id_col=args.id_col, text_col=args.text_col).first()
 
     scores = TS.quality_probe_scores(
-        docs, w, b, dims=args.dims, rule_feats=rule_feats,
-        codegen_feats=codegen_feats,
+        docs, w, b, dims=args.dims, head=args.head,
         id_col=args.id_col, text_col=args.text_col)
     write_table(scores, os.path.join(args.output, "scores"))
 

@@ -31,14 +31,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pdf_parser_spark.corpus.dedup import canonical_text
+from pdf_parser_spark.corpus.dedup import canonical_text, canonical_tokens
 
 
 def _canon_toks(df: DataFrame, text_col: str,
                 with_id: bool = True, id_col: str = "doc_id") -> DataFrame:
     cols = ([id_col] if with_id else [])
     return df.select(
-        *cols, F.split(canonical_text(text_col), " ").alias("toks"))
+        *cols, canonical_tokens(text_col).alias("toks"))
 
 
 def _gram_expr(n: int):

@@ -44,6 +44,12 @@ def canonical_text(text_col: str = "text") -> F.Column:
     return F.trim(F.regexp_replace(F.lower(F.col(text_col)), WS + "+", " "))
 
 
+def canonical_tokens(text_col: str = "text") -> F.Column:
+    """The canonical token stream: `canonical_text` split on single
+    spaces. An empty or whitespace-only text is the one token ''."""
+    return F.split(canonical_text(text_col), " ")
+
+
 def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Exact dedup via hash-groupBy: one row per distinct canonical text,
     keeping the minimum id; `dup_count` = group size."""
@@ -71,7 +77,7 @@ def shingles(df: DataFrame, n: int = 3, id_col: str = "doc_id",
     once per sequence element (no common-subexpression elimination inside
     lambda bodies), turning tokenization O(tokens^2) per row."""
     toks = df.select(
-        F.col(id_col), F.split(canonical_text(text_col), " ").alias("toks"))
+        F.col(id_col), canonical_tokens(text_col).alias("toks"))
     grams = F.expr(
         f"""
         case when size(toks) < {n} then array(array_join(toks, ' '))
@@ -541,7 +547,7 @@ def simhash_signatures(df: DataFrame, bits: int = 32, id_col: str = "doc_id",
         df.select(
             F.col(id_col),
             F.explode(
-                F.array_distinct(F.split(canonical_text(text_col), " "))
+                F.array_distinct(canonical_tokens(text_col))
             ).alias("tok"))
         .withColumn(
             "h",

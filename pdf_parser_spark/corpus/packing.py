@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from pdf_parser_spark.corpus.dedup import canonical_text
+from pdf_parser_spark.corpus.dedup import canonical_tokens
 from pdf_parser_spark.corpus.scrub import sample_key
 
 PACK_SALT = "pack"
@@ -54,7 +54,7 @@ def pack_sequences(df: DataFrame, budget: int = 2048, n_buckets: int = 64,
     same floor every tokenizing operator in this repo uses — dataloaders
     see it as a 1-token (EOS-only) entry."""
     key = sample_key(id_col, PACK_SALT)
-    ntok = F.size(F.split(canonical_text(text_col), " ")).cast("long")
+    ntok = F.size(canonical_tokens(text_col)).cast("long")
     base = df.select(
         id_col,
         (key % n_buckets).alias("bucket"),
@@ -104,7 +104,7 @@ def chunk_documents(df: DataFrame, size: int = 128, overlap: int = 32,
     stride = size - overlap
     toks = df.select(
         F.col(id_col),
-        F.split(canonical_text(text_col), " ").alias("toks"))
+        canonical_tokens(text_col).alias("toks"))
     n = F.size("toks")
     n_chunks = F.when(n <= size, F.lit(1)).otherwise(
         F.floor((n - size + stride - 1) / stride) + 1)

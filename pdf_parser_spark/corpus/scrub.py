@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pdf_parser_spark.corpus.dedup import canonical_text
+from pdf_parser_spark.corpus.dedup import canonical_tokens
 
 EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 IPV4_RE = r"\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b"
@@ -175,7 +175,7 @@ def mixture_sample(df: DataFrame, shares: dict, budget_frac: float,
 
     Emits the kept rows of ``df`` plus ``n_tokens`` — downstream
     packing/tokenization consumes the mixture directly."""
-    ntok = F.size(F.split(canonical_text(text_col), " ")).cast("long")
+    ntok = F.size(canonical_tokens(text_col)).cast("long")
     base = df.withColumn("n_tokens", ntok)
     masses = (base.groupBy(F.col(strata_col).alias("_s"))
               .agg(F.sum("n_tokens").alias("_tok_s")))
@@ -290,7 +290,7 @@ def temperature_mixture(df: DataFrame, tau: float = 0.7,
     copy_idx starting at 1; repeats=0 documents drop."""
     from pyspark.sql.window import Window
 
-    ntok = F.size(F.split(canonical_text(text_col), " ")).cast("long")
+    ntok = F.size(canonical_tokens(text_col)).cast("long")
     g = (df.select(F.col(strata_col).alias("s"), ntok.alias("nt"))
          .groupBy("s").agg(F.sum("nt").alias("m")))
     wall = Window.partitionBy()

@@ -4,10 +4,19 @@ quality scoring, token counting, document fingerprinting.
 These lift the reference's per-block text predicates (keyword scan
 /root/reference/A003_colored_footer.py:199-210, digit test :209, whitespace
 normalization /root/reference/pdf_extractor_protocol.py:186-191) to
-document granularity. Everything is built-in `pyspark.sql.functions`
-expressions — JVM-side, whole-stage-codegen friendly, no Python in the hot
-path — and each has an exact ANSI-SQL twin for the DuckDB oracle
-(see __spark_entry__.oracle_sql).
+document granularity. Most operators are built-in `pyspark.sql.functions`
+expressions (JVM-side, whole-stage-codegen friendly). Three run a
+row-local Arrow pandas UDF over the canonical text: `winnow_fingerprints`
+(gram hashing), `repetition_stats` and the quality rule's repetition
+features (`quality_filter_keep`, `quality_rule_features`). Each operator
+has an exact ANSI-SQL twin for the DuckDB oracle (see
+__spark_entry__.oracle_sql).
+
+Canonical text and tokens come from `dedup.canonical_text` and
+`dedup.canonical_tokens`. The un-canonicalized single-space splits
+(`quality_scores`, `lang_id`'s marker counts, `topk_terms`,
+`token_df_stats`) and `token_counts`' whitespace split are separate
+conventions their twins pin.
 """
 
 from __future__ import annotations
@@ -19,7 +28,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from pdf_parser_spark.corpus.dedup import WS, WS_CHARS
+from pdf_parser_spark.corpus.dedup import (
+    WS, WS_CHARS, canonical_text, canonical_tokens)
 
 # Small deterministic stopword marker lists for the n-gram/marker language
 # heuristic. Ties break by the fixed language order below.
@@ -78,17 +88,28 @@ def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     return out.withColumn("pred_lang", pred)
 
 
+def _raw_token_count(text_col: str) -> F.Column:
+    """Token count of the raw single-space split (no canonicalization)."""
+    return F.size(F.split(F.col(text_col), " "))
+
+
+def _stop_ratio(text_col: str) -> F.Column:
+    """Stopword hits over raw tokens, 4dp: the quality rule's stopword
+    signal, shared by `quality_scores`, the rule features and the
+    codegen features."""
+    return F.round(_marker_count(text_col, STOPWORDS)
+                   / F.greatest(_raw_token_count(text_col), F.lit(1)), 4)
+
+
 def quality_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Length / punctuation / digit / stopword-ratio quality features.
 
     All ratios are exact integer divisions in double, rounded to 4dp so the
     DuckDB twin hashes identically."""
     n_chars = F.length(F.col(text_col))
-    tokens = F.split(F.col(text_col), " ")
-    n_tokens = F.size(tokens)
+    n_tokens = _raw_token_count(text_col)
     n_punct = F.regexp_count(F.col(text_col), F.lit(PUNCT_RE))
     n_digit = F.regexp_count(F.col(text_col), F.lit(r"[0-9]"))
-    n_stop = _marker_count(text_col, STOPWORDS)
     return df.select(
         "doc_id",
         n_chars.alias("n_chars"),
@@ -96,7 +117,7 @@ def quality_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
         F.round(n_chars / F.greatest(n_tokens, F.lit(1)), 4).alias("mean_token_len"),
         F.round(n_punct / F.greatest(n_chars, F.lit(1)), 4).alias("punct_ratio"),
         F.round(n_digit / F.greatest(n_chars, F.lit(1)), 4).alias("digit_ratio"),
-        F.round(n_stop / F.greatest(n_tokens, F.lit(1)), 4).alias("stopword_ratio"),
+        _stop_ratio(text_col).alias("stopword_ratio"),
     )
 
 
@@ -160,7 +181,6 @@ def winnow_fingerprints(df: DataFrame, k: int = 5, w: int = 4,
     shuffle (the explode + window-function form pushed ~50 grams per char
     through an exchange and was ~10× slower). Only the per-doc distinct
     fingerprints are emitted; the final distinct is the one shuffle."""
-    canon = F.trim(F.regexp_replace(F.lower(F.col(text_col)), WS + "+", " "))
     bpows = winnow_base_powers(k)
 
     @pandas_udf("array<string>")
@@ -186,7 +206,7 @@ def winnow_fingerprints(df: DataFrame, k: int = 5, w: int = 4,
         return pd.Series(out)
 
     return (
-        df.select("doc_id", canon.alias("t"))
+        df.select("doc_id", canonical_text(text_col).alias("t"))
         .filter(F.length("t") >= k)
         .select("doc_id", F.explode(winnow_udf(F.col("t"))).alias("fp"))
         .distinct()
@@ -231,8 +251,6 @@ def repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     identically. Tie-break for the top 2-gram: highest count, then
     lexicographically greatest gram (UTF-8 byte order == codepoint
     order, so Python/Spark/DuckDB agree)."""
-    canon = F.trim(F.regexp_replace(F.lower(F.col(text_col)), WS + "+", " "))
-
     @pandas_udf("struct<n_2grams:long, top2_cnt:long, top2_gram:string,"
                 " n_3grams:long, dup3_occ:long>")
     def rep_udf(texts: pd.Series) -> pd.DataFrame:
@@ -242,7 +260,7 @@ def repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
                      "n_3grams", "dup3_occ"])
 
     return (
-        df.select("doc_id", canon.alias("t"))
+        df.select("doc_id", canonical_text(text_col).alias("t"))
         .select("doc_id", F.length("t").alias("nc"),
                 rep_udf(F.col("t")).alias("r"))
         .select(
@@ -257,6 +275,41 @@ def repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
             F.round(F.col("r.dup3_occ")
                     / F.greatest("r.n_3grams", F.lit(1)), 4).alias("dup3_frac"),
         )
+    )
+
+
+def _with_rule_features(df: DataFrame, text_col: str) -> DataFrame:
+    """``df`` plus one struct column ``_rule`` holding the quality rule's
+    features: ``n_tokens`` (raw split), ``stop_r``, ``top2_cf`` and
+    ``dup3_f`` (the `repetition_stats` fractions over the canonical
+    text), each rounded 4dp like the standalone operators. One
+    projection over one repetition UDF; nothing leaves the row's
+    partition."""
+    canon = canonical_text(text_col)
+
+    # the UDF emits only exact integers; divisions + 4dp rounding stay
+    # JVM-side (F.round, HALF_UP) so boundary comparisons are identical
+    # to repetition_stats and to the DuckDB oracle (python round() is
+    # half-to-even and could flip a doc sitting exactly on a threshold)
+    @pandas_udf("struct<top2_chars:long, n3:long, dup3:long>")
+    def rep_ints_udf(texts: pd.Series) -> pd.DataFrame:
+        rows = []
+        for t in texts:
+            _n2, top_cnt, top_gram, n3, dup3 = repetition_counts(t)
+            rows.append((top_cnt * len(top_gram), n3, dup3))
+        return pd.DataFrame(rows, columns=["top2_chars", "n3", "dup3"])
+
+    return (
+        df.withColumn("_nc", F.length(canon))
+        .withColumn("_r", rep_ints_udf(canon))
+        .withColumn("_rule", F.struct(
+            _raw_token_count(text_col).cast("long").alias("n_tokens"),
+            _stop_ratio(text_col).alias("stop_r"),
+            F.round(F.col("_r.top2_chars") / F.greatest("_nc", F.lit(1)), 4)
+            .alias("top2_cf"),
+            F.round(F.col("_r.dup3") / F.greatest("_r.n3", F.lit(1)), 4)
+            .alias("dup3_f")))
+        .drop("_nc", "_r")
     )
 
 
@@ -282,42 +335,13 @@ def quality_filter_keep(df: DataFrame, text_col: str = "text",
     under Structured Streaming. Returns the surviving document rows with
     the payload column dropped (at 100 TB you don't want the text column
     flowing through downstream filter plumbing)."""
-    tokens = F.split(F.col(text_col), " ")
-    n_tokens = F.size(tokens)
-    n_stop = _marker_count(text_col, STOPWORDS)
-    stopword_ratio = F.round(
-        n_stop / F.greatest(n_tokens, F.lit(1)), 4)
-    canon = F.trim(F.regexp_replace(F.lower(F.col(text_col)), WS + "+", " "))
-
-    # the UDF emits only exact integers; divisions + 4dp rounding stay
-    # JVM-side (F.round, HALF_UP) so boundary comparisons are identical
-    # to repetition_stats and to the DuckDB oracle (python round() is
-    # half-to-even and could flip a doc sitting exactly on a threshold)
-    @pandas_udf("struct<top2_chars:long, n3:long, dup3:long>")
-    def rep_ints_udf(texts: pd.Series) -> pd.DataFrame:
-        rows = []
-        for t in texts:
-            _n2, top_cnt, top_gram, n3, dup3 = repetition_counts(t)
-            rows.append((top_cnt * len(top_gram), n3, dup3))
-        return pd.DataFrame(rows, columns=["top2_chars", "n3", "dup3"])
-
-    feats = (
-        df.withColumn("_q", F.struct(
-            n_tokens.alias("n_tokens"), stopword_ratio.alias("stop_r")))
-        .withColumn("_nc", F.length(canon))
-        .withColumn("_r", rep_ints_udf(canon))
-    )
-    top2_cf = F.round(
-        F.col("_r.top2_chars") / F.greatest("_nc", F.lit(1)), 4)
-    dup3_f = F.round(
-        F.col("_r.dup3") / F.greatest("_r.n3", F.lit(1)), 4)
     return (
-        feats.filter(
-            (F.col("_q.n_tokens") >= min_tokens)
-            & (F.col("_q.stop_r") >= min_stopword_ratio)
-            & (top2_cf <= max_top2_char_frac)
-            & (dup3_f <= max_dup3_frac))
-        .drop("_q", "_nc", "_r", text_col)
+        _with_rule_features(df, text_col)
+        .filter((F.col("_rule.n_tokens") >= min_tokens)
+                & (F.col("_rule.stop_r") >= min_stopword_ratio)
+                & (F.col("_rule.top2_cf") <= max_top2_char_frac)
+                & (F.col("_rule.dup3_f") <= max_dup3_frac))
+        .drop("_rule", text_col)
     )
 
 
@@ -381,6 +405,20 @@ def winnow_containment_pairs(df: DataFrame, k: int = 5, w: int = 4,
     )
 
 
+def _window_hashes(win: int, stride: int) -> F.Column:
+    """md5 of each ``win``-token window of the ``toks`` array at
+    positions 1, 1+stride, ...; an array shorter than ``win`` is one
+    whole-text window (the shingles convention)."""
+    return F.expr(
+        f"""
+        case when size(toks) < {win} then array(md5(array_join(toks, ' ')))
+             else transform(sequence(1, size(toks) - {win - 1}, {stride}),
+                            i -> md5(concat_ws(' ', slice(toks, i, {win}))))
+        end
+        """
+    )
+
+
 def dup_passage_stats(df: DataFrame, win: int = 20, stride: int = 1,
                       min_count: int = 2,
                       text_col: str = "text") -> DataFrame:
@@ -409,18 +447,9 @@ def dup_passage_stats(df: DataFrame, win: int = 20, stride: int = 1,
     (windows still overlap content when stride < win) to subsample
     positions and cut the exchange volume by that factor; md5 keys keep
     the DuckDB oracle bit-identical."""
-    toks = df.select(
-        "doc_id", F.split(F.trim(F.regexp_replace(
-            F.lower(F.col(text_col)), WS + "+", " ")), " ").alias("toks"))
-    wins_expr = F.expr(
-        f"""
-        case when size(toks) < {win} then array(md5(array_join(toks, ' ')))
-             else transform(sequence(1, size(toks) - {win - 1}, {stride}),
-                            i -> md5(concat_ws(' ', slice(toks, i, {win}))))
-        end
-        """
-    )
-    wins = toks.select("doc_id", F.explode(wins_expr).alias("wh"))
+    toks = df.select("doc_id", canonical_tokens(text_col).alias("toks"))
+    wins = toks.select("doc_id", F.explode(_window_hashes(win, stride))
+                       .alias("wh"))
     freq = wins.groupBy("wh").agg(F.count(F.lit(1)).alias("cnt"))
     return (
         wins.join(freq, "wh")
@@ -476,20 +505,11 @@ def dup_passage_scrub(df: DataFrame, win: int = 20, stride: int = 1,
     from pyspark.sql.window import Window
 
     toks = df.select(
-        id_col, F.col(text_col),
-        F.split(F.trim(F.regexp_replace(
-            F.lower(F.col(text_col)), WS + "+", " ")), " ").alias("toks"))
+        id_col, F.col(text_col), canonical_tokens(text_col).alias("toks"))
     wins = (
         toks.select(
             id_col, F.size("toks").alias("nt"),
-            F.posexplode(F.expr(
-                f"""
-                case when size(toks) < {win}
-                     then array(md5(array_join(toks, ' ')))
-                     else transform(sequence(1, size(toks) - {win - 1}, {stride}),
-                                    i -> md5(concat_ws(' ', slice(toks, i, {win}))))
-                end
-                """)).alias("j", "wh"))
+            F.posexplode(_window_hashes(win, stride)).alias("j", "wh"))
         .where(F.col("wh").isNotNull())
         .select(
             id_col, "wh",
@@ -584,8 +604,22 @@ def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Canonical document fingerprint: md5 of the lowercased,
     whitespace-collapsed text (the document-granularity analog of the
     snapshot normalization F2)."""
-    canon = F.trim(F.regexp_replace(F.lower(F.col(text_col)), WS + "+", " "))
-    return df.select("doc_id", F.md5(canon).alias("fp"))
+    return df.select("doc_id", F.md5(canonical_text(text_col)).alias("fp"))
+
+
+def _unigram_model(df: DataFrame, vocab_size: int, text_col: str) -> tuple:
+    """The corpus unigram model both surprisal orders score against:
+    ``(toks, tf, total, vocab)`` — the (doc_id, tok) canonical token
+    stream, per-token counts ``cnt``, the total token count (0 on an
+    empty corpus) and the top-``vocab_size`` tokens by count (ties by
+    token text, so the vocabulary is deterministic)."""
+    toks = df.select(
+        "doc_id", F.explode(canonical_tokens(text_col)).alias("tok"))
+    tf = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt"))
+    total = tf.agg(F.sum("cnt")).first()[0] or 0
+    vocab = (tf.orderBy(F.col("cnt").desc(), F.col("tok").asc())
+             .limit(vocab_size))
+    return toks, tf, total, vocab
 
 
 def unigram_surprisal(df: DataFrame, vocab_size: int = 65536,
@@ -613,14 +647,7 @@ def unigram_surprisal(df: DataFrame, vocab_size: int = 65536,
     corpus text itself crosses no exchange wider than (doc_id, token).
     The top-V selection is a TakeOrderedAndProject (per-partition heap,
     driver merge of V-row partials), not a global sort."""
-    toks = df.select(
-        "doc_id",
-        F.explode(F.split(F.trim(F.regexp_replace(
-            F.lower(F.col(text_col)), WS + "+", " ")), " ")).alias("tok"))
-    tf = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt"))
-    total = tf.agg(F.sum("cnt")).first()[0]
-    vocab = (tf.orderBy(F.col("cnt").desc(), F.col("tok").asc())
-             .limit(vocab_size))
+    toks, _tf, total, vocab = _unigram_model(df, vocab_size, text_col)
     bits = (F.log2(F.lit(float(total)))
             - F.log2(F.coalesce(F.col("cnt"), F.lit(1)).cast("double")))
     return (toks.join(F.broadcast(vocab), "tok", "left")
@@ -660,9 +687,8 @@ def bigram_surprisal(df: DataFrame, vocab_size: int = 65536,
     pair stream plus one per-doc rollup — the same
     corpus-never-shuffles-wider-than-its-tokens discipline as the
     unigram form."""
-    warr = F.split(F.trim(F.regexp_replace(
-        F.lower(F.col(text_col)), WS + "+", " ")), " ")
-    base = df.select("doc_id", warr.alias("w")).filter(F.size("w") >= 2)
+    base = (df.select("doc_id", canonical_tokens(text_col).alias("w"))
+            .filter(F.size("w") >= 2))
     pairs = base.select(
         "doc_id",
         F.explode(F.expr(
@@ -671,11 +697,7 @@ def bigram_surprisal(df: DataFrame, vocab_size: int = 65536,
             "(a, b) -> struct(a AS w1, b AS w2))")).alias("p")) \
         .select("doc_id", "p.w1", "p.w2")
 
-    toks = df.select(F.explode(warr).alias("tok"))
-    tf = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt"))
-    total = tf.agg(F.sum("cnt")).first()[0]
-    vocab = (tf.orderBy(F.col("cnt").desc(), F.col("tok").asc())
-             .limit(vocab_size))
+    _toks, tf, total, vocab = _unigram_model(df, vocab_size, text_col)
     btop = (pairs.groupBy("w1", "w2")
             .agg(F.count(F.lit(1)).alias("c12"))
             .orderBy(F.col("c12").desc(), F.col("w1").asc(),
@@ -772,8 +794,7 @@ def hashed_bow_embeddings(df: DataFrame, dims: int = 64,
     cosine ops keep them."""
     counts = (df.select(
         F.col(id_col),
-        F.explode(F.split(F.trim(F.regexp_replace(
-            F.lower(F.col(text_col)), WS + "+", " ")), " ")).alias("tok"))
+        F.explode(canonical_tokens(text_col)).alias("tok"))
         .groupBy(id_col, _feat_bucket("tok", dims).alias("b"))
         .agg(F.count(F.lit(1)).alias("c")))
     m = F.map_from_entries(
@@ -833,8 +854,7 @@ def dsir_weights(df: DataFrame, target_col: str = "lang",
     toks = df.select(
         "doc_id",
         (F.col(target_col) == target_val).cast("long").alias("is_t"),
-        F.explode(F.split(F.trim(F.regexp_replace(
-            F.lower(F.col(text_col)), WS + "+", " ")), " ")).alias("tok"))
+        F.explode(canonical_tokens(text_col)).alias("tok"))
     feats = toks.select("doc_id", "is_t",
                         _feat_bucket("tok", n_buckets).alias("b"))
     model = feats.groupBy("b").agg(
@@ -842,7 +862,7 @@ def dsir_weights(df: DataFrame, target_col: str = "lang",
         F.sum("is_t").alias("tc"))
     totals = model.agg(F.sum("rc").alias("R"),
                        F.sum("tc").alias("T")).first()
-    r_tot, t_tot = float(totals["R"]), float(totals["T"])
+    r_tot, t_tot = float(totals["R"] or 0), float(totals["T"] or 0)
     llr = (F.log2((F.col("tc") + 1) / F.lit(t_tot + n_buckets))
            - F.log2((F.col("rc") + 1) / F.lit(r_tot + n_buckets)))
     ratio = model.select("b", llr.alias("llr"))
@@ -886,26 +906,24 @@ def bm25_topk(df: DataFrame, queries: DataFrame, k: int = 10,
     IEEE division on both engines. Text never crosses an Exchange."""
     from pyspark.sql.window import Window
 
-    canon = F.trim(F.regexp_replace(
-        F.lower(F.col(text_col)), WS + "+", " "))
     # tokenize ONCE: explode lives in a Generate node, so inlining the
     # split under both size() and explode() evaluates the regexp+split
     # twice per row — materializing the array in a child projection
     # cut the sf1 wall 2.7x (12.2 -> 4.5 s)
-    toks = (df.select(F.col(id_col), F.split(canon, " ").alias("_arr"))
+    toks = (df.select(F.col(id_col), canonical_tokens(text_col).alias("_arr"))
             .select(F.col(id_col), F.size("_arr").alias("dl"),
                     F.explode("_arr").alias("term")))
 
     qt = queries.select(
         "query_id",
-        F.explode(F.split(F.trim(F.regexp_replace(
-            F.lower(F.col("query")), WS + "+", " ")), " ")).alias("term")
+        F.explode(canonical_tokens("query")).alias("term")
     ).distinct()
     terms = qt.select("term").distinct()
 
-    stats = df.select(F.size(F.split(canon, " ")).alias("dl")) \
+    stats = df.select(F.size(canonical_tokens(text_col)).alias("dl")) \
         .agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s")).first()
-    n_docs, avgdl = int(stats["n"]), float(stats["s"]) / int(stats["n"])
+    n_docs = int(stats["n"])
+    avgdl = float(stats["s"] or 0) / max(n_docs, 1)
 
     tf = (toks.join(F.broadcast(terms), "term")
           .groupBy(id_col, "term")
@@ -1025,41 +1043,13 @@ def linear_quality_score(df: DataFrame, weights: list, bias: float = 0.0,
 def quality_rule_features(df: DataFrame, id_col: str = "doc_id",
                           text_col: str = "text") -> DataFrame:
     """The quality RULE's own feature vector as a relation —
-    (id, n_tokens, stop_r, top2_cf, dup3_f), the same expressions and
-    4dp rounding `quality_filter_keep` thresholds (kept a separate
-    single-projection operator rather than a refactor of the filter so
-    the filter's plan-asserted zero-Exchange shape stays untouched).
-    This is the feature block `train_quality_probe(rule_feats=True)`
-    appends: BoW token-identity features alone cannot see document
-    LENGTH or REPETITION (L2 normalization erases both), which is
-    exactly the signal the C4/Gopher rule thresholds."""
-    tokens = F.split(F.col(text_col), " ")
-    n_tokens = F.size(tokens)
-    n_stop = _marker_count(text_col, STOPWORDS)
-    stop_r = F.round(n_stop / F.greatest(n_tokens, F.lit(1)), 4)
-    canon = F.trim(F.regexp_replace(F.lower(F.col(text_col)), WS + "+", " "))
-
-    @pandas_udf("struct<top2_chars:long, n3:long, dup3:long>")
-    def rep_ints_udf(texts: pd.Series) -> pd.DataFrame:
-        rows = []
-        for t in texts:
-            _n2, top_cnt, top_gram, n3, dup3 = repetition_counts(t)
-            rows.append((top_cnt * len(top_gram), n3, dup3))
-        return pd.DataFrame(rows, columns=["top2_chars", "n3", "dup3"])
-
-    feats = (df
-             .withColumn("_nt", n_tokens.cast("long"))
-             .withColumn("_sr", stop_r)
-             .withColumn("_nc", F.length(canon))
-             .withColumn("_r", rep_ints_udf(canon)))
-    return feats.select(
-        F.col(id_col),
-        F.col("_nt").alias("n_tokens"),
-        F.col("_sr").alias("stop_r"),
-        F.round(F.col("_r.top2_chars") / F.greatest("_nc", F.lit(1)), 4)
-        .alias("top2_cf"),
-        F.round(F.col("_r.dup3") / F.greatest("_r.n3", F.lit(1)), 4)
-        .alias("dup3_f"))
+    (id, n_tokens, stop_r, top2_cf, dup3_f), the exact columns
+    `quality_filter_keep` thresholds (both read `_with_rule_features`).
+    This is the feature block the ``"rule"`` probe head appends: BoW
+    token-identity features alone cannot see document LENGTH or
+    REPETITION (L2 normalization erases both), which is exactly the
+    signal the C4/Gopher rule thresholds."""
+    return _with_rule_features(df, text_col).select(F.col(id_col), "_rule.*")
 
 
 QUALITY_CODEGEN_COLS = ("len_sq", "stop_r", "mwl_sq",
@@ -1074,8 +1064,8 @@ def quality_codegen_features(df: DataFrame, id_col: str = "doc_id",
     UDF (the rule features' `top2_cf`/`dup3_f` pay one; these are the
     codegen stand-ins for the same signals):
 
-      len_sq   n/(n+100) saturating length (the `_RULE_FEATS_EXPR`
-               transform — pure arithmetic, no libm)
+      len_sq   n/(n+100) saturating length (the rule head's token
+               count transform — pure arithmetic, no libm)
       stop_r   stopword ratio, identical to the teacher rule's
       mwl_sq   mean word length through m/(m+10) — separates prose
                from code/URL soup where token counts alone cannot
@@ -1093,14 +1083,11 @@ def quality_codegen_features(df: DataFrame, id_col: str = "doc_id",
     see the same inputs. All fractions round 4dp, squashes 6dp via
     floor(x*k + 0.5) — the engine-exact contract. Output:
     (id, len_sq, stop_r, mwl_sq, uniq1_r, uniq2_r, uniq3_r)."""
-    tokens = F.split(F.col(text_col), " ")
-    n_tokens = F.size(tokens)
-    n_stop = _marker_count(text_col, STOPWORDS)
-    stop_r = F.round(n_stop / F.greatest(n_tokens, F.lit(1)), 4)
-    canon = F.trim(F.regexp_replace(F.lower(F.col(text_col)), WS + "+", " "))
     base = df.select(
-        F.col(id_col), n_tokens.alias("_nt"), stop_r.alias("stop_r"),
-        F.length(canon).alias("_nc"), F.split(canon, " ").alias("_w"))
+        F.col(id_col), _raw_token_count(text_col).alias("_nt"),
+        _stop_ratio(text_col).alias("stop_r"),
+        F.length(canonical_text(text_col)).alias("_nc"),
+        canonical_tokens(text_col).alias("_w"))
     staged = base.select(
         id_col, "_nt", "stop_r", "_w",
         ((F.col("_nc") - (F.size("_w") - F.lit(1))) / F.size("_w"))
@@ -1152,55 +1139,52 @@ def _probe_z_units(w: list, bias: float, vec_col: str = "embedding") -> str:
             f"{seed}, (a, u) -> a + u)")
 
 
-_RULE_FEATS_EXPR = (
-    "concat(embedding, array("
-    "floor(n_tokens / (n_tokens + 100.0) * 1e6 + 0.5) / 1e6, "
-    "stop_r, top2_cf, dup3_f))")
+# head -> (extra dims, feature relation, embedding expression): the
+# block each probe head appends to the hashed BoW. "rule" appends the 4
+# teacher-rule features, the token count through the pure-arithmetic
+# saturating transform n/(n+100) (NOT a log: libm would enter the
+# cross-engine contract) and three 4dp fractions in [0, 1]; "codegen"
+# appends the 6 UDF-free `quality_codegen_features`, the block the
+# deployable head trains and scores on; "bow" appends nothing.
+_PROBE_HEADS = {
+    "bow": (0, None, None),
+    "rule": (4, quality_rule_features,
+             "concat(embedding, array("
+             "floor(n_tokens / (n_tokens + 100.0) * 1e6 + 0.5) / 1e6, "
+             "stop_r, top2_cf, dup3_f))"),
+    "codegen": (6, quality_codegen_features,
+                "concat(embedding, array(len_sq, stop_r, mwl_sq, "
+                "uniq1_r, uniq2_r, uniq3_r))"),
+}
+
+# each head's measured-best GD iteration count (BASELINE.md ladders)
+PROBE_DEFAULT_ITERS = {"codegen": 4, "rule": 2, "bow": 2}
 
 
-_CODEGEN_FEATS_EXPR = (
-    "concat(embedding, array(len_sq, stop_r, mwl_sq, "
-    "uniq1_r, uniq2_r, uniq3_r))")
+def probe_extra_dims(head: str) -> int:
+    """Feature dims a probe head appends to the BoW block."""
+    return _PROBE_HEADS[head][0]
 
 
-def probe_extra_dims(rule_feats: bool, codegen_feats: bool = False) -> int:
-    """Feature dims appended to the BoW block for a probe config."""
-    return (4 if rule_feats else 0) + (6 if codegen_feats else 0)
-
-
-def _probe_feature_frame(df: DataFrame, dims: int, rule_feats: bool,
-                         id_col: str, text_col: str,
-                         codegen_feats: bool = False) -> DataFrame:
-    """(id, embedding) feature relation for the probe: hashed BoW, plus
-    (when rule_feats) the 4 teacher-rule features appended — token count
-    through the pure-arithmetic saturating transform n/(n+100) (NOT a
-    log: libm would enter the cross-engine contract), the other three
-    already 4dp fractions in [0, 1] — or (when codegen_feats) the 6
-    UDF-free `quality_codegen_features`, the block the deployable head
-    trains and scores on."""
-    if rule_feats and codegen_feats:
-        raise ValueError("rule_feats and codegen_feats are exclusive "
-                         "feature blocks")
+def _probe_feature_frame(df: DataFrame, dims: int, head: str,
+                         id_col: str, text_col: str) -> DataFrame:
+    """(id, embedding) feature relation for the probe: the hashed BoW
+    with the ``head``'s feature block (`_PROBE_HEADS`) appended."""
+    _extra, head_feats, embedding = _PROBE_HEADS[head]
     feats = hashed_bow_embeddings(df, dims=dims, id_col=id_col,
                                   text_col=text_col)
-    if codegen_feats:
-        cf = quality_codegen_features(df, id_col=id_col, text_col=text_col)
-        return (feats.join(cf, id_col)
-                .select(id_col,
-                        F.expr(_CODEGEN_FEATS_EXPR).alias("embedding")))
-    if not rule_feats:
+    if head_feats is None:
         return feats
-    rf = quality_rule_features(df, id_col=id_col, text_col=text_col)
-    return (feats.join(rf, id_col)
-            .select(id_col, F.expr(_RULE_FEATS_EXPR).alias("embedding")))
+    return (feats.join(head_feats(df, id_col=id_col, text_col=text_col),
+                       id_col)
+            .select(id_col, F.expr(embedding).alias("embedding")))
 
 
 def train_quality_probe(df: DataFrame, keep_df: DataFrame | None = None,
                         iters: int = 2, lr: float = 0.5, dims: int = 64,
-                        rule_feats: bool = False, init_scale: float = 16.0,
+                        head: str = "bow", init_scale: float = 16.0,
                         id_col: str = "doc_id",
-                        text_col: str = "text",
-                        codegen_feats: bool = False) -> tuple:
+                        text_col: str = "text") -> tuple:
     """Distill a filter RULE into a trainable linear probe, entirely
     in-engine: logistic-style gradient descent over hashed-BoW features
     with weak labels from `quality_filter_keep` (or any caller-supplied
@@ -1231,24 +1215,20 @@ def train_quality_probe(df: DataFrame, keep_df: DataFrame | None = None,
     — monotone, bounded, and pure arithmetic, so no libm exp() is on
     the cross-engine contract. Weights round to 6dp per update.
 
-    With ``rule_feats`` the 4 teacher-rule features join the BoW block
-    (see `_probe_feature_frame`); without it the probe measured exactly
-    the keep base rate on the sf0.01 fixture (76% — L2-normalized token
-    identities carry no length/repetition signal; recorded as the
-    negative result that motivated the flag).
+    ``head`` picks the feature block beside the BoW (`_PROBE_HEADS`).
+    ``"bow"`` alone measured exactly the keep base rate on the sf0.01
+    fixture (76% — L2-normalized token identities carry no
+    length/repetition signal; recorded as the negative result that
+    motivated the other heads). ``"rule"`` joins the 4 teacher-rule
+    features (0.858 agreement at iters=2). ``"codegen"`` joins the 6
+    UDF-free `quality_codegen_features` — the DEPLOYABLE head: scoring
+    pays no pandas UDF anywhere (0.842 at iters=4). BASELINE.md records
+    the ladder; each head's measured-best iteration count is
+    `PROBE_DEFAULT_ITERS`.
 
-    With ``codegen_feats`` the 6 UDF-free `quality_codegen_features`
-    join the BoW block instead — the DEPLOYABLE head: scoring pays no
-    pandas UDF anywhere (measured 0.842 agreement at iters=4 on the
-    sf0.01 fixture vs 0.858 for the rule-feats teacher head at
-    iters=2 and 0.76 = the keep base rate for BoW alone; BASELINE.md
-    records the ladder — each head has its own measured-best
-    iteration count, which `jobs/probe_job.py` pins as the
-    per-head default).
-
-    Returns ``(weights, bias, n_docs)``."""
-    feats = _probe_feature_frame(df, dims, rule_feats, id_col, text_col,
-                                 codegen_feats)
+    Returns ``(weights, bias, n_docs)``; an empty corpus returns zero
+    weights, zero bias and ``n_docs = 0``."""
+    feats = _probe_feature_frame(df, dims, head, id_col, text_col)
     if keep_df is None:
         keep_df = quality_filter_keep(df, text_col=text_col).select(id_col)
     data = (feats.join(keep_df.select(id_col).withColumn("y", F.lit(1.0)),
@@ -1256,7 +1236,10 @@ def train_quality_probe(df: DataFrame, keep_df: DataFrame | None = None,
             .select("embedding", F.coalesce("y", F.lit(0.0)).alias("y"))
             .localCheckpoint())
     n = data.count()
-    d_total = dims + probe_extra_dims(rule_feats, codegen_feats)
+    d_total = dims + probe_extra_dims(head)
+    if n == 0:
+        data.unpersist()
+        return [0.0] * d_total, 0.0, 0
 
     # Class-centroid initialization (Rocchio/nearest-centroid): w0 =
     # scale·(mean(x|keep) − mean(x|drop)), b0 = −w0·midpoint — ONE
@@ -1316,26 +1299,22 @@ def train_quality_probe(df: DataFrame, keep_df: DataFrame | None = None,
 
 
 def quality_probe_weights_df(df: DataFrame, iters: int = 2, lr: float = 0.5,
-                             dims: int = 64, rule_feats: bool = False,
+                             dims: int = 64, head: str = "bow",
                              init_scale: float = 16.0,
                              id_col: str = "doc_id",
-                             text_col: str = "text",
-                             codegen_feats: bool = False) -> DataFrame:
+                             text_col: str = "text") -> DataFrame:
     """Gate surface for `train_quality_probe`: the trained model as a
     (dim, weight) relation, bias at dim = -1 — a bounded driver-scalar
     row count by construction."""
     w, b, _ = train_quality_probe(df, iters=iters, lr=lr, dims=dims,
-                                  rule_feats=rule_feats,
-                                  init_scale=init_scale,
-                                  id_col=id_col, text_col=text_col,
-                                  codegen_feats=codegen_feats)
+                                  head=head, init_scale=init_scale,
+                                  id_col=id_col, text_col=text_col)
     rows = [(-1, b)] + [(j, w[j]) for j in range(len(w))]
     return df.sparkSession.createDataFrame(rows, "dim long, weight double")
 
 
 def quality_probe_scores(df: DataFrame, weights: list, bias: float,
-                         dims: int = 64, rule_feats: bool = False,
-                         codegen_feats: bool = False,
+                         dims: int = 64, head: str = "bow",
                          id_col: str = "doc_id",
                          text_col: str = "text") -> DataFrame:
     """Score a corpus with an ALREADY-TRAINED probe over the SAME
@@ -1350,8 +1329,7 @@ def quality_probe_scores(df: DataFrame, weights: list, bias: float,
     identical arithmetic `quality_probe_agreement_for` counts, so a
     reader thresholding the published scores reproduces the printed
     agreement bit-for-bit. Output: (id, quality_score, probe_keep)."""
-    feats = _probe_feature_frame(df, dims, rule_feats, id_col, text_col,
-                                 codegen_feats)
+    feats = _probe_feature_frame(df, dims, head, id_col, text_col)
     return (feats
             .select(F.col(id_col),
                     F.expr(_probe_z_units(weights, bias)).alias("_zu"))
@@ -1366,37 +1344,37 @@ def quality_probe_scores(df: DataFrame, weights: list, bias: float,
 
 
 def quality_probe_agreement_for(df: DataFrame, weights: list, bias: float,
-                                dims: int = 64, rule_feats: bool = False,
-                                codegen_feats: bool = False,
+                                dims: int = 64, head: str = "bow",
                                 id_col: str = "doc_id",
                                 text_col: str = "text") -> DataFrame:
     """Agreement report for an ALREADY-TRAINED probe (w, b) against the
     teacher rule on ``df`` — the scoring half of
     `quality_probe_agreement`, reusable so a CLI that just trained
     never pays the training passes twice to grade itself. One row:
-    (n_docs, n_rule_keep, n_probe_keep, n_agree); probe-keep is the
-    exact integer-unit margin z > 0."""
-    feats = _probe_feature_frame(df, dims, rule_feats, id_col, text_col,
-                                 codegen_feats)
+    (n_docs, n_rule_keep, n_probe_keep, n_agree), all 0 on an empty
+    corpus; probe-keep is the exact integer-unit margin z > 0."""
+    feats = _probe_feature_frame(df, dims, head, id_col, text_col)
     keep_df = quality_filter_keep(df, text_col=text_col).select(id_col)
     scored = (feats.join(keep_df.withColumn("y", F.lit(1)), id_col, "left")
               .select(F.coalesce("y", F.lit(0)).alias("y"),
                       (F.expr(_probe_z_units(weights, bias)) > 0)
                       .cast("int").alias("pk")))
+
+    def total(c):
+        return F.coalesce(F.sum(c), F.lit(0)).cast("long")
+
     return scored.agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("y").cast("long").alias("n_rule_keep"),
-        F.sum("pk").cast("long").alias("n_probe_keep"),
-        F.sum((F.col("y") == F.col("pk")).cast("int"))
-        .cast("long").alias("n_agree"))
+        total("y").alias("n_rule_keep"),
+        total("pk").alias("n_probe_keep"),
+        total((F.col("y") == F.col("pk")).cast("int")).alias("n_agree"))
 
 
 def quality_probe_agreement(df: DataFrame, iters: int = 2, lr: float = 0.5,
-                            dims: int = 64, rule_feats: bool = False,
+                            dims: int = 64, head: str = "bow",
                             init_scale: float = 16.0,
                             id_col: str = "doc_id",
-                            text_col: str = "text",
-                            codegen_feats: bool = False) -> DataFrame:
+                            text_col: str = "text") -> DataFrame:
     """Train the probe, then score the SAME corpus and report how well
     the distilled model reproduces its teacher rule: one row
     (n_docs, n_rule_keep, n_probe_keep, n_agree). Probe-keep is margin
@@ -1406,13 +1384,11 @@ def quality_probe_agreement(df: DataFrame, iters: int = 2, lr: float = 0.5,
     the probe as the cheap 100 TB pre-filter."""
     keep_df = quality_filter_keep(df, text_col=text_col).select(id_col)
     w, b, _ = train_quality_probe(df, keep_df=keep_df, iters=iters,
-                                  lr=lr, dims=dims, rule_feats=rule_feats,
+                                  lr=lr, dims=dims, head=head,
                                   init_scale=init_scale,
-                                  id_col=id_col, text_col=text_col,
-                                  codegen_feats=codegen_feats)
+                                  id_col=id_col, text_col=text_col)
     return quality_probe_agreement_for(
-        df, w, b, dims=dims, rule_feats=rule_feats,
-        codegen_feats=codegen_feats, id_col=id_col, text_col=text_col)
+        df, w, b, dims=dims, head=head, id_col=id_col, text_col=text_col)
 
 
 def pmi_cooccurrence(df: DataFrame, window: int = 2, min_count: int = 5,
@@ -1437,9 +1413,7 @@ def pmi_cooccurrence(df: DataFrame, window: int = 2, min_count: int = 5,
     cut, all counts exact integers — engine-deterministic."""
     from pyspark.sql.window import Window
 
-    canon = F.trim(F.regexp_replace(
-        F.lower(F.col(text_col)), WS + "+", " "))
-    arr = df.select(F.split(canon, " ").alias("w"))
+    arr = df.select(canonical_tokens(text_col).alias("w"))
     pair_expr = F.expr(
         f"flatten(transform(w, (x, i) -> "
         f"transform(slice(w, i + 2, {window}), "

@@ -155,11 +155,11 @@ def stream_contamination_hits(stream: DataFrame, eval_grams: DataFrame,
     grain downstream (batch or windowed)."""
     from pdf_parser_spark.corpus.decontam import _gram_expr
 
-    from pdf_parser_spark.corpus.dedup import canonical_text
+    from pdf_parser_spark.corpus.dedup import canonical_tokens
 
     toks = stream.select(
         "conv_id", "turn_idx",
-        F.split(canonical_text(text_col), " ").alias("toks"))
+        canonical_tokens(text_col).alias("toks"))
     grams = toks.select(
         "conv_id", "turn_idx", F.explode(_gram_expr(n)).alias("gh"))
     return grams.join(F.broadcast(eval_grams), "gh", "left_semi")

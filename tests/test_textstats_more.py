@@ -1,3 +1,4 @@
+import pytest
 
 
 def test_unigram_surprisal_matches_brute_force(spark):
@@ -239,27 +240,27 @@ def test_quality_probe_distillation(spark):
     model), the agreement gate beats the predict-all-keep baseline on
     the driver fixture, and the returned model applies through
     linear_quality_score's raw-feature contract (weights sized
-    dims + 4 with rule_feats)."""
+    dims + 4 for the rule head)."""
     from pdf_parser_spark.corpus.textstats import (
         quality_probe_agreement, train_quality_probe)
 
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    w1, b1, n1 = train_quality_probe(docs, iters=2, rule_feats=True)
-    w2, b2, n2 = train_quality_probe(docs, iters=2, rule_feats=True)
+    w1, b1, n1 = train_quality_probe(docs, iters=2, head="rule")
+    w2, b2, n2 = train_quality_probe(docs, iters=2, head="rule")
     assert (w1, b1, n1) == (w2, b2, n2)
     assert len(w1) == 68 and n1 == 500
 
-    r = quality_probe_agreement(docs, iters=2, rule_feats=True).first()
+    r = quality_probe_agreement(docs, iters=2, head="rule").first()
     assert r.n_docs == 500
     # predict-all-keep scores exactly n_rule_keep; the probe must beat it
     assert r.n_agree > r.n_rule_keep
 
 
 def test_quality_rule_features_match_filter(spark):
-    """quality_rule_features deliberately duplicates the filter's
-    expressions (to leave the filter's plan-asserted shape untouched);
-    this pins them together: thresholding the feature frame must
-    reproduce quality_filter_keep's keep set exactly."""
+    """quality_rule_features and quality_filter_keep read the same
+    rule-feature projection; this pins them together: thresholding the
+    feature frame must reproduce quality_filter_keep's keep set
+    exactly."""
     from pyspark.sql import functions as F
 
     from pdf_parser_spark.corpus.textstats import (
@@ -328,3 +329,47 @@ def test_bigram_surprisal_matches_python(spark):
         assert r.backoff_frac == round(bo / len(bits), 4)
         assert abs(r.mean_bits - sum(bits) / len(bits)) < 1e-3, doc_id
     assert got[100].mean_bits > got[0].mean_bits  # scramble scores higher
+
+
+@pytest.mark.parametrize("head,width", [("bow", 16), ("rule", 20),
+                                        ("codegen", 22)])
+def test_probe_feature_width(spark, head, width):
+    """Each probe head appends probe_extra_dims(head) features to the
+    hashed BoW block, so its embedding is dims + extra wide."""
+    from pdf_parser_spark.corpus.textstats import (
+        _probe_feature_frame, probe_extra_dims)
+
+    docs = spark.createDataFrame(
+        [(1, "the cat sat on the mat and the dog sat too")],
+        "doc_id long, text string")
+    row = _probe_feature_frame(docs, 16, head, "doc_id", "text").first()
+    assert len(row.embedding) == 16 + probe_extra_dims(head) == width
+
+
+@pytest.mark.parametrize("op", [
+    "unigram_surprisal", "bigram_surprisal", "curriculum_bins",
+    "dsir_weights", "bm25_topk", "hybrid_rrf_topk", "train_quality_probe"])
+def test_empty_corpus_gives_empty_result(spark, op):
+    """An empty corpus (e.g. a blocklist that drops every document) is
+    an empty relation with the operator's normal schema, not a driver
+    crash on a NULL corpus total; the probe trainer returns a zero
+    model over zero documents and its agreement report counts zeros."""
+    from pdf_parser_spark.corpus import textstats as TS
+
+    docs = spark.createDataFrame(
+        [(1, "the cat sat on the mat", "en"), (2, "a dog ran", "de")],
+        "doc_id long, text string, lang string")
+    empty = docs.limit(0)
+    if op == "train_quality_probe":
+        w, b, n = TS.train_quality_probe(empty, dims=16)
+        assert (w, b, n) == ([0.0] * 16, 0.0, 0)
+        report = TS.quality_probe_agreement_for(empty, w, b, dims=16).first()
+        assert tuple(report) == (0, 0, 0, 0)
+        return
+    queries = spark.createDataFrame([(0, "cat mat")],
+                                    "query_id long, query string")
+    args = (queries,) if op in ("bm25_topk", "hybrid_rrf_topk") else ()
+    fn = getattr(TS, op)
+    got = fn(empty, *args)
+    assert got.collect() == []
+    assert got.schema == fn(docs, *args).schema

@@ -1,10 +1,11 @@
 """Generate PLANS.md: the physical-plan audit for the headline operators.
 
-For each headline operator this prints the formatted plan Spark actually
-executes plus an assertion of the property that matters at 100 TB
+For each headline operator `audit_all` builds the formatted plan Spark
+actually executes and asserts the property that matters at 100 TB
 (shuffle-free map phase, pushdown reaching the scan, broadcast side,
 partial aggregation). Failing properties raise — the audit is a test, not
-prose.
+prose: tests/test_plan_audit.py runs `audit_all` on the test session, and
+`python tools/plan_audit.py` also rewrites PLANS.md from its sections.
 """
 
 from __future__ import annotations
@@ -13,7 +14,8 @@ import os
 import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -37,8 +39,10 @@ def compact(plan: str, max_lines: int = 40) -> str:
     return "\n".join(lines[:max_lines])
 
 
-def main() -> None:
-    spark = get_spark("plan-audit", cpus="8")
+def audit_all(spark) -> list:
+    """Audit every headline plan on ``spark``; returns the PLANS.md
+    sections as (title, note, compacted plan) and raises
+    AssertionError on the first plan that loses its property."""
     tr = spark.read.parquet(transcripts_path(0.001))
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     embs = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -894,7 +898,7 @@ def main() -> None:
     # features — reconstruct the trainer's internal frame shape
     from pdf_parser_spark.corpus import textstats as TSP
 
-    probe_feats = TSP._probe_feature_frame(docs, 16, True, "doc_id", "text")
+    probe_feats = TSP._probe_feature_frame(docs, 16, "rule", "doc_id", "text")
     probe_keep = TSP.quality_filter_keep(docs).select("doc_id")
     probe_data = (probe_feats
                   .join(probe_keep.withColumn("y", F.lit(1.0)),
@@ -982,11 +986,11 @@ def main() -> None:
               "scoring never leaves the JVM."),
     )
 
-    _cg_dims = 64 + TQS.probe_extra_dims(False, True)
+    _cg_dims = 64 + TQS.probe_extra_dims("codegen")
     audit(
         "Probe scoring pass (publish step, UDF-free end to end)",
         TQS.quality_probe_scores(
-            docs, [0.01] * _cg_dims, 0.1, codegen_feats=True),
+            docs, [0.01] * _cg_dims, 0.1, head="codegen"),
         requires=[r"aggregate\(zip_with", r"Scan parquet"],
         forbids=[r"PythonUDF|BatchEvalPython|ArrowEval|MapInPandas",
                  r"SortMergeJoin|CartesianProduct"],
@@ -999,7 +1003,11 @@ def main() -> None:
               "deploying the trained filter."),
     )
 
-    with open("/root/repo/PLANS.md", "w", encoding="utf-8") as f:
+    return sections
+
+
+def write_plans(sections: list, path: str) -> None:
+    with open(path, "w", encoding="utf-8") as f:
         f.write(
             "# PLANS — physical-plan audit of the headline operators\n\n"
             "Generated by `python tools/plan_audit.py` (re-run after plan "
@@ -1007,6 +1015,12 @@ def main() -> None:
             "described — the generator fails if a plan regresses).\n")
         for title, note, plan in sections:
             f.write(f"\n## {title}\n\n{note}\n\n```\n{plan}\n```\n")
+
+
+def main() -> None:
+    spark = get_spark("plan-audit", cpus="8")
+    sections = audit_all(spark)
+    write_plans(sections, os.path.join(REPO, "PLANS.md"))
     print(f"PLANS.md written with {len(sections)} audited plans")
     spark.stop()
 
