@@ -22,6 +22,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pdf_parser_spark.pyworker import python_task
+
 DECODE_SCHEMA = (
     "doc_id long, kind string, n_bytes long, width long, height long, "
     "channels long, ok boolean")
@@ -50,6 +52,7 @@ def decode_meta(df: DataFrame) -> DataFrame:
     byte length, keeping the Arrow plumbing and downstream schema real.
     """
 
+    @python_task
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             # degrade-don't-fail (D1): a NULL payload (failed fetch,

@@ -36,6 +36,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from pdf_parser_spark.pyworker import python_task
+
 # Left-fold dot product in array order: deterministic summation order, so
 # DuckDB's list-ordered sum matches exactly.
 _DOT = ("aggregate(zip_with({a}, {b}, (x, y) -> cast(x as double) * cast(y as double)), "
@@ -129,6 +131,7 @@ def lsh_buckets(df: DataFrame, planes: int = 8, dims: int = 64,
         return signs_cache[d]
 
     @pandas_udf("long")
+    @python_task
     def bucket_udf(vecs: pd.Series) -> pd.Series:
         if not len(vecs):
             return pd.Series([], dtype="int64")
@@ -197,6 +200,7 @@ def batch_topk(df: DataFrame, queries: DataFrame, k: int = 10,
 
     out_schema = f"query_id long, {id_col} long, score double"
 
+    @python_task
     def local_topk(it):
         frames = []
         for pdf in it:

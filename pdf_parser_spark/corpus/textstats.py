@@ -30,6 +30,7 @@ from pyspark.sql.functions import pandas_udf
 
 from pdf_parser_spark.corpus.dedup import (
     WS, WS_CHARS, canonical_text, canonical_tokens)
+from pdf_parser_spark.pyworker import python_task
 
 # Small deterministic stopword marker lists for the n-gram/marker language
 # heuristic. Ties break by the fixed language order below.
@@ -184,6 +185,7 @@ def winnow_fingerprints(df: DataFrame, k: int = 5, w: int = 4,
     bpows = winnow_base_powers(k)
 
     @pandas_udf("array<string>")
+    @python_task
     def winnow_udf(texts: pd.Series) -> pd.Series:
         out = []
         for t in texts:
@@ -253,6 +255,7 @@ def repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     order, so Python/Spark/DuckDB agree)."""
     @pandas_udf("struct<n_2grams:long, top2_cnt:long, top2_gram:string,"
                 " n_3grams:long, dup3_occ:long>")
+    @python_task
     def rep_udf(texts: pd.Series) -> pd.DataFrame:
         return pd.DataFrame(
             [repetition_counts(t) for t in texts],
@@ -292,6 +295,7 @@ def _with_rule_features(df: DataFrame, text_col: str) -> DataFrame:
     # to repetition_stats and to the DuckDB oracle (python round() is
     # half-to-even and could flip a doc sitting exactly on a threshold)
     @pandas_udf("struct<top2_chars:long, n3:long, dup3:long>")
+    @python_task
     def rep_ints_udf(texts: pd.Series) -> pd.DataFrame:
         rows = []
         for t in texts:

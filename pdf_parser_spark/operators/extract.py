@@ -14,6 +14,12 @@ Scale design:
 * extraction is turn-local -> embarrassingly parallel; no shuffle is needed
   for the map phase, so mega-conversation skew cannot serialize it
 * the only Python<->JVM boundary is Arrow batch transport (mapInPandas)
+* each task pays a fixed Python worker cost before its first batch:
+  pyspark re-validates the import caches, and every cached zip importer
+  re-reads its archive (pyspark.zip, the Spark core jar), about 0.2 s of
+  CPU. The ``run`` closures are wrapped in ``pyworker.python_task``,
+  which drops those importers, so a reused worker skips the re-read at
+  its next task
 * per-turn error handling degrades to error rows, never fails the task
   (D1 semantics, A003:328-341)
 * one batch-level degrade: ``_extract_variants`` splits a batch by tool
@@ -39,6 +45,7 @@ from pdf_parser_spark.oracle.extractor import (
     extract_turn,
 )
 from pdf_parser_spark.payload import A000_KEEP_TYPES, stub_block_type, unescape_text
+from pdf_parser_spark.pyworker import python_task
 
 PASSTHROUGH = ["conv_id", "turn_idx", "role", "tool", "ts"]
 LAYOUT_FIELDS = [
@@ -947,6 +954,7 @@ def extract_layouts(df, variant: str = "a003", columns: list | None = None):
     at local parallelism).
     """
 
+    @python_task
     def run(batches):
         for pdf in batches:
             yield extract_batch(pdf, variant, columns=columns)
@@ -989,6 +997,7 @@ def extract_blocks(df) -> "DataFrame":
     (SURVEY.md section 1.1) as a first-class relation, so geometric
     predicates (P1-P5, S7 region clip) compose relationally."""
 
+    @python_task
     def run(batches):
         for pdf in batches:
             yield blocks_batch(pdf)
@@ -1024,6 +1033,7 @@ def extract_layouts_multi(df, variants=("a002", "a003", "a004")):
     layouts tagged with ``extractor_name`` (the D4 fan-out without N input
     scans or N tokenizes)."""
 
+    @python_task
     def run(batches):
         for pdf in batches:
             yield extract_batch_multi(pdf, variants)

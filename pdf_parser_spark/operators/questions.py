@@ -23,6 +23,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pdf_parser_spark.pyworker import python_task
+
 # Pattern verbatim from /root/reference/A004_Vision_2025.py:341.
 QUESTION_PATTERN = re.compile(r"(?:^|\n)\s*(?:Q\.?\s*)?(\d+)[\.\)]\s+", re.MULTILINE)
 
@@ -45,6 +47,7 @@ def _spans_for_column(text: str) -> list:
     return out
 
 
+@python_task
 def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in batches:
         recs = []

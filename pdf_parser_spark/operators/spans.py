@@ -19,6 +19,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from pdf_parser_spark.operators.html import strip_html
+from pdf_parser_spark.pyworker import python_task
 
 SPANS_SCHEMA = (
     "conv_id string, turn_idx long, span_idx long, start_offset long, "
@@ -26,6 +27,7 @@ SPANS_SCHEMA = (
 )
 
 
+@python_task
 def _span_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in batches:
         recs = []

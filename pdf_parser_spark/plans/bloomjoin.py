@@ -46,6 +46,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pdf_parser_spark.pyworker import python_task
+
 DEFAULT_N_BITS = 1 << 20
 DEFAULT_NUM_HASHES = 5
 # Mirrors the spirit of spark.sql.optimizer.runtime.bloomFilter
@@ -107,6 +109,7 @@ def bloom_prune(fact: DataFrame, bitmap: bytes, key_col: str,
     hash_names = [f"_bh{i}" for i in range(num_hashes)]
     schema = fact.schema
 
+    @python_task
     def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         bm = np.frombuffer(bc.value, dtype=np.uint8)
         for pdf in batches:

@@ -15,6 +15,15 @@ JVM, so the job only adds scheduling overhead (a 64-bucket output read
 cost a 64-task job per read). The factory therefore raises the threshold
 past any directory count. A cluster session (``jobs/*.py`` under
 spark-submit builds its own) should keep Spark's default.
+
+Python workers are reused across tasks (``spark.python.worker.reuse``,
+true by default), and the package relies on that: every Python entry
+point is wrapped in ``pyworker.python_task``, which drops the zip
+importers a task leaves cached, so the next task on the same worker does
+not re-read pyspark.zip and the Spark core jar (about 0.2 s of CPU per
+task). With reuse off, each task forks a fresh worker from the daemon,
+which starts with the daemon's cache, and the trim cannot help. The
+factory sets no key for this; Spark's default is the one relied on.
 """
 
 from __future__ import annotations

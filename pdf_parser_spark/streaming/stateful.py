@@ -21,6 +21,8 @@ import pandas as pd
 
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from pdf_parser_spark.pyworker import python_task
+
 OUTPUT_SCHEMA = (
     "conv_id string, turns_seen long, max_turn_idx long, contiguous_upto long"
 )
@@ -29,6 +31,7 @@ STATE_SCHEMA = "turns_seen long, max_turn_idx long, seen_bitmap binary"
 _BITMAP_CAP = 1 << 20  # track contiguity exactly up to 1M turns per conv
 
 
+@python_task
 def _update(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
     (conv_id,) = key
     if state.exists:
