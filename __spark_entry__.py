@@ -127,7 +127,7 @@ def _drain_or_die(query, name: str, timeout: int = 600) -> None:
 
 
 def _question_layouts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared prelude of the three question-path gates: page/v1 turns
+    """Shared prelude of the four question-path gates: page/v1 turns
     through the a004 extractor, pruned to the columns the span UDF
     consumes."""
     src = _transcripts(spark, sf_dir).filter(F.col("tool") == "page/v1")
@@ -410,6 +410,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["question_sinks_md"] = q_question_md
 
+    def q_question_json(spark, sf_dir):
+        from pdf_parser_spark.operators.questions import questions_to_json
+
+        return questions_to_json(
+            extract_questions(_question_layouts(spark, sf_dir)))
+
+    q["question_sinks_json"] = q_question_json
+
     def q_html_spans(spark, sf_dir):
         return _longify(boilerplate_spans(_transcripts(spark, sf_dir)))
 
@@ -586,12 +594,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["footer_keyword_filter"] = q_footer_kw
 
     def q_norm_ws(spark, sf_dir):
+        from pdf_parser_spark.plans.normalize import normalize_text_col
+
         docs = _tbl(spark, sf_dir, "documents")
-        return docs.select(
-            "doc_id",
-            F.expr("trim(array_join(transform(split(text, '\\n'), x -> trim(x)), '\\n'))")
-            .alias("norm_text"),
-        )
+        return docs.select("doc_id", normalize_text_col("text").alias("norm_text"))
 
     q["whitespace_normalize"] = q_norm_ws
 
@@ -2171,6 +2177,25 @@ def oracle_sql() -> dict[str, str]:
                        AS questions_md,
                    count(*)::BIGINT AS total_questions
             FROM md GROUP BY conv_id
+        """,
+        "question_sinks_json": f"""
+            SELECT conv_id,
+                   to_json({{
+                       'conv_id': conv_id,
+                       'total_questions': count(*),
+                       'questions': list({{
+                           'question_number': question_number,
+                           'question_text': question_text,
+                           'page_number': page_number,
+                           'col_side': col_side,
+                           'start_offset': start_offset,
+                           'end_offset': end_offset}}
+                           ORDER BY question_number, turn_idx, col_side,
+                                    question_text, page_number,
+                                    start_offset, end_offset)
+                   }})::VARCHAR AS questions_json
+            FROM read_parquet('{g("questions")}')
+            GROUP BY conv_id
         """,
         "html_content_spans": f"""
             SELECT conv_id, turn_idx::BIGINT AS turn_idx,

@@ -123,21 +123,3 @@ def chunk_documents(df: DataFrame, size: int = 128, overlap: int = 32,
                 F.array_join(
                     F.slice("toks", F.col("chunk_idx") * stride + 1,
                             size), " ").alias("chunk_text")))
-
-
-def packing_stats(df: DataFrame, budget: int = 2048, n_buckets: int = 64,
-                  text_col: str = "text",
-                  id_col: str = "doc_id") -> DataFrame:
-    """Roll the layout up to per-bucket utilization: docs, tokens, full
-    sequences produced (`floor(tokens/budget)` — the trailing partial
-    chunk is dropped by dataloaders), and the straddle rate (docs cut by
-    a chunk boundary). The per-doc frame never materializes wider than
-    its five integer columns; the rollup is a second uniform-key
-    partial-agg shuffle."""
-    packed = pack_sequences(df, budget, n_buckets, text_col, id_col=id_col)
-    return (packed.groupBy("bucket")
-            .agg(F.count(F.lit(1)).alias("n_docs"),
-                 F.sum("n_tokens").alias("n_tokens"),
-                 F.floor(F.sum("n_tokens") / budget).alias("n_full_seqs"),
-                 F.sum(F.when(F.col("n_seqs") > 1, 1).otherwise(0))
-                 .alias("n_straddlers")))

@@ -77,20 +77,6 @@ def sample_key(key_col: str = "doc_id", salt: str = "") -> F.Column:
     return F.conv(F.substring(h, 1, 8), 16, 10).cast("long")
 
 
-def deterministic_sample(df: DataFrame, fraction: float,
-                         key_col: str = "doc_id",
-                         salt: str = "") -> DataFrame:
-    """Keep rows whose hash key falls below ``fraction`` of the keyspace.
-
-    Unlike ``df.sample()`` (seeded per-partition RNG — resplitting the
-    input changes the sample), the kept set is a pure function of the
-    row key: stable under repartitioning, resumable, and exactly
-    reproducible by any engine. Zero shuffle — a codegen filter fused
-    into the scan. Change ``salt`` to draw an independent sample."""
-    thr = int(fraction * _KEYSPACE)
-    return df.filter(sample_key(key_col, salt) < F.lit(thr))
-
-
 def stratified_sample(df: DataFrame, fractions: dict,
                       strata_col: str = "lang",
                       key_col: str = "doc_id",
@@ -98,10 +84,15 @@ def stratified_sample(df: DataFrame, fractions: dict,
                       salt: str = "") -> DataFrame:
     """Per-stratum deterministic sampling — the data-mixture primitive:
     ``fractions`` maps stratum value → keep fraction (strata absent from
-    the map get ``default_fraction``). Same hash rule as
-    ``deterministic_sample``, so mixtures are exactly re-drawable; the
-    per-stratum threshold compiles to one CASE expression, still zero
-    shuffle, still fused into the scan (no per-stratum passes)."""
+    the map get ``default_fraction``, so ``fractions={}`` is a uniform
+    sample). A row is kept when its ``sample_key`` falls below its
+    stratum's fraction of the keyspace. Unlike ``df.sample()`` (seeded
+    per-partition RNG — resplitting the input changes the sample), the
+    kept set is a pure function of the row key: stable under
+    repartitioning, resumable, and exactly reproducible by any engine;
+    change ``salt`` to draw an independent sample. The per-stratum
+    threshold compiles to one CASE expression: zero shuffle, fused into
+    the scan (no per-stratum passes)."""
     thr = F.lit(int(default_fraction * _KEYSPACE))
     for value, frac in sorted(fractions.items()):
         thr = F.when(F.col(strata_col) == value,
@@ -208,7 +199,7 @@ def split_assign(df: DataFrame, val_frac: float = 0.01,
     """Deterministic train/val/test assignment — the other sampling
     primitive every training pipeline needs: the held-out sets must stay
     IDENTICAL across reruns, repartitions, and engines or eval numbers
-    silently drift. Same md5-keyspace rule as `deterministic_sample`:
+    silently drift. Same md5-keyspace rule as `stratified_sample`:
     the lowest ``val_frac`` of the keyspace is `val`, the next
     ``test_frac`` is `test`, the rest `train`. Pure codegen projection,
     zero shuffle; change ``salt`` to redraw the split."""

@@ -15,6 +15,10 @@ bucket write becomes ``df.writeTo(table).overwritePartitions()`` and the
 manifest commit an append to a manifest table inside the same snapshot —
 ``IcebergTableIO`` carries that wiring; its methods raise with a clear
 message when the runtime jar is absent rather than failing obscurely.
+
+Next to the seam: ``write_bucketed`` (bucketed catalog tables, the
+write-time shuffle a keyed join then skips) and ``read_jsonl`` (JSONL
+ingest whose malformed lines become ``ok = false`` lineage rows).
 """
 
 from __future__ import annotations
@@ -259,63 +263,3 @@ def read_jsonl(spark: SparkSession, path: str, schema_ddl: str) -> DataFrame:
                 *[F.col(f"_p.{f.name}").alias(f.name) for f in fields],
                 F.col("_p._corrupt_record").isNull().alias("ok"),
                 F.col("_p._corrupt_record").alias("raw")))
-
-
-def write_jsonl(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Write newline-delimited JSON, one object per row (the export
-    format the ingest side of `read_jsonl` consumes)."""
-    df.write.mode(mode).json(path)
-
-
-def compact_dataset(spark: SparkSession, path: str, target_mb: int = 128,
-                    sort_cols: tuple = ()) -> dict:
-    """Compact a small-file parquet dataset in place: the ingest-side
-    cure for the 100 TB small-file problem (every file costs a task, a
-    footer fetch, and a driver listing entry — a day of streaming
-    micro-batches leaves millions of them and scans go
-    metadata-bound).
-
-    Sizing is measured, not guessed: list the dataset, take
-    ceil(bytes / target_mb) output files. With ``sort_cols`` the
-    rewrite is a range repartition + in-partition sort, so a sorted or
-    z-ordered layout (min/max pruning) SURVIVES compaction; without,
-    a plain repartition balances bytes. The rewrite goes to a
-    temporary sibling directory, is row-count-verified, and only then
-    swapped over the original (crash before the swap leaves the
-    original untouched — the manifest idea at dataset granularity).
-    On the Iceberg seam the same operation is
-    `rewrite_data_files` + snapshot commit; this is the parquet-path
-    analog. Returns {files_before, files_after, bytes, rows}."""
-    import math
-
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(conf)
-    files = [f for f in fs.listStatus(p)
-             if f.getPath().getName().endswith(".parquet")]
-    total = sum(f.getLen() for f in files)
-    n_out = max(1, math.ceil(total / (target_mb * 1024 * 1024)))
-
-    df = spark.read.parquet(path)
-    rows = df.count()
-    if sort_cols:
-        out = (df.repartitionByRange(n_out, *sort_cols)
-               .sortWithinPartitions(*sort_cols))
-    else:
-        out = df.repartition(n_out)
-
-    tmp = path.rstrip("/") + "._compact_tmp"
-    out.write.mode("overwrite").parquet(tmp)
-    tmp_p = jvm.org.apache.hadoop.fs.Path(tmp)
-    got = spark.read.parquet(tmp).count()
-    if got != rows:
-        fs.delete(tmp_p, True)
-        raise RuntimeError(
-            f"compaction row mismatch: {rows} in, {got} rewritten")
-    fs.delete(p, True)
-    fs.rename(tmp_p, p)
-    after = len([f for f in fs.listStatus(p)
-                 if f.getPath().getName().endswith(".parquet")])
-    return {"files_before": len(files), "files_after": after,
-            "bytes": int(total), "rows": int(rows)}

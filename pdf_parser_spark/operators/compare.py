@@ -10,11 +10,14 @@ inputs to extractor implementations. In this engine dispatch happens on
 the ``tool`` column inside the extraction UDF (page/v1 -> layout parser,
 html/v1 -> boilerplate stripper, else plain fallback); this module holds
 the variant registry for the layout parser itself.
+
+D5, the reference's protocol validation of extractor classes
+(pdf_extractor_protocol.py:118-155), has no counterpart: a variant is a
+row of ``oracle.extractor.VARIANTS``, not a plugin class, and
+``get_variant`` rejects a name that is not registered.
 """
 
 from __future__ import annotations
-
-import inspect
 
 from pyspark.sql import DataFrame
 
@@ -32,55 +35,6 @@ def get_variant(name: str | None) -> str:
         raise KeyError(f"unknown extractor variant {name!r}; "
                        f"registered: {tuple(sorted(VARIANTS))}")
     return name
-
-
-# D5 protocol contract (/root/reference/pdf_extractor_protocol.py:118-155):
-# the reference asserts an extractor class exposes __init__/
-# extract_page_layout/extract_all_pages/close as callables with the right
-# arity. Our extractor equivalent is "a pure batch function
-# pandas.DataFrame -> pandas.DataFrame" (SURVEY.md section 2.8); the
-# required callables and their arities translate accordingly.
-REQUIRED_CALLABLES = {
-    # name -> minimum positional-parameter count (like validate_extractor's
-    # inspect.signature arity checks at pdf_extractor_protocol.py:137-150)
-    "extract_batch": 1,      # (pdf_batch[, variant])
-    "extract_layouts": 1,    # (df[, variant])
-}
-
-
-def validate_extractor(module) -> list:
-    """Full D5 protocol validation of an extractor implementation module
-    (or any namespace object). Returns the list of validation errors —
-    empty means conformant; raise-on-error is the caller's choice, same
-    shape as the reference's boolean + printed issues."""
-    errors = []
-    for name, min_arity in REQUIRED_CALLABLES.items():
-        fn = getattr(module, name, None)
-        if fn is None:
-            errors.append(f"missing required callable {name!r}")
-            continue
-        if not callable(fn):
-            errors.append(f"{name!r} is not callable")
-            continue
-        try:
-            sig = inspect.signature(fn)
-        except (TypeError, ValueError):
-            continue  # builtins without signatures: accept, like the reference
-        positional = [
-            p for p in sig.parameters.values()
-            if p.kind in (p.POSITIONAL_ONLY, p.POSITIONAL_OR_KEYWORD)
-        ]
-        required = [p for p in positional if p.default is p.empty]
-        if len(required) > min_arity:
-            errors.append(
-                f"{name!r} requires {len(required)} positional args, "
-                f"protocol allows at most {min_arity}")
-        if len(positional) < min_arity and not any(
-                p.kind == p.VAR_POSITIONAL for p in sig.parameters.values()):
-            errors.append(
-                f"{name!r} accepts {len(positional)} positional args, "
-                f"protocol needs {min_arity}")
-    return errors
 
 
 def compare_extractors(df: DataFrame, variants=("a002", "a003", "a004")) -> DataFrame:

@@ -9,6 +9,7 @@ Spark equivalents:
 * ``layout_json_col`` — one JSON object per turn via ``to_json(struct)``
   (column order fixed to the PageLayout field order,
   /root/reference/pdf_extractor_protocol.py:14-41).
+  A column expression: a caller selects it or adds it with ``withColumn``.
 * ``conversation_json`` — one JSON document per conversation: turn objects
   collected in turn order (two-stage-safe: collect_list of structs sorted
   by turn_idx) wrapped with conv_id + total_pages, the ExtractionResult
@@ -49,10 +50,6 @@ def layout_json_col() -> F.Column:
     # ignoreNullFields=false: the reference's json.dumps(asdict(...))
     # serializes None fields as explicit nulls, not omissions.
     return F.to_json(layout_struct(), {"ignoreNullFields": "false"})
-
-
-def with_layout_json(layouts: DataFrame) -> DataFrame:
-    return layouts.withColumn("layout_json", layout_json_col())
 
 
 def conversation_json(layouts: DataFrame) -> DataFrame:

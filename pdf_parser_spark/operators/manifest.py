@@ -272,18 +272,15 @@ def run_with_manifest(
     out_dir: str,
     n_buckets: int = 16,
     variant: str = "a003",
-    fail_after: int | None = None,
     input_path: str = "",
     pages_spec: str | None = None,
 ) -> dict:
     """Extract layouts with checkpoint manifests, one job per submission.
 
     Returns ``{"processed": [...], "skipped": [...], "manifests": {...}}``.
-    ``fail_after=k`` commits only the first k pending buckets then aborts
-    (test hook for the kill/resume test — the only mode that splits the
-    work into more than one job). Re-invoking resumes exactly: committed
-    buckets are skipped, uncommitted ones are (re)computed in a single
-    pass and their partitions overwritten.
+    Re-invoking resumes exactly: committed buckets are skipped, and the
+    uncommitted ones (written or not) are recomputed in a single pass and
+    their partitions overwritten.
     """
     manifest_dir = os.path.join(out_dir, "_manifests")
     done = committed_buckets(manifest_dir)
@@ -299,14 +296,11 @@ def run_with_manifest(
     src = transcripts.withColumn("bucket", bucket_expr(n_buckets))
 
     processed: list = []
-    job_plan = [pending[:fail_after]] if fail_after is not None else [pending]
-    for buckets in job_plan:
-        if not buckets:
-            continue
+    if pending:
         counts, wall_ms = _run_bucket_job(
-            spark, src, out_dir, buckets, n_buckets, variant)
+            spark, src, out_dir, pending, n_buckets, variant)
         wall_s = max(wall_ms / 1000.0, 1e-9)
-        for k in buckets:
+        for k in pending:
             rows_out, error_rows = counts.get(k, (0, 0))
             manifest = {
                 "bucket": k,
@@ -317,14 +311,12 @@ def run_with_manifest(
                 "rows_out": rows_out,
                 "error_rows": error_rows,
                 "wall_ms": wall_ms,
-                "job_buckets": len(buckets),
+                "job_buckets": len(pending),
                 "turns_per_sec": round(rows_out / wall_s, 2),
                 **run_config,
             }
             _commit_manifest(manifest_dir, manifest)
             processed.append(k)
-    if fail_after is not None and len(pending) > len(processed):
-        raise RuntimeError(f"injected failure after {fail_after} buckets")
     return {
         "processed": processed,
         "skipped": skipped,

@@ -1,14 +1,15 @@
-"""Z-order (Morton curve) data layout: multi-dimensional file pruning.
+"""Z-order (Morton curve) key: multi-dimensional file pruning.
 
 A table sorted by ONE column gives parquet min/max pruning on that
 column and nothing on any other; at 100 TB the second-most-common
 filter column then reads the whole table. Interleaving the bits of two
-(or more) bucketed keys into a single sort key makes every file a
-small HYPER-RECTANGLE in key space, so min/max footer stats prune
-files for predicates on EITHER dimension — the layout trick behind
-Delta/Iceberg `ZORDER BY`, here as a plain column expression + one
-range repartition, engine-portable (the z-value is pure integer bit
-arithmetic both Spark and DuckDB reproduce exactly).
+(or more) bucketed keys into a single sort key makes every file of a
+layout range-partitioned and sorted on that key a small HYPER-RECTANGLE
+in key space, so min/max footer stats prune files for predicates on
+EITHER dimension — the layout trick behind Delta/Iceberg `ZORDER BY`.
+Here the key is a plain column expression (`zvalue`) with a portable
+SQL twin (`zvalue_sql`): pure integer bit arithmetic that Spark and
+DuckDB reproduce exactly (gate `zorder_key`).
 
 The reference has no storage layout concept (SURVEY.md §2.8) —
 north-rule addition alongside `io.write_bucketed` (bucketing solves
@@ -17,7 +18,6 @@ JOIN co-location; z-order solves multi-predicate SCAN pruning).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -52,23 +52,3 @@ def zvalue_sql(x_expr: str, y_expr: str, bits: int = 8) -> str:
         terms.append(f"(((({x_expr}) >> {b}) & 1) << {2 * b})")
         terms.append(f"(((({y_expr}) >> {b}) & 1) << {2 * b + 1})")
     return "(" + " + ".join(terms) + ")"
-
-
-def write_zorder(df: DataFrame, path: str, x_col: str, y_col: str,
-                 bits: int = 8, n_files: int = 16) -> None:
-    """Write ``df`` z-ordered on (x_col, y_col): one range repartition
-    on the z-value (a sampled-boundary Exchange — the same cost as any
-    global sort layout, paid ONCE at ingest) + an in-partition sort, so
-    each of the ``n_files`` output files covers a compact z-range =
-    a bounded rectangle in (x, y) space. Filters on either column then
-    prune files via parquet footer min/max without touching row data —
-    measured in tests/test_operators.py: the overlap fraction for a
-    y-predicate drops from ~1.0 (x-sorted layout) to the rectangle
-    bound. The z column itself is dropped from the files; it is a
-    layout decision, not data."""
-    z = zvalue(x_col, y_col, bits).alias("_z")
-    (df.select("*", z)
-     .repartitionByRange(n_files, "_z")
-     .sortWithinPartitions("_z")
-     .drop("_z")
-     .write.mode("overwrite").parquet(path))

@@ -1,42 +1,21 @@
-"""Snapshot normalization F2/F3/F4 as pure column expressions.
+"""Whitespace normalization F2 as a pure column expression.
 
-The reference's equality contract for golden comparison
-(/root/reference/pdf_extractor_protocol.py:158-193):
+The reference's snapshot normalization re-joins each text field from its
+per-line-stripped lines, then strips the whole
+(``pdf_extractor_protocol.py:186-191``). The gate
+``whitespace_normalize`` runs it on Spark and its SQL twin on DuckDB.
 
-* F3 — floats rounded to 2dp, truthy-guarded (a 0.0 or NULL value is left
-  untouched — the reference's quirk at :173-179; numerically identical
-  here since round(0.0) == 0.0 and round(NULL) is NULL).
-* F2 — text fields re-joined from per-line-stripped lines (:186-191).
-* F4 — metadata keys sorted (:181-183) via map_entries -> array_sort ->
-  map_from_entries (struct sort orders by first field = key).
+Its siblings F3 (round floats to 2dp) and F4 (sort metadata keys) have
+no operator here: the layout gates round floats on both sides and read
+metadata by key, and applying F2 to their text would hide the
+whitespace differences those gates exist to catch.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-FLOAT_FIELDS = ("page_width", "page_height", "column_separator_position")
-TEXT_FIELDS = ("header", "footer", "left_column", "right_column")
 
 
 def normalize_text_col(c: str) -> F.Column:
     return F.trim(F.array_join(
         F.transform(F.split(F.col(c), "\n"), lambda x: F.trim(x)), "\n"))
-
-
-def normalize_layouts(df: DataFrame) -> DataFrame:
-    """Apply the snapshot normalization to a layouts DataFrame."""
-    out = df
-    for c in FLOAT_FIELDS:
-        if c in df.columns:
-            out = out.withColumn(c, F.round(F.col(c), 2))
-    for c in TEXT_FIELDS:
-        if c in df.columns:
-            out = out.withColumn(
-                c, F.when(F.col(c) != "", normalize_text_col(c)).otherwise(F.col(c)))
-    if "metadata" in df.columns:
-        out = out.withColumn(
-            "metadata",
-            F.map_from_entries(F.array_sort(F.map_entries("metadata"))))
-    return out

@@ -12,7 +12,11 @@ batch arrives.
 
 ``python_task`` wraps a function handed to Spark (``mapInPandas``,
 ``applyInPandasWithState``, ``pandas_udf``) so that it first drops those
-importers from the cache. The next task's ``invalidate_caches()`` then
+importers from the cache. A task can build new ones after that: the
+first task on a fresh worker imports while it reads its first batch. So
+when the function returns a generator (every ``mapInPandas`` and
+``applyInPandasWithState`` site), the wrapper trims again once the
+generator is exhausted. The next task's ``invalidate_caches()`` then
 finds none to re-read. The cache is only a cache: Python builds a fresh
 finder the next time an import searches that path entry (reusing
 zipimport's directory cache, so without a re-read), and modules already
@@ -26,6 +30,7 @@ from __future__ import annotations
 
 import functools
 import sys
+import types
 import zipimport
 
 
@@ -37,15 +42,24 @@ def trim_import_caches() -> None:
             del cache[path]
 
 
+def _trim_when_done(gen):
+    yield from gen
+    trim_import_caches()
+
+
 def python_task(fn):
-    """Wrap a Spark Python entry point: trim the import cache, then run
-    ``fn``. ``functools.wraps`` keeps the name and type hints, so plans
-    show ``MapInPandas fn(...)`` and ``pandas_udf`` infers the same eval
-    type as for ``fn`` itself."""
+    """Wrap a Spark Python entry point: trim the import cache, run
+    ``fn``, and trim again once a generator it returns is exhausted.
+    ``functools.wraps`` keeps the name and type hints, so plans show
+    ``MapInPandas fn(...)`` and ``pandas_udf`` infers the same eval type
+    as for ``fn`` itself."""
 
     @functools.wraps(fn)
     def wrapper(*args, **kwargs):
         trim_import_caches()
-        return fn(*args, **kwargs)
+        out = fn(*args, **kwargs)
+        if isinstance(out, types.GeneratorType):
+            return _trim_when_done(out)
+        return out
 
     return wrapper

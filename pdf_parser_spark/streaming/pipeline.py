@@ -1,15 +1,13 @@
-"""Streaming extraction pipeline + watermarked windowed aggregates.
+"""Streaming operators: dedup, session windows, decontamination hits,
+stream-stream attribution joins and a foreachBatch MERGE INTO.
 
-``stream_extract_layouts`` is the streaming form of EP1: new transcript
-files appearing under a directory are extracted incrementally and appended
-to a parquet sink. Exactly-once delivery comes from Structured Streaming's
-checkpoint + file-sink transaction log — the engine-level counterpart of
-the batch path's per-bucket manifests (operators/manifest.py); both exist
-because the north rule demands resumable ingestion at either cadence.
-
-``windowed_turn_counts`` demonstrates watermark-bounded late-data handling
-(the stream analog of G3's per-page counts): tumbling-window turn counts
-per tool with a configurable lateness bound.
+The transcript stream (``read_transcript_stream``) carries the batch
+extraction input's schema. Each operator is the streaming sibling of a
+batch operator, and a ``stream_*`` gate in ``__spark_entry__.queries()``
+drains it under a real streaming query. The watermarked operators evict
+their state; ``stream_contamination_hits`` keeps none (a stream-static
+broadcast semi-join); ``stream_merge_changes`` keeps one row per key in
+a versioned-pointer state directory.
 """
 
 from __future__ import annotations
@@ -19,8 +17,6 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from pdf_parser_spark.operators.extract import extract_layouts
 
 TRANSCRIPT_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, tool string, "
@@ -35,27 +31,6 @@ def read_transcript_stream(spark: SparkSession, src_dir: str,
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(src_dir)
     )
-
-
-def stream_extract_layouts(spark: SparkSession, src_dir: str, out_dir: str,
-                           checkpoint_dir: str, variant: str = "a003",
-                           available_now: bool = True):
-    """Incrementally extract layouts from a growing transcript directory.
-
-    Returns the started StreamingQuery. ``available_now=True`` drains the
-    current backlog and stops — the batch-catchup trigger; long-running
-    deployments drop it for continuous micro-batches."""
-    stream = read_transcript_stream(spark, src_dir)
-    layouts = extract_layouts(stream, variant=variant)
-    writer = (
-        layouts.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_dedup_turns(stream: DataFrame, watermark: str = "2 hours") -> DataFrame:
@@ -75,18 +50,6 @@ def stream_dedup_turns(stream: DataFrame, watermark: str = "2 hours") -> DataFra
         .withWatermark("ts", watermark)
         .dropDuplicatesWithinWatermark(["fp"])
         .drop("fp")
-    )
-
-
-def windowed_turn_counts(stream: DataFrame, window: str = "1 hour",
-                         watermark: str = "2 hours") -> DataFrame:
-    """Watermarked tumbling-window turn counts per tool (late data beyond
-    the watermark is dropped; state is bounded)."""
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "tool")
-        .agg(F.count(F.lit(1)).alias("n_turns"))
-        .select(F.col("w.start").alias("window_start"), "tool", "n_turns")
     )
 
 
@@ -249,23 +212,31 @@ def stream_merge_changes(changes: DataFrame, base: DataFrame,
     from pdf_parser_spark.operators.funnel import _epoch_us
 
     cols = [f.name for f in base.schema.fields]
-    v0 = (base.select(*cols)
-          .withColumn("_rank_ts", F.lit(None).cast("long"))
-          .withColumn("_del", F.lit(0)))
+    if not os.path.exists(os.path.join(state_dir, "_LATEST")):
+        os.makedirs(state_dir, exist_ok=True)
+        _commit_version(state_dir, 0, base.select(
+            *cols, F.lit(None).cast("long").alias("_rank_ts"),
+            F.lit(0).alias("_del")))
+    w = (Window.partitionBy(key_col)
+         .orderBy(F.col("_rank_ts").desc_nulls_last(), F.col("_del").desc()))
 
-    def _merge(state: DataFrame, batch: DataFrame) -> DataFrame:
+    def _batch(batch: DataFrame, epoch_id: int) -> None:
+        # the version comes from the pointer, never from epoch_id
+        n, state = _latest_state(changes.sparkSession, state_dir)
         ch = batch.select(
             *cols, _epoch_us(ts_col).alias("_rank_ts"),
             (F.col(op_col) == "d").cast("int").alias("_del"))
-        w = (Window.partitionBy(key_col)
-             .orderBy(F.col("_rank_ts").desc_nulls_last(),
-                      F.col("_del").desc()))
-        return (state.unionByName(ch)
-                .withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1).drop("_rn"))
+        merged = (state.unionByName(ch)
+                  .withColumn("_rn", F.row_number().over(w))
+                  .filter(F.col("_rn") == 1).drop("_rn"))
+        _commit_version(state_dir, n + 1, merged)
 
-    return _run_versioned_state(changes, state_dir, checkpoint_dir, v0,
-                                _merge, available_now)
+    writer = (changes.writeStream
+              .foreachBatch(_batch)
+              .option("checkpointLocation", checkpoint_dir))
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def merged_snapshot(spark: SparkSession, state_dir: str,
@@ -275,46 +246,6 @@ def merged_snapshot(spark: SparkSession, state_dir: str,
     _, state = _latest_state(spark, state_dir)
     df = state.filter(F.col("_del") == 0).drop("_rank_ts", "_del")
     return df.select(*cols) if cols else df
-
-
-def stream_sketch_counts(stream: DataFrame, state_dir: str,
-                         checkpoint_dir: str, key_col: str,
-                         depth: int = 4, width: int = 256,
-                         available_now: bool = True):
-    """Streaming Count-Min maintenance: keep a live frequency sketch of
-    a key stream (hot-conversation / hot-key detection at ingest time)
-    with state bounded at depth*width longs FOREVER — the streaming
-    payoff of a mergeable sketch. Each micro-batch builds its own
-    `plans.sketch.cms_sketch` and merges cell-wise (integer sum —
-    associative and commutative), so the streamed state equals the
-    batch sketch over the same rows BIT FOR BIT regardless of how the
-    stream splits into batches (pinned by test); the checkpoint makes
-    batch application exactly-once, so replays cannot double-count.
-
-    State storage is the `stream_merge_changes` versioned-pointer
-    protocol (plain parquet has no transactional update; the pointer
-    swap is the commit point) — but unlike the merge state, which is
-    O(keys), this state is O(depth*width) no matter how many keys ever
-    flow: rewriting it per batch costs a constant ~1024 rows. Query the
-    live sketch with `plans.sketch.cms_estimate` over the `_LATEST`
-    version."""
-    from pdf_parser_spark.plans.sketch import cms_sketch
-
-    v0 = stream.sparkSession.createDataFrame([], "row long, cell long, cnt long")
-
-    def _add_sketch(state: DataFrame, batch: DataFrame) -> DataFrame:
-        bs = cms_sketch(batch, key_col, depth=depth, width=width)
-        return (state.unionByName(bs)
-                .groupBy("row", "cell")
-                .agg(F.sum("cnt").alias("cnt")))
-
-    return _run_versioned_state(stream, state_dir, checkpoint_dir, v0,
-                                _add_sketch, available_now)
-
-
-def sketch_snapshot(spark: SparkSession, state_dir: str) -> DataFrame:
-    """Read the live CMS state (the `_LATEST` version)."""
-    return _latest_state(spark, state_dir)[1]
 
 
 def _latest_state(spark: SparkSession, state_dir: str):
@@ -339,27 +270,3 @@ def _commit_version(state_dir: str, n: int, state: DataFrame) -> None:
     for name in os.listdir(state_dir):
         if name.startswith("v") and name[1:].isdigit() and int(name[1:]) < n - 1:
             shutil.rmtree(os.path.join(state_dir, name), ignore_errors=True)
-
-
-def _run_versioned_state(stream: DataFrame, state_dir: str,
-                         checkpoint_dir: str, v0: DataFrame, step,
-                         available_now: bool):
-    """The versioned-pointer state protocol shared by the streaming state
-    operators: commit ``v0`` if no pointer exists yet, then per
-    micro-batch read the committed version, compute
-    ``step(state, batch)`` and commit it as the next version. Versions
-    advance from the pointer, never from the stream's epoch id."""
-    if not os.path.exists(os.path.join(state_dir, "_LATEST")):
-        os.makedirs(state_dir, exist_ok=True)
-        _commit_version(state_dir, 0, v0)
-
-    def _batch(batch: DataFrame, epoch_id: int) -> None:
-        n, state = _latest_state(stream.sparkSession, state_dir)
-        _commit_version(state_dir, n + 1, step(state, batch))
-
-    writer = (stream.writeStream
-              .foreachBatch(_batch)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

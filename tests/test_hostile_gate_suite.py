@@ -107,28 +107,16 @@ def hostile_sf_dir(spark, tmp_path_factory):
 
 
 def _run_suite(spark, sf_dir, names):
-    import __spark_entry__ as E
-    from tools.check_correctness import canon_frame, value_hash
+    from tools.check_correctness import check_gate
 
     con = duckdb.connect()
     for t in ("documents", "embeddings"):
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM "
                 f"read_parquet('{sf_dir}/{t}.parquet/*.parquet')")
-    qs, oracles = E.queries(), E.oracle_sql()
-    failures = []
-    for name in names:
-        got = qs[name](spark, sf_dir).toPandas()
-        want = con.sql(oracles[name]).df()
-        if len(got) != len(want):
-            failures.append((name, f"rows {len(got)} != {len(want)}"))
-        elif sorted(got.columns) != sorted(want.columns):
-            failures.append((name, f"cols {sorted(got.columns)} != "
-                                   f"{sorted(want.columns)}"))
-        elif value_hash(got) != value_hash(want):
-            a, b = canon_frame(got), canon_frame(want)
-            diff = a.compare(b) if a.shape == b.shape else "shape"
-            failures.append((name, f"value mismatch: {str(diff)[:300]}"))
-    assert not failures, "\n".join(f"{n}: {m}" for n, m in failures)
+    failures = {name: problems for name in names
+                if (problems := check_gate(spark, con, sf_dir, name))}
+    assert not failures, "\n".join(
+        f"{n}: {'; '.join(m)}" for n, m in failures.items())
 
 
 def test_document_gates_on_hostile_corpus(spark, hostile_sf_dir):

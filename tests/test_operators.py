@@ -97,14 +97,34 @@ def test_reassembly_order_and_content(layouts):
         assert got.loc[conv_id, "n_turns"] == n
 
 
-def test_manifest_resume_exact(spark, transcripts_sf0001, tmp_path):
+def test_manifest_resume_exact(spark, transcripts_sf0001, tmp_path,
+                               monkeypatch):
+    """Kill the run after its one job wrote every bucket but committed
+    only 3: the rerun skips the 3, rewrites the written-but-uncommitted
+    buckets, and neither loses nor duplicates a turn."""
+    from pdf_parser_spark.operators import manifest
+
     out_dir = str(tmp_path / "layout_out")
     src = spark.read.parquet(transcripts_sf0001)
     n_src = src.count()
 
+    commit, calls = manifest._commit_manifest, []
+
+    def crash_on_fourth(manifest_dir, m):
+        calls.append(m["bucket"])
+        if len(calls) == 4:
+            raise RuntimeError("injected failure")
+        commit(manifest_dir, m)
+
+    monkeypatch.setattr(manifest, "_commit_manifest", crash_on_fourth)
     with pytest.raises(RuntimeError, match="injected failure"):
-        run_with_manifest(spark, src, out_dir, n_buckets=8, fail_after=3)
-    assert len(committed_buckets(os.path.join(out_dir, "_manifests"))) == 3
+        run_with_manifest(spark, src, out_dir, n_buckets=8)
+    monkeypatch.undo()
+    done = committed_buckets(os.path.join(out_dir, "_manifests"))
+    assert len(done) == 3
+    written = {int(d.split("=")[1]) for d in os.listdir(out_dir)
+               if d.startswith("bucket=")}
+    assert written - set(done), "no bucket was written but left uncommitted"
 
     res = run_with_manifest(spark, src, out_dir, n_buckets=8)
     assert sorted(res["skipped"]) == sorted(
@@ -432,9 +452,10 @@ def test_reassembly_mega_conversation_two_stage(spark):
 def test_json_sink_roundtrip(spark, layouts):
     import json
 
-    from pdf_parser_spark.operators.jsonsink import conversation_json, with_layout_json
+    from pdf_parser_spark.operators.jsonsink import conversation_json, layout_json_col
 
-    per_turn = with_layout_json(layouts).select(
+    with_json = layouts.withColumn("layout_json", layout_json_col())
+    per_turn = with_json.select(
         "conv_id", "turn_idx", "page_number", "layout_json").limit(50).collect()
     for r in per_turn:
         obj = json.loads(r.layout_json)
@@ -446,7 +467,7 @@ def test_json_sink_roundtrip(spark, layouts):
     # error rows serialize column_separator_position as JSON null (the
     # reference's json.dumps of None), never the string "NaN"
     err = (
-        with_layout_json(layouts)
+        with_json
         .filter(F.map_contains_key("metadata", "error"))
         .select("layout_json").limit(10).collect())
     assert err, "fixture has no error rows"
@@ -941,11 +962,11 @@ def test_cms_sketch_properties(spark):
 def test_read_jsonl_corrupt_record_lineage(spark, tmp_path):
     """JSONL ingest D1 semantics: clean lines parse, malformed JSON and
     type-mismatched lines become ok=false rows carrying the raw line,
-    nothing is dropped, no task fails; a Spark-written export reads
+    nothing is dropped, no task fails; a Spark-written JSON export reads
     back clean AND cross-reads byte-identically in DuckDB."""
     import duckdb
 
-    from pdf_parser_spark.io import read_jsonl, write_jsonl
+    from pdf_parser_spark.io import read_jsonl
 
     src = tmp_path / "in.jsonl"
     src.write_text(
@@ -965,7 +986,7 @@ def test_read_jsonl_corrupt_record_lineage(spark, tmp_path):
 
     out = tmp_path / "out"
     clean = got.filter("ok").select("doc_id", "text")
-    write_jsonl(clean, str(out))
+    clean.write.mode("overwrite").json(str(out))
     back = read_jsonl(spark, str(out), "doc_id long, text string")
     assert back.filter("NOT ok").count() == 0
     assert sorted((r.doc_id, r.text) for r in back.collect()) \
@@ -977,11 +998,12 @@ def test_read_jsonl_corrupt_record_lineage(spark, tmp_path):
 
 
 def test_zorder_layout_prunes_both_dimensions(spark, tmp_path):
-    """Z-order layout evidence: with parquet footer min/max stats, a
+    """Z-order key evidence: with parquet footer min/max stats, a
     single-column-sorted layout prunes files only on its own column
-    (every file spans the FULL range of the other), while the z-order
-    layout bounds every file's rectangle so predicates on EITHER
-    column skip most files. Data itself is unchanged."""
+    (every file spans the FULL range of the other), while a layout
+    range-partitioned and sorted on `zvalue` bounds every file's
+    rectangle so predicates on EITHER column skip most files. Data
+    itself is unchanged."""
     import glob
 
     import pyarrow.parquet as pq
@@ -998,7 +1020,9 @@ def test_zorder_layout_prunes_both_dimensions(spark, tmp_path):
     (ev.repartitionByRange(16, "zx").sortWithinPartitions("zx")
      .write.mode("overwrite").parquet(by_user))
     by_z = str(tmp_path / "by_z")
-    LY.write_zorder(ev, by_z, "zx", "zy", bits=8, n_files=16)
+    (ev.select("*", LY.zvalue("zx", "zy", bits=8).alias("_z"))
+     .repartitionByRange(16, "_z").sortWithinPartitions("_z").drop("_z")
+     .write.mode("overwrite").parquet(by_z))
 
     def overlap_frac(root, col, lo, hi):
         files = sorted(glob.glob(root + "/part-*.parquet"))
@@ -1040,51 +1064,6 @@ def test_zorder_layout_prunes_both_dimensions(spark, tmp_path):
         "FROM '/root/testdata/sf0.01/events.parquet') ORDER BY event_id"
     ).fetchall()
     assert spark_z == [(int(a), int(b)) for a, b in duck_z]
-
-
-def test_compact_dataset_small_files(spark, tmp_path):
-    """Compaction: 64 tiny files rewrite to the measured target count,
-    rows and values unchanged; with sort_cols the sorted layout (and
-    its min/max pruning) survives; the temp-swap protocol leaves no
-    debris."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from pdf_parser_spark.io import compact_dataset
-
-    path = str(tmp_path / "tiny")
-    ev = spark.read.parquet("/root/testdata/sf0.01/events.parquet") \
-        .select("event_id", "user_id")
-    ev.repartition(64).write.mode("overwrite").parquet(path)
-    assert len(glob.glob(path + "/part-*.parquet")) == 64
-    total = sum(r.event_id for r in ev.collect())
-
-    rep = compact_dataset(spark, path, target_mb=128,
-                          sort_cols=("user_id",))
-    files = glob.glob(path + "/part-*.parquet")
-    assert rep["files_before"] == 64
-    assert rep["files_after"] == len(files) < 8
-    assert rep["rows"] == 10000
-    back = spark.read.parquet(path)
-    assert back.count() == 10000
-    assert back.agg(F.sum("event_id")).first()[0] == total
-    assert not glob.glob(str(tmp_path) + "/tiny._compact_tmp*")
-    # sorted layout survives: each file's user_id range is a narrow band
-    spans = []
-    for f in files:
-        pf = pq.ParquetFile(f)
-        i = pf.schema_arrow.get_field_index("user_id")
-        md = pf.metadata
-        mn = min(md.row_group(g).column(i).statistics.min
-                 for g in range(md.num_row_groups))
-        mx = max(md.row_group(g).column(i).statistics.max
-                 for g in range(md.num_row_groups))
-        spans.append((mn, mx))
-    spans.sort()
-    if len(spans) > 1:  # ranges must not all cover the full domain
-        assert all(a_mx <= b_mn for (_, a_mx), (b_mn, _)
-                   in zip(spans, spans[1:]))
 
 
 def test_curation_job_cli_jsonl_input(spark, tmp_path):

@@ -60,20 +60,6 @@ def test_mega_doc_spans_many_sequences(spark):
     assert starts[1][0] == starts[0][1]
 
 
-def test_packing_stats_rollup(spark):
-    rows = [(i, " ".join("w" for _ in range(10))) for i in range(50)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    stats = {r.bucket: r for r in P.packing_stats(
-        df, budget=25, n_buckets=4).collect()}
-    brute = _brute(rows, 25, 4)
-    for b, r in stats.items():
-        docs = [v for v in brute.values() if v[0] == b]
-        assert r.n_docs == len(docs)
-        assert r.n_tokens == sum(v[1] for v in docs)
-        assert r.n_full_seqs == sum(v[1] for v in docs) // 25
-        assert r.n_straddlers == sum(1 for v in docs if v[4] > 1)
-
-
 def test_pack_sequences_id_col_threading(spark):
     """pack_sequences keyed by a non-default id column produces the same
     layout as renaming that column to doc_id (bucketing hashes the same

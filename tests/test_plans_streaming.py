@@ -1,12 +1,11 @@
-"""Tests for page selection (P7), snapshot normalization, extractor
-comparison (D4/D6), and the streaming pipeline."""
+"""Tests for page selection (P7), extractor comparison (D4/D6), the
+table IO seam, and the streaming operators."""
 
 import pytest
 
 from pyspark.sql import functions as F
 
 from pdf_parser_spark.operators.compare import compare_extractors, get_variant
-from pdf_parser_spark.plans.normalize import normalize_layouts
 from pdf_parser_spark.plans.pages import PageRange, parse_pages_argument, select_turns
 
 
@@ -236,73 +235,7 @@ def test_iceberg_read_contract(spark):
     assert calls == [("parquet", "/tmp/somewhere")]
 
 
-def test_validate_extractor_protocol():
-    """D5: a conforming module passes; malformed extractors are rejected
-    with the reference's arity-style errors."""
-    from pdf_parser_spark.operators import extract as extract_mod
-    from pdf_parser_spark.operators.compare import validate_extractor
-
-    assert validate_extractor(extract_mod) == []
-
-    class Missing:
-        pass
-
-    errs = validate_extractor(Missing)
-    assert any("missing required callable" in e for e in errs)
-
-    class BadArity:
-        @staticmethod
-        def extract_batch(a, b, c):  # three REQUIRED args: not protocol
-            return None
-
-        extract_layouts = "not callable"
-
-    errs = validate_extractor(BadArity)
-    assert any("extract_batch" in e and "positional" in e for e in errs)
-    assert any("not callable" in e for e in errs)
-
-
-# ---- normalization -------------------------------------------------------
-
-def test_normalize_layouts(spark):
-    rows = [
-        ("c", 0, " a \n  b  ", 612.3456, None, {"z": "1", "a": "2"}),
-        ("c", 1, "", 0.0, 306.12345, {"k": "v"}),
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "conv_id string, turn_idx int, left_column string, page_width double, "
-        "column_separator_position double, metadata map<string,string>")
-    out = {r.turn_idx: r for r in normalize_layouts(df).collect()}
-    assert out[0].left_column == "a\nb"
-    assert out[0].page_width == 612.35
-    assert out[0].column_separator_position is None
-    assert list(out[0].metadata.keys()) == ["a", "z"]
-    assert out[1].left_column == ""
-    assert out[1].page_width == 0.0
-    assert out[1].column_separator_position == 306.12
-
-
 # ---- streaming -----------------------------------------------------------
-
-def test_stream_extract_and_resume(spark, transcripts_sf0001, tmp_path):
-    from pdf_parser_spark.streaming.pipeline import stream_extract_layouts
-
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    q = stream_extract_layouts(spark, transcripts_sf0001, out_dir, ckpt)
-    q.awaitTermination(300)
-    n_src = spark.read.parquet(transcripts_sf0001).count()
-    got = spark.read.parquet(out_dir)
-    assert got.count() == n_src
-    # re-trigger on the same checkpoint: nothing new -> no duplicates
-    q2 = stream_extract_layouts(spark, transcripts_sf0001, out_dir, ckpt)
-    q2.awaitTermination(300)
-    assert spark.read.parquet(out_dir).count() == n_src
-    dups = (spark.read.parquet(out_dir).groupBy("conv_id", "turn_idx")
-            .count().filter(F.col("count") > 1).count())
-    assert dups == 0
-
 
 def test_stream_dedup_turns(spark, transcripts_sf0001):
     """Streaming exact dedup keeps one turn per canonical fingerprint
@@ -324,30 +257,6 @@ def test_stream_dedup_turns(spark, transcripts_sf0001):
         .distinct().count())
     # all fixture rows share one load window, so horizon eviction cannot
     # reduce below the batch-distinct count
-    assert got == want
-
-
-def test_windowed_turn_counts_matches_batch(spark, transcripts_sf0001, tmp_path):
-    from pdf_parser_spark.streaming.pipeline import (
-        read_transcript_stream,
-        windowed_turn_counts,
-    )
-
-    stream = read_transcript_stream(spark, transcripts_sf0001)
-    agg = windowed_turn_counts(stream)
-    q = (agg.writeStream.format("memory").queryName("wtc")
-         .outputMode("complete").trigger(availableNow=True).start())
-    q.awaitTermination(300)
-    got = {(r.window_start, r.tool): r.n_turns
-           for r in spark.sql("select * from wtc").collect()}
-    batch = spark.read.parquet(transcripts_sf0001)
-    want = {
-        (r.ws, r.tool): r.n
-        for r in batch.groupBy(
-            F.window("ts", "1 hour").alias("w"), "tool")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("w.start").alias("ws"), "tool", "n").collect()
-    }
     assert got == want
 
 
@@ -533,37 +442,3 @@ def test_stream_merge_tombstone_out_of_order(spark, tmp_path):
 
     vdirs = sorted(n for n in os.listdir(state) if n.startswith("v"))
     assert vdirs == ["v2", "v3"], vdirs
-
-
-def test_stream_sketch_matches_batch(spark, transcripts_sf0001, tmp_path):
-    """The streamed CMS over multiple micro-batches equals the batch
-    sketch bit-for-bit (cell-wise integer merge is associative), state
-    stays bounded at depth*width rows, and a re-trigger on the same
-    checkpoint adds nothing (exactly-once)."""
-    from pdf_parser_spark.plans.sketch import cms_sketch
-    from pdf_parser_spark.streaming.pipeline import (
-        read_transcript_stream,
-        sketch_snapshot,
-        stream_sketch_counts,
-    )
-
-    state = str(tmp_path / "state")
-    ckpt = str(tmp_path / "ckpt")
-
-    def run():
-        q = stream_sketch_counts(
-            read_transcript_stream(spark, transcripts_sf0001,
-                                   max_files_per_trigger=2),
-            state, ckpt, "conv_id", depth=3, width=64)
-        q.awaitTermination(300)
-
-    run()
-    got = sorted(map(tuple, sketch_snapshot(spark, state).collect()))
-    want = sorted(map(tuple, cms_sketch(
-        spark.read.parquet(transcripts_sf0001), "conv_id",
-        depth=3, width=64).collect()))
-    assert got == want and len(got) <= 3 * 64
-
-    run()  # nothing new on the same checkpoint -> state unchanged
-    assert sorted(map(tuple,
-                      sketch_snapshot(spark, state).collect())) == want

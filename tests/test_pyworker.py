@@ -2,8 +2,9 @@
 
 pyspark's worker calls ``importlib.invalidate_caches()`` at the start of
 every task, and each cached ``zipimporter`` then re-reads its archive
-directory. `python_task` trims those importers at task entry, so a reused
-worker has none to re-read at the next task. These tests pin the
+directory. `python_task` trims those importers at task entry and again
+when a generator it returns is exhausted, so a reused worker has none to
+re-read at the next task. These tests pin the
 mechanism on a local zip (no Spark), show it running inside a Spark
 worker, and guard that every Python entry point in the package is
 wrapped."""
@@ -140,6 +141,49 @@ def test_trim_runs_in_the_worker(spark):
         # the worker's pyspark comes from a zip, so the import above built
         # zip importers again: the 0 at entry is the trim's doing
         assert all(r.after_import >= 1 for r in rows)
+
+
+def test_next_task_finds_no_zip_importer(spark):
+    """A wrapped task that builds zip importers while it runs, as the
+    first task on a fresh worker does while it reads its first batch,
+    leaves none behind: the unwrapped task that runs next on the same
+    worker finds no zip importer at entry."""
+    def builds_importers(batches):
+        import importlib.util
+        import os
+        import sys
+        import zipimport
+
+        for _ in batches:
+            pass
+        # a miss searches every sys.path entry and caches a finder for
+        # each: a zip importer for every archive on the worker's path
+        importlib.util.find_spec("pyworker_probe_absent")
+        yield pd.DataFrame({"pid": [os.getpid()], "zip_importers": [sum(
+            isinstance(f, zipimport.zipimporter)
+            for f in sys.path_importer_cache.values())]})
+
+    def reports(batches):
+        import os
+        import sys
+        import zipimport
+
+        at_entry = sum(isinstance(f, zipimport.zipimporter)
+                       for f in sys.path_importer_cache.values())
+        for _ in batches:
+            pass
+        yield pd.DataFrame({"pid": [os.getpid()], "zip_importers": [at_entry]})
+
+    one, schema = spark.range(4).coalesce(1), "pid long, zip_importers long"
+    first = one.mapInPandas(python_task(builds_importers), schema).collect()[0]
+    assert first.zip_importers >= 1
+    # idle workers are taken in turn, so run until that worker comes back
+    for _ in range(64):
+        nxt = one.mapInPandas(reports, schema).collect()[0]
+        if nxt.pid == first.pid:
+            break
+    assert nxt.pid == first.pid
+    assert nxt.zip_importers == 0
 
 
 def test_plan_names_survive_the_wrapper(spark):

@@ -43,20 +43,21 @@ def test_pii_scrub_email_shields_domain_from_ip_pass(spark):
 
 
 def test_deterministic_sample_matches_hash_rule(spark):
+    """With no strata, `stratified_sample` is a uniform hash sample."""
     rows = [(i, f"t{i}") for i in range(500)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     frac = 0.3
+
+    def sample(d, **kw):
+        return sorted(r.doc_id for r in SC.stratified_sample(
+            d, {}, default_fraction=frac, **kw).collect())
+
     exp = sorted(i for i, _ in rows if _key(i) < int(frac * 2 ** 32))
-    got = sorted(r.doc_id for r in
-                 SC.deterministic_sample(df, frac).collect())
-    assert got == exp
+    assert sample(df) == exp
     # stable under repartitioning (the df.sample() failure mode)
-    got2 = sorted(r.doc_id for r in
-                  SC.deterministic_sample(df.repartition(13), frac).collect())
-    assert got2 == exp
+    assert sample(df.repartition(13)) == exp
     # a different salt draws an independent sample
-    got3 = sorted(r.doc_id for r in
-                  SC.deterministic_sample(df, frac, salt="x").collect())
+    got3 = sample(df, salt="x")
     assert got3 != exp
     assert abs(len(got3) - 150) < 60
 

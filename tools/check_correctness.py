@@ -4,6 +4,8 @@ Runs every __spark_entry__.queries() entry on Spark and its
 oracle_sql() twin on DuckDB (views pre-registered for the sf tables),
 then compares row count, column names, and an order-insensitive value
 hash (columns sorted by name, rows sorted, values canonicalized).
+``check_gate`` is that comparison for one gate; tools/driver_sim.py and
+the hostile-table test suites call it too.
 
 Usage: python tools/check_correctness.py [sf_dir] [only_query ...]
        JSON_OUT=path python tools/check_correctness.py [sf_dir]
@@ -14,6 +16,7 @@ Usage: python tools/check_correctness.py [sf_dir] [only_query ...]
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import json
 import os
@@ -57,11 +60,76 @@ def value_hash(df: pd.DataFrame) -> str:
     return hashlib.md5(payload).hexdigest()
 
 
+@functools.cache
+def _registry() -> tuple[dict, dict]:
+    import __spark_entry__ as E
+
+    return E.queries(), E.oracle_sql()
+
+
+def check_gate(spark, con, sf_dir: str, name: str,
+               verdict: dict | None = None) -> list[str]:
+    """Run gate ``name`` on Spark at ``sf_dir`` and its oracle on the
+    DuckDB connection ``con``; return the problems found (empty: pass).
+
+    The checks, in order: both engines run, row counts agree, column
+    names agree, and the value hashes agree; on a hash mismatch the
+    first differing cell is named. ``verdict``, if given, is filled with
+    the per-gate JSON_OUT record (rows/schema/hash flags, row counts, err).
+    """
+    rec = verdict if verdict is not None else {}
+    rec.update(rows_match=False, schema_match=False, hash_match=False,
+               spark_rows=None, oracle_rows=None, err=None)
+    queries, oracles = _registry()
+    try:
+        got = queries[name](spark, sf_dir).toPandas()
+        rec["spark_rows"] = len(got)
+    except Exception as exc:  # noqa: BLE001
+        rec["err"] = f"spark error: {exc}"
+        return [rec["err"]]
+    if name not in oracles:
+        rec["err"] = "no oracle"
+        return [rec["err"]]
+    try:
+        want = con.sql(oracles[name]).df()
+        rec["oracle_rows"] = len(want)
+    except Exception as exc:  # noqa: BLE001
+        rec["err"] = f"duckdb error: {str(exc)[:200]}"
+        return [rec["err"]]
+    problems = []
+    rec["rows_match"] = len(got) == len(want)
+    if not rec["rows_match"]:
+        problems.append(f"rows {len(got)} != {len(want)}")
+    rec["schema_match"] = sorted(got.columns) == sorted(want.columns)
+    if not rec["schema_match"]:
+        problems.append(f"cols {sorted(got.columns)} != {sorted(want.columns)}")
+        return problems
+    try:
+        rec["hash_match"] = value_hash(got) == value_hash(want)
+    except TypeError as exc:
+        # the canonicalizer this replicates dies the same way on
+        # unhashable (array) columns — record it as the error
+        rec["err"] = f"canonicalizer error: {exc}"
+        return problems + [rec["err"]]
+    if not rec["hash_match"]:
+        problems.append("value-hash mismatch")
+        a, b = canon_frame(got), canon_frame(want)
+        if len(a) == len(b):
+            for c in a.columns:
+                bad = a[c] != b[c]
+                if bad.any():
+                    i = int(np.argmax(bad.to_numpy()))
+                    problems.append(
+                        f"first diff col={c} row={i}: "
+                        f"spark={a[c].iloc[i]!r} duck={b[c].iloc[i]!r}")
+                    break
+    return problems
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    import __spark_entry__ as E
     from pdf_parser_spark.generator import table_path
     from pdf_parser_spark.session import get_spark
 
@@ -72,73 +140,20 @@ def main() -> int:
         if os.path.exists(path):
             con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
 
-    qs = E.queries()
-    oracles = E.oracle_sql()
     n_pass = n_fail = 0
     verdicts: dict[str, dict] = {}
-    for name, fn in qs.items():
+    for name in _registry()[0]:
         if only and name not in only:
             continue
         t0 = time.monotonic()
-        rec = {"rows_match": False, "schema_match": False,
-               "hash_match": False, "spark_rows": None,
-               "oracle_rows": None, "err": None}
-        verdicts[name] = rec
-        try:
-            got = fn(spark, sf_dir).toPandas()
-            rec["spark_rows"] = len(got)
-        except Exception as exc:  # noqa: BLE001
-            rec["err"] = f"spark error: {exc}"
-            print(f"FAIL  {name}: spark error: {exc}")
-            n_fail += 1
-            continue
-        sql = oracles.get(name)
-        if sql is None:
-            rec["err"] = "no oracle (rows-only gate)"
-            print(f"weak  {name}: rows={len(got)} ({time.monotonic()-t0:.1f}s, no oracle)")
-            continue
-        try:
-            want = con.sql(sql).df()
-            rec["oracle_rows"] = len(want)
-        except Exception as exc:  # noqa: BLE001
-            rec["err"] = f"duckdb error: {str(exc)[:200]}"
-            print(f"FAIL  {name}: duckdb error: {str(exc)[:200]}")
-            n_fail += 1
-            continue
-        problems = []
-        rec["rows_match"] = len(got) == len(want)
-        if not rec["rows_match"]:
-            problems.append(f"rows {len(got)} != {len(want)}")
-        rec["schema_match"] = sorted(got.columns) == sorted(want.columns)
-        if not rec["schema_match"]:
-            problems.append(f"cols {sorted(got.columns)} != {sorted(want.columns)}")
-        else:
-            try:
-                rec["hash_match"] = value_hash(got) == value_hash(want)
-            except TypeError as exc:
-                # the driver's canonicalizer dies the same way on
-                # unhashable (array) columns — record it as the error
-                rec["err"] = f"canonicalizer error: {exc}"
-                rec["hash_match"] = False
-            if not rec["hash_match"]:
-                problems.append(rec["err"] or "value-hash mismatch")
-                if rec["err"] is None:
-                    a, b = canon_frame(got), canon_frame(want)
-                    if len(a) == len(b):
-                        for c in a.columns:
-                            bad = (a[c] != b[c])
-                            if bad.any():
-                                i = int(np.argmax(bad.to_numpy()))
-                                problems.append(
-                                    f"first diff col={c} row={i}: "
-                                    f"spark={a[c].iloc[i]!r} duck={b[c].iloc[i]!r}")
-                                break
+        verdicts[name] = {}
+        problems = check_gate(spark, con, sf_dir, name, verdicts[name])
         dt = time.monotonic() - t0
         if problems:
             print(f"FAIL  {name}: {'; '.join(problems)} ({dt:.1f}s)")
             n_fail += 1
         else:
-            print(f"pass  {name}: rows={len(got)} ({dt:.1f}s)")
+            print(f"pass  {name}: rows={verdicts[name]['spark_rows']} ({dt:.1f}s)")
             n_pass += 1
     print(f"\n{n_pass} pass, {n_fail} fail")
     out_path = os.environ.get("JSON_OUT")

@@ -27,7 +27,7 @@ def main() -> int:
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as E
-    from check_correctness import TABLES, value_hash
+    from check_correctness import TABLES, check_gate
     from pdf_parser_spark.generator import table_path
 
     spark = (
@@ -45,26 +45,15 @@ def main() -> int:
             con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
 
     qs = E.queries()
-    oracles = E.oracle_sql()
     n_fail = 0
-    for name, fn in qs.items():
-        try:
-            got = fn(spark, sf_dir).toPandas()
-            if name not in oracles:
-                # oracle-less query (iterative algorithm): the driver
-                # records the weaker rows-only check — mirror that here
-                print(f"weak   {name}: rows={len(got)} (no oracle)")
-                continue
-            want = con.sql(oracles[name]).df()
-            ok = (len(got) == len(want)
-                  and sorted(got.columns) == sorted(want.columns)
-                  and value_hash(got) == value_hash(want))
-        except Exception as exc:  # noqa: BLE001
-            print(f"FAIL  {name}: {str(exc)[:150]}")
+    for name in qs:
+        verdict: dict = {}
+        problems = check_gate(spark, con, sf_dir, name, verdict)
+        if problems:
+            print(f"FAIL  {name}: {'; '.join(problems)[:300]}")
             n_fail += 1
-            continue
-        print(("pass " if ok else "FAIL ") + f" {name}: rows={len(got)}")
-        n_fail += (not ok)
+        else:
+            print(f"pass  {name}: rows={verdict['spark_rows']}")
     n_entry = E.entry(spark).count()
     print(f"entry rows: {n_entry}")
     print(f"{len(qs) - n_fail} pass, {n_fail} fail (tz={tz})")
