@@ -26,11 +26,13 @@ from pyspark.sql import functions as F
 
 
 def build_parser() -> argparse.ArgumentParser:
+    from pdf_parser_spark.oracle.extractor import VARIANTS
+
     p = argparse.ArgumentParser(description="transcript layout extraction job")
     p.add_argument("--input", required=True, help="transcripts table/path")
     p.add_argument("--output", required=True, help="output directory")
     p.add_argument("--variant", default="a003",
-                   help="extractor variant (a002|a003|a004)")
+                   help=f"extractor variant ({'|'.join(sorted(VARIANTS))})")
     p.add_argument("--pages", default=None,
                    help="page selection: N, N-M (1-indexed)")
     p.add_argument("--n-buckets", type=int, default=64)

@@ -3,8 +3,9 @@ Arrow-batched pandas core + a Spark ``mapInPandas`` operator.
 
 The per-turn algorithm (tokenize -> separator -> classify -> reassemble ->
 metadata; /root/reference/A003_colored_footer.py:282-326) is re-expressed
-over *all turns of an Arrow batch at once* with pandas/NumPy column
-operations — no per-row Python in the hot path (BASELINE.json:input_hint).
+over *all turns of an Arrow batch at once*: Arrow compute kernels parse the
+page records, pandas/NumPy column operations do the rest — no per-row
+Python in the hot path (BASELINE.json:input_hint).
 Semantics are defined by the single-process oracle
 (pdf_parser_spark/oracle/extractor.py); ``tests/test_extract_golden.py``
 asserts vectorized == oracle on every fixture archetype.
@@ -14,6 +15,17 @@ Scale design:
 * extraction is turn-local -> embarrassingly parallel; no shuffle is needed
   for the map phase, so mega-conversation skew cannot serialize it
 * the only Python<->JVM boundary is Arrow batch transport (mapInPandas)
+* page tokenize parses on Arrow arrays: ``split_pattern`` cuts the batch's
+  payloads into one flat record array in payload order (list parent
+  indices give each record its turn), ``starts_with`` picks each record
+  kind, one RE2 ``extract_regex`` per kind reads the fields of the shared
+  grammar and ``cast`` makes them float64. G1 (span merge), the separator
+  search and the colored-region counts are NumPy segment reductions over
+  those flat arrays, whose records of one turn are consecutive
+* RE2's ``\\d`` is ASCII-only and Python's is not, so a record RE2
+  rejects that holds a non-ASCII character is re-read with the compiled
+  Python pattern and ``float()``, as the oracle reads it; RE2 accepts a
+  subset of what Python accepts, with the same groups
 * each task pays a fixed Python worker cost before its first batch:
   pyspark re-validates the import caches, and every cached zip importer
   re-reads its archive (pyspark.zip, the Spark core jar), about 0.2 s of
@@ -36,6 +48,8 @@ import re
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pdf_parser_spark.operators.html import strip_html
 from pdf_parser_spark.oracle.extractor import (
@@ -44,7 +58,16 @@ from pdf_parser_spark.oracle.extractor import (
     VARIANTS,
     extract_turn,
 )
-from pdf_parser_spark.payload import A000_KEEP_TYPES, stub_block_type, unescape_text
+from pdf_parser_spark.payload import (
+    A000_KEEP_TYPES,
+    LINE_PATTERN,
+    PAGE_PATTERN,
+    RECT_PATTERN,
+    SPAN_PATTERN,
+    salvage_text,
+    stub_block_type,
+    unescape_text,
+)
 from pdf_parser_spark.pyworker import python_task
 
 PASSTHROUGH = ["conv_id", "turn_idx", "role", "tool", "ts"]
@@ -64,20 +87,10 @@ LAYOUT_SCHEMA_DDL = (
 # Record grammar shared with the oracle parser (payload.py) — both sides
 # accept exactly the same strict language, so tokenize-failure semantics
 # match by construction (fuzz-tested in tests/test_fuzz.py).
-from pdf_parser_spark.payload import (  # noqa: E402
-    LINE_PATTERN as _LINE_RE,
-    PAGE_PATTERN as _PAGE_RE,
-    RECT_PATTERN as _RECT_RE,
-    SPAN_PATTERN as _SPAN_RE,
-)
-
-
-def _unescape_series(s: pd.Series) -> pd.Series:
-    mask = s.str.contains("\\", regex=False)
-    if mask.any():
-        s = s.copy()
-        s[mask] = s[mask].map(unescape_text)
-    return s
+_PAGE_RE = re.compile(PAGE_PATTERN)
+_LINE_RE = re.compile(LINE_PATTERN)
+_RECT_RE = re.compile(RECT_PATTERN)
+_SPAN_RE = re.compile(SPAN_PATTERN)
 
 
 def _error_frame(rids: np.ndarray, turn_idx: pd.Series, messages) -> pd.DataFrame:
@@ -115,12 +128,18 @@ def _segmented_join(texts: np.ndarray, seps: np.ndarray) -> list:
     (PyObject allocator churn saturates memory bandwidth when 32 workers
     run it concurrently). Cost here is O(total chars), allocation-light.
     The caller guarantees seps[0] == "" and marks group starts with
-    ``_GROUP_SENTINEL``.
+    ``_GROUP_SENTINEL``. A text that holds the sentinel itself splits into
+    extra pieces; then the groups are joined one by one instead.
     """
     out = [None] * (2 * len(texts))
     out[0::2] = seps.tolist()
     out[1::2] = texts.tolist()
-    return "".join(out).split(_GROUP_SENTINEL)
+    joined = "".join(out).split(_GROUP_SENTINEL)
+    starts = np.flatnonzero(seps == _GROUP_SENTINEL)
+    if len(joined) == len(starts) + 1:
+        return joined
+    bounds = [0, *starts.tolist(), len(texts)]
+    return ["".join(out[2 * a + 1:2 * b]) for a, b in zip(bounds[:-1], bounds[1:])]
 
 
 def _reassemble_regions(blocks: pd.DataFrame) -> pd.DataFrame:
@@ -162,15 +181,6 @@ def _join_line_groups(b: pd.DataFrame) -> pd.DataFrame:
     if n > 1:
         new_region[1:] = (rid2[1:] != rid2[:-1]) | (reg2[1:] != reg2[:-1])
         new_line[1:] = line2[1:] != line2[:-1]
-    if b["text"].str.contains(_GROUP_SENTINEL, regex=False).any():
-        # Sentinel collision (payload text containing \\x01): take the slow
-        # exact path rather than corrupt output.
-        lines = (
-            b.groupby(["rid", "region", "line_id"], sort=False)["text"]
-            .agg(" ".join).reset_index())
-        return (
-            lines.groupby(["rid", "region"], sort=False)["text"]
-            .agg("\n".join).reset_index())
     seps = np.where(new_region, _GROUP_SENTINEL, np.where(new_line, "\n", " "))
     seps[0] = ""
     region_texts = _segmented_join(texts, seps)
@@ -220,211 +230,271 @@ def _grid_separator_closed_form(min_x1, max_x0, width):
     return np.where(ok, c.astype(float), width / 2.0)
 
 
+def _named_pattern(pattern: str, names) -> str:
+    """``pattern`` with its capturing groups named in order, as Arrow's
+    ``extract_regex`` needs; ``(?:`` groups stay unnamed."""
+    it = iter(names)
+    return re.sub(r"\((?!\?)", lambda _m: f"(?P<{next(it)}>", pattern)
+
+
+_REGEX_FIELDS = {
+    _PAGE_RE: ("w", "h"),
+    _LINE_RE: ("x1", "y1", "x2", "y2"),
+    _RECT_RE: ("x0", "y0", "x1", "y1", "r", "g", "b"),
+    _SPAN_RE: ("x0", "y0", "x1", "y1", "size", "font", "text"),
+}
+_STRING_FIELDS = frozenset(("font", "text"))  # every other field is a float
+_ARROW_PATTERNS = {
+    regex: _named_pattern(regex.pattern, fields)
+    for regex, fields in _REGEX_FIELDS.items()
+}
+# The SPAN text group ``(.*)`` already runs to the end of a record (records
+# hold no "\n"), so the closing ``$`` changes nothing but costs RE2 a quarter
+# of its SPAN time
+_ARROW_PATTERNS[_SPAN_RE] = _ARROW_PATTERNS[_SPAN_RE].removesuffix("$")
+
+
+def _parse_records(recs: pa.Array, regex: re.Pattern):
+    """Parse records of one kind against the shared grammar ``regex``.
+    Returns ``(ok, columns)``: ``ok`` marks the records that match;
+    ``columns`` maps each field of ``_REGEX_FIELDS[regex]`` to a numpy
+    array, float64 (NaN where a record does not match) or object for the
+    ``_STRING_FIELDS``.
+
+    RE2 (``extract_regex``) parses every record. Its ``\\d`` is ASCII-only,
+    while Python's also reads other Unicode decimal digits, and ``float()``
+    converts them. On a record without "\\n", RE2 accepts a subset of what
+    ``re`` accepts, with the same groups. So only a record that RE2
+    rejects and that is not ASCII goes through the compiled Python pattern
+    and ``float()``, the oracle's own reading."""
+    fields = _REGEX_FIELDS[regex]
+    m = pc.extract_regex(recs, _ARROW_PATTERNS[regex])
+    ok = m.is_valid().to_numpy(zero_copy_only=False)
+    cols = {}
+    for i, name in enumerate(fields):
+        field = pc.struct_field(m, [i])  # null where the record did not match
+        if name not in _STRING_FIELDS:
+            field = pc.cast(field, pa.float64())
+        cols[name] = field.to_numpy(zero_copy_only=False)
+    miss = np.flatnonzero(~ok)
+    if miss.size:
+        cols = {k: c if c.flags.writeable else c.copy() for k, c in cols.items()}
+        non_ascii = ~pc.string_is_ascii(recs.take(miss)).to_numpy(zero_copy_only=False)
+        for i in miss[non_ascii]:
+            hit = regex.match(recs[i].as_py())
+            if hit:
+                ok[i] = True
+                for name, g in zip(fields, hit.groups()):
+                    cols[name][i] = g if name in _STRING_FIELDS else float(g)
+    return ok, cols
+
+
+def _group_starts(keys: np.ndarray) -> np.ndarray:
+    """Start positions of the runs of equal consecutive ``keys``."""
+    new = np.ones(len(keys), dtype=bool)
+    new[1:] = keys[1:] != keys[:-1]
+    return np.flatnonzero(new)
+
+
+def _first_arg_extreme(values: np.ndarray, starts: np.ndarray, ufunc) -> np.ndarray:
+    """Per-group ``ufunc`` (``np.minimum`` or ``np.maximum``) over the
+    consecutive groups that begin at ``starts``, returning the position of
+    each group's first element equal to it, as Python's ``min``/``max``
+    and pandas' ``idxmax`` pick it. ``values`` hold no NaN: the grammar has
+    no nan literal."""
+    ext = ufunc.reduceat(values, starts)
+    sizes = np.diff(np.append(starts, len(values)))
+    pos = np.arange(len(values))
+    first = np.where(values == np.repeat(ext, sizes), pos, len(values))
+    return np.minimum.reduceat(first, starts)
+
+
+def _first_extreme(values: np.ndarray, starts: np.ndarray, ufunc) -> np.ndarray:
+    """The value at ``_first_arg_extreme``: a group of 0.0 then -0.0 gives
+    0.0 under ``np.minimum``, as Python's ``min`` does (numpy alone gives
+    -0.0)."""
+    return values[_first_arg_extreme(values, starts, ufunc)]
+
+
+def _merge_spans(rid, x0, y0, x1, y1, size, font, text) -> pd.DataFrame:
+    """G1: consecutive spans of one rid sharing (y0, y1) become one
+    line-block (text concatenated, union bbox, max size, first non-empty
+    font), in payload order; blocks whose stripped text is empty drop (P2).
+    The arrays are flat over the batch and already in payload order."""
+    n = len(rid)
+    new_grp = np.ones(n, dtype=bool)
+    new_grp[1:] = ~((rid[1:] == rid[:-1]) & (y0[1:] == y0[:-1]) & (y1[1:] == y1[:-1]))
+    starts = np.flatnonzero(new_grp)
+    seps = np.where(new_grp, _GROUP_SENTINEL, "")
+    seps[0] = ""
+    joined = _segmented_join(text, seps)
+    first_font = np.minimum.reduceat(
+        np.where(font.astype(bool), np.arange(n), n), starts)
+    cols = {
+        "rid": rid[starts],
+        "x0": _first_extreme(x0, starts, np.minimum),
+        "y0": y0[starts],
+        "x1": _first_extreme(x1, starts, np.maximum),
+        "y1": y1[starts],
+        "font_size": _first_extreme(size, starts, np.maximum),
+        "text": np.array([t.strip() for t in joined], dtype=object),
+        "font_name": np.where(first_font < n, font[np.minimum(first_font, n - 1)], ""),
+    }
+    nonempty = cols["text"] != ""
+    return pd.DataFrame({k: c[nonempty] for k, c in cols.items()})
+
+
 def _tokenize_stage(rows: pd.DataFrame):
     """Variant-INdependent half of the page pipeline: payload tokenize,
     block building, drawing scan, separator search, colored regions
     (A003 stages 3a-3b; classification thresholds do not enter until
     ``_classify_stage``). Returns ``(state, error_frames)`` where state is
     None when no row survived tokenization. Splitting here lets
-    ``compare_extractors`` tokenize once and classify N times."""
+    ``compare_extractors`` tokenize once and classify N times.
+
+    Records are parsed on Arrow arrays: one split of the batch's payloads
+    into a flat record array in payload order, ``starts_with`` per record
+    kind and one ``extract_regex`` per kind (``_parse_records``). The
+    per-page steps after it reduce the flat arrays with NumPy; the state
+    they leave is pandas, as ``_classify_stage`` reads it."""
     out_parts = []
-    n = len(rows)
-    if n == 0:
+    if len(rows) == 0:
         return None, out_parts
 
-    payload = rows["text"]
-    is_str = payload.map(lambda v: isinstance(v, str))
-    no_page = ~(is_str & payload.where(is_str, "").str.startswith("PAGE "))
-    if no_page.any():
-        bad = rows[no_page]
+    payloads = pa.array(rows["text"].to_numpy(), type=pa.string(), from_pandas=True)
+    has_page = pc.fill_null(pc.starts_with(payloads, "PAGE "), False)
+    has_page = has_page.to_numpy(zero_copy_only=False)
+    if not has_page.all():
+        bad = rows[~has_page]
         out_parts.append(
             _error_frame(
                 bad["rid"].to_numpy(), bad["turn_idx"],
                 ["payload has no PAGE header"] * len(bad),
             )
         )
-        rows = rows[~no_page]
+        rows = rows[has_page]
+        payloads = payloads.filter(pa.array(has_page))
     if rows.empty:
         return None, out_parts
 
-    # --- explode payload records, keep payload order ------------------
-    recs = rows.set_index("rid")["text"].str.split("\n").explode()
-    recs_df = pd.DataFrame({"rid": recs.index.to_numpy(), "line": recs.to_numpy()})
-    recs_df["pos"] = np.arange(len(recs_df))
-
-    first = recs_df.groupby("rid", sort=False).first()
-    page_kv = first["line"].str.extract(_PAGE_RE)
-    # astype(float), not to_numeric: the regex already guarantees
-    # parseability, and to_numeric's int inference loses float identity
-    # ("612" -> 612.0 for page_rect stringification, "-0" -> -0.0)
-    widths = page_kv[0].astype(float)
-    heights = page_kv[1].astype(float)
+    lists = pc.split_pattern(payloads, "\n")
+    first = pc.list_element(lists, 0)
+    _ok, header = _parse_records(first, _PAGE_RE)
+    widths, heights = header["w"], header["h"]
     # non-finite / absurd dims ('1e999' overflows to inf) are malformed
     # headers on both sides — payload.py applies the identical bound
-    bad_header = ~(widths.abs() <= 1e12) | ~(heights.abs() <= 1e12)
+    bad_header = ~(np.abs(widths) <= 1e12) | ~(np.abs(heights) <= 1e12)
     if bad_header.any():
-        bad_rids = first.index[bad_header.to_numpy()]
-        bad_rows = rows[rows["rid"].isin(bad_rids)]
-        msgs = [
-            f"malformed PAGE header: {line!r}"
-            for line in first.loc[bad_rids, "line"]
-        ]
+        bad_rows = rows[bad_header]
+        msgs = [f"malformed PAGE header: {first[i].as_py()!r}"
+                for i in np.flatnonzero(bad_header)]
         out_parts.append(_error_frame(bad_rows["rid"].to_numpy(), bad_rows["turn_idx"], msgs))
-        rows = rows[~rows["rid"].isin(bad_rids)]
-        recs_df = recs_df[~recs_df["rid"].isin(bad_rids)]
-        widths = widths[~bad_header]
-        heights = heights[~bad_header]
+        good = ~bad_header
+        rows, lists = rows[good], lists.filter(pa.array(good))
+        widths, heights = widths[good], heights[good]
     if rows.empty:
         return None, out_parts
 
-    dims = pd.DataFrame({"rid": widths.index, "w": widths.to_numpy(), "h": heights.to_numpy()})
+    rids = rows["rid"].to_numpy()
+    n_pages = len(rids)
+    dims = pd.DataFrame({"rid": rids, "w": widths, "h": heights})
 
-    # --- parse record kinds (vectorized regex per kind) ----------------
-    line = recs_df["line"]
-    span_mask = line.str.startswith("SPAN ")
-    vline_mask = line.str.startswith("LINE ")
-    rect_mask = line.str.startswith("RECT ")
+    # --- the batch's records, flat and in payload order ---------------
+    # ``*_page`` arrays hold each record's row position in ``rows``; they
+    # never decrease, so each page's records are consecutive
+    recs = pc.list_flatten(lists)
+    rec_page = pc.list_parent_indices(lists).to_numpy()
 
-    # LINE records: malformed ones are skipped (degraded drawing scan)
-    vl = line[vline_mask].str.extract(_LINE_RE).astype(float)
-    vl.columns = ["x1", "y1", "x2", "y2"]
-    vl["rid"] = recs_df.loc[vline_mask, "rid"].to_numpy()
-    # row order (payload order) alone drives first-max tie-breaks; no
-    # position column is needed downstream
-    vl = vl.dropna(subset=["x1", "y1", "x2", "y2"])
+    def kind(prefix, regex):
+        mask = pc.starts_with(recs, prefix)
+        kind_recs = recs.filter(mask)
+        return (kind_recs, rec_page[mask.to_numpy(zero_copy_only=False)],
+                *_parse_records(kind_recs, regex))
 
-    # RECT records
-    rc = line[rect_mask].str.extract(_RECT_RE).astype(float)
-    rc.columns = ["x0", "y0", "x1", "y1", "r", "g", "b"]
-    rc["rid"] = recs_df.loc[rect_mask, "rid"].to_numpy()
-    rc = rc.dropna()
+    def drawings(prefix, regex):
+        # malformed LINE / RECT records are skipped (degraded drawing
+        # scan); payload order alone drives first-max tie-breaks
+        _recs, page, ok, cols = kind(prefix, regex)
+        return page[ok], {f: c[ok] for f, c in cols.items()}
 
-    # SPAN records: a malformed one fails the rid's tokenize (S3 fallback)
-    sp_raw = line[span_mask]
-    sp = sp_raw.str.extract(_SPAN_RE)
-    sp.columns = ["x0", "y0", "x1", "y1", "size", "font", "text"]
-    sp["rid"] = recs_df.loc[span_mask, "rid"].to_numpy()
-    sp["pos"] = recs_df.loc[span_mask, "pos"].to_numpy()
-    for c in ("x0", "y0", "x1", "y1", "size"):
-        sp[c] = sp[c].astype(float)
-    sp_bad = sp["text"].isna() | sp[["x0", "y0", "x1", "y1", "size"]].isna().any(axis=1)
-    tokfail_rids = set(sp.loc[sp_bad, "rid"].unique())
-    sp = sp[~sp["rid"].isin(tokfail_rids)]
-    sp["text"] = _unescape_series(sp["text"].astype(str))
+    vl_page, vl = drawings("LINE ", _LINE_RE)
+    rc_page, rc = drawings("RECT ", _RECT_RE)
 
-    # --- S3 fallback blocks for tokenize-failure rids -------------------
-    fallback_blocks = []
-    if tokfail_rids:
-        salv_src = recs_df[span_mask & recs_df["rid"].isin(tokfail_rids)].copy()
-        tails = _unescape_series(
-            salv_src["line"].str.partition(" text=")[2].astype(str)
-        )
-        has_tail = salv_src["line"].str.contains(" text=", regex=False)
-        salv_src["tail"] = tails
-        salv = (
-            salv_src[has_tail]
-            .groupby("rid", sort=False)["tail"]
-            .agg("\n".join)
-        )
-        dims_idx = dims.set_index("rid")
-        for rid in sorted(tokfail_rids):
-            text = salv.get(rid, "")
-            if isinstance(text, str) and text.strip():
-                w = float(dims_idx.loc[rid, "w"])
-                h = float(dims_idx.loc[rid, "h"])
-                fallback_blocks.append(
-                    {"rid": rid, "x0": 0.0, "y0": 0.0, "x1": w, "y1": h,
-                     "font_size": 12.0, "font_name": "Unknown", "text": text.strip()}
-                )
+    # SPAN records: a malformed one fails the page's tokenize (S3 fallback)
+    span_recs, span_page, ok, cols = kind("SPAN ", _SPAN_RE)
+    tokfail = np.zeros(n_pages, dtype=bool)
+    tokfail[span_page[~ok]] = True
+    keep = ~tokfail[span_page]
+    text = cols["text"]
+    # a record without a backslash has nothing to unescape in its text (the
+    # regex kernel finds a literal faster than ``match_substring`` does)
+    has_escape = pc.match_substring_regex(span_recs, r"\\").to_numpy(zero_copy_only=False)
+    for i in np.flatnonzero(has_escape & keep):
+        text[i] = unescape_text(text[i])
 
-    # --- G1: merge consecutive same-(y0,y1) spans into line-blocks ------
-    if len(sp):
-        sp = sp.sort_values("pos", kind="stable").reset_index(drop=True)
-        rid_a = sp["rid"].to_numpy()
-        y0_a = sp["y0"].to_numpy()
-        y1_a = sp["y1"].to_numpy()
-        new_grp = np.ones(len(sp), dtype=bool)
-        if len(sp) > 1:
-            new_grp[1:] = ~(
-                (rid_a[1:] == rid_a[:-1])
-                & (y0_a[1:] == y0_a[:-1])
-                & (y1_a[1:] == y1_a[:-1])
-            )
-        sp["grp"] = np.cumsum(new_grp)
-        font_nonempty = sp["font"].mask(sp["font"] == "")
-        blocks = sp.groupby("grp", sort=False).agg(
-            rid=("rid", "first"),
-            x0=("x0", "min"),
-            y0=("y0", "min"),
-            x1=("x1", "max"),
-            y1=("y1", "max"),
-            font_size=("size", "max"),
-        )
-        # G1 text concat via one C-level join+split (see _segmented_join);
-        # fall back to the per-group python join on sentinel collision.
-        texts_arr = sp["text"].to_numpy()
-        if sp["text"].str.contains(_GROUP_SENTINEL, regex=False).any():
-            blocks["text"] = sp.groupby("grp", sort=False)["text"].agg("".join)
-        else:
-            seps = np.where(new_grp, _GROUP_SENTINEL, "")
-            seps[0] = ""
-            blocks["text"] = _segmented_join(texts_arr, seps)
-        blocks["font_name"] = font_nonempty.groupby(sp["grp"]).first()
-        blocks["font_name"] = blocks["font_name"].fillna("")
-        blocks["text"] = blocks["text"].str.strip()
-        blocks = blocks[blocks["text"] != ""].reset_index(drop=True)
+    if keep.any():
+        blocks = _merge_spans(rids[span_page[keep]], **{f: c[keep] for f, c in cols.items()})
     else:
         blocks = pd.DataFrame(
             columns=["rid", "x0", "y0", "x1", "y1", "font_size", "text", "font_name"]
         )
+
+    # --- S3 fallback blocks for tokenize-failure pages ------------------
+    fallback_blocks = []
+    texts = rows["text"].to_numpy()
+    for i in np.flatnonzero(tokfail):
+        salvaged = salvage_text(texts[i]).strip()
+        if salvaged:
+            fallback_blocks.append(
+                {"rid": rids[i], "x0": 0.0, "y0": 0.0, "x1": widths[i], "y1": heights[i],
+                 "font_size": 12.0, "font_name": "Unknown", "text": salvaged}
+            )
     if fallback_blocks:
         fb = pd.DataFrame(fallback_blocks)
         blocks = fb if blocks.empty else pd.concat([blocks, fb], ignore_index=True)
 
-    # --- P1 vertical-line predicate + O5 best-line separator ------------
-    vlf = vl[(np.abs(vl["x2"] - vl["x1"]) < 5) & (np.abs(vl["y2"] - vl["y1"]) > 100)].copy()
-    n_vlines = vlf.groupby("rid", sort=False).size()
-    sep_by_line = {}
-    if len(vlf):
-        vlf = vlf.merge(dims, on="rid", how="left")
-        vlf["length"] = np.abs(vlf["y2"] - vlf["y1"])
-        center_ok = (
-            np.abs((vlf["x1"] + vlf["x2"]) / 2.0 - vlf["w"] / 2.0) < vlf["w"] * 0.3
-        )
-        cand = vlf[center_ok]
-        if len(cand):
-            # first occurrence of the max length per rid — matches the
-            # strict `>` update in A003:130
-            best = cand.loc[cand.groupby("rid", sort=False)["length"].idxmax()]
-            sep_by_line = dict(
-                zip(best["rid"], (best["x1"] + best["x2"]) / 2.0)
-            )
-
-    # --- O4 grid-search separator for the rest (vectorized closed form) --
+    # --- O4 grid-search separator (vectorized closed form) --------------
+    # each page's blocks are consecutive (merged blocks in payload order,
+    # then one fallback block per failed page)
+    min_x1 = np.full(n_pages, np.nan)
+    max_x0 = np.full(n_pages, np.nan)
     if len(blocks):
-        extents = blocks.groupby("rid", sort=False).agg(
-            min_x1=("x1", "min"), max_x0=("x0", "max"))
-    else:
-        extents = pd.DataFrame(columns=["min_x1", "max_x0"])
-    dims_w = dims.set_index("rid")["w"]
-    min_x1 = extents["min_x1"].reindex(dims_w.index).to_numpy(dtype=float)
-    max_x0 = extents["max_x0"].reindex(dims_w.index).to_numpy(dtype=float)
-    grid_sep = _grid_separator_closed_form(min_x1, max_x0, dims_w.to_numpy())
-    separators = dict(zip(dims_w.index, grid_sep))
-    separators.update((rid, float(v)) for rid, v in sep_by_line.items())
+        b_page = pd.Index(rids).get_indexer(blocks["rid"].to_numpy())
+        starts = _group_starts(b_page)
+        min_x1[b_page[starts]] = np.minimum.reduceat(blocks["x1"].to_numpy(), starts)
+        max_x0[b_page[starts]] = np.maximum.reduceat(blocks["x0"].to_numpy(), starts)
+    sep = _grid_separator_closed_form(min_x1, max_x0, widths)
+
+    # --- P1 vertical-line predicate + O5 best-line separator ------------
+    w = widths[vl_page]
+    with np.errstate(invalid="ignore"):  # inf - inf is NaN, as in Python
+        length = np.abs(vl["y2"] - vl["y1"])
+        vert = (np.abs(vl["x2"] - vl["x1"]) < 5) & (length > 100)
+        center_ok = np.abs((vl["x1"] + vl["x2"]) / 2.0 - w / 2.0) < w * 0.3
+    n_vlines = pd.Series(np.bincount(vl_page[vert], minlength=n_pages), index=rids)
+    cand = np.flatnonzero(vert & center_ok)
+    if cand.size:
+        # first occurrence of the max length per page — matches the
+        # strict `>` update in A003:130
+        best = cand[_first_arg_extreme(length[cand], _group_starts(vl_page[cand]), np.maximum)]
+        sep[vl_page[best]] = (vl["x1"][best] + vl["x2"][best]) / 2.0
+    separators = dict(zip(rids.tolist(), sep.tolist()))
 
     # --- P3/P4 colored regions + semantic footer flag --------------------
-    nonwhite = rc[~((rc["r"] == 1.0) & (rc["g"] == 1.0) & (rc["b"] == 1.0))]
-    n_colored = nonwhite.groupby("rid", sort=False).size()
-    dims_idx = dims.set_index("rid")
-    footer_regions = nonwhite.merge(dims, on="rid")
-    footer_regions = footer_regions[footer_regions["y0"] > footer_regions["h"] * 0.5]
+    nonwhite = ~((rc["r"] == 1.0) & (rc["g"] == 1.0) & (rc["b"] == 1.0))
+    n_colored = pd.Series(np.bincount(rc_page[nonwhite], minlength=n_pages), index=rids)
+    in_footer = nonwhite & (rc["y0"] > heights[rc_page] * 0.5)
+    footer_regions = pd.DataFrame(
+        {"rid": rids[rc_page[in_footer]],
+         **{f: rc[f][in_footer] for f in ("x0", "y0", "x1", "y1")}})
 
+    dims_idx = dims.set_index("rid")
     state = {
         "rows": rows, "blocks": blocks, "dims": dims, "dims_idx": dims_idx,
-        "dims_w": dims_w, "separators": separators, "n_vlines": n_vlines,
+        "dims_w": dims_idx["w"], "separators": separators, "n_vlines": n_vlines,
         "n_colored": n_colored, "footer_regions": footer_regions,
-        "vl": vl,  # raw parsed LINE records: a000 re-filters proportionally
+        # raw parsed LINE records: a000 re-filters proportionally
+        "vl": pd.DataFrame({**vl, "rid": rids[vl_page]}),
     }
     return state, out_parts
 

@@ -194,7 +194,7 @@ def render_page(
     return "\n".join(out)
 
 
-def _salvage_text(payload: str) -> str:
+def salvage_text(payload: str) -> str:
     """Lenient whole-page text recovery: every SPAN record's text= tail.
 
     The analog of ``page.get_text()`` — plain text without geometry
@@ -255,7 +255,7 @@ def parse_payload(payload: str) -> ParsedPage:
     if bad_span is not None:
         raise TokenizeError(
             f"malformed SPAN record: {bad_span[:80]!r}",
-            _salvage_text(payload),
+            salvage_text(payload),
             width,
             height,
             lines=page.lines,

@@ -10,11 +10,12 @@ import math
 
 import pandas as pd
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from pdf_parser_spark.generator import make_html_payload
-from pdf_parser_spark.operators.extract import extract_batch
+from pdf_parser_spark.goldens import _oracle_blocks
+from pdf_parser_spark.operators.extract import blocks_batch, extract_batch
 from pdf_parser_spark.operators.html import strip_html
 from pdf_parser_spark.operators.spans import _span_batches
 from pdf_parser_spark.oracle.boilerplate import strip_boilerplate
@@ -35,23 +36,41 @@ _NON_ASCII_NUMS = {
     "vulgar_fraction": "\u00bd",  # ½
 }
 
+# Numerals where a string-to-float kernel could part from Python's
+# ``float()``: overflow to inf (an exponent or a 400-digit mantissa),
+# underflow to 0, a sign and a bare fraction, a trailing point, upper-case E
+_ODD_NUMS = ["1e999", "-1e999", "1" * 400, "1" * 400 + ".5", "+.5e+3", "5.",
+             "1E5", "1e-400", "-.0e-0", "007"]
+
 _num = st.one_of(
     st.integers(-1000, 1000).map(str),
     st.floats(-1000, 1000, allow_nan=False, allow_infinity=False).map(
         lambda v: f"{v:.3f}"),
     st.sampled_from(["nan", "x", "", "1e3", "-0", *_NON_ASCII_NUMS.values()]),
+    st.sampled_from(_ODD_NUMS),
 )
 _text = st.text(
     alphabet=st.characters(blacklist_categories=("Cs",),
                            blacklist_characters="\n\r"),
     max_size=30,
 )
-_font = st.sampled_from(["", "F1", "Helvetica", "a b", "font=weird"])
+# Span text: anything but a record break, plus the characters a parser
+# may treat specially: a carriage return, NUL, the \x01 sentinel of the
+# segmented join, escape sequences, and non-ASCII text (after ASCII
+# coordinates such a record stays on the vectorized path)
+_span_text = st.one_of(
+    _text,
+    st.lists(st.sampled_from(["a", " ", "\r", "\x00", "\x01", "\x1f", "\x85",
+                              "\\n", "\\\\", "\\", "é", "\u0663", "漢字",
+                              "\U0001f600", "\u2028"]),
+             max_size=8).map("".join),
+)
+_font = st.sampled_from(["", "F1", "Helvetica", "a b", "font=weird", "\x00", "é"])
 
 _span_record = st.builds(
     lambda x0, y0, x1, y1, size, font, text:
         f"SPAN {x0} {y0} {x1} {y1} size={size} font={font} text={text}",
-    _num, _num, _num, _num, _num, _font, _text,
+    _num, _num, _num, _num, _num, _font, _span_text,
 )
 _line_record = st.builds(
     lambda a, b, c, d: f"LINE {a} {b} {c} {d}", _num, _num, _num, _num)
@@ -66,11 +85,14 @@ _page_header = st.one_of(
                      "PAGE w=612.0 h=792.0"]),
 )
 
+# Records may be empty, and a payload may end in "\n" (an empty last record)
 _page_payload = st.builds(
-    lambda header, records: "\n".join([header] + records),
+    lambda header, records, tail: "\n".join([header] + records) + tail,
     _page_header,
-    st.lists(st.one_of(_span_record, _line_record, _rect_record, _junk_record),
+    st.lists(st.one_of(_span_record, _line_record, _rect_record, _junk_record,
+                       st.just("")),
              max_size=12),
+    st.sampled_from(["", "\n", "\n\n"]),
 )
 
 # html/v1 payloads are joined from single characters and whole markup
@@ -172,6 +194,39 @@ def test_vectorized_equals_oracle_on_fuzz(rows):
             _assert_row_equals_oracle(got.iloc[i], want, variant, text, tool)
 
 
+def _same_float(a, b) -> bool:
+    """Exact float equality that also tells 0.0 from -0.0."""
+    return a == b and math.copysign(1.0, a) == math.copysign(1.0, b)
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(_page_payload, min_size=1, max_size=6))
+# one line-block whose spans tie 0 with -0 in x0, x1 and size (Python's
+# min/max keep the first), and whose texts hold the \x01 group sentinel
+@example(["PAGE w=612 h=792\n"
+          "SPAN 0 5 0 9 size=0 font= text=a\x01\n"
+          "SPAN -0 5 -0 9 size=-0 font=F text=\x01b\\n\n"
+          "SPAN 1 20 2 30 size=1 font=G text=c"])
+def test_blocks_batch_equals_oracle_on_fuzz(payloads):
+    """The tokenize layer on its own: ``blocks_batch`` (S2 tokenize, G1
+    merge, P2 filter) gives each turn's ``parse_payload`` blocks in payload
+    order, the S3 fallback block on a tokenize failure and no rows for a
+    payload without a valid PAGE header."""
+    n = len(payloads)
+    pdf = pd.DataFrame({"conv_id": [f"b{i}" for i in range(n)],
+                        "turn_idx": list(range(n)), "role": ["user"] * n,
+                        "text": payloads, "tool": ["page/v1"] * n})
+    got = blocks_batch(pdf)
+    for i, text in enumerate(payloads):
+        sub = got[got["conv_id"] == f"b{i}"]
+        want = _oracle_blocks(text)
+        assert list(sub["block_idx"]) == list(range(len(want))), text
+        for (_, r), b in zip(sub.iterrows(), want):
+            assert (r["text"], r["font_name"]) == (b.text, b.font_name), text
+            for k in ("x0", "y0", "x1", "y1", "font_size"):
+                assert _same_float(r[k], getattr(b, k)), (text, k)
+
+
 # A well-formed two-column page: a header span, one span per column, the
 # separator line and a colored footer rect. Each case below replaces ONE
 # numeric field of one record with a non-ASCII number.
@@ -213,6 +268,19 @@ def test_non_ascii_numbers_equal_oracle(rec, field, value):
         got = extract_batch(pdf.copy(), variant=variant)
         want = extract_turn(payload, "page/v1", 0, variant)
         _assert_row_equals_oracle(got.iloc[0], want, variant, payload)
+
+
+@pytest.mark.parametrize("rec,value", [
+    pytest.param(r, v, id=f"{fmt.split()[0]}{r}-odd{i}")
+    for r, (fmt, _names, _nums) in enumerate(_PAGE_RECORDS)
+    for i, v in enumerate(_ODD_NUMS)
+])
+def test_odd_numerals_equal_oracle(rec, value):
+    """The first numeric field of each record holds one of ``_ODD_NUMS``
+    (overflow, underflow, signs, a bare fraction): the same check as
+    ``test_non_ascii_numbers_equal_oracle``, for the numerals where a
+    string-to-float kernel could part from ``float()``."""
+    test_non_ascii_numbers_equal_oracle(rec, 0, value)
 
 
 def _assert_html_core_equals_oracle(payload):

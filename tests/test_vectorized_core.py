@@ -94,8 +94,8 @@ def test_variant_dispatch_vectorized():
 def test_blocks_batch_matches_oracle_parse():
     """The TextBlock relation equals the oracle's parsed blocks, in
     payload order, for every archetype plus failure payloads."""
+    from pdf_parser_spark.goldens import _oracle_blocks
     from pdf_parser_spark.operators.extract import blocks_batch
-    from pdf_parser_spark.payload import Block, TokenizeError, parse_payload
 
     rows = []
     for a_i, archetype in enumerate(PAGE_ARCHETYPES):
@@ -108,15 +108,7 @@ def test_blocks_batch_matches_oracle_parse():
 
     for conv, turn_idx, _, payload, _t in rows:
         sub = got[got["conv_id"] == conv]
-        try:
-            want = parse_payload(payload).blocks
-        except TokenizeError as exc:
-            want = ([Block(text=exc.salvaged_text.strip(), x0=0.0, y0=0.0,
-                           x1=exc.width, y1=exc.height, font_size=12.0,
-                           font_name="Unknown")]
-                    if exc.salvaged_text.strip() else [])
-        except Exception:  # noqa: BLE001
-            want = []
+        want = _oracle_blocks(payload)
         assert len(sub) == len(want), conv
         for i, b in enumerate(want):
             r = sub[sub["block_idx"] == i].iloc[0]
