@@ -306,7 +306,7 @@ BENCH = (
     "markdown_c001", "conv_reassembly",
     "dedup_minhash_lsh", "dedup_simhash", "dedup_exact",
     "text_quality_scores",
-    "ann_lsh_topk", "ann_sq8_topk", "ann_kmeans_refine", "centroid_by_label",
+    "ann_sq8_topk", "ann_kmeans_refine", "centroid_by_label",
     "semdedup_keep", "ann_batch_topk",
     "near_dedup_keep", "winnow_fingerprints", "cms_heavy_hitters",
     "table_stats", "skew_report", "bm25_topk", "link_pagerank_converged",
@@ -1264,32 +1264,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["ann_lsh_buckets"] = q_lsh_buckets
 
-    def q_lsh_topk(spark, sf_dir):
-        return _longify(S.lsh_topk(_tbl(spark, sf_dir, "embeddings"), k=10))
-
-    q["ann_lsh_topk"] = q_lsh_topk
-
-    def q_ivf_assign(spark, sf_dir):
-        return _longify(S.ivf_assign(_tbl(spark, sf_dir, "embeddings")))
-
-    q["ann_ivf_assign"] = q_ivf_assign
-
+    # IVF over the sampled k-means codebook: ann_ivf_topk and
+    # ann_ivf_sq8_topk run the default codebook, the ann_ivf_kmeans_*
+    # gates pass it explicitly. Every oracle rebuilds the codebook
+    # without Spark (tools/annoracle.py), see ivf_oracle_sql.
     def q_ivf_topk(spark, sf_dir):
         return _longify(S.ivf_topk(_tbl(spark, sf_dir, "embeddings"), k=10))
 
     q["ann_ivf_topk"] = q_ivf_topk
 
-    def q_ivf_topk_probe2(spark, sf_dir):
-        return _longify(S.ivf_topk(
-            _tbl(spark, sf_dir, "embeddings"), k=10, n_probe=2))
-
-    q["ann_ivf_topk_probe2"] = q_ivf_topk_probe2
-
-    # k-means-codebook IVF: deterministic but iterative (Lloyd rounds on a
-    # driver-side sample), so float-mean arithmetic is not reproducible in
-    # one ANSI-SQL pass — no oracle twin; the driver records the weaker
-    # rows-only check (the sanctioned path for iterative algorithms) and
-    # recall quality is evidenced separately in tools/ann_recall.py.
     def q_ivf_kmeans_assign(spark, sf_dir):
         embs = _tbl(spark, sf_dir, "embeddings")
         cb = S.kmeans_codebook(embs)
@@ -1304,11 +1287,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["ann_ivf_kmeans_topk"] = q_ivf_kmeans_topk
 
-    # product quantization stays rows-only: codes are exact integer
-    # argmins over BLAS-computed distances (no rounding tolerance, so
-    # cross-engine float reassociation could flip one); compression
-    # accuracy is evidenced in tools/ann_recall.py. The k-means IVF
-    # gates above DO have full oracles via tools/annoracle.py.
     def q_hashed_bow(spark, sf_dir):
         return _longify(_vec_long(TS.hashed_bow_embeddings(
             _tbl(spark, sf_dir, "documents")), "embedding"))
@@ -1753,6 +1731,102 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return q
 
 
+def ivf_oracle_sql(cent_values: str) -> dict[str, str]:
+    """The DuckDB oracles of the six gates that assign IVF cells, over
+    the codebook ``cent_values``: a `(VALUES ...) AS t(centroid_id,
+    cvec)` literal from `tools.annoracle.centroid_values_sql`. Each
+    scorable vector (`nrm`) goes to its highest 6dp-rounded cosine, ties
+    to the lower centroid_id, as `similarity._ivf_parts` assigns it; a
+    probe ranks the cells against the query as `_ivf_probe_candidates`
+    does. `oracle_sql` feeds it the sf0.01 codebook, the hostile-table
+    test the codebook of its own table."""
+    cells = f"""
+            WITH {_VEC_CTES},
+            cents AS (
+                SELECT centroid_id, cvec,
+                       sqrt(list_inner_product(cvec, cvec)) AS cnorm
+                FROM {cent_values}),
+            scored AS (
+                SELECT n.vec_id, c.centroid_id,
+                       round(list_inner_product(n.e, c.cvec)
+                             / (n.norm * c.cnorm), 6) AS cscore
+                FROM nrm n, cents c),
+            best AS (
+                SELECT vec_id, centroid_id,
+                       row_number() OVER (PARTITION BY vec_id
+                                          ORDER BY cscore DESC, centroid_id ASC) AS rn
+                FROM scored),
+            assign AS (SELECT vec_id, centroid_id FROM best WHERE rn = 1)"""
+
+    def probed(n_probe: int) -> str:
+        # `cand`: the vectors in the n_probe cells closest to query 0
+        return f"""{cells},
+            q AS (SELECT e AS qe, norm AS qn FROM nrm WHERE vec_id = 0),
+            qprobe AS (
+                SELECT c.centroid_id
+                FROM cents c, q
+                ORDER BY round(list_inner_product(c.cvec, q.qe)
+                               / (c.cnorm * q.qn), 6) DESC, c.centroid_id ASC
+                LIMIT {n_probe}),
+            cand AS (
+                SELECT n.vec_id, n.e, n.norm
+                FROM nrm n
+                JOIN assign a ON n.vec_id = a.vec_id
+                JOIN qprobe p ON a.centroid_id = p.centroid_id)"""
+
+    exact_top10 = """
+            SELECT vec_id,
+                   round(list_inner_product(e, qe) / (norm * qn), 4) AS score
+            FROM cand, q
+            WHERE vec_id <> 0
+            ORDER BY score DESC, vec_id ASC
+            LIMIT 10
+        """
+    # within-cell pairs at or above the semdedup threshold
+    dup_pairs = f"""{cells},
+            sided AS (
+                SELECT n.vec_id, n.e, n.norm, a.centroid_id
+                FROM nrm n JOIN assign a ON n.vec_id = a.vec_id),
+            scored_pairs AS (
+                SELECT x.vec_id AS id_a, y.vec_id AS id_b,
+                       round(list_inner_product(x.e, y.e)
+                             / (x.norm * y.norm), 4) AS score
+                FROM sided x JOIN sided y
+                  ON x.centroid_id = y.centroid_id AND x.vec_id < y.vec_id),
+            pairs AS (SELECT * FROM scored_pairs
+                      WHERE score >= {COSINE_DUP_THRESHOLD})"""
+    return {
+        "ann_ivf_kmeans_assign": f"""{cells}
+            SELECT vec_id, centroid_id::BIGINT AS centroid_id FROM assign
+        """,
+        "ann_ivf_topk": probed(1) + exact_top10,
+        "ann_ivf_kmeans_topk": probed(2) + exact_top10,
+        # the probe-1 cell's members scored by SQ8: the floor(x + 0.5)
+        # codes and fold-dot contracts of the full-scan sq8 gates
+        "ann_ivf_sq8_topk": probed(1) + """,
+            ccodes AS (
+                SELECT vec_id,
+                       [floor(x / norm * 127.0 + 0.5)::DOUBLE FOR x IN e]
+                           AS cd
+                FROM cand),
+            qu AS (SELECT [x / qn FOR x IN qe] AS qv FROM q)
+            SELECT vec_id,
+                   round(list_inner_product(cd, qv) / 127.0, 6) AS score
+            FROM ccodes, qu
+            WHERE vec_id <> 0
+            ORDER BY score DESC, vec_id ASC
+            LIMIT 10
+        """,
+        "semdedup_pairs": f"""{dup_pairs}
+            SELECT id_a, id_b, score FROM pairs
+        """,
+        "semdedup_keep": f"""{dup_pairs}
+            SELECT e.vec_id, e.label
+            FROM embeddings e ANTI JOIN pairs d ON e.vec_id = d.id_b
+        """,
+    }
+
+
 def oracle_sql() -> dict[str, str]:
     ensure_goldens(ORACLE_SF)
     g = _golden
@@ -1764,12 +1838,6 @@ def oracle_sql() -> dict[str, str]:
     km_values = centroid_values_sql(kmeans_centroids(
         f"/root/testdata/sf{ORACLE_SF}/embeddings.parquet"))
 
-    km_cents = f"""
-            kraw AS (SELECT centroid_id, cvec FROM {km_values}),
-            cents AS (
-                SELECT centroid_id, cvec,
-                       sqrt(list_inner_product(cvec, cvec)) AS cnorm
-                FROM kraw)"""
     _SURPRISAL_CTES = f"""
             toks AS (
                 SELECT doc_id, unnest(string_split({_CANON}, ' ')) AS tok
@@ -3733,144 +3801,6 @@ def oracle_sql() -> dict[str, str]:
             {_LSH_CTES}
             SELECT vec_id, bucket FROM buckets
         """,
-        "ann_lsh_topk": f"""
-            WITH {_VEC_CTES},
-            {_LSH_CTES},
-            qb AS (SELECT bucket AS qbucket FROM buckets WHERE vec_id = 0),
-            cand AS (
-                SELECT n.vec_id, n.e, n.norm
-                FROM nrm n JOIN buckets bu ON n.vec_id = bu.vec_id, qb
-                WHERE bu.bucket = qb.qbucket),
-            q AS (SELECT e AS qe, norm AS qn FROM nrm WHERE vec_id = 0)
-            SELECT vec_id,
-                   round(list_inner_product(e, qe) / (norm * qn), 4) AS score
-            FROM cand, q
-            WHERE vec_id <> 0
-            ORDER BY score DESC, vec_id ASC
-            LIMIT 10
-        """,
-        "ann_ivf_assign": f"""
-            WITH {_VEC_CTES},
-            cents AS (
-                SELECT vec_id AS centroid_id, e AS cvec, norm AS cnorm
-                FROM nrm ORDER BY vec_id LIMIT 16),
-            scored AS (
-                SELECT n.vec_id, c.centroid_id,
-                       round(list_inner_product(n.e, c.cvec)
-                             / (n.norm * c.cnorm), 6) AS cscore
-                FROM nrm n, cents c),
-            best AS (
-                SELECT vec_id, centroid_id,
-                       row_number() OVER (PARTITION BY vec_id
-                                          ORDER BY cscore DESC, centroid_id ASC) AS rn
-                FROM scored)
-            SELECT vec_id, centroid_id::BIGINT AS centroid_id
-            FROM best WHERE rn = 1
-        """,
-        # IVF probe-1 restriction, then the SQ8 asymmetric score over
-        # the cell's codes (same floor(x+0.5) / fold-dot contracts as
-        # the full-scan sq8 gates)
-        "ann_ivf_sq8_topk": f"""
-            WITH {_VEC_CTES},
-            cents AS (
-                SELECT vec_id AS centroid_id, e AS cvec, norm AS cnorm
-                FROM nrm ORDER BY vec_id LIMIT 16),
-            scored AS (
-                SELECT n.vec_id, c.centroid_id,
-                       round(list_inner_product(n.e, c.cvec)
-                             / (n.norm * c.cnorm), 6) AS cscore
-                FROM nrm n, cents c),
-            best AS (
-                SELECT vec_id, centroid_id,
-                       row_number() OVER (PARTITION BY vec_id
-                                          ORDER BY cscore DESC,
-                                                   centroid_id ASC) AS rn
-                FROM scored),
-            assign AS (SELECT vec_id, centroid_id FROM best WHERE rn = 1),
-            qc AS (SELECT centroid_id AS qcent FROM assign
-                   WHERE vec_id = 0),
-            cand AS (
-                SELECT n.vec_id, n.e, n.norm
-                FROM nrm n JOIN assign a ON n.vec_id = a.vec_id, qc
-                WHERE a.centroid_id = qc.qcent),
-            ccodes AS (
-                SELECT vec_id,
-                       [floor(x / norm * 127.0 + 0.5)::DOUBLE FOR x IN e]
-                           AS cd
-                FROM cand),
-            q AS (SELECT [x / norm FOR x IN e] AS qv
-                  FROM cand WHERE vec_id = 0)
-            SELECT vec_id,
-                   round(list_inner_product(cd, qv) / 127.0, 6) AS score
-            FROM ccodes, q
-            WHERE vec_id <> 0
-            ORDER BY score DESC, vec_id ASC
-            LIMIT 10
-        """,
-        "ann_ivf_topk": f"""
-            WITH {_VEC_CTES},
-            cents AS (
-                SELECT vec_id AS centroid_id, e AS cvec, norm AS cnorm
-                FROM nrm ORDER BY vec_id LIMIT 16),
-            scored AS (
-                SELECT n.vec_id, c.centroid_id,
-                       round(list_inner_product(n.e, c.cvec)
-                             / (n.norm * c.cnorm), 6) AS cscore
-                FROM nrm n, cents c),
-            best AS (
-                SELECT vec_id, centroid_id,
-                       row_number() OVER (PARTITION BY vec_id
-                                          ORDER BY cscore DESC, centroid_id ASC) AS rn
-                FROM scored),
-            assign AS (SELECT vec_id, centroid_id FROM best WHERE rn = 1),
-            qc AS (SELECT centroid_id AS qcent FROM assign WHERE vec_id = 0),
-            cand AS (
-                SELECT n.vec_id, n.e, n.norm
-                FROM nrm n JOIN assign a ON n.vec_id = a.vec_id, qc
-                WHERE a.centroid_id = qc.qcent),
-            q AS (SELECT e AS qe, norm AS qn FROM nrm WHERE vec_id = 0)
-            SELECT vec_id,
-                   round(list_inner_product(e, qe) / (norm * qn), 4) AS score
-            FROM cand, q
-            WHERE vec_id <> 0
-            ORDER BY score DESC, vec_id ASC
-            LIMIT 10
-        """,
-        "ann_ivf_topk_probe2": f"""
-            WITH {_VEC_CTES},
-            cents AS (
-                SELECT vec_id AS centroid_id, e AS cvec, norm AS cnorm
-                FROM nrm ORDER BY vec_id LIMIT 16),
-            scored AS (
-                SELECT n.vec_id, c.centroid_id,
-                       round(list_inner_product(n.e, c.cvec)
-                             / (n.norm * c.cnorm), 6) AS cscore
-                FROM nrm n, cents c),
-            best AS (
-                SELECT vec_id, centroid_id,
-                       row_number() OVER (PARTITION BY vec_id
-                                          ORDER BY cscore DESC, centroid_id ASC) AS rn
-                FROM scored),
-            assign AS (SELECT vec_id, centroid_id FROM best WHERE rn = 1),
-            q AS (SELECT e AS qe, norm AS qn FROM nrm WHERE vec_id = 0),
-            qprobe AS (
-                SELECT c.centroid_id
-                FROM cents c, q
-                ORDER BY round(list_inner_product(c.cvec, q.qe)
-                               / (c.cnorm * q.qn), 6) DESC, c.centroid_id ASC
-                LIMIT 2),
-            cand AS (
-                SELECT n.vec_id, n.e, n.norm
-                FROM nrm n
-                JOIN assign a ON n.vec_id = a.vec_id
-                JOIN qprobe p ON a.centroid_id = p.centroid_id)
-            SELECT vec_id,
-                   round(list_inner_product(e, qe) / (norm * qn), 4) AS score
-            FROM cand, q
-            WHERE vec_id <> 0
-            ORDER BY score DESC, vec_id ASC
-            LIMIT 10
-        """,
         # two UNROLLED distributed-Lloyd iterations from the same
         # annoracle-reproduced seed codebook kmeans_refine_df uses;
         # the 6dp rounding at every stage boundary is the shared
@@ -3886,55 +3816,6 @@ def oracle_sql() -> dict[str, str]:
             SELECT centroid_id, cnt::BIGINT AS n_members,
                    (i - 1)::BIGINT AS dim, cvec[i] AS val
             FROM cl
-        """,
-        "ann_ivf_kmeans_assign": f"""
-            WITH {_VEC_CTES},
-            {km_cents},
-            scored AS (
-                SELECT n.vec_id, c.centroid_id,
-                       round(list_inner_product(n.e, c.cvec)
-                             / (n.norm * c.cnorm), 6) AS cscore
-                FROM nrm n, cents c),
-            best AS (
-                SELECT vec_id, centroid_id,
-                       row_number() OVER (PARTITION BY vec_id
-                                          ORDER BY cscore DESC, centroid_id ASC) AS rn
-                FROM scored)
-            SELECT vec_id, centroid_id::BIGINT AS centroid_id
-            FROM best WHERE rn = 1
-        """,
-        "ann_ivf_kmeans_topk": f"""
-            WITH {_VEC_CTES},
-            {km_cents},
-            scored AS (
-                SELECT n.vec_id, c.centroid_id,
-                       round(list_inner_product(n.e, c.cvec)
-                             / (n.norm * c.cnorm), 6) AS cscore
-                FROM nrm n, cents c),
-            best AS (
-                SELECT vec_id, centroid_id,
-                       row_number() OVER (PARTITION BY vec_id
-                                          ORDER BY cscore DESC, centroid_id ASC) AS rn
-                FROM scored),
-            assign AS (SELECT vec_id, centroid_id FROM best WHERE rn = 1),
-            q AS (SELECT e AS qe, norm AS qn FROM nrm WHERE vec_id = 0),
-            qprobe AS (
-                SELECT c.centroid_id
-                FROM cents c, q
-                ORDER BY round(list_inner_product(c.cvec, q.qe)
-                               / (c.cnorm * q.qn), 6) DESC, c.centroid_id ASC
-                LIMIT 2),
-            cand AS (
-                SELECT n.vec_id, n.e, n.norm
-                FROM nrm n
-                JOIN assign a ON n.vec_id = a.vec_id
-                JOIN qprobe p ON a.centroid_id = p.centroid_id)
-            SELECT vec_id,
-                   round(list_inner_product(e, qe) / (norm * qn), 4) AS score
-            FROM cand, q
-            WHERE vec_id <> 0
-            ORDER BY score DESC, vec_id ASC
-            LIMIT 10
         """,
         "ann_batch_topk": f"""
             WITH {_VEC_CTES},
@@ -3969,57 +3850,6 @@ def oracle_sql() -> dict[str, str]:
             FROM nrm n, ev
             WHERE NOT (n.vec_id % 50 = 0 AND n.vec_id < 2000)
             GROUP BY n.vec_id
-        """,
-        "semdedup_pairs": f"""
-            WITH {_VEC_CTES},
-            {km_cents},
-            scored AS (
-                SELECT n.vec_id, c.centroid_id,
-                       round(list_inner_product(n.e, c.cvec)
-                             / (n.norm * c.cnorm), 6) AS cscore
-                FROM nrm n, cents c),
-            best AS (
-                SELECT vec_id, centroid_id,
-                       row_number() OVER (PARTITION BY vec_id
-                                          ORDER BY cscore DESC, centroid_id ASC) AS rn
-                FROM scored),
-            assign AS (SELECT vec_id, centroid_id FROM best WHERE rn = 1),
-            sided AS (
-                SELECT n.vec_id, n.e, n.norm, a.centroid_id
-                FROM nrm n JOIN assign a ON n.vec_id = a.vec_id)
-            SELECT x.vec_id AS id_a, y.vec_id AS id_b,
-                   round(list_inner_product(x.e, y.e)
-                         / (x.norm * y.norm), 4) AS score
-            FROM sided x JOIN sided y
-              ON x.centroid_id = y.centroid_id AND x.vec_id < y.vec_id
-            WHERE round(list_inner_product(x.e, y.e)
-                        / (x.norm * y.norm), 4) >= {COSINE_DUP_THRESHOLD}
-        """,
-        "semdedup_keep": f"""
-            WITH {_VEC_CTES},
-            {km_cents},
-            scored AS (
-                SELECT n.vec_id, c.centroid_id,
-                       round(list_inner_product(n.e, c.cvec)
-                             / (n.norm * c.cnorm), 6) AS cscore
-                FROM nrm n, cents c),
-            best AS (
-                SELECT vec_id, centroid_id,
-                       row_number() OVER (PARTITION BY vec_id
-                                          ORDER BY cscore DESC, centroid_id ASC) AS rn
-                FROM scored),
-            assign AS (SELECT vec_id, centroid_id FROM best WHERE rn = 1),
-            sided AS (
-                SELECT n.vec_id, n.e, n.norm, a.centroid_id
-                FROM nrm n JOIN assign a ON n.vec_id = a.vec_id),
-            drops AS (
-                SELECT DISTINCT y.vec_id
-                FROM sided x JOIN sided y
-                  ON x.centroid_id = y.centroid_id AND x.vec_id < y.vec_id
-                WHERE round(list_inner_product(x.e, y.e)
-                            / (x.norm * y.norm), 4) >= {COSINE_DUP_THRESHOLD})
-            SELECT e.vec_id, e.label
-            FROM embeddings e ANTI JOIN drops d ON e.vec_id = d.vec_id
         """,
         "multimodal_decode_meta": """
             SELECT doc_id,
@@ -4878,4 +4708,5 @@ def oracle_sql() -> dict[str, str]:
              AND b.turn_idx = t.turn_idx::BIGINT
             WHERE t.tool = 'html/v1' AND b.conv_id IS NULL
         """
+    oracles.update(ivf_oracle_sql(km_values))
     return oracles

@@ -3,13 +3,16 @@
 * brute-force cosine top-k — the correctness baseline; the query vector is
   a one-row broadcast side, so the "join" is a broadcast nested loop with
   no shuffle of the big side.
-* random-hyperplane LSH buckets — the scale path: each vector projects
-  onto P deterministic ±1 hyperplanes (signs derived from md5, so Spark
-  and DuckDB compute identical buckets); ANN search only scans the query's
-  bucket.
+* IVF over a sampled spherical k-means codebook — the ANN scale path:
+  every vector is assigned to its nearest centroid (broadcast codebook,
+  map-side), and a probe-N search scans only the N cells closest to the
+  query; SQ8 codes cut the bytes each scanned candidate costs.
+* random-hyperplane LSH buckets — each vector projects onto
+  `LSH_PLANES` deterministic ±1 hyperplanes (signs derived from md5, so
+  Spark and DuckDB compute identical buckets).
 * cosine near-duplicate pairs — embedding-space dedup; at corpus scale the
-  pair generation goes through the LSH buckets (join on bucket), never a
-  full cross join.
+  pair generation goes through the LSH buckets or the k-means cells
+  (join on bucket / cell), never a full cross join.
 
 All cosine/score arithmetic is promoted to double before any sum, and the
 SQL paths use an explicit left-fold so summation order (and therefore the
@@ -91,43 +94,47 @@ def brute_topk(df: DataFrame, query_id: int = 0, k: int = 10,
     )
 
 
-def _plane_signs(planes: int, dims: int) -> list:
+# Hyperplanes per LSH bucket id (2^8 buckets). The DuckDB oracle's
+# `_LSH_CTES` projects onto the same planes 0..7.
+LSH_PLANES = 8
+
+
+def _plane_signs(dims: int) -> list:
     """The deterministic ±1 hyperplane matrix: sign(p, d) = +1 iff the
     first hex char of md5('p<p>d<d>') is in 0..7 — the exact derivation
-    the DuckDB oracle twin uses, computed driver-side once (planes × dims
-    scalars) instead of per row."""
+    the DuckDB oracle twin uses, computed once per vector width
+    (LSH_PLANES × dims scalars) instead of per row."""
     import hashlib
 
     return [
         [1.0 if hashlib.md5(f"p{p}d{d}".encode()).hexdigest()[0] in "01234567"
          else -1.0 for d in range(dims)]
-        for p in range(planes)
+        for p in range(LSH_PLANES)
     ]
 
 
-def lsh_buckets(df: DataFrame, planes: int = 8, dims: int = 64,
-                id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+def lsh_buckets(df: DataFrame, id_col: str = "vec_id",
+                vec_col: str = "embedding") -> DataFrame:
     """Random-hyperplane LSH bucket per vector.
 
-    Bucket = sum over planes of (projection > 0) << p. The whole batch's
-    projections are ONE NumPy matmul ``X @ S.T`` inside an Arrow-batched
-    pandas UDF — row-local, no explode, no shuffle (the naive form blew
-    every vector into dims × planes rows through two aggregations; a
-    pure-SQL higher-order fold is interpreted per element and ~2× slower
-    than this matmul). ``dims`` only sizes the initial sign matrix —
-    vectors wider than it get lazily extended signs (same md5 derivation),
-    ragged batches fall back to per-row products, and null or EMPTY
+    Bucket = sum over the `LSH_PLANES` planes of (projection > 0) << p.
+    The whole batch's projections are ONE NumPy matmul ``X @ S.T`` inside
+    an Arrow-batched pandas UDF — row-local, no explode, no shuffle (the
+    naive form blew every vector into dims × planes rows through two
+    aggregations; a pure-SQL higher-order fold is interpreted per element
+    and ~2× slower than this matmul). The sign matrix is built lazily per
+    vector width (same md5 derivation), ragged batches fall back to
+    per-row products, and null or EMPTY
     embeddings are excluded up front (matching the exploded form, which
     emitted no rows for either — a zero-length array has no dims to unnest,
     and letting it through would mint a bucket-0 row the oracle lacks and
     a NaN-score candidate downstream)."""
-    signs_cache = {dims: np.array(_plane_signs(planes, dims), dtype=np.float64).T}
-    weights = (1 << np.arange(planes)).astype(np.int64)
+    signs_cache = {}
+    weights = (1 << np.arange(LSH_PLANES)).astype(np.int64)
 
     def _signs_t(d: int):
         if d not in signs_cache:
-            signs_cache[d] = np.array(
-                _plane_signs(planes, d), dtype=np.float64).T
+            signs_cache[d] = np.array(_plane_signs(d), dtype=np.float64).T
         return signs_cache[d]
 
     @pandas_udf("long")
@@ -139,11 +146,11 @@ def lsh_buckets(df: DataFrame, planes: int = 8, dims: int = 64,
         lens = {len(a) for a in arrs}
         if len(lens) == 1:
             x = np.stack(arrs).astype(np.float64)
-            proj = x @ _signs_t(x.shape[1])[: x.shape[1]]
+            proj = x @ _signs_t(x.shape[1])
             return pd.Series((proj > 0) @ weights)
         return pd.Series([
-            int(((np.asarray(a, dtype=np.float64)
-                  @ _signs_t(len(a))[: len(a)]) > 0) @ weights)
+            int(((np.asarray(a, dtype=np.float64) @ _signs_t(len(a))) > 0)
+                @ weights)
             for a in arrs
         ], dtype="int64")
 
@@ -151,18 +158,6 @@ def lsh_buckets(df: DataFrame, planes: int = 8, dims: int = 64,
         df.filter(F.col(vec_col).isNotNull() & (F.size(F.col(vec_col)) > 0))
         .select(F.col(id_col), bucket_udf(F.col(vec_col)).alias("bucket"))
     )
-
-
-def lsh_topk(df: DataFrame, query_id: int = 0, k: int = 10, planes: int = 8,
-             id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """ANN top-k restricted to the query's LSH bucket (scale path: scans
-    ~N/2^planes vectors instead of N)."""
-    buckets = lsh_buckets(df, planes=planes, id_col=id_col, vec_col=vec_col)
-    with_b = df.join(buckets, id_col)
-    qb = (with_b.filter(F.col(id_col) == query_id)
-          .select(F.col("bucket").alias("qbucket")))
-    candidates = with_b.join(F.broadcast(qb), F.col("bucket") == F.col("qbucket")).drop("qbucket")
-    return brute_topk(candidates, query_id=query_id, k=k, id_col=id_col, vec_col=vec_col)
 
 
 def batch_topk(df: DataFrame, queries: DataFrame, k: int = 10,
@@ -270,8 +265,11 @@ def lloyd_spherical(x: "np.ndarray", n_centroids: int, iters: int) -> list:
     twin in tools/annoracle.py) and embed it as SQL literals — which is
     what upgrades the k-means ANN gates from rows-only to full
     value-hash checks."""
-    norms = np.linalg.norm(x, axis=1)
-    x = x[norms > 0] / norms[norms > 0, None]
+    if len(x):
+        norms = np.linalg.norm(x, axis=1)
+        x = x[norms > 0] / norms[norms > 0, None]
+    if not len(x):
+        return []  # no vector has a direction, so there are no cells
     k = min(n_centroids, len(x))
     cents = x[:k].copy()
     for _ in range(iters):
@@ -397,26 +395,20 @@ def kmeans_refine_df(df: DataFrame, iters: int = 2,
 
 
 def _ivf_parts(df: DataFrame, n_centroids: int, id_col: str, vec_col: str,
-               codebook: list | None = None):
+               codebook: list | None):
     """Shared IVF building blocks: (normed base, centroid set, assignment)
     — computed once so ivf_assign/ivf_topk don't replan the norms or the
-    centroid orderBy twice. ``codebook``, if given, replaces the
-    lowest-id stand-in with an explicit (e.g. k-means) centroid list."""
+    codebook twice. The cells are ``codebook``, or when it is None the
+    sampled k-means codebook `kmeans_codebook(df, n_centroids)`."""
+    if codebook is None:
+        codebook = kmeans_codebook(df, n_centroids=n_centroids,
+                                   id_col=id_col, vec_col=vec_col)
     base = with_norm(df, vec_col)
-    if codebook is not None:
-        cents = with_norm(
-            df.sparkSession.createDataFrame(
-                [(i, c) for i, c in enumerate(codebook)],
-                "centroid_id long, cvec array<double>"),
-            "cvec").select("centroid_id", "cvec",
-                           F.col("norm").alias("cnorm"))
-    else:
-        cents = (
-            base.orderBy(F.col(id_col).asc())
-            .limit(n_centroids)
-            .select(F.col(id_col).alias("centroid_id"),
-                    F.col(vec_col).alias("cvec"), F.col("norm").alias("cnorm"))
-        )
+    cents = with_norm(
+        df.sparkSession.createDataFrame(
+            [(i, c) for i, c in enumerate(codebook)],
+            "centroid_id long, cvec array<double>"),
+        "cvec").select("centroid_id", "cvec", F.col("norm").alias("cnorm"))
     scored = (
         base.crossJoin(F.broadcast(cents))
         .select(
@@ -439,13 +431,13 @@ def ivf_assign(df: DataFrame, n_centroids: int = 16,
     """IVF coarse quantization: assign every vector to its nearest
     centroid by cosine.
 
-    Default centroids are the `n_centroids` lowest-id vectors — a
-    deterministic, oracle-expressible stand-in; pass
-    ``codebook=kmeans_codebook(df)`` for the production sampled-k-means
-    codebook (recall measured in tools/ann_recall.py / BASELINE.md).
-    Either way the centroid set is broadcast, so assignment is a map-side
-    broadcast nested-loop over C candidates per vector — no shuffle of
-    the big side. Ties break toward the lower centroid id.
+    The centroids are the sampled k-means codebook
+    `kmeans_codebook(df, n_centroids)` unless ``codebook`` passes another
+    one (a Lloyd-refined or differently sized list); recall is measured
+    in tools/ann_recall.py / BASELINE.md. The centroid set is broadcast,
+    so assignment is a map-side broadcast nested-loop over C candidates
+    per vector — no shuffle of the big side. Ties break toward the lower
+    centroid id.
     """
     _base, _cents, assign = _ivf_parts(df, n_centroids, id_col, vec_col,
                                        codebook=codebook)
@@ -588,35 +580,24 @@ def _blocked_self_join_sides(base: DataFrame, id_col: str,
 
 def cosine_dup_pairs(df: DataFrame, threshold: float = 0.95,
                      id_col: str = "vec_id", vec_col: str = "embedding",
-                     use_lsh: bool = False, planes: int = 8,
-                     bucket_cap: int = 4096,
-                     skew_stats: dict | None = None) -> DataFrame:
+                     use_lsh: bool = False,
+                     bucket_cap: int = 4096) -> DataFrame:
     """Embedding near-duplicate pairs (a < b) with cosine >= threshold.
 
-    `use_lsh=True` joins on LSH bucket first (the 100 TB path — candidate
-    recall is tunable via `planes`); the default exact form is the
+    `use_lsh=True` joins on LSH bucket first (the 100 TB path; candidate
+    recall is set by `LSH_PLANES`); the default exact form is the
     small-scale oracle twin.
 
     The bucket self-join is skew-guarded: buckets larger than
     ``bucket_cap`` are block-split (see ``_blocked_self_join_sides``) so
     one near-degenerate bucket cannot hand a single task the quadratic
     pair load. The produced pair set is IDENTICAL for any cap — only the
-    task decomposition changes — so oracle hashes are cap-independent.
-    ``skew_stats``, if given, receives ``{"oversized_buckets": n,
-    "max_bucket": m}`` (one tiny aggregate action over bucket sizes)."""
+    task decomposition changes — so oracle hashes are cap-independent."""
     base = with_norm(df, vec_col).select(
         F.col(id_col), F.col(vec_col), F.col("norm"))
     if use_lsh:
         base = base.join(
-            lsh_buckets(df, planes=planes, id_col=id_col, vec_col=vec_col),
-            id_col)
-        if skew_stats is not None:
-            row = (base.groupBy("bucket")
-                   .agg(F.count(F.lit(1)).alias("n"))
-                   .agg(F.sum((F.col("n") > bucket_cap).cast("long")).alias("o"),
-                        F.max("n").alias("m")).first())
-            skew_stats.update({"oversized_buckets": int(row["o"] or 0),
-                               "max_bucket": int(row["m"] or 0)})
+            lsh_buckets(df, id_col=id_col, vec_col=vec_col), id_col)
         left, right = _blocked_self_join_sides(base, id_col, bucket_cap)
         a, b = left.alias("a"), right.alias("b")
         join_df = a.join(
@@ -712,7 +693,7 @@ def semantic_decontaminated_keep(df: DataFrame, eval_df: DataFrame,
 
 
 def semdedup_pairs(df: DataFrame, threshold: float = 0.3,
-                   n_centroids: int | str = 16,
+                   n_centroids: int = 16,
                    codebook: list | None = None,
                    id_col: str = "vec_id", vec_col: str = "embedding",
                    bucket_cap: int = 4096) -> DataFrame:
@@ -730,16 +711,11 @@ def semdedup_pairs(df: DataFrame, threshold: float = 0.3,
     corpus of near-identical embeddings) is block-split via
     ``_blocked_self_join_sides`` so no single task inherits the
     quadratic pair load — same guard, and same cap-independent output
-    guarantee, as ``cosine_dup_pairs``. Pass
-    ``codebook=kmeans_codebook(df)`` for the production sampled-k-means
-    cells (that path is what the oracle gate checks, via the sparkless
-    codebook reproduction in tools/annoracle.py), and
-    ``n_centroids="auto"`` to scale the cell count with the corpus
-    (`auto_centroids` — the knob that keeps within-cell pair work
-    linear in N; ignored when an explicit codebook is given, since the
-    codebook fixes the cells)."""
-    if n_centroids == "auto":
-        n_centroids = 16 if codebook is not None else auto_centroids(df)
+    guarantee, as ``cosine_dup_pairs``. The cells are the sampled
+    k-means codebook `kmeans_codebook(df, n_centroids)` (the oracle gates
+    rebuild it without Spark in tools/annoracle.py) unless ``codebook``
+    passes another; size it with `auto_centroids` to keep within-cell
+    pair work linear in N."""
     base, _cents, assign = _ivf_parts(df, n_centroids, id_col, vec_col,
                                       codebook=codebook)
     keyed = (base.select(id_col, vec_col, "norm")
@@ -757,7 +733,7 @@ def semdedup_pairs(df: DataFrame, threshold: float = 0.3,
 
 
 def semdedup_keep(df: DataFrame, threshold: float = 0.3,
-                  n_centroids: int | str = 16,
+                  n_centroids: int = 16,
                   codebook: list | None = None,
                   id_col: str = "vec_id", vec_col: str = "embedding",
                   bucket_cap: int = 4096) -> DataFrame:

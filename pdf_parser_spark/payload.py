@@ -68,8 +68,10 @@ def stub_block_type(text: str) -> str:
 # nan/inf/hex/underscores). Any deviation is a malformed record — SPAN
 # deviations fail the page's tokenize (S3 fallback), LINE/RECT deviations
 # are skipped (degraded drawing scan), a PAGE-header deviation is a
-# page-level error.
-FLOAT_PATTERN = r"[+-]?(?:\d+\.?\d*|\.\d+)(?:[eE][+-]?\d+)?"
+# page-level error. A digit run matches FLOAT_PATTERN one way only: with
+# the ambiguous `\d+\.?\d*`, Python's `re` backtracked over every digit
+# split of every field of a failing record (seconds at 25 digits).
+FLOAT_PATTERN = r"[+-]?(?:\d+(?:\.\d*)?|\.\d+)(?:[eE][+-]?\d+)?"
 PAGE_PATTERN = rf"^PAGE w=({FLOAT_PATTERN}) h=({FLOAT_PATTERN})$"
 LINE_PATTERN = (
     rf"^LINE ({FLOAT_PATTERN}) ({FLOAT_PATTERN}) "

@@ -122,8 +122,8 @@ def test_cosine_dup_pairs_exact(vecs):
 
 
 def test_lsh_buckets_deterministic_and_partitioning(vecs):
-    b1 = {r.vec_id: r.bucket for r in S.lsh_buckets(vecs, dims=4).collect()}
-    b2 = {r.vec_id: r.bucket for r in S.lsh_buckets(vecs, dims=4).collect()}
+    b1 = {r.vec_id: r.bucket for r in S.lsh_buckets(vecs).collect()}
+    b2 = {r.vec_id: r.bucket for r in S.lsh_buckets(vecs).collect()}
     assert b1 == b2  # deterministic across runs
     # opposite vectors land in complementary buckets (all 8 plane bits flip)
     assert b1[0] ^ b1[3] == 255
@@ -136,7 +136,7 @@ def test_lsh_buckets_null_and_empty_excluded(spark):
     df = spark.createDataFrame(
         [(0, [1.0, 0.0, 0.0, 0.0]), (1, None), (2, [])],
         "vec_id long, embedding array<float>")
-    got = {r.vec_id for r in S.lsh_buckets(df, dims=4).collect()}
+    got = {r.vec_id for r in S.lsh_buckets(df).collect()}
     assert got == {0}
 
 
@@ -151,17 +151,17 @@ def test_cosine_dup_pairs_skew_guard(spark):
 
     unguarded = {(r.id_a, r.id_b, r.score) for r in S.cosine_dup_pairs(
         df, threshold=0.99, use_lsh=True, bucket_cap=10**9).collect()}
-    stats = {}
     guarded = {(r.id_a, r.id_b, r.score) for r in S.cosine_dup_pairs(
-        df, threshold=0.99, use_lsh=True, bucket_cap=8,
-        skew_stats=stats).collect()}
+        df, threshold=0.99, use_lsh=True, bucket_cap=8).collect()}
     assert guarded == unguarded and len(guarded) > 100
-    assert stats["oversized_buckets"] >= 1 and stats["max_bucket"] >= 40
 
-    # no join key carries the whole hot bucket: per-(bucket, g, j) group
-    # sizes on the replicated left side stay O(cap), not O(bucket)
     base = S.with_norm(df).select("vec_id", "embedding", "norm").join(
         S.lsh_buckets(df), "vec_id")
+    sizes = [r.n for r in base.groupBy("bucket")
+             .agg(F.count(F.lit(1)).alias("n")).collect()]
+    assert sum(n > 8 for n in sizes) >= 1 and max(sizes) >= 40
+    # no join key carries the whole hot bucket: per-(bucket, g, j) group
+    # sizes on the replicated left side stay O(cap), not O(bucket)
     left, _right = S._blocked_self_join_sides(base, "vec_id", 8)
     per_key = (left.groupBy("bucket", "_g", "_j")
                .agg(F.count(F.lit(1)).alias("n")).collect())
@@ -189,12 +189,18 @@ def test_lang_id_and_stats(spark, docs):
 
 def test_ivf_assign_and_topk(vecs):
     assign = {r.vec_id: r.centroid_id for r in S.ivf_assign(vecs, n_centroids=2).collect()}
-    # centroids are vec_id 0 and 1; each vector goes to its nearest
+    # the cells are the 2-centroid k-means codebook; each vector goes to
+    # its nearest centroid, ties to the lower id
+    cb = S.kmeans_codebook(vecs, n_centroids=2)
+    assert len(cb) == 2
     for vid, v in VECS:
-        c0 = _cos(v, VECS[0][1])
-        c1 = _cos(v, VECS[1][1])
+        c0 = _cos(v, cb[0])
+        c1 = _cos(v, cb[1])
         want = 0 if round(c0, 6) >= round(c1, 6) else 1
         assert assign[vid] == want, vid
+    # equal centroids tie on every vector: the lower centroid id wins
+    tied = S.ivf_assign(vecs, codebook=[VECS[0][1], VECS[0][1]]).collect()
+    assert {r.centroid_id for r in tied} == {0}
     top = S.ivf_topk(vecs, query_id=0, k=3, n_centroids=2).collect()
     members = [vid for vid, c in assign.items() if c == assign[0] and vid != 0]
     want_rank = sorted(((vid, round(_cos(VECS[vid][1], VECS[0][1]), 4)) for vid in members),
@@ -228,6 +234,16 @@ def test_kmeans_codebook_deterministic_and_separating(spark):
     top = [r.vec_id for r in
            S.ivf_topk(df, query_id=0, k=5, codebook=cb1).collect()]
     assert all(v < 100 for v in top) and len(top) == 5
+    # without a codebook, IVF runs kmeans_codebook(df, n_centroids)
+    cb16 = S.kmeans_codebook(df, n_centroids=16)
+    assert (sorted(S.ivf_assign(df).collect())
+            == sorted(S.ivf_assign(df, codebook=cb16).collect()))
+    assert (S.ivf_topk(df, query_id=0, k=5, n_centroids=2).collect()
+            == S.ivf_topk(df, query_id=0, k=5, codebook=cb1).collect())
+    # a corpus with no direction has no cells: empty, not a crash
+    zero = df.select("vec_id", F.array_repeat(F.lit(0.0), 4)
+                     .alias("embedding"))
+    assert S.kmeans_codebook(zero) == [] and S.ivf_assign(zero).count() == 0
 
 
 def test_multimodal_plumbing(spark, docs):

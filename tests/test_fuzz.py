@@ -283,6 +283,25 @@ def test_odd_numerals_equal_oracle(rec, value):
     test_non_ascii_numbers_equal_oracle(rec, 0, value)
 
 
+def test_long_numerals_fail_fast():
+    """A SPAN record that breaks the grammar after five long numerals is
+    rejected at once by both parsers: each digit run matches
+    ``FLOAT_PATTERN`` one way, so Python's ``re`` (the oracle, and the
+    core's re-read of a non-ASCII record) has no digit splits to
+    backtrack over. An ambiguous ``\\d+\\.?\\d*`` took seconds here."""
+    import time
+
+    n = "1" * 25
+    payload = f"PAGE w=612 h=792\nSPAN {n} {n} {n} {n} size={n} font=é"
+    pdf = pd.DataFrame({"conv_id": ["b0"], "turn_idx": [0], "role": ["user"],
+                        "text": [payload], "tool": ["page/v1"]})
+    t0 = time.perf_counter()
+    want = _oracle_blocks(payload)
+    got = blocks_batch(pdf)
+    assert time.perf_counter() - t0 < 1.0
+    assert list(got["text"]) == [b.text for b in want]
+
+
 def _assert_html_core_equals_oracle(payload):
     """The engine core equals ``strip_boilerplate`` on every field, and
     ``boilerplate_spans`` emits the oracle's offsets and block hashes."""

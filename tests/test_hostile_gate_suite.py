@@ -7,9 +7,14 @@ duplicate and near-duplicate rows, null/empty/zero-norm embeddings.
 
 The fixture-distribution gates can only certify the contracts on the
 generator's vocabulary; this suite certifies them where engines actually
-fork (it is how the Java-vs-RE2 \\s split was found). Gates whose oracle
-embeds literals derived from the real sf0.01 parquet (k-means
-codebooks) are excluded — their literals cannot describe this data."""
+fork (it is how the Java-vs-RE2 \\s split was found).
+
+`oracle_sql()` embeds the sf0.01 k-means codebook in the oracles of the
+gates that assign IVF cells, so those literals cannot describe this
+data. Those gates run against `ivf_oracle_sql` fed with the codebook of
+the hostile embeddings table instead (rebuilt without Spark by
+tools/annoracle.py). The other gates whose oracle embeds sf0.01
+literals (`ann_kmeans_refine`) are excluded."""
 
 import os
 import random
@@ -40,10 +45,12 @@ DOC_GATES = [
     "winnow_fingerprints",
 ]
 EMB_GATES = [
-    "ann_sq8_encode", "ann_sq8_topk", "ann_ivf_sq8_topk",
-    "ann_batch_topk", "ann_ivf_assign", "ann_ivf_topk",
-    "ann_ivf_topk_probe2", "ann_lsh_buckets", "ann_lsh_topk",
+    "ann_sq8_encode", "ann_sq8_topk", "ann_batch_topk", "ann_lsh_buckets",
     "ann_topk_cosine", "centroid_by_label", "embedding_cosine_dups",
+]
+IVF_GATES = [
+    "ann_ivf_topk", "ann_ivf_sq8_topk", "ann_ivf_kmeans_assign",
+    "ann_ivf_kmeans_topk", "semdedup_pairs", "semdedup_keep",
 ]
 
 LANGS = ["en", "de", "fr", "es", "zz", None]
@@ -106,15 +113,26 @@ def hostile_sf_dir(spark, tmp_path_factory):
     return d
 
 
-def _run_suite(spark, sf_dir, names):
-    from tools.check_correctness import check_gate
+def _run_suite(spark, sf_dir, names, oracles=None):
+    """Check each gate of ``names`` on the tables at ``sf_dir``: against
+    `oracle_sql()` through `check_gate`, or against the SQL of
+    ``oracles`` when given."""
+    import __spark_entry__ as E
+    from tools.check_correctness import check_gate, compare_frames
 
     con = duckdb.connect()
     for t in ("documents", "embeddings"):
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM "
                 f"read_parquet('{sf_dir}/{t}.parquet/*.parquet')")
+
+    def problems_of(name):
+        if oracles is None:
+            return check_gate(spark, con, sf_dir, name)
+        got = E.queries()[name](spark, sf_dir).toPandas()
+        return compare_frames(got, con.sql(oracles[name]).df(), {})
+
     failures = {name: problems for name in names
-                if (problems := check_gate(spark, con, sf_dir, name))}
+                if (problems := problems_of(name))}
     assert not failures, "\n".join(
         f"{n}: {'; '.join(m)}" for n, m in failures.items())
 
@@ -125,3 +143,16 @@ def test_document_gates_on_hostile_corpus(spark, hostile_sf_dir):
 
 def test_embedding_gates_on_hostile_corpus(spark, hostile_sf_dir):
     _run_suite(spark, hostile_sf_dir, EMB_GATES)
+
+
+def test_ivf_gates_on_hostile_corpus(spark, hostile_sf_dir):
+    """Cell assignment, probing and SemDeDup over null, empty, zero-norm
+    and duplicate embeddings, each oracle built on the hostile table's
+    own k-means codebook."""
+    import __spark_entry__ as E
+    from tools.annoracle import centroid_values_sql, kmeans_centroids
+
+    oracles = E.ivf_oracle_sql(centroid_values_sql(kmeans_centroids(
+        os.path.join(hostile_sf_dir, "embeddings.parquet"))))
+    assert sorted(oracles) == sorted(IVF_GATES)
+    _run_suite(spark, hostile_sf_dir, IVF_GATES, oracles)

@@ -1,9 +1,9 @@
-"""ANN quality evidence: recall@k and scanned-fraction for the bucketed
-ANN variants vs the exact brute-force baseline.
+"""ANN quality evidence: recall@k and scanned-fraction for the IVF and
+SQ8 ANN variants vs the exact brute-force baseline.
 
-The scale path (LSH buckets, IVF cells) trades recall for scan fraction;
-this harness quantifies both so the trade-off is a measured number, not
-prose. Results are recorded in BASELINE.md.
+The scale path (k-means IVF cells, SQ8 codes) trades recall for scan
+fraction or bytes; this harness quantifies both so the trade-off is a
+measured number, not prose. Results are recorded in BASELINE.md.
 
 Usage: python tools/ann_recall.py [sf_dir] [n_queries] [k]
 """
@@ -34,35 +34,20 @@ def main() -> None:
     spark = get_spark("ann-recall", cpus="8")
     embs = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet")).cache()
     n_vecs = embs.count()
-    # query from the HIGH end of the id space: the lowest-id vectors ARE
-    # the lowid codebook's centroids, so low-id queries would sit at the
-    # center of their own cells and inflate that method's recall by
-    # construction
+    # query from the HIGH end of the id space: a codebook seeded from
+    # low ids (as an earlier lowest-id codebook was) would put low-id
+    # queries at the center of their own cells and inflate recall by
+    # construction; high ids keep the protocol comparable across rounds
     query_ids = [r.vec_id for r in
                  embs.select("vec_id").orderBy(F.col("vec_id").desc())
                  .limit(n_queries).collect()]
 
-    lsh_planes = (2, 4, 8)
-    bucket_sizes, bucket_of = {}, {}
-    for p in lsh_planes:
-        b = S.lsh_buckets(embs, planes=p).cache()
-        bucket_sizes[p] = {
-            r.bucket: r.n for r in
-            b.groupBy("bucket").agg(F.count(F.lit(1)).alias("n")).collect()}
-        bucket_of[p] = {r.vec_id: r.bucket for r in b.collect()}
-
     kmeans_cb = S.kmeans_codebook(embs)
-
-    def cell_maps(codebook=None):
-        assign = S.ivf_assign(embs, codebook=codebook).cache()
-        sizes = {r.centroid_id: r.n for r in
-                 assign.groupBy("centroid_id")
-                 .agg(F.count(F.lit(1)).alias("n")).collect()}
-        of = {r.vec_id: r.centroid_id for r in assign.collect()}
-        return sizes, of
-
-    cell_sizes, cell_of = cell_maps()
-    km_sizes, km_of = cell_maps(kmeans_cb)
+    assign = S.ivf_assign(embs, codebook=kmeans_cb).cache()
+    cell_sizes = {r.centroid_id: r.n for r in
+                  assign.groupBy("centroid_id")
+                  .agg(F.count(F.lit(1)).alias("n")).collect()}
+    cell_of = {r.vec_id: r.centroid_id for r in assign.collect()}
 
     # true probe-2 cells per query (same ranking as ivf_topk: cosine
     # desc, centroid_id asc, 6dp rounding), computed driver-side in NumPy
@@ -70,39 +55,27 @@ def main() -> None:
 
     vec_rows = {r.vec_id: np.asarray(r.embedding, dtype=np.float64)
                 for r in embs.collect()}
-    lowid_ids = sorted(vec_rows)[:16]
-    lowid_mat = np.stack([vec_rows[c] for c in lowid_ids])
-    km_mat = np.asarray(kmeans_cb, dtype=np.float64)
-    km_ids = list(range(len(km_mat)))
+    cmat = np.asarray(kmeans_cb, dtype=np.float64)
+    cnorm = np.linalg.norm(cmat, axis=1)
 
-    def make_probe2(cmat, cent_ids):
-        cnorm = np.linalg.norm(cmat, axis=1)
-
-        def probe2_cells(qid):
-            qv = vec_rows[qid]
-            raw = cmat @ qv / (cnorm * np.linalg.norm(qv))
-            # round half AWAY from zero to mirror Spark's F.round
-            # (np.round is banker's round-half-to-even; a 6dp tie would
-            # attribute the wrong probe cell's scanned fraction)
-            scores = np.sign(raw) * np.floor(np.abs(raw) * 1e6 + 0.5) / 1e6
-            order = sorted(range(len(cent_ids)),
-                           key=lambda i: (-scores[i], cent_ids[i]))
-            return [cent_ids[i] for i in order[:2]]
-
-        return probe2_cells
-
-    probe2_cells = make_probe2(lowid_mat, lowid_ids)
-    km_probe2_cells = make_probe2(km_mat, km_ids)
+    def probe2_cells(qid):
+        qv = vec_rows[qid]
+        raw = cmat @ qv / (cnorm * np.linalg.norm(qv))
+        # round half AWAY from zero to mirror Spark's F.round
+        # (np.round is banker's round-half-to-even; a 6dp tie would
+        # attribute the wrong probe cell's scanned fraction)
+        scores = np.sign(raw) * np.floor(np.abs(raw) * 1e6 + 0.5) / 1e6
+        order = sorted(range(len(cmat)), key=lambda i: (-scores[i], i))
+        return order[:2]
 
     methods = {
-        **{f"lsh_p{p}": (lambda q, p=p: S.lsh_topk(embs, query_id=q, k=k, planes=p))
-           for p in lsh_planes},
-        "ivf_probe1": lambda q: S.ivf_topk(embs, query_id=q, k=k, n_probe=1),
-        "ivf_probe2": lambda q: S.ivf_topk(embs, query_id=q, k=k, n_probe=2),
         "ivf_km_probe1": lambda q: S.ivf_topk(
             embs, query_id=q, k=k, n_probe=1, codebook=kmeans_cb),
         "ivf_km_probe2": lambda q: S.ivf_topk(
             embs, query_id=q, k=k, n_probe=2, codebook=kmeans_cb),
+        "sq8": lambda q: S.sq8_topk(embs, query_id=q, k=k),
+        "ivf_sq8_probe1": lambda q: S.ivf_sq8_topk(
+            embs, query_id=q, k=k, n_probe=1, codebook=kmeans_cb),
     }
     recalls = {m: [] for m in methods}
     scanned = {m: [] for m in methods}
@@ -111,15 +84,12 @@ def main() -> None:
         for m, fn in methods.items():
             approx = set(topk_ids(fn(q)))
             recalls[m].append(len(exact & approx) / max(len(exact), 1))
-        for p in lsh_planes:
-            scanned[f"lsh_p{p}"].append(
-                bucket_sizes[p].get(bucket_of[p][q], 0) / n_vecs)
-        scanned["ivf_probe1"].append(cell_sizes.get(cell_of[q], 0) / n_vecs)
-        scanned["ivf_probe2"].append(
-            sum(cell_sizes.get(c, 0) for c in probe2_cells(q)) / n_vecs)
-        scanned["ivf_km_probe1"].append(km_sizes.get(km_of[q], 0) / n_vecs)
+        probe1 = cell_sizes.get(cell_of[q], 0) / n_vecs
+        scanned["ivf_km_probe1"].append(probe1)
         scanned["ivf_km_probe2"].append(
-            sum(km_sizes.get(c, 0) for c in km_probe2_cells(q)) / n_vecs)
+            sum(cell_sizes.get(c, 0) for c in probe2_cells(q)) / n_vecs)
+        scanned["sq8"].append(1.0)  # every vector's 1-byte/dim codes
+        scanned["ivf_sq8_probe1"].append(probe1)
 
     out = {"sf_dir": sf_dir, "n_vecs": n_vecs, "k": k, "n_queries": n_queries}
     for m in methods:

@@ -4,8 +4,9 @@ Runs every __spark_entry__.queries() entry on Spark and its
 oracle_sql() twin on DuckDB (views pre-registered for the sf tables),
 then compares row count, column names, and an order-insensitive value
 hash (columns sorted by name, rows sorted, values canonicalized).
-``check_gate`` is that comparison for one gate; tools/driver_sim.py and
-the hostile-table test suites call it too.
+``check_gate`` is that check for one gate; tools/driver_sim.py and the
+hostile-table test suites call it too. ``compare_frames`` is its compare
+half, for a caller that brings its own oracle SQL.
 
 Usage: python tools/check_correctness.py [sf_dir] [only_query ...]
        JSON_OUT=path python tools/check_correctness.py [sf_dir]
@@ -72,10 +73,9 @@ def check_gate(spark, con, sf_dir: str, name: str,
     """Run gate ``name`` on Spark at ``sf_dir`` and its oracle on the
     DuckDB connection ``con``; return the problems found (empty: pass).
 
-    The checks, in order: both engines run, row counts agree, column
-    names agree, and the value hashes agree; on a hash mismatch the
-    first differing cell is named. ``verdict``, if given, is filled with
-    the per-gate JSON_OUT record (rows/schema/hash flags, row counts, err).
+    Both engines must run; then `compare_frames` compares the results.
+    ``verdict``, if given, is filled with the per-gate JSON_OUT record
+    (rows/schema/hash flags, row counts, err).
     """
     rec = verdict if verdict is not None else {}
     rec.update(rows_match=False, schema_match=False, hash_match=False,
@@ -96,6 +96,16 @@ def check_gate(spark, con, sf_dir: str, name: str,
     except Exception as exc:  # noqa: BLE001
         rec["err"] = f"duckdb error: {str(exc)[:200]}"
         return [rec["err"]]
+    return compare_frames(got, want, rec)
+
+
+def compare_frames(got: pd.DataFrame, want: pd.DataFrame,
+                   rec: dict) -> list[str]:
+    """Compare a Spark result ``got`` with its oracle result ``want``;
+    return the problems found (empty: equal). In order: row counts,
+    column names, then the value hash, naming the first differing cell
+    on a hash mismatch. ``rec`` receives the rows/schema/hash flags and,
+    if the canonicalizer fails, the error."""
     problems = []
     rec["rows_match"] = len(got) == len(want)
     if not rec["rows_match"]:
