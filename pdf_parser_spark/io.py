@@ -1,20 +1,22 @@
 """Pluggable table IO: parquet in the sandbox, Iceberg on a cluster.
 
-Every read/write/manifest-commit in the engine funnels through one
+Table reads and writes and the manifest commits funnel through one
 ``TableIO`` object so the storage format is a deployment decision, not an
 operator concern (SURVEY.md section 7: "keep the IO layer pluggable").
 The sandbox has no Iceberg runtime jar, so the default is parquet
 datasets with file-based atomic manifest commits; setting
 ``SPARK_GRAFT_TABLE_FORMAT=iceberg`` (plus the usual catalog configs on
-the SparkSession) switches every call site to Iceberg tables, where the
-manifest/resume protocol (operators/manifest.py) upgrades to manifest
-rows committed in the same transaction as the data append.
+the SparkSession) switches those call sites to Iceberg tables.
 
-The north rule's "Iceberg tables" requirement maps onto this seam: the
-bucket write becomes ``df.writeTo(table).overwritePartitions()`` and the
-manifest commit an append to a manifest table inside the same snapshot —
-``IcebergTableIO`` carries that wiring; its methods raise with a clear
-message when the runtime jar is absent rather than failing obscurely.
+The north rule's "Iceberg tables" requirement maps onto this seam for
+reads, whole-table writes (``writeTo(table).append()`` /
+``createOrReplace()``) and the manifest protocol, whose catalog methods
+raise with a clear message when the runtime jar is absent rather than
+failing obscurely. The manifested bucket write does not go through
+``write``: its Arrow write tasks put one parquet file per bucket
+straight into the output directory (operators/manifest.py), so an
+Iceberg deployment of it would commit those files with the manifest
+rows in one snapshot, and that wiring does not exist here.
 
 Next to the seam: ``write_bucketed`` (bucketed catalog tables, the
 write-time shuffle a keyed join then skips) and ``read_jsonl`` (JSONL
@@ -50,20 +52,8 @@ class ParquetTableIO:
         reader = spark.read if schema is None else spark.read.schema(schema)
         return reader.parquet(target)
 
-    def write(
-        self,
-        df: DataFrame,
-        target: str,
-        mode: str = "overwrite",
-        partition_by: tuple = (),
-        dynamic_overwrite: bool = False,
-    ) -> None:
-        w = df.write.mode(mode)
-        if dynamic_overwrite:
-            w = w.option("partitionOverwriteMode", "dynamic")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(target)
+    def write(self, df: DataFrame, target: str, mode: str = "overwrite") -> None:
+        df.write.mode(mode).parquet(target)
 
     # --- manifest commit protocol (operators/manifest.py) ---------------
 
@@ -116,41 +106,13 @@ class IcebergTableIO:
             return self._fallback.read(spark, target, schema=schema)
         return spark.read.format("iceberg").load(target)
 
-    def write(
-        self,
-        df: DataFrame,
-        target: str,
-        mode: str = "overwrite",
-        partition_by: tuple = (),
-        dynamic_overwrite: bool = False,
-    ) -> None:
+    def write(self, df: DataFrame, target: str, mode: str = "overwrite") -> None:
         if self._is_path(target):
-            self._fallback.write(
-                df, target, mode=mode, partition_by=partition_by,
-                dynamic_overwrite=dynamic_overwrite)
-            return
-        from pyspark.sql import functions as _F
-        from pyspark.sql.utils import AnalysisException
-
-        def _partitioned_writer():
-            w = df.writeTo(target)
-            if partition_by:
-                # declared table partitioning — without it a later
-                # overwritePartitions() would replace the WHOLE table,
-                # destroying previously committed buckets
-                w = w.partitionedBy(*[_F.col(c) for c in partition_by])
-            return w
-
-        if dynamic_overwrite:
-            try:
-                df.writeTo(target).overwritePartitions()
-            except AnalysisException:
-                # bootstrap: first run against a not-yet-existing table
-                _partitioned_writer().create()
+            self._fallback.write(df, target, mode=mode)
         elif mode == "append":
             df.writeTo(target).append()
         elif mode == "overwrite":
-            _partitioned_writer().createOrReplace()
+            df.writeTo(target).createOrReplace()
         else:
             raise ValueError(
                 f"IcebergTableIO.write: unsupported mode {mode!r} for "

@@ -14,21 +14,25 @@ Protocol:
   and conversation-aligned so a conversation is never split across
   manifest units (exact resume can then guarantee no duplicate / missing
   *turns*).
-* **one Spark job per (re)submission**: all pending buckets are extracted
-  in a single pass over the input, so input IO is independent of
-  ``n_buckets`` (a 64-bucket run reads the input once, not 64 times).
+* **one Spark query per (re)submission**: all pending buckets are
+  extracted in a single pass over the input, so input IO is independent
+  of ``n_buckets`` (a 64-bucket run reads the input once, not 64 times).
   Extraction keeps the input's split parallelism; its output is then
-  hash-clustered by bucket and written with ``partitionBy("bucket")`` +
-  dynamic partition overwrite, so each committed bucket is one file
-  instead of one file per extraction task. Per-bucket row/error counts
-  come from a post-write count-only scan that reads with the recorded
-  schema (no footer inference) and is pruned to the written buckets.
+  hash-clustered by bucket, and a ``mapInArrow`` writer above that
+  shuffle writes each bucket it receives as one parquet file with
+  pyarrow: a dot-prefixed temp file (Spark's file index skips it)
+  renamed to ``bucket=k/part-00000.parquet``, so a retried task replaces
+  the file instead of adding a second one. There is no Spark file
+  commit protocol (no staging renames, no per-file ``chmod``) and no
+  second scan: each writer yields ``(bucket, rows_out, error_rows)``,
+  read back from the footer and the ``metadata`` column of the file it
+  just closed, and the driver collects those rows.
 * the written schema is **recorded**: before its write, each job stores
-  its plan's schema in ``_manifests/_schema.json``. Committed reads
-  (the count scan, ``read_output``) plan from the manifests and this
-  schema instead of rediscovering them from the files, as Delta Lake
-  and Iceberg readers plan from table metadata; only output dirs that
-  predate the sidecar fall back to schema inference.
+  its plan's schema in ``_manifests/_schema.json``. ``read_output``
+  plans from the manifests and this schema instead of rediscovering
+  them from the files, as Delta Lake and Iceberg readers plan from
+  table metadata; only output dirs that predate the sidecar fall back
+  to schema inference.
 * ``rows_in`` is **observed**, not assumed: the input side of the job
   carries an ``Observation`` counting rows actually fed to extraction;
   the job fails fast if the observed total disagrees with the written
@@ -44,14 +48,16 @@ Protocol:
   ``turns_per_sec = rows_out / wall`` sums to the job's true throughput.
 * resume = set-difference of pending buckets against committed manifests
   (the anti-join of SURVEY.md section 4.2), then one job over only those.
-  A bucket with data files but no manifest is re-run from scratch
-  (dynamic overwrite replaces exactly that partition), which is what
-  makes the resume *exact*. Committed manifests are validated against
+  A bucket with data files but no manifest is re-run from scratch (its
+  directory is removed before the job), which is what makes the resume
+  *exact*. Committed manifests are validated against
   the current invocation's (n_buckets, variant, input_path, pages_spec)
   — a mismatched resume fails fast instead of silently mixing outputs.
 
-At cluster scale the same protocol runs with Iceberg table appends per
-bucket group; buckets stay O(thousands) so the manifest table is tiny.
+The writers and the driver reach ``out_dir`` as a local path, so on a
+cluster it must be a filesystem every executor mounts. At cluster scale
+the same protocol runs with Iceberg table appends per bucket group;
+buckets stay O(thousands) so the manifest table is tiny.
 """
 
 from __future__ import annotations
@@ -60,7 +66,12 @@ import json
 import os
 import shutil
 import time
-from contextlib import contextmanager
+import uuid
+from contextlib import ExitStack
+
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -68,6 +79,7 @@ from pyspark.sql.types import IntegerType, StructType
 
 from pdf_parser_spark.io import get_table_io
 from pdf_parser_spark.operators.extract import LAYOUT_SCHEMA_DDL, extract_layouts
+from pdf_parser_spark.pyworker import python_task
 
 
 def bucket_expr(n_buckets: int) -> F.Column:
@@ -143,6 +155,12 @@ def _recorded_schema(manifest_dir: str) -> StructType | None:
         return StructType.fromJson(json.load(f)).add("bucket", IntegerType())
 
 
+def _bucket_in(buckets) -> F.Column:
+    """``bucket IN (...)`` as one SQL expression: ``isin`` over a Python
+    list builds every literal through its own py4j calls."""
+    return F.expr(f"bucket IN ({', '.join(str(int(k)) for k in buckets)})")
+
+
 def bucket_job_plan(
     src: DataFrame,
     buckets: list,
@@ -161,12 +179,12 @@ def bucket_job_plan(
     written as one file. The partition count is explicit so AQE cannot
     coalesce the write into a single task.
 
-    With an Exchange above it, the ``rows_in`` Observation's CollectMetrics
-    node sits in a shuffle stage that AQE's ``AQEPropagateEmptyRelation``
-    drops when the input is empty, and ``obs.get`` then fails;
-    ``_run_bucket_job`` runs the write with that rule excluded.
+    The ``rows_in`` Observation's CollectMetrics node sits in the shuffle
+    stage below the Exchange. AQE's empty-relation rule does not fold the
+    ``bucket_write_plan`` writer above an empty stage, so the node and its
+    metric survive an input that is empty only at run time.
     """
-    part = src.filter(F.col("bucket").isin([int(k) for k in buckets])).drop("bucket")
+    part = src.filter(_bucket_in(buckets)).drop("bucket")
     if obs is not None:
         part = part.observe(obs, F.count(F.lit(1)).alias("rows_in"))
     layouts = extract_layouts(part, variant=variant)
@@ -175,41 +193,81 @@ def bucket_job_plan(
         n_parts, "bucket")
 
 
-_EXCLUDED_RULES = "spark.sql.adaptive.optimizer.excludedRules"
-_EMPTY_RELATION_RULE = (
-    "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation")
+_PART_FILE = "part-00000.parquet"
+_ROW_GROUP_BYTES = 64 << 20
+_COUNTS_DDL = "bucket int, rows_out long, error_rows long"
 
 
-@contextmanager
-def _keep_empty_stages(spark: SparkSession):
-    """Exclude AQE's empty-relation rule for the duration of one write, so
-    an empty shuffle stage keeps the ``rows_in`` CollectMetrics node below
-    it (a missing metric must fail the run, never read as 0)."""
-    prev = spark.conf.get(_EXCLUDED_RULES, None)
-    rules = f"{prev},{_EMPTY_RELATION_RULE}" if prev else _EMPTY_RELATION_RULE
-    spark.conf.set(_EXCLUDED_RULES, rules)
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(_EXCLUDED_RULES)
-        else:
-            spark.conf.set(_EXCLUDED_RULES, prev)
+def _write_buckets(batches, out_dir: str):
+    """Write each bucket in ``batches`` as ``bucket=k/part-00000.parquet``
+    and yield its ``(bucket, rows_out, error_rows)`` row.
+
+    One ``ParquetWriter`` per bucket stays open over the batches' schema
+    without ``bucket`` (the recorded schema; ``ts`` stays tz-aware, so
+    Spark reads it back as ``timestamp``). Rows are buffered per bucket
+    up to ``_ROW_GROUP_BYTES`` so a row group is not one batch's slice.
+    The file is written under a dot-prefixed temp name, which Spark's
+    file index skips, and renamed into place once closed. The counts
+    come from that closed file: ``rows_out`` from its footer,
+    ``error_rows`` from its ``metadata`` column."""
+    open_, pending = {}, {}
+
+    def flush(k):
+        open_[k][0].write_table(pa.Table.from_batches(pending.pop(k)))
+
+    with ExitStack() as writers:  # a failed task closes what it opened
+        for batch in batches:
+            keys = batch.column("bucket")
+            body = batch.drop_columns(["bucket"])
+            for k in pc.unique(keys).to_pylist():
+                if k not in open_:
+                    bucket_dir = os.path.join(out_dir, f"bucket={k}")
+                    os.makedirs(bucket_dir, exist_ok=True)
+                    tmp = os.path.join(bucket_dir, f".part-{uuid.uuid4().hex}.tmp")
+                    writer = writers.enter_context(pq.ParquetWriter(tmp, body.schema))
+                    open_[k] = (writer, tmp)
+                pending.setdefault(k, []).append(body.filter(pc.equal(keys, k)))
+                if sum(b.nbytes for b in pending[k]) >= _ROW_GROUP_BYTES:
+                    flush(k)
+        for k, (writer, tmp) in open_.items():
+            if k in pending:
+                flush(k)
+            writer.close()
+            path = os.path.join(out_dir, f"bucket={k}", _PART_FILE)
+            os.replace(tmp, path)
+            with pq.ParquetFile(path) as written:
+                rows_out = written.metadata.num_rows
+                meta = written.read(columns=["metadata"]).column("metadata")
+            errors = pc.sum(pc.is_valid(pc.map_lookup(meta, pa.scalar("error"), "all")))
+            yield pa.record_batch({"bucket": pa.array([k], pa.int32()),
+                                   "rows_out": [rows_out],
+                                   "error_rows": [errors.as_py() or 0]})
+
+
+def bucket_write_plan(plan: DataFrame, out_dir: str) -> DataFrame:
+    """``plan`` (a ``bucket_job_plan``) with the bucket writer above its
+    Exchange: a ``mapInArrow`` that writes every bucket its task receives
+    and returns one ``bucket, rows_out, error_rows`` row per bucket."""
+
+    @python_task
+    def write(batches):
+        yield from _write_buckets(batches, out_dir)
+
+    return plan.mapInArrow(write, _COUNTS_DDL)
 
 
 def _run_bucket_job(
-    spark: SparkSession,
     src: DataFrame,
     out_dir: str,
     buckets: list,
     n_buckets: int,
     variant: str,
 ) -> tuple:
-    """One Spark job: extract + write every bucket in ``buckets``.
+    """One Spark query: extract + write every bucket in ``buckets``.
 
     Returns (per-bucket counts dict, wall_ms). Single input scan
-    regardless of len(buckets); dynamic partition overwrite touches
-    only the written ``bucket=k`` directories.
+    regardless of len(buckets); the writers touch only the
+    ``bucket=k`` directories of ``buckets``, which are removed first.
     """
     t0 = time.monotonic()
     for k in buckets:  # uncommitted partial output: redo from scratch
@@ -217,44 +275,13 @@ def _run_bucket_job(
         if os.path.isdir(bucket_dir):
             shutil.rmtree(bucket_dir)
 
-    io = get_table_io()
     obs = Observation(f"rows_in_{buckets[0]}_{buckets[-1]}")
     plan = bucket_job_plan(src, buckets, n_buckets, variant, obs=obs)
-    manifest_dir = os.path.join(out_dir, "_manifests")
-    _write_schema_sidecar(manifest_dir, plan.drop("bucket").schema)
-    with _keep_empty_stages(spark):
-        io.write(
-            plan,
-            out_dir,
-            mode="overwrite",
-            partition_by=("bucket",),
-            dynamic_overwrite=True,
-        )
+    _write_schema_sidecar(
+        os.path.join(out_dir, "_manifests"), plan.drop("bucket").schema)
+    rows = bucket_write_plan(plan, os.path.abspath(out_dir)).collect()
+    counts = {r["bucket"]: (r["rows_out"], r["error_rows"]) for r in rows}
     rows_in_total = int(obs.get["rows_in"])
-    if rows_in_total == 0:
-        # zero input rows -> the dynamic-overwrite write emitted no data
-        # files; nothing to scan for counts
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        return {}, wall_ms
-
-    # Post-write scan: counts only, with the recorded schema, pruned to
-    # the buckets this job wrote. A dir with no data file at all (every
-    # observed row dropped) reads as empty, which the invariant reports.
-    counts = {
-        int(r["bucket"]): (int(r["rows_out"]), int(r["error_rows"]))
-        for r in (
-            io.read(spark, out_dir, schema=_recorded_schema(manifest_dir))
-            .filter(F.col("bucket").isin([int(k) for k in buckets]))
-            .groupBy("bucket")
-            .agg(
-                F.count(F.lit(1)).alias("rows_out"),
-                F.sum(
-                    F.map_contains_key(F.col("metadata"), "error").cast("long")
-                ).alias("error_rows"),
-            )
-            .collect()
-        )
-    }
     rows_out_total = sum(c[0] for c in counts.values())
     if rows_in_total != rows_out_total:
         raise RuntimeError(
@@ -275,12 +302,12 @@ def run_with_manifest(
     input_path: str = "",
     pages_spec: str | None = None,
 ) -> dict:
-    """Extract layouts with checkpoint manifests, one job per submission.
+    """Extract layouts with checkpoint manifests, one query per submission.
 
     Returns ``{"processed": [...], "skipped": [...], "manifests": {...}}``.
     Re-invoking resumes exactly: committed buckets are skipped, and the
     uncommitted ones (written or not) are recomputed in a single pass and
-    their partitions overwritten.
+    their bucket directories rewritten.
     """
     manifest_dir = os.path.join(out_dir, "_manifests")
     done = committed_buckets(manifest_dir)
@@ -298,7 +325,7 @@ def run_with_manifest(
     processed: list = []
     if pending:
         counts, wall_ms = _run_bucket_job(
-            spark, src, out_dir, pending, n_buckets, variant)
+            src, out_dir, pending, n_buckets, variant)
         wall_s = max(wall_ms / 1000.0, 1e-9)
         for k in pending:
             rows_out, error_rows = counts.get(k, (0, 0))
@@ -329,8 +356,8 @@ def read_output(spark: SparkSession, out_dir: str) -> DataFrame:
 
     Planned from the manifests and the recorded schema, so it starts no
     Spark job (no footer read to infer the schema; a ``get_spark``
-    session lists the partitions on the driver). An ``isin`` filter on
-    the ``bucket`` partition column prunes uncommitted partitions at the
+    session lists the partitions on the driver). A ``bucket IN (...)``
+    filter on the partition column prunes uncommitted partitions at the
     file index, then the column is dropped to keep the layout schema
     stable. Output dirs without the sidecar infer the schema.
     """
@@ -338,8 +365,7 @@ def read_output(spark: SparkSession, out_dir: str) -> DataFrame:
     done = committed_buckets(manifest_dir)
     schema = _recorded_schema(manifest_dir)
     if not done or all(m.get("rows_out", 0) == 0 for m in done.values()):
-        # an all-empty run writes no data files (dynamic overwrite emits
-        # nothing) — surface the stable empty relation, not a scan error,
+        # an all-empty run writes no data files — surface the stable empty relation, not a scan error,
         # in the run's recorded schema so empty and non-empty paths of the
         # same pipeline agree column-for-column (LAYOUT_SCHEMA_DDL is only
         # the fallback for output dirs without the sidecar).
@@ -348,7 +374,7 @@ def read_output(spark: SparkSession, out_dir: str) -> DataFrame:
         return spark.createDataFrame([], schema).drop("bucket")
     return (
         get_table_io().read(spark, out_dir, schema=schema)
-        .filter(F.col("bucket").isin([int(k) for k in sorted(done)]))
+        .filter(_bucket_in(sorted(done)))
         .drop("bucket")
     )
 

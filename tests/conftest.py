@@ -1,6 +1,13 @@
 import os
 
 import pytest
+from hypothesis import settings
+
+# Fuzz runs replay: the same examples on every run, and a failure prints
+# the blob that reproduces it. `--hypothesis-profile=default` draws fresh
+# random examples instead.
+settings.register_profile("derandomized", derandomize=True, print_blob=True)
+settings.load_profile("derandomized")
 
 
 @pytest.fixture(scope="session")

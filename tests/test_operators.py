@@ -164,12 +164,14 @@ def test_manifest_resume_validation(spark, transcripts_sf0001, tmp_path):
 def test_manifest_job_is_single_scan(spark, transcripts_sf0001):
     """The whole-run plan reads the input exactly once for ANY bucket
     count, and its one shuffle is the bucket clustering of the write,
-    above extraction: the MapInPandas keeps the input-split parallelism."""
-    from pdf_parser_spark.operators.manifest import bucket_expr, bucket_job_plan
+    above extraction: the MapInPandas keeps the input-split parallelism,
+    and the MapInArrow bucket writer sits above the shuffle."""
+    from pdf_parser_spark.operators.manifest import (
+        bucket_expr, bucket_job_plan, bucket_write_plan)
 
     src = spark.read.parquet(transcripts_sf0001).withColumn(
         "bucket", bucket_expr(64))
-    plan_df = bucket_job_plan(src, list(range(64)), 64)
+    plan_df = bucket_write_plan(bucket_job_plan(src, list(range(64)), 64), "out")
     plan = plan_df._sc._jvm.PythonSQLUtils.explainString(
         plan_df._jdf.queryExecution(), "formatted")
     import re
@@ -181,6 +183,69 @@ def test_manifest_job_is_single_scan(spark, transcripts_sf0001):
         plan, re.M)) == 1
     tree = plan.split("\n\n", 1)[0]
     assert re.search(r"Exchange \(\d+\)\n(?:.*\n)*.*\+- MapInPandas", tree)
+    assert re.search(r"MapInArrow \(\d+\)\n(?:.*\n)*.*\+- Exchange", tree)
+
+
+def _sql_executions(spark) -> int:
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return spark._jsparkSession.sharedState().statusStore().executionsList().size()
+
+
+def test_manifest_run_is_one_query(spark, transcripts_sf0001, tmp_path):
+    """A first run is one SQL execution (extraction, write and counts
+    together); a full-skip resume runs none; no temp file is left."""
+    src = spark.read.parquet(transcripts_sf0001)
+    out_dir = str(tmp_path / "one_query")
+    before = _sql_executions(spark)
+    first = run_with_manifest(spark, src, out_dir, n_buckets=4)
+    assert _sql_executions(spark) == before + 1
+    again = run_with_manifest(spark, src, out_dir, n_buckets=4)
+    assert _sql_executions(spark) == before + 1
+    assert first["processed"] == [0, 1, 2, 3] and again["processed"] == []
+    assert [f for _d, _s, files in os.walk(out_dir)
+            for f in files if f.startswith(".")] == []
+
+
+def test_manifest_stale_temp_file_is_not_read(spark, transcripts_sf0001,
+                                              tmp_path, monkeypatch):
+    """A writer's temp file left by a failed attempt is read neither from
+    an uncommitted bucket (the rerun removes the bucket dir) nor from a
+    committed one (Spark's file index skips dot-prefixed files), and the
+    committed-bucket filter prunes at the scan."""
+    import re
+    import shutil
+
+    from pdf_parser_spark.operators import manifest
+
+    out_dir = str(tmp_path / "stale")
+    src = spark.read.parquet(transcripts_sf0001)
+    commit = manifest._commit_manifest
+
+    def crash_after_first(manifest_dir, m):
+        if m["bucket"] > 0:
+            raise RuntimeError("injected failure")
+        commit(manifest_dir, m)
+
+    monkeypatch.setattr(manifest, "_commit_manifest", crash_after_first)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_with_manifest(spark, src, out_dir, n_buckets=4)
+    monkeypatch.undo()
+    assert sorted(committed_buckets(os.path.join(out_dir, "_manifests"))) == [0]
+    for k in (0, 1):  # committed, uncommitted: a full copy of the bucket
+        bucket_dir = os.path.join(out_dir, f"bucket={k}")
+        shutil.copy(os.path.join(bucket_dir, "part-00000.parquet"),
+                    os.path.join(bucket_dir, ".part-stale.tmp"))
+    partial = read_output(spark, out_dir)
+    plan = partial._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"PartitionFilters: \[[^\]]*bucket", plan), plan
+    bucket_of = manifest.bucket_expr(4)
+    assert partial.count() == src.filter(bucket_of == 0).count()
+
+    run_with_manifest(spark, src, out_dir, n_buckets=4)
+    assert not os.path.exists(os.path.join(out_dir, "bucket=1", ".part-stale.tmp"))
+    got = read_output(spark, out_dir)
+    assert got.count() == src.count()
+    assert _by_key(got) == _by_key(extract_layouts(src))
 
 
 def test_manifest_empty_input(spark, transcripts_sf0001, tmp_path):

@@ -123,80 +123,40 @@ class _FakeWriterV2:
     absent in this sandbox, so the catalog branches are contract-tested
     against the exact writeTo protocol they must emit)."""
 
-    def __init__(self, log, fail_overwrite=False):
+    def __init__(self, log):
         self.log = log
-        self.fail_overwrite = fail_overwrite
-
-    def partitionedBy(self, *cols):
-        self.log.append(("partitionedBy", tuple(str(c) for c in cols)))
-        return self
-
-    def overwritePartitions(self):
-        if self.fail_overwrite:
-            from pyspark.sql.utils import AnalysisException
-
-            self.log.append(("overwritePartitions", "raise"))
-            raise AnalysisException("TABLE_OR_VIEW_NOT_FOUND")
-        self.log.append(("overwritePartitions",))
 
     def append(self):
         self.log.append(("append",))
-
-    def create(self):
-        self.log.append(("create",))
 
     def createOrReplace(self):
         self.log.append(("createOrReplace",))
 
 
 class _FakeDF:
-    def __init__(self, log, fail_overwrite_once=False):
+    def __init__(self, log):
         self.log = log
-        self._fail_next = fail_overwrite_once
 
     def writeTo(self, target):
         self.log.append(("writeTo", target))
-        w = _FakeWriterV2(self.log, fail_overwrite=self._fail_next)
-        self._fail_next = False
-        return w
+        return _FakeWriterV2(self.log)
 
 
 def test_iceberg_write_contract(spark):
     """Every IcebergTableIO.write branch executes against a recorded-call
-    fake: dynamic overwrite -> overwritePartitions; bootstrap (table
-    missing) -> partitionedBy(...).create(); append -> append();
-    overwrite -> partitionedBy(...).createOrReplace(); unknown mode ->
-    ValueError. Declared partitioning is asserted on every
-    table-(re)creating path — without it a later overwritePartitions
-    would replace the whole table and destroy committed buckets."""
+    fake: append -> append(); overwrite -> createOrReplace(); unknown
+    mode -> ValueError."""
     from pdf_parser_spark.io import IcebergTableIO
 
     iio = IcebergTableIO()
-
-    log = []
-    iio.write(_FakeDF(log), "cat.db.layouts", mode="overwrite",
-              partition_by=("bucket",), dynamic_overwrite=True)
-    assert log == [("writeTo", "cat.db.layouts"), ("overwritePartitions",)]
-
-    log = []
-    iio.write(_FakeDF(log, fail_overwrite_once=True), "cat.db.layouts",
-              mode="overwrite", partition_by=("bucket",),
-              dynamic_overwrite=True)
-    assert log == [
-        ("writeTo", "cat.db.layouts"), ("overwritePartitions", "raise"),
-        ("writeTo", "cat.db.layouts"),
-        ("partitionedBy", ("Column<'bucket'>",)), ("create",)]
 
     log = []
     iio.write(_FakeDF(log), "cat.db.manifests", mode="append")
     assert log == [("writeTo", "cat.db.manifests"), ("append",)]
 
     log = []
-    iio.write(_FakeDF(log), "cat.db.layouts", mode="overwrite",
-              partition_by=("bucket",))
-    assert log == [
-        ("writeTo", "cat.db.layouts"),
-        ("partitionedBy", ("Column<'bucket'>",)), ("createOrReplace",)]
+    iio.write(_FakeDF(log), "cat.db.layouts", mode="overwrite")
+    assert log == [("writeTo", "cat.db.layouts"), ("createOrReplace",)]
 
     with pytest.raises(ValueError, match="unsupported mode"):
         iio.write(_FakeDF([]), "cat.db.layouts", mode="ignore")

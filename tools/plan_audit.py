@@ -69,11 +69,13 @@ def audit_all(spark) -> list:
               "columns the UDF consumes."),
     )
 
-    from pdf_parser_spark.operators.manifest import bucket_expr, bucket_job_plan
+    from pdf_parser_spark.operators.manifest import (
+        bucket_expr, bucket_job_plan, bucket_write_plan)
 
-    manifest_plan_df = bucket_job_plan(
-        tr.withColumn("bucket", bucket_expr(64)), list(range(64)), 64)
+    manifest_plan_df = bucket_write_plan(bucket_job_plan(
+        tr.withColumn("bucket", bucket_expr(64)), list(range(64)), 64), "out")
     manifest_plan = formatted(manifest_plan_df)
+    tree = manifest_plan.split("\n\n", 1)[0]
     assert len(re.findall(r"^\(\d+\) Scan parquet", manifest_plan, re.M)) == 1, \
         "manifest job: more than one input scan"
     assert len(re.findall(r"^\(\d+\) Exchange", manifest_plan, re.M)) == 1, \
@@ -81,21 +83,24 @@ def audit_all(spark) -> list:
     assert len(re.findall(
         r"^\(\d+\) Exchange\n.*\nArguments: hashpartitioning\(bucket#",
         manifest_plan, re.M)) == 1, "manifest job: shuffle is not by bucket"
-    assert re.search(r"Exchange \(\d+\)\n(?:.*\n)*.*\+- MapInPandas",
-                     manifest_plan.split("\n\n", 1)[0]), \
+    assert re.search(r"Exchange \(\d+\)\n(?:.*\n)*.*\+- MapInPandas", tree), \
         "manifest job: extraction is not below the bucket shuffle"
+    assert re.search(r"MapInArrow \(\d+\)\n(?:.*\n)*.*\+- Exchange", tree), \
+        "manifest job: the bucket writer is not above the bucket shuffle"
     sections.append((
         "Manifest single-pass job (checkpoint/resume write path)",
-        ("ALL pending buckets are extracted in ONE job: exactly one input "
-         "Scan (asserted) and exactly one Exchange, hashpartitioning(bucket) "
-         "above the MapInPandas (asserted). The bucket predicate rides the "
-         "one scan and extraction runs on the input splits, so "
-         "the mega-conversation cannot serialize it; only its output is "
-         "clustered by bucket (min(buckets, defaultParallelism) partitions, "
-         "explicit so AQE cannot coalesce the write into one task) before "
-         "the partitionBy(bucket) dynamic-overwrite write, which then "
-         "commits one file per bucket instead of one per extraction task "
-         "per bucket. Input IO is independent of n_buckets."),
+        ("ALL pending buckets are extracted and written in ONE query: "
+         "exactly one input Scan (asserted) and exactly one Exchange, "
+         "hashpartitioning(bucket) above the MapInPandas (asserted), with "
+         "the MapInArrow bucket writer above it (asserted). The bucket "
+         "predicate rides the one scan and extraction runs on the input "
+         "splits, so the mega-conversation cannot serialize it; only its "
+         "output is clustered by bucket (min(buckets, defaultParallelism) "
+         "partitions, explicit so AQE cannot coalesce the write into one "
+         "task). Each writer task writes every bucket it receives as one "
+         "parquet file with pyarrow and returns that file's row and error "
+         "counts, so there is no Spark file commit and no count scan. "
+         "Input IO is independent of n_buckets."),
         compact(manifest_plan)))
 
     audit(
