@@ -1,5 +1,6 @@
-"""Benchmark harness: times the gates named in ``__spark_entry__.BENCH``
-at $SPARK_GRAFT_SF_DIR on local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
+"""Benchmark harness: times the gates named in ``__spark_entry__.BENCH`` —
+the records registered with ``bench=True``, in registration order — at
+$SPARK_GRAFT_SF_DIR on local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
 
     {"metric": ..., "value": <total sec>, "unit": "sec",
      "queries": {name: min sec, ...},

@@ -8,7 +8,9 @@ ascending, DuckDB NULLS LAST; SQL joins never match NULL keys while
 window partitions group them), so every temporal operator needs an
 explicit null contract, pinned here by running the REAL
 queries()-vs-oracle_sql() pairs over adversarial tables with the
-driver's own value-hash compare."""
+driver's own value-hash compare. A gate joins a suite here by the
+``hostile=`` field of its record in `__spark_entry__.GATES` ("events"
+or "order")."""
 
 import os
 import random
@@ -18,14 +20,11 @@ import duckdb
 import pandas as pd
 import pytest
 
-EVENT_GATES = [
-    "asof_join_latest", "interval_join_events", "hyper_rollup",
-    "distinct_kmv", "rate_anomaly", "funnel_stages", "funnel_counts",
-    "value_percentiles", "retention_cohorts", "zorder_key",
-    "skew_report", "hist_quantiles", "json_props_rollup",
-    "ewma_hourly", "hist_quantiles_by_type",
-]
-ORDER_GATES = ["merge_upsert", "scd2_history"]
+import __spark_entry__ as E
+
+EVENT_GATES, ORDER_GATES = (
+    [name for name, gate in E.GATES.items() if gate.hostile == suite]
+    for suite in ("events", "order"))
 
 TYPES = ["click", "view", "purchase", "signup", "error", None]
 

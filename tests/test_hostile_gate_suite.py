@@ -9,12 +9,14 @@ The fixture-distribution gates can only certify the contracts on the
 generator's vocabulary; this suite certifies them where engines actually
 fork (it is how the Java-vs-RE2 \\s split was found).
 
-`oracle_sql()` embeds the sf0.01 k-means codebook in the oracles of the
-gates that assign IVF cells, so those literals cannot describe this
-data. Those gates run against `ivf_oracle_sql` fed with the codebook of
-the hostile embeddings table instead (rebuilt without Spark by
-tools/annoracle.py). The other gates whose oracle embeds sf0.01
-literals (`ann_kmeans_refine`) are excluded."""
+A gate joins a suite here by the ``hostile=`` field of its record in
+`__spark_entry__.GATES` ("documents", "embeddings" or "ivf"); a gate
+left out says why in a comment on its record. `oracle_sql()` embeds the
+sf0.01 k-means codebook in the oracles of the gates that assign IVF
+cells, so those literals cannot describe this data: the "ivf" gates run
+against `ivf_oracle_sql` fed with the codebook of the hostile
+embeddings table instead (rebuilt without Spark by
+tools/annoracle.py)."""
 
 import os
 import random
@@ -23,35 +25,12 @@ import duckdb
 import pandas as pd
 import pytest
 
+import __spark_entry__ as E
 from tests.test_cross_engine_fuzz import _PIECES
 
-DOC_GATES = [
-    "bm25_topk", "cms_heavy_hitters", "table_stats", "weighted_sample",
-    "hybrid_rrf_topk", "quality_model_score", "pmi_cooccurrence",
-    "temperature_mixture",
-    "chunk_documents", "mixture_sample", "hashed_bow", "rag_chunk_topk",
-    "contamination_spans", "decontaminate", "dedup_clusters", "dedup_exact",
-    "dedup_jaccard_lsh", "dedup_keep_docs", "dedup_minhash_lsh",
-    "dedup_ngram_jaccard", "dedup_simhash", "doc_fingerprint",
-    "dup_passage_stats", "dup_passage_scrub", "dedup_incremental",
-    "footer_keyword_filter", "lang_id",
-    "multimodal_decode_meta", "near_dedup_keep", "pack_sequences",
-    "pii_scrub", "quality_by_source", "quality_filter_keep",
-    "quality_probe_weights", "quality_probe_agreement",
-    "repetition_stats", "split_assign", "stratified_sample",
-    "text_quality_scores", "token_count", "token_df_stats", "topk_terms",
-    "unigram_surprisal", "bigram_surprisal",
-    "whitespace_normalize", "winnow_containment",
-    "winnow_fingerprints",
-]
-EMB_GATES = [
-    "ann_sq8_encode", "ann_sq8_topk", "ann_batch_topk", "ann_lsh_buckets",
-    "ann_topk_cosine", "centroid_by_label", "embedding_cosine_dups",
-]
-IVF_GATES = [
-    "ann_ivf_topk", "ann_ivf_sq8_topk", "ann_ivf_kmeans_assign",
-    "ann_ivf_kmeans_topk", "semdedup_pairs", "semdedup_keep",
-]
+DOC_GATES, EMB_GATES, IVF_GATES = (
+    [name for name, gate in E.GATES.items() if gate.hostile == suite]
+    for suite in ("documents", "embeddings", "ivf"))
 
 LANGS = ["en", "de", "fr", "es", "zz", None]
 
@@ -117,7 +96,6 @@ def _run_suite(spark, sf_dir, names, oracles=None):
     """Check each gate of ``names`` on the tables at ``sf_dir``: against
     `oracle_sql()` through `check_gate`, or against the SQL of
     ``oracles`` when given."""
-    import __spark_entry__ as E
     from tools.check_correctness import check_gate, compare_frames
 
     con = duckdb.connect()
@@ -149,7 +127,6 @@ def test_ivf_gates_on_hostile_corpus(spark, hostile_sf_dir):
     """Cell assignment, probing and SemDeDup over null, empty, zero-norm
     and duplicate embeddings, each oracle built on the hostile table's
     own k-means codebook."""
-    import __spark_entry__ as E
     from tools.annoracle import centroid_values_sql, kmeans_centroids
 
     oracles = E.ivf_oracle_sql(centroid_values_sql(kmeans_centroids(
