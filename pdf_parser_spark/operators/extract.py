@@ -32,6 +32,12 @@ Scale design:
   CPU. The ``run`` closures are wrapped in ``pyworker.python_task``,
   which drops those importers, so a reused worker skips the re-read at
   its next task
+* a plain turn (tool plain, unknown or null) is a page: the default
+  612x792 rect with its stripped text as one whole-page block, the same
+  block the S3 fallback builds from salvaged text (A003:94-108). Plain
+  pages go through the same separator search, classifier and metadata
+  as page/v1 pages, so each decision (a000's P8 type filter among them)
+  has one home
 * per-turn error handling degrades to error rows, never fails the task
   (D1 semantics, A003:328-341)
 * one batch-level degrade: ``_extract_variants`` splits a batch by tool
@@ -60,10 +66,10 @@ from pdf_parser_spark.oracle.extractor import (
 )
 from pdf_parser_spark.payload import (
     A000_KEEP_TYPES,
-    LINE_PATTERN,
-    PAGE_PATTERN,
-    RECT_PATTERN,
-    SPAN_PATTERN,
+    LINE_RE,
+    PAGE_RE,
+    RECT_RE,
+    SPAN_RE,
     salvage_text,
     stub_block_type,
     unescape_text,
@@ -83,15 +89,6 @@ LAYOUT_SCHEMA_DDL = (
     "page_width double, page_height double, "
     "column_separator_position double, metadata map<string,string>"
 )
-
-# Record grammar shared with the oracle parser (payload.py) — both sides
-# accept exactly the same strict language, so tokenize-failure semantics
-# match by construction (fuzz-tested in tests/test_fuzz.py).
-_PAGE_RE = re.compile(PAGE_PATTERN)
-_LINE_RE = re.compile(LINE_PATTERN)
-_RECT_RE = re.compile(RECT_PATTERN)
-_SPAN_RE = re.compile(SPAN_PATTERN)
-
 
 def _error_frame(rids: np.ndarray, turn_idx: pd.Series, messages) -> pd.DataFrame:
     """D1 error rows (A003:328-341), vectorized; on zero rows, the empty
@@ -237,11 +234,14 @@ def _named_pattern(pattern: str, names) -> str:
     return re.sub(r"\((?!\?)", lambda _m: f"(?P<{next(it)}>", pattern)
 
 
+# The record grammar is payload.py's compiled patterns, the ones the oracle
+# parser matches with, so both sides accept exactly the same strict
+# language and tokenize failures agree (fuzz-tested in tests/test_fuzz.py)
 _REGEX_FIELDS = {
-    _PAGE_RE: ("w", "h"),
-    _LINE_RE: ("x1", "y1", "x2", "y2"),
-    _RECT_RE: ("x0", "y0", "x1", "y1", "r", "g", "b"),
-    _SPAN_RE: ("x0", "y0", "x1", "y1", "size", "font", "text"),
+    PAGE_RE: ("w", "h"),
+    LINE_RE: ("x1", "y1", "x2", "y2"),
+    RECT_RE: ("x0", "y0", "x1", "y1", "r", "g", "b"),
+    SPAN_RE: ("x0", "y0", "x1", "y1", "size", "font", "text"),
 }
 _STRING_FIELDS = frozenset(("font", "text"))  # every other field is a float
 _ARROW_PATTERNS = {
@@ -251,7 +251,7 @@ _ARROW_PATTERNS = {
 # The SPAN text group ``(.*)`` already runs to the end of a record (records
 # hold no "\n"), so the closing ``$`` changes nothing but costs RE2 a quarter
 # of its SPAN time
-_ARROW_PATTERNS[_SPAN_RE] = _ARROW_PATTERNS[_SPAN_RE].removesuffix("$")
+_ARROW_PATTERNS[SPAN_RE] = _ARROW_PATTERNS[SPAN_RE].removesuffix("$")
 
 
 def _parse_records(recs: pa.Array, regex: re.Pattern):
@@ -344,13 +344,35 @@ def _merge_spans(rid, x0, y0, x1, y1, size, font, text) -> pd.DataFrame:
     return pd.DataFrame({k: c[nonempty] for k, c in cols.items()})
 
 
-def _tokenize_stage(rows: pd.DataFrame):
+def _whole_page_blocks(rids, texts, widths, heights) -> pd.DataFrame:
+    """The reference's ``get_text()`` fallback block (A003:94-108): one
+    block per page whose stripped text is not empty, spanning the page
+    rect, with size 12.0 and font "Unknown". It is the S3 fallback of a
+    tokenize failure (``texts`` salvaged from the payload) and the one
+    block of a plain turn (``texts`` the turn's text)."""
+    text = pd.Series(texts, dtype=object).str.strip().to_numpy()
+    keep = text != ""
+    n = int(keep.sum())
+    return pd.DataFrame({
+        "rid": rids[keep], "x0": np.zeros(n), "y0": np.zeros(n),
+        "x1": widths[keep], "y1": heights[keep], "font_size": np.full(n, 12.0),
+        "text": text[keep], "font_name": np.full(n, "Unknown", dtype=object),
+    })
+
+
+def _tokenize_stage(rows: pd.DataFrame, plain: pd.DataFrame | None = None):
     """Variant-INdependent half of the page pipeline: payload tokenize,
     block building, drawing scan, separator search, colored regions
     (A003 stages 3a-3b; classification thresholds do not enter until
-    ``_classify_stage``). Returns ``(state, error_frames)`` where state is
-    None when no row survived tokenization. Splitting here lets
-    ``compare_extractors`` tokenize once and classify N times.
+    ``_classify_stage``). ``rows`` are page/v1 turns. Each non-null
+    ``plain`` turn (tool plain, unknown or null) is a page too, appended
+    after them: the default 612x792 rect, no drawings, and its stripped
+    text as one whole-page block, as the reference reads a page through
+    ``get_text()`` (A003:94-108); a null one is an error row. That
+    block's center x equals the default separator w/2, so the strict
+    ``<`` of the classifier puts it in right_column (A003:239-242). Returns
+    ``(state, error_frames)`` where state is None when no page survived
+    tokenization.
 
     Records are parsed on Arrow arrays: one split of the batch's payloads
     into a flat record array in payload order, ``starts_with`` per record
@@ -358,8 +380,14 @@ def _tokenize_stage(rows: pd.DataFrame):
     per-page steps after it reduce the flat arrays with NumPy; the state
     they leave is pandas, as ``_classify_stage`` reads it."""
     out_parts = []
-    if len(rows) == 0:
-        return None, out_parts
+    if plain is None:
+        plain = rows.iloc[:0]
+    null = plain["text"].isna().to_numpy()
+    if null.any():
+        out_parts.append(_error_frame(
+            plain["rid"].to_numpy()[null], plain["turn_idx"][null],
+            ["null payload"] * int(null.sum())))
+        plain = plain[~null]
 
     payloads = pa.array(rows["text"].to_numpy(), type=pa.string(), from_pandas=True)
     has_page = pc.fill_null(pc.starts_with(payloads, "PAGE "), False)
@@ -374,12 +402,10 @@ def _tokenize_stage(rows: pd.DataFrame):
         )
         rows = rows[has_page]
         payloads = payloads.filter(pa.array(has_page))
-    if rows.empty:
-        return None, out_parts
 
     lists = pc.split_pattern(payloads, "\n")
     first = pc.list_element(lists, 0)
-    _ok, header = _parse_records(first, _PAGE_RE)
+    _ok, header = _parse_records(first, PAGE_RE)
     widths, heights = header["w"], header["h"]
     # non-finite / absurd dims ('1e999' overflows to inf) are malformed
     # headers on both sides — payload.py applies the identical bound
@@ -392,12 +418,18 @@ def _tokenize_stage(rows: pd.DataFrame):
         good = ~bad_header
         rows, lists = rows[good], lists.filter(pa.array(good))
         widths, heights = widths[good], heights[good]
-    if rows.empty:
+    if rows.empty and plain.empty:
         return None, out_parts
 
+    # page/v1 pages first, then plain pages: every record's page index
+    # below stays a position in ``rows``
+    n_page = len(rows)
+    rows = pd.concat([rows, plain])
     rids = rows["rid"].to_numpy()
     n_pages = len(rids)
-    dims = pd.DataFrame({"rid": rids, "w": widths, "h": heights})
+    widths = np.append(widths, np.full(len(plain), DEFAULT_PAGE_W))
+    heights = np.append(heights, np.full(len(plain), DEFAULT_PAGE_H))
+    dims = pd.DataFrame({"w": widths, "h": heights}, index=pd.Index(rids, name="rid"))
 
     # --- the batch's records, flat and in payload order ---------------
     # ``*_page`` arrays hold each record's row position in ``rows``; they
@@ -417,11 +449,11 @@ def _tokenize_stage(rows: pd.DataFrame):
         _recs, page, ok, cols = kind(prefix, regex)
         return page[ok], {f: c[ok] for f, c in cols.items()}
 
-    vl_page, vl = drawings("LINE ", _LINE_RE)
-    rc_page, rc = drawings("RECT ", _RECT_RE)
+    vl_page, vl = drawings("LINE ", LINE_RE)
+    rc_page, rc = drawings("RECT ", RECT_RE)
 
     # SPAN records: a malformed one fails the page's tokenize (S3 fallback)
-    span_recs, span_page, ok, cols = kind("SPAN ", _SPAN_RE)
+    span_recs, span_page, ok, cols = kind("SPAN ", SPAN_RE)
     tokfail = np.zeros(n_pages, dtype=bool)
     tokfail[span_page[~ok]] = True
     keep = ~tokfail[span_page]
@@ -432,34 +464,25 @@ def _tokenize_stage(rows: pd.DataFrame):
     for i in np.flatnonzero(has_escape & keep):
         text[i] = unescape_text(text[i])
 
-    if keep.any():
-        blocks = _merge_spans(rids[span_page[keep]], **{f: c[keep] for f, c in cols.items()})
-    else:
-        blocks = pd.DataFrame(
-            columns=["rid", "x0", "y0", "x1", "y1", "font_size", "text", "font_name"]
-        )
-
-    # --- S3 fallback blocks for tokenize-failure pages ------------------
-    fallback_blocks = []
+    # --- whole-page blocks: the S3 fallback of each failed page, then
+    # each plain page; with the merged blocks (payload order) first, each
+    # page's blocks are consecutive, as the O4 reductions need
+    failed = np.flatnonzero(tokfail)
+    whole = np.append(failed, np.arange(n_page, n_pages))
     texts = rows["text"].to_numpy()
-    for i in np.flatnonzero(tokfail):
-        salvaged = salvage_text(texts[i]).strip()
-        if salvaged:
-            fallback_blocks.append(
-                {"rid": rids[i], "x0": 0.0, "y0": 0.0, "x1": widths[i], "y1": heights[i],
-                 "font_size": 12.0, "font_name": "Unknown", "text": salvaged}
-            )
-    if fallback_blocks:
-        fb = pd.DataFrame(fallback_blocks)
-        blocks = fb if blocks.empty else pd.concat([blocks, fb], ignore_index=True)
+    parts = [_whole_page_blocks(
+        rids[whole], [salvage_text(t) for t in texts[failed]] + texts[n_page:].tolist(),
+        widths[whole], heights[whole])]
+    if keep.any():
+        parts.insert(0, _merge_spans(
+            rids[span_page[keep]], **{f: c[keep] for f, c in cols.items()}))
+    blocks = pd.concat(parts, ignore_index=True)
 
     # --- O4 grid-search separator (vectorized closed form) --------------
-    # each page's blocks are consecutive (merged blocks in payload order,
-    # then one fallback block per failed page)
     min_x1 = np.full(n_pages, np.nan)
     max_x0 = np.full(n_pages, np.nan)
     if len(blocks):
-        b_page = pd.Index(rids).get_indexer(blocks["rid"].to_numpy())
+        b_page = dims.index.get_indexer(blocks["rid"].to_numpy())
         starts = _group_starts(b_page)
         min_x1[b_page[starts]] = np.minimum.reduceat(blocks["x1"].to_numpy(), starts)
         max_x0[b_page[starts]] = np.maximum.reduceat(blocks["x0"].to_numpy(), starts)
@@ -471,28 +494,27 @@ def _tokenize_stage(rows: pd.DataFrame):
         length = np.abs(vl["y2"] - vl["y1"])
         vert = (np.abs(vl["x2"] - vl["x1"]) < 5) & (length > 100)
         center_ok = np.abs((vl["x1"] + vl["x2"]) / 2.0 - w / 2.0) < w * 0.3
-    n_vlines = pd.Series(np.bincount(vl_page[vert], minlength=n_pages), index=rids)
     cand = np.flatnonzero(vert & center_ok)
     if cand.size:
         # first occurrence of the max length per page — matches the
         # strict `>` update in A003:130
         best = cand[_first_arg_extreme(length[cand], _group_starts(vl_page[cand]), np.maximum)]
         sep[vl_page[best]] = (vl["x1"][best] + vl["x2"][best]) / 2.0
-    separators = dict(zip(rids.tolist(), sep.tolist()))
 
     # --- P3/P4 colored regions + semantic footer flag --------------------
     nonwhite = ~((rc["r"] == 1.0) & (rc["g"] == 1.0) & (rc["b"] == 1.0))
-    n_colored = pd.Series(np.bincount(rc_page[nonwhite], minlength=n_pages), index=rids)
     in_footer = nonwhite & (rc["y0"] > heights[rc_page] * 0.5)
     footer_regions = pd.DataFrame(
         {"rid": rids[rc_page[in_footer]],
          **{f: rc[f][in_footer] for f in ("x0", "y0", "x1", "y1")}})
 
-    dims_idx = dims.set_index("rid")
     state = {
-        "rows": rows, "blocks": blocks, "dims": dims, "dims_idx": dims_idx,
-        "dims_w": dims_idx["w"], "separators": separators, "n_vlines": n_vlines,
-        "n_colored": n_colored, "footer_regions": footer_regions,
+        "rows": rows, "blocks": blocks, "dims": dims,
+        "separators": dict(zip(rids.tolist(), sep.tolist())),
+        # per-page counts, in ``dims`` order
+        "n_vlines": np.bincount(vl_page[vert], minlength=n_pages),
+        "n_colored": np.bincount(rc_page[nonwhite], minlength=n_pages),
+        "footer_regions": footer_regions,
         # raw parsed LINE records: a000 re-filters proportionally
         "vl": pd.DataFrame({**vl, "rid": rids[vl_page]}),
     }
@@ -507,89 +529,71 @@ def _classify_stage(state: dict, variant: str) -> pd.DataFrame:
     cfg = VARIANTS[variant]
     if cfg.footer_mode == "line_extent":
         return _classify_stage_a000(state)
-    rows = state["rows"]
-    blocks = state["blocks"]
     dims = state["dims"]
-    dims_idx = state["dims_idx"]
-    dims_w = state["dims_w"]
-    separators = state["separators"]
-    n_vlines = state["n_vlines"]
-    n_colored = state["n_colored"]
-    footer_regions = state["footer_regions"]
 
     # --- C1/C2/C4 classification -----------------------------------------
-    region_text = pd.DataFrame({"rid": [], "region": [], "text": []})
-    region_counts = {}
-    if len(blocks):
-        bb = blocks.merge(dims, on="rid")  # one merge, reused below
-        bb["sep"] = bb["rid"].map(separators)
-        bb_cy = ((bb["y0"] + bb["y1"]) / 2.0).to_numpy()
-        bb_cx = ((bb["x0"] + bb["x1"]) / 2.0).to_numpy()
-        h_arr = bb["h"].to_numpy()
-        in_band = bb_cy > h_arr * cfg.footer_frac
+    bb = state["blocks"].join(dims, on="rid")  # one join, reused below
+    bb["sep"] = bb["rid"].map(state["separators"])
+    bb_cy = ((bb["y0"] + bb["y1"]) / 2.0).to_numpy()
+    bb_cx = ((bb["x0"] + bb["x1"]) / 2.0).to_numpy()
+    h_arr = bb["h"].to_numpy()
+    in_band = bb_cy > h_arr * cfg.footer_frac
 
-        has_footer = pd.Series(False, index=dims_idx.index)
-        if cfg.footer_mode == "semantic" and in_band.any():
-            joined = (
-                bb.loc[in_band].groupby("rid", sort=False)["text"]
-                .agg(" ".join).str.lower()
+    has_footer = pd.Series(False, index=dims.index)
+    if cfg.footer_mode == "semantic" and in_band.any():
+        joined = (
+            bb.loc[in_band].groupby("rid", sort=False)["text"]
+            .agg(" ".join).str.lower()
+        )
+        kw_hit = _kw_hit(joined, cfg.keywords)
+        short_digit = (
+            (joined.str.strip().str.len() < 50) & _has_digit(joined))
+        hf = kw_hit | short_digit
+        has_footer.loc[hf.index[hf.to_numpy()]] = True
+
+    is_header = bb_cy < h_arr * cfg.header_frac
+
+    if cfg.footer_mode == "band":
+        is_footer = in_band
+    elif cfg.footer_mode == "semantic":
+        in_colored = np.zeros(len(bb), dtype=bool)
+        if len(state["footer_regions"]):
+            j = bb.reset_index().merge(
+                state["footer_regions"],
+                on="rid", suffixes=("", "_f"),
             )
-            kw_hit = _kw_hit(joined, cfg.keywords)
+            contained = (
+                (j["x0"] >= j["x0_f"]) & (j["x1"] <= j["x1_f"])
+                & (j["y0"] >= j["y0_f"]) & (j["y1"] <= j["y1_f"])
+            )
+            hit_idx = j.loc[contained, "index"].unique()
+            in_colored[hit_idx] = True
+        hf_arr = bb["rid"].map(has_footer).to_numpy(dtype=bool)
+        is_footer = in_colored | (hf_arr & in_band)
+    else:  # "keyword" (A004): per-block test, band candidates only
+        is_footer = np.zeros(len(bb), dtype=bool)
+        if in_band.any():
+            sub = bb.loc[in_band, "text"]
+            kw_hit = _kw_hit(sub.str.lower(), cfg.keywords).to_numpy()
             short_digit = (
-                (joined.str.strip().str.len() < 50) & _has_digit(joined))
-            hf = kw_hit | short_digit
-            has_footer.loc[hf.index[hf.to_numpy()]] = True
+                (sub.str.strip().str.len() < 50).to_numpy()
+                & _has_digit(sub).to_numpy())
+            is_footer[in_band] = kw_hit | short_digit
 
-        is_header = bb_cy < h_arr * cfg.header_frac
+    bb["region"] = np.where(
+        is_header, "header",
+        np.where(
+            ~is_header & is_footer, "footer",
+            np.where(bb_cx < bb["sep"].to_numpy(), "left_column", "right_column"),
+        ),
+    )
+    region_text = _reassemble_regions(bb[["rid", "region", "x0", "y0", "x1", "y1", "text"]])
 
-        if cfg.footer_mode == "band":
-            is_footer = in_band
-        elif cfg.footer_mode == "semantic":
-            in_colored = np.zeros(len(bb), dtype=bool)
-            if len(footer_regions):
-                j = bb.reset_index().merge(
-                    footer_regions[["rid", "x0", "y0", "x1", "y1"]],
-                    on="rid", suffixes=("", "_f"),
-                )
-                contained = (
-                    (j["x0"] >= j["x0_f"]) & (j["x1"] <= j["x1_f"])
-                    & (j["y0"] >= j["y0_f"]) & (j["y1"] <= j["y1_f"])
-                )
-                hit_idx = j.loc[contained, "index"].unique()
-                in_colored[hit_idx] = True
-            hf_arr = bb["rid"].map(has_footer).to_numpy()
-            is_footer = in_colored | (hf_arr & in_band)
-        else:  # "keyword" (A004): per-block test, band candidates only
-            is_footer = np.zeros(len(bb), dtype=bool)
-            if in_band.any():
-                sub = bb.loc[in_band, "text"]
-                kw_hit = _kw_hit(sub.str.lower(), cfg.keywords).to_numpy()
-                short_digit = (
-                    (sub.str.strip().str.len() < 50).to_numpy()
-                    & _has_digit(sub).to_numpy())
-                is_footer[in_band] = kw_hit | short_digit
-
-        region = np.where(
-            is_header, "header",
-            np.where(
-                ~is_header & is_footer, "footer",
-                np.where(bb_cx < bb["sep"].to_numpy(), "left_column", "right_column"),
-            ),
-        )
-        bb["region"] = region
-        region_text = _reassemble_regions(bb[["rid", "region", "x0", "y0", "x1", "y1", "text"]])
-        region_counts = (
-            bb.groupby(["rid", "region"], sort=False).size().unstack(fill_value=0)
-        )
-
-    # --- assemble one output row per rid ---------------------------------
-    def build_metadata(aligned, total_blocks, reg_arrs):
-        vln_arr = aligned(n_vlines)
-        col_arr = aligned(n_colored)
+    def build_metadata(counts):
         # page_rect uses float repr — exactly json.dumps' float formatting
         return [
             {
-                "total_text_blocks": str(t),
+                "total_text_blocks": str(hh + ff + ll + rr),
                 "header_blocks": str(hh),
                 "footer_blocks": str(ff),
                 "left_column_blocks": str(ll),
@@ -599,56 +603,43 @@ def _classify_stage(state: dict, variant: str) -> pd.DataFrame:
                 "has_footer": "true" if ff > 0 else "false",
                 "page_rect": f"[0.0, 0.0, {float(w)!r}, {float(h)!r}]",
             }
-            for t, hh, ff, ll, rr, v, c, w, h in zip(
-                total_blocks, reg_arrs[0], reg_arrs[1], reg_arrs[2], reg_arrs[3],
-                vln_arr, col_arr, dims["w"].to_numpy(), dims["h"].to_numpy())
+            for hh, ff, ll, rr, v, c, w, h in zip(
+                *counts, state["n_vlines"], state["n_colored"],
+                dims["w"].to_numpy(), dims["h"].to_numpy())
         ]
 
     return _assemble_layout_rows(
-        rows, region_text, blocks, dims, dims_idx, dims_w, separators,
-        region_counts, build_metadata)
+        state, bb, region_text, state["separators"], build_metadata)
 
 
-def _assemble_layout_rows(rows, region_text, blocks, dims, dims_idx, dims_w,
-                          separators, region_counts, build_metadata) -> pd.DataFrame:
-    """Shared per-rid row assembly for both classifier families: region
-    text pivot, geometry columns, count alignment to the page set, and a
-    metadata map from the variant-specific builder
-    ``build_metadata(aligned, total_blocks, reg_arrs) -> list[dict]``
-    (the only part where the A003 family and A000 differ)."""
-    base = rows[["rid", "turn_idx"]].copy()
-    piv = (
+_REGIONS = ("header", "footer", "left_column", "right_column")
+
+
+def _assemble_layout_rows(state, bb, region_text, separators,
+                          build_metadata) -> pd.DataFrame:
+    """Shared row assembly for both classifier families, one row per page
+    in ``state["dims"]`` order: region text, geometry, separator, and a
+    metadata map from the variant-specific
+    ``build_metadata(counts) -> list[dict]``, where ``counts`` holds one
+    int64 array of per-page block counts per region of ``_REGIONS``.
+    ``bb`` is the classified blocks (rid, region); every block is in
+    exactly one region, so the counts sum to each page's block total."""
+    dims = state["dims"]
+    counts = (
+        bb.groupby(["rid", "region"], sort=False).size().unstack()
+        .reindex(index=dims.index, columns=_REGIONS).fillna(0).astype(np.int64))
+    text = (
         region_text.pivot(index="rid", columns="region", values="text")
-        if len(region_text)
-        else pd.DataFrame()
-    )
-    for col in ("header", "footer", "left_column", "right_column"):
-        vals = piv[col] if col in piv.columns else pd.Series(dtype=object)
-        base[col] = base["rid"].map(vals).fillna("")
-    base["page_width"] = base["rid"].map(dims_idx["w"])
-    base["page_height"] = base["rid"].map(dims_idx["h"])
-    base["column_separator_position"] = base["rid"].map(separators)
-    base["page_number"] = base["turn_idx"].to_numpy() + 1
-
-    def _aligned(series) -> np.ndarray:
-        if len(series):
-            return series.reindex(dims_w.index).fillna(0).astype(np.int64).to_numpy()
-        return np.zeros(len(dims_w), dtype=np.int64)
-
-    total_blocks = _aligned(
-        blocks.groupby("rid", sort=False).size() if len(blocks) else pd.Series(dtype=np.int64))
-    region_names = ("header", "footer", "left_column", "right_column")
-    if len(region_counts):
-        rc_full = region_counts.reindex(
-            index=dims_w.index, columns=region_names, fill_value=0).fillna(0)
-        reg_arrs = [rc_full[c].astype(np.int64).to_numpy() for c in region_names]
-    else:
-        reg_arrs = [np.zeros(len(dims_w), dtype=np.int64)] * 4
-    metadata = build_metadata(_aligned, total_blocks, reg_arrs)
-    meta_by_rid = pd.Series(metadata, index=dims["rid"].to_numpy())
-    base["metadata"] = base["rid"].map(meta_by_rid)
-
-    return base[["rid"] + LAYOUT_FIELDS]
+        .reindex(index=dims.index, columns=_REGIONS).fillna(""))
+    return pd.DataFrame({
+        "rid": dims.index.to_numpy(),
+        "page_number": state["rows"]["turn_idx"].to_numpy() + 1,
+        **{r: text[r].to_numpy(dtype=object) for r in _REGIONS},
+        "page_width": dims["w"].to_numpy(),
+        "page_height": dims["h"].to_numpy(),
+        "column_separator_position": dims.index.map(separators).to_numpy(dtype=float),
+        "metadata": build_metadata([counts[r].to_numpy() for r in _REGIONS]),
+    })
 
 
 def _reassemble_regions_a000(blocks: pd.DataFrame) -> pd.DataFrame:
@@ -695,21 +686,17 @@ def _classify_stage_a000(state: dict) -> pd.DataFrame:
     the stub-assigned types: Table/Figure blocks never reach separator
     search, classification or the block counts (a local filtered copy —
     ``state`` is shared with the other variants in the fused fan-out)."""
-    rows = state["rows"]
-    blocks = state["blocks"]
-    if len(blocks):
-        blocks = blocks[
-            blocks["text"].map(stub_block_type).isin(A000_KEEP_TYPES)]
     dims = state["dims"]
-    dims_idx = state["dims_idx"]
-    dims_w = state["dims_w"]
+    blocks = state["blocks"]
+    blocks = blocks[blocks["text"].map(stub_block_type).isin(A000_KEEP_TYPES)]
+    bb = blocks.join(dims, on="rid")
     vl = state["vl"]
 
     # --- proportional P1 (A000:116-126) + O5 best line with extents ------
     sep_line, hy_line, fy_line = {}, {}, {}
     n_vlines = pd.Series(dtype=np.int64)
     if len(vl):
-        vm = vl.merge(dims, on="rid", how="left")
+        vm = vl.join(dims, on="rid")
         keep = (np.abs(vm["x2"] - vm["x1"]) < vm["w"] * 0.01) & (
             np.abs(vm["y2"] - vm["y1"]) > vm["h"] * 0.2)
         vlf = vm[keep].copy()
@@ -735,11 +722,10 @@ def _classify_stage_a000(state: dict) -> pd.DataFrame:
     # (lo, hi) with lo = k-th smallest center, hi = k-th largest,
     # k = floor(0.1n)+1 (integer count > 0.1n). Answer = first grid point
     # > lo if it is also < hi and <= the inclusive end, else w/2.
-    separators = dict(zip(dims_w.index, dims_w.to_numpy() / 2.0))
-    if len(blocks):
-        bb0 = blocks.merge(dims, on="rid")
-        bb0["cx"] = (bb0["x0"] + bb0["x1"]) / 2.0
-        s = bb0.sort_values(["rid", "cx"], kind="stable")
+    separators = dict(zip(dims.index, dims["w"].to_numpy() / 2.0))
+    if len(bb):
+        bb["cx"] = (bb["x0"] + bb["x1"]) / 2.0
+        s = bb.sort_values(["rid", "cx"], kind="stable")
         pos = s.groupby("rid", sort=False).cumcount().to_numpy()
         sizes = s.groupby("rid", sort=False)["cx"].transform("size").to_numpy()
         k = np.floor(sizes * 0.1).astype(np.int64) + 1
@@ -760,135 +746,49 @@ def _classify_stage_a000(state: dict) -> pd.DataFrame:
         for rid_, c_, ok_ in zip(grid.index, c, ok):
             if ok_:
                 separators[rid_] = float(c_)
-    separators.update((r, float(v)) for r, v in sep_line.items())
+    separators.update(sep_line)
 
     # --- C3 classification by block edges (A000:183-215) -----------------
-    region_text = pd.DataFrame({"rid": [], "region": [], "text": []})
-    region_counts = {}
-    if len(blocks):
-        bb = blocks.merge(dims, on="rid")
-        bb["sep"] = bb["rid"].map(separators)
-        h_arr = bb["h"].to_numpy()
-        hy_arr = bb["rid"].map(hy_line).to_numpy(dtype=float)
-        fy_arr = bb["rid"].map(fy_line).to_numpy(dtype=float)
-        eff_header = np.where(np.isnan(hy_arr), h_arr * 0.15, hy_arr + 10)
-        eff_footer = np.where(np.isnan(fy_arr), h_arr * 0.9, fy_arr - 10)
-        bb_cx = ((bb["x0"] + bb["x1"]) / 2.0).to_numpy()
-        is_header = bb["y1"].to_numpy() < eff_header
-        is_footer = ~is_header & (bb["y0"].to_numpy() > eff_footer)
-        region = np.where(
-            is_header, "header",
-            np.where(
-                is_footer, "footer",
-                np.where(bb_cx < bb["sep"].to_numpy(), "left_column", "right_column"),
-            ),
-        )
-        bb["region"] = region
-        region_text = _reassemble_regions_a000(
-            bb[["rid", "region", "x0", "y0", "x1", "y1", "text"]])
-        region_counts = (
-            bb.groupby(["rid", "region"], sort=False).size().unstack(fill_value=0)
-        )
+    bb["sep"] = bb["rid"].map(separators)
+    h_arr = bb["h"].to_numpy()
+    hy_arr = bb["rid"].map(hy_line).to_numpy(dtype=float)
+    fy_arr = bb["rid"].map(fy_line).to_numpy(dtype=float)
+    eff_header = np.where(np.isnan(hy_arr), h_arr * 0.15, hy_arr + 10)
+    eff_footer = np.where(np.isnan(fy_arr), h_arr * 0.9, fy_arr - 10)
+    bb_cx = ((bb["x0"] + bb["x1"]) / 2.0).to_numpy()
+    is_header = bb["y1"].to_numpy() < eff_header
+    is_footer = ~is_header & (bb["y0"].to_numpy() > eff_footer)
+    bb["region"] = np.where(
+        is_header, "header",
+        np.where(
+            is_footer, "footer",
+            np.where(bb_cx < bb["sep"].to_numpy(), "left_column", "right_column"),
+        ),
+    )
+    region_text = _reassemble_regions_a000(
+        bb[["rid", "region", "x0", "y0", "x1", "y1", "text"]])
 
-    # --- assemble rows with A000's metadata keys (A000:270-281) ----------
-    def build_metadata(aligned, total_blocks, reg_arrs):
-        vln_arr = aligned(n_vlines)
-        hy_vals = [hy_line.get(r) for r in dims_w.index]
-        fy_vals = [fy_line.get(r) for r in dims_w.index]
+    # --- metadata with A000's keys (A000:270-281) ------------------------
+    def build_metadata(counts):
+        vln_arr = n_vlines.reindex(dims.index, fill_value=0).to_numpy()
         return [
             {
-                "total_text_blocks_layoutlm": str(t),
+                "total_text_blocks_layoutlm": str(hh + ff + ll + rr),
                 "header_blocks": str(hh),
                 "footer_blocks": str(ff),
                 "left_column_blocks": str(ll),
                 "right_column_blocks": str(rr),
                 "vertical_lines_detected_count": str(v),
                 "page_rect": f"[0.0, 0.0, {float(w)!r}, {float(h)!r}]",
-                "header_y_boundary": json.dumps(hy),
-                "footer_y_boundary": json.dumps(fy),
+                "header_y_boundary": json.dumps(hy_line.get(r)),
+                "footer_y_boundary": json.dumps(fy_line.get(r)),
             }
-            for t, hh, ff, ll, rr, v, w, h, hy, fy in zip(
-                total_blocks, reg_arrs[0], reg_arrs[1], reg_arrs[2], reg_arrs[3],
-                vln_arr, dims["w"].to_numpy(), dims["h"].to_numpy(),
-                hy_vals, fy_vals)
+            for hh, ff, ll, rr, v, w, h, r in zip(
+                *counts, vln_arr, dims["w"].to_numpy(), dims["h"].to_numpy(),
+                dims.index)
         ]
 
-    return _assemble_layout_rows(
-        rows, region_text, blocks, dims, dims_idx, dims_w, separators,
-        region_counts, build_metadata)
-
-
-_PAGE_RECT_JSON = json.dumps([0.0, 0.0, DEFAULT_PAGE_W, DEFAULT_PAGE_H])
-_META_PLAIN_BLOCK = {
-    "total_text_blocks": "1", "header_blocks": "0", "footer_blocks": "0",
-    "left_column_blocks": "0", "right_column_blocks": "1",
-    "vertical_lines_detected": "0", "colored_footer_regions": "0",
-    "has_footer": "false", "page_rect": _PAGE_RECT_JSON,
-}
-_META_PLAIN_EMPTY = {
-    "total_text_blocks": "0", "header_blocks": "0", "footer_blocks": "0",
-    "left_column_blocks": "0", "right_column_blocks": "0",
-    "vertical_lines_detected": "0", "colored_footer_regions": "0",
-    "has_footer": "false", "page_rect": _PAGE_RECT_JSON,
-}
-_META_NULL_PAYLOAD = {"error": json.dumps("null payload")}
-# A000's metadata keys for the same plain-fallback geometry. The separator
-# stays w/2 for both families (n=1 block can never satisfy the
-# 10%-each-side grid test), but A000's P8 filter drops the block when its
-# stub type is Table/Figure, which leaves an empty page
-_META_PLAIN_BLOCK_A000 = {
-    "total_text_blocks_layoutlm": "1", "header_blocks": "0",
-    "footer_blocks": "0", "left_column_blocks": "0",
-    "right_column_blocks": "1", "vertical_lines_detected_count": "0",
-    "page_rect": _PAGE_RECT_JSON,
-    "header_y_boundary": "null", "footer_y_boundary": "null",
-}
-_META_PLAIN_EMPTY_A000 = {
-    "total_text_blocks_layoutlm": "0", "header_blocks": "0",
-    "footer_blocks": "0", "left_column_blocks": "0",
-    "right_column_blocks": "0", "vertical_lines_detected_count": "0",
-    "page_rect": _PAGE_RECT_JSON,
-    "header_y_boundary": "null", "footer_y_boundary": "null",
-}
-
-
-def _extract_plain_rows(rows: pd.DataFrame, variant: str = "a003") -> pd.DataFrame:
-    """tool='plain' (and unknown tools): the reference's get_text() fallback
-    semantics — one whole-page block on a default 612x792 page
-    (A003:94-108). Note the faithful quirk: the block's center_x equals the
-    default separator w/2, and the classifier's strict `<` routes the text
-    to right_column (A003:239-242). Fully vectorized; the possible
-    metadata dicts are shared constants (read-only downstream). The a000
-    variant differs in its metadata key set and in its P8 type filter,
-    which drops a block typed Table/Figure (A000:80-82)."""
-    a000 = VARIANTS[variant].footer_mode == "line_extent"
-    n = len(rows)
-    txt = rows["text"]
-    is_null = txt.isna().to_numpy()
-    stripped = txt.fillna("").str.strip()
-    has_block = (~is_null) & (stripped != "").to_numpy()
-    if a000 and has_block.any():
-        has_block[has_block] = (
-            stripped[has_block].map(stub_block_type).isin(A000_KEEP_TYPES).to_numpy())
-    meta = np.empty(n, dtype=object)
-    meta[:] = _META_PLAIN_EMPTY_A000 if a000 else _META_PLAIN_EMPTY
-    meta[has_block] = _META_PLAIN_BLOCK_A000 if a000 else _META_PLAIN_BLOCK
-    meta[is_null] = _META_NULL_PAYLOAD
-    return pd.DataFrame(
-        {
-            "rid": rows["rid"].to_numpy(),
-            "page_number": rows["turn_idx"].to_numpy() + 1,
-            "header": [""] * n,
-            "footer": [""] * n,
-            "left_column": [""] * n,
-            "right_column": np.where(has_block, stripped, ""),
-            "page_width": np.where(is_null, 0.0, DEFAULT_PAGE_W),
-            "page_height": np.where(is_null, 0.0, DEFAULT_PAGE_H),
-            "column_separator_position": np.where(
-                is_null, np.nan, DEFAULT_PAGE_W / 2),
-            "metadata": meta,
-        }
-    )
+    return _assemble_layout_rows(state, bb, region_text, separators, build_metadata)
 
 
 def _rows_from_oracle(pairs) -> pd.DataFrame:
@@ -935,23 +835,21 @@ def _split_tools(pdf: pd.DataFrame):
 
 def _extract_variants(pdf: pd.DataFrame, variants) -> tuple:
     """The one batch driver: layout rows (columns rid + LAYOUT_FIELDS) of
-    every turn of the batch, per variant. Page payloads are tokenized once
-    and classified per variant; html rows are variant-independent and
-    extracted once; plain rows carry variant-keyed metadata and the a000
-    type filter, so they are per variant. If the vectorized core raises,
+    every turn of the batch, per variant. Page and plain turns are
+    tokenized once into one set of pages (a plain turn is a whole-page
+    block, ``_tokenize_stage``) and classified per variant; html rows are
+    variant-independent and extracted once. If the vectorized core raises,
     every turn of the batch goes to the per-turn oracle for every variant
     (degrade-don't-fail at batch granularity). Returns ``(pdf, layouts)``
     with ``pdf`` rid-numbered and ``layouts`` a dict variant -> frame."""
     pdf, page, html, plain = _split_tools(pdf)
     try:
-        state, errors = _tokenize_stage(page)
-        html_rows = _extract_html_rows(html)
+        state, errors = _tokenize_stage(page, plain)
+        parts = errors + [_extract_html_rows(html)]
         layouts = {}
         for v in variants:
-            parts = errors + [html_rows, _extract_plain_rows(plain, v)]
-            if state is not None:
-                parts.append(_classify_stage(state, v))
-            layouts[v] = pd.concat(parts, ignore_index=True)
+            classified = [] if state is None else [_classify_stage(state, v)]
+            layouts[v] = pd.concat(parts + classified, ignore_index=True)
     except Exception:  # noqa: BLE001 — batch-level degrade: per-turn oracle
         turns = list(pdf[["rid", "turn_idx", "text", "tool"]].itertuples(index=False))
         layouts = {
@@ -1043,7 +941,9 @@ def blocks_batch(pdf: pd.DataFrame) -> pd.DataFrame:
     """The TextBlock relation for one Arrow batch: one row per merged
     line-block of each page/v1 turn (S2 tokenize + G1 merge + P2
     non-empty filter), the S3 fallback block for tokenize failures, zero
-    rows for unparseable turns — exactly the reference's
+    rows for unparseable turns and for every other tool (a plain turn is
+    a page of the extraction core, but not a TextBlock source) — exactly
+    the reference's
     ``get_text_blocks`` protocol method
     (/root/reference/A003_colored_footer.py:66-110) exposed as a scan."""
     pdf, page_rows, _html, _plain = _split_tools(pdf)

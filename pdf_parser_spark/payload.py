@@ -62,15 +62,16 @@ def stub_block_type(text: str) -> str:
     h = int(hashlib.md5(text.encode("utf-8")).hexdigest()[:8], 16)
     return STUB_BLOCK_TYPES[h % len(STUB_BLOCK_TYPES)]
 
-# Strict record grammar, shared verbatim with the vectorized Spark
-# tokenizer (operators/extract.py) so both parsers accept exactly the same
-# language: single-space separators, finite canonical decimals (no
-# nan/inf/hex/underscores). Any deviation is a malformed record — SPAN
-# deviations fail the page's tokenize (S3 fallback), LINE/RECT deviations
-# are skipped (degraded drawing scan), a PAGE-header deviation is a
-# page-level error. A digit run matches FLOAT_PATTERN one way only: with
-# the ambiguous `\d+\.?\d*`, Python's `re` backtracked over every digit
-# split of every field of a failing record (seconds at 25 digits).
+# Strict record grammar, shared with the vectorized Spark tokenizer
+# (operators/extract.py imports the compiled ``*_RE`` patterns below) so
+# both parsers accept exactly the same language: single-space
+# separators, finite canonical decimals (no nan/inf/hex/underscores).
+# Any deviation is a malformed record — SPAN deviations fail the page's
+# tokenize (S3 fallback), LINE/RECT deviations are skipped (degraded
+# drawing scan), a PAGE-header deviation is a page-level error. A digit
+# run matches FLOAT_PATTERN one way only: with the ambiguous
+# `\d+\.?\d*`, Python's `re` backtracked over every digit split of every
+# field of a failing record (seconds at 25 digits).
 FLOAT_PATTERN = r"[+-]?(?:\d+(?:\.\d*)?|\.\d+)(?:[eE][+-]?\d+)?"
 PAGE_PATTERN = rf"^PAGE w=({FLOAT_PATTERN}) h=({FLOAT_PATTERN})$"
 LINE_PATTERN = (
@@ -85,10 +86,10 @@ SPAN_PATTERN = (
     rf"({FLOAT_PATTERN}) ({FLOAT_PATTERN}) "
     rf"size=({FLOAT_PATTERN}) font=(.*?) text=(.*)$")
 
-_PAGE_RE = re.compile(PAGE_PATTERN)
-_LINE_RE = re.compile(LINE_PATTERN)
-_RECT_RE = re.compile(RECT_PATTERN)
-_SPAN_RE = re.compile(SPAN_PATTERN)
+PAGE_RE = re.compile(PAGE_PATTERN)
+LINE_RE = re.compile(LINE_PATTERN)
+RECT_RE = re.compile(RECT_PATTERN)
+SPAN_RE = re.compile(SPAN_PATTERN)
 
 
 class PayloadError(Exception):
@@ -213,7 +214,7 @@ def parse_payload(payload: str) -> ParsedPage:
     if not isinstance(payload, str) or not payload.startswith("PAGE "):
         raise PayloadError("payload has no PAGE header")
     records = payload.split("\n")
-    m = _PAGE_RE.match(records[0])
+    m = PAGE_RE.match(records[0])
     if not m:
         raise PayloadError(f"malformed PAGE header: {records[0]!r}")
     width = float(m.group(1))
@@ -235,18 +236,18 @@ def parse_payload(payload: str) -> ParsedPage:
     bad_span = None
     for raw in records[1:]:
         if raw.startswith("LINE "):
-            m = _LINE_RE.match(raw)
+            m = LINE_RE.match(raw)
             if not m:
                 continue  # degraded drawing scan: skip bad record
             page.lines.append(tuple(float(v) for v in m.groups()))
         elif raw.startswith("RECT "):
-            m = _RECT_RE.match(raw)
+            m = RECT_RE.match(raw)
             if not m:
                 continue
             g = [float(v) for v in m.groups()]
             page.rects.append((g[0], g[1], g[2], g[3], (g[4], g[5], g[6])))
         elif raw.startswith("SPAN ") and bad_span is None:
-            m = _SPAN_RE.match(raw)
+            m = SPAN_RE.match(raw)
             if not m:
                 bad_span = raw
                 continue

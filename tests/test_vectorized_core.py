@@ -12,8 +12,9 @@ from pdf_parser_spark.generator import (
     make_turn,
 )
 from pdf_parser_spark.operators.extract import extract_batch
-from pdf_parser_spark.oracle.extractor import extract_turn
+from pdf_parser_spark.oracle.extractor import VARIANTS, extract_turn
 from pdf_parser_spark.oracle.boilerplate import strip_boilerplate
+from pdf_parser_spark.payload import A000_KEEP_TYPES, stub_block_type
 
 
 def _batch_frame(rows):
@@ -50,7 +51,32 @@ def test_vectorized_matches_oracle_per_archetype(archetype):
         _assert_layout_equal(out.iloc[i], want, f"{archetype}[{i}]")
 
 
+# plain turns the page pipeline must classify like the oracle: blank
+# text (no block), a block P8 drops in a000 (stub type Table), and a
+# valid page payload under the plain tool (read as text, not tokenized)
+_TABLE_TEXT = "block text 30"
+_PLAIN_EDGE_ROWS = [
+    ("plain-blank", 70, "user", " \n\t ", "plain"),
+    ("plain-table", 71, "user", f"  {_TABLE_TEXT}\n", "plain"),
+    ("plain-page", 72, "user", make_page_payload("plain-page", 72, "two_col_line"), "plain"),
+    ("plain-null-tool", 73, "user",
+     make_page_payload("plain-null-tool", 73, "keyword_footer"), None),
+]
+
+
+def _assert_batch_matches_oracle(rows, context):
+    for variant in VARIANTS:
+        out = extract_batch(_batch_frame(rows), variant=variant)
+        assert len(out) == len(rows)
+        assert list(out["turn_idx"]) == [r[1] for r in rows]
+        for i, (_conv, turn_idx, _, text, tool) in enumerate(rows):
+            want = extract_turn(text, tool, turn_idx, variant=variant)
+            _assert_layout_equal(
+                out.iloc[i], want, f"{context}[{i}] tool={tool} variant={variant}")
+
+
 def test_mixed_batch_all_tools_order_preserved():
+    assert stub_block_type(_TABLE_TEXT) not in A000_KEEP_TYPES
     rows = []
     for i in range(60):
         conv = f"mix-{i % 7}"
@@ -60,13 +86,20 @@ def test_mixed_batch_all_tools_order_preserved():
     rows.append(("mix-null", 60, "user", None, "page/v1"))
     rows.append(("mix-null", 61, "user", None, "plain"))
     rows.append(("mix-unknown", 62, "user", "free text", "exotic/v9"))
-    batch = _batch_frame(rows)
-    out = extract_batch(batch)
-    assert len(out) == len(rows)
-    assert list(out["turn_idx"]) == [r[1] for r in rows]
-    for i, (conv, turn_idx, _, text, tool) in enumerate(rows):
-        want = extract_turn(text, tool, turn_idx)
-        _assert_layout_equal(out.iloc[i], want, f"mixed[{i}] tool={tool}")
+    rows.extend(_PLAIN_EDGE_ROWS)
+    _assert_batch_matches_oracle(rows, "mixed")
+
+
+def test_plain_only_batch():
+    """A batch of plain turns alone is all whole-page pages: the
+    classifier runs with no page/v1 turn beside them."""
+    rows = [("plain-only", 0, "user", None, "plain"),
+            ("plain-only", 1, "user", "one line of text", "plain")]
+    rows.extend(_PLAIN_EDGE_ROWS)
+    _assert_batch_matches_oracle(rows, "plain-only")
+    # blank text, and a block a000's P8 drops: a000 classifies pages
+    # without any block
+    _assert_batch_matches_oracle(_PLAIN_EDGE_ROWS[:2], "plain-empty")
 
 
 def test_html_batch_spans_and_labels():
@@ -104,7 +137,12 @@ def test_blocks_batch_matches_oracle_parse():
                      "page/v1"))
     rows.append(("blk-null", 99, "user", None, "page/v1"))
     rows.append(("blk-noheader", 98, "user", "SPAN no page header", "page/v1"))
-    got = blocks_batch(_batch_frame(rows))
+    # a plain turn is a page of the extraction core but not a TextBlock
+    # source, even when its text is a valid page payload
+    plain = ("blk-plain", 97, "user", make_page_payload("blk-plain", 97, "two_col_line"),
+             "plain")
+    got = blocks_batch(_batch_frame(rows + [plain]))
+    assert (got["conv_id"] == "blk-plain").sum() == 0
 
     for conv, turn_idx, _, payload, _t in rows:
         sub = got[got["conv_id"] == conv]
@@ -122,7 +160,7 @@ def test_a000_p8_type_filter_rejects_blocks():
     block types and the isin(Text/Title/List) filter DROPS Table/Figure
     blocks from the a000 output (they stay in a003, which has no P8) —
     identically in the oracle and the vectorized core."""
-    from pdf_parser_spark.payload import A000_KEEP_TYPES, render_page, stub_block_type
+    from pdf_parser_spark.payload import render_page
 
     def s(x0, y0, x1, y1, text):
         return {"x0": x0, "y0": y0, "x1": x1, "y1": y1,
