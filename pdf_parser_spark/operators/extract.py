@@ -57,7 +57,7 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 
-from pdf_parser_spark.operators.html import strip_html
+from pdf_parser_spark.operators.html import strip_html_batch
 from pdf_parser_spark.oracle.extractor import (
     DEFAULT_PAGE_H,
     DEFAULT_PAGE_W,
@@ -805,20 +805,29 @@ def _rows_from_oracle(pairs) -> pd.DataFrame:
 def _extract_html_rows(rows: pd.DataFrame) -> pd.DataFrame:
     """tool='html/v1': DOM boilerplate stripping (north-rule addition).
 
-    Each turn goes through the engine core ``operators/html.strip_html``
-    (a stack parse per payload; ``tests/test_fuzz.py`` checks it equals
-    the oracle's ``strip_boilerplate``). There is no page, so the geometry
-    is fixed and ``right_column`` is always empty. A core exception is not
-    caught here: it sends the whole batch to the per-turn oracle
+    The batch's html payloads are parsed at once by the engine core
+    ``operators/html.strip_html_batch`` (``tests/test_fuzz.py`` checks it
+    equals the oracle's ``strip_boilerplate``), and the rows are built
+    from its columns. There is no page, so the geometry is fixed and
+    ``right_column`` is always empty. A core exception is not caught
+    here: it sends the whole batch to the per-turn oracle
     (``_extract_variants``)."""
     if rows.empty:
         return _error_frame(rows["rid"].to_numpy(), rows["turn_idx"], [])
-    recs = []
-    for rid, turn_idx, text in rows.itertuples(index=False):
-        header, footer, main, _spans, metadata = strip_html(text)
-        recs.append((rid, turn_idx + 1, header, footer, main, "",
-                     0.0, 0.0, np.nan, metadata))
-    return pd.DataFrame(recs, columns=["rid"] + LAYOUT_FIELDS)
+    cols = strip_html_batch(rows["text"])
+    n = len(rows)
+    return pd.DataFrame({
+        "rid": rows["rid"].to_numpy(),
+        "page_number": rows["turn_idx"].to_numpy() + 1,
+        "header": cols.header,
+        "footer": cols.footer,
+        "left_column": cols.left_column,
+        "right_column": np.full(n, "", dtype=object),
+        "page_width": np.zeros(n),
+        "page_height": np.zeros(n),
+        "column_separator_position": np.full(n, np.nan),
+        "metadata": pd.Series(cols.metadata(), dtype=object),
+    })
 
 
 def _split_tools(pdf: pd.DataFrame):

@@ -16,7 +16,7 @@ from hypothesis import strategies as st
 from pdf_parser_spark.generator import make_html_payload
 from pdf_parser_spark.goldens import _oracle_blocks
 from pdf_parser_spark.operators.extract import blocks_batch, extract_batch
-from pdf_parser_spark.operators.html import strip_html
+from pdf_parser_spark.operators.html import strip_html, strip_html_batch
 from pdf_parser_spark.operators.spans import _span_batches
 from pdf_parser_spark.oracle.boilerplate import strip_boilerplate
 from pdf_parser_spark.oracle.extractor import VARIANTS, extract_turn
@@ -346,6 +346,132 @@ def test_html_core_equals_oracle_at_thresholds(payload):
 def test_html_core_equals_oracle_on_generator_payloads():
     for i in range(300):
         _assert_html_core_equals_oracle(make_html_payload(f"g{i}", i % 17))
+
+
+# --- the batch html core (operators/html.strip_html_batch) -----------------
+
+def _md5(text):
+    import hashlib
+
+    return hashlib.md5(text.encode("utf-8")).hexdigest()
+
+
+def _assert_batch_equals_oracle(payloads, fallback=None):
+    """``strip_html_batch`` equals ``strip_boilerplate`` on every field of
+    every payload (metadata key order included), and ``extract_batch``
+    and ``_span_batches`` on the same batch equal the per-payload oracle,
+    ``block_md5`` included. ``fallback``, when given, is the expected
+    fallback mask."""
+    cols = strip_html_batch(payloads)
+    if fallback is not None:
+        assert list(cols.fallback) == fallback, payloads
+    metadata = cols.metadata()
+    want = [strip_boilerplate(p) for p in payloads]
+    want_spans = []
+    for i, (p, w) in enumerate(zip(payloads, want)):
+        assert cols.header[i] == w["header"], p
+        assert cols.footer[i] == w["footer"], p
+        assert cols.left_column[i] == w["left_column"], p
+        assert metadata[i] == w["metadata"], p
+        assert list(metadata[i]) == list(w["metadata"])
+        want_spans += [(f"c{i}", i, j, a, b, _md5(w["left_column"][a:b]))
+                       for j, (a, b) in enumerate(w["spans"])]
+    assert list(zip(cols.span_turn, cols.span_start, cols.span_end)) == [
+        (i, a, b) for _c, i, _j, a, b, _m in want_spans]
+
+    n = len(payloads)
+    pdf = pd.DataFrame({"conv_id": [f"c{i}" for i in range(n)], "turn_idx": range(n),
+                        "role": ["user"] * n, "text": payloads, "tool": ["html/v1"] * n})
+    got = extract_batch(pdf.copy(), "a003")
+    for i, (g, w) in enumerate(zip(got.itertuples(index=False), want)):
+        assert (g.header, g.footer, g.left_column, g.right_column) == (
+            w["header"], w["footer"], w["left_column"], ""), payloads[i]
+        assert g.metadata == w["metadata"], payloads[i]
+        assert g.page_number == i + 1
+    rows = pd.concat(list(_span_batches(iter([pdf[["conv_id", "turn_idx", "text"]]]))))
+    assert list(rows.itertuples(index=False, name=None)) == want_spans
+
+
+_batch_payload = st.one_of(
+    _html_payload, _text, st.none(), st.just(""),
+    # generator payloads take the vectorized path: mixed in, each batch
+    # holds fast-path and fallback payloads
+    st.integers(0, 40).map(lambda i: make_html_payload(f"b{i}", i % 7)),
+)
+
+
+@settings(max_examples=150, deadline=None)
+@given(st.lists(_batch_payload, max_size=12))
+def test_html_batch_core_equals_oracle_on_fuzz(payloads):
+    _assert_batch_equals_oracle(payloads)
+
+
+# Each rule of the vectorized path and each fallback trigger, forced on
+# purpose: (payload, expected fallback). Every payload sits in a batch
+# with a generator payload, which must stay on the vectorized path.
+_ROUTES = {
+    # the vectorized path
+    "plain_blocks": ("<html><body><p>" + "w " * 20 + "</p><div>tiny</div></body></html>", False),
+    "context_tags": ("<header>head</header><nav><a href='/x'>menu</a></nav>"
+                     "<aside>side</aside><footer>foot</footer>", False),
+    "paired_quotes": ('<a href="/s0" title="x y">link</a><p>' + "z" * 30, False),
+    "mixed_quotes_matched": ("<p title=\"it's\">" + "q" * 30 + "</p>", False),
+    "self_closed_and_void": ("<p>one<br>two<br/>three<img src=x>four<div/>five</p>", False),
+    "slash_in_unquoted_value": ("<p>" + "v" * 30 + "<a href=foo/>link</a></p>", False),
+    "entities": ("<p>&amp;lt;b&amp;gt; &lt;i&gt;&quot;&#39;&nbsp;" + "e" * 25 + "</p>"
+                 "<p>&nbsp;</p>", False),
+    "raw_text_element": ('<p>before</p><script>var s = "<p>x</p>";</script><style>p{}</style>'
+                         "<p>" + "after " * 6 + "</p>", False),
+    "implied_close_reopen": ("<ul><li>one<li>two<li>three</li></ul><p>a<p>b<P>c</p>", False),
+    "implied_close_after_pop": ("<ul><li><b>one</b><li>two</li></ul>", False),
+    "comments_and_doctype": ("<!DOCTYPE html><!-- <p>hidden</p> --><p><![CDATA[<div>]]>"
+                             + "k" * 30 + "</p>", False),
+    "long_tag_name": ("<blockquote>" + "q" * 30 + "</blockquote><customelement>x</customelement>",
+                      False),
+    "non_tag_lt": ("<p>a < b and 1<2 <> c</p>", False),
+    "unicode_whitespace": ("<p>\u3000\xa0</p><p>\u2028 word\u2003\x85 "
+                           + "u" * 25 + "\u3000</p>", False),
+    "deep_nesting": ("<div>" * 12 + "<p>" + "d" * 30 + "</p>" + "</div>" * 12, False),
+    "no_tags": ("just text, no markup at all, long enough", False),
+    # fallback triggers
+    "close_through": ("<b><i>x</b>", True),
+    "stray_close": ("<p>" + "s" * 30 + "</span></p>", True),
+    "quoted_gt": ('<a title="x>y">link</a>', True),
+    "head_over_lt": ("<a href=x<p>text</p>", True),
+    "odd_quote": ("<a title='x>text</a>", True),
+    "raw_text_nested": ("<script><style></script>x", True),
+    "implied_chain_close_through": ("<ul><li>one<li>two</ul>", True),
+}
+
+
+@pytest.mark.parametrize("payload,fallback", list(_ROUTES.values()), ids=list(_ROUTES))
+def test_html_batch_route(payload, fallback):
+    generator = make_html_payload("route", 3)
+    _assert_batch_equals_oracle([generator, payload, None], [False, fallback, False])
+
+
+def test_html_batch_generator_payloads_take_the_vectorized_path():
+    payloads = [make_html_payload(f"g{i // 20}", i % 20) for i in range(300)]
+    _assert_batch_equals_oracle(payloads, [False] * len(payloads))
+
+
+def test_html_batch_rejects_non_string_payloads():
+    """``strip_html`` raises on a payload that is not a string; so does
+    the batch core, which sends the batch to the per-turn degrade."""
+    with pytest.raises(TypeError):
+        strip_html(b"<p>x</p>")
+    with pytest.raises(TypeError):
+        strip_html_batch(["<p>x</p>", b"<p>x</p>"])
+
+
+def test_html_batch_whitespace_set_is_str_isspace():
+    """The batch core's whitespace tables cover every ``str.isspace``
+    code point (they are built from the range below U+3001)."""
+    import sys
+
+    from pdf_parser_spark.operators.html import _WS_CHARS
+
+    assert _WS_CHARS == [c for c in map(chr, range(sys.maxunicode + 1)) if c.isspace()]
 
 
 # --- repetition counters (corpus/textstats.py) ---------------------------

@@ -402,8 +402,26 @@ def test_read_output_recorded_schema_equals_inference(
 
 def test_span_batches_all_or_nothing(monkeypatch):
     """A failure on a later span of a turn must not leave the turn
-    partially emitted (per-turn all-or-nothing degrade, D1 semantics)."""
+    partially emitted (per-turn all-or-nothing degrade, D1 semantics).
+    The batch core's columns hold a span that cannot be cut, so building
+    the batch's rows fails and the batch degrades to the per-turn core,
+    whose second span of the bad turn is malformed."""
+    import numpy as np
+
     import pdf_parser_spark.operators.spans as spans_mod
+    from pdf_parser_spark.operators.html import HtmlColumns
+
+    batch_calls = []
+
+    def fake_batch_core(texts):
+        texts = list(texts)
+        batch_calls.append(texts)
+        n = len(texts)
+        return HtmlColumns(
+            [""] * n, [""] * n, ["abcdef"] * n,
+            np.array([0, 0, 1, 1]), np.array([0, 3, 0, 3]),
+            np.array([3, 6, 3, "end"], dtype=object),  # the bad turn's 2nd span
+            {}, np.zeros(n, bool))
 
     def fake_core(text):
         if text == "bad":
@@ -411,6 +429,7 @@ def test_span_batches_all_or_nothing(monkeypatch):
             return "", "", "abcdef", [(0, 3), (3,)], {}
         return "", "", "abcdef", [(0, 3), (3, 6)], {}
 
+    monkeypatch.setattr(spans_mod, "strip_html_batch", fake_batch_core)
     monkeypatch.setattr(spans_mod, "strip_html", fake_core)
     pdf = pd.DataFrame({
         "conv_id": ["c1", "c2"],
@@ -418,10 +437,40 @@ def test_span_batches_all_or_nothing(monkeypatch):
         "text": ["good", "bad"],
     })
     out = pd.concat(list(spans_mod._span_batches(iter([pdf]))))
+    assert batch_calls == [["good", "bad"]]  # the batch core ran first, once
     # the failing turn emits NOTHING (not just its first span); the good
     # turn emits both spans
     assert list(out["conv_id"]) == ["c1", "c1"]
     assert list(out["span_idx"]) == [0, 1]
+
+
+def test_span_batches_degrade_to_per_turn_rows(monkeypatch):
+    """A batch core that raises makes ``_span_batches`` emit exactly the
+    per-turn rows: ``strip_html`` on each turn, which equal the batch
+    path's rows and the oracle's spans."""
+    import hashlib
+
+    import pdf_parser_spark.operators.spans as spans_mod
+    from pdf_parser_spark.generator import make_html_payload
+    from pdf_parser_spark.oracle.boilerplate import strip_boilerplate
+
+    texts = [make_html_payload("d", 0), "<b><i>close-through</b>" + "x" * 30, None,
+             "", "<p>" + "kept content block " * 3 + "</p>", make_html_payload("d", 1)]
+    pdf = pd.DataFrame({"conv_id": [f"c{i}" for i in range(len(texts))],
+                        "turn_idx": list(range(len(texts))), "text": texts})
+    batch = pd.concat(list(spans_mod._span_batches(iter([pdf]))))
+
+    def broken_batch_core(texts):
+        raise RuntimeError("engine html batch core bug")
+
+    monkeypatch.setattr(spans_mod, "strip_html_batch", broken_batch_core)
+    per_turn = pd.concat(list(spans_mod._span_batches(iter([pdf]))))
+    want = [(f"c{i}", i, j, a, b,
+             hashlib.md5(strip_boilerplate(t)["left_column"][a:b].encode()).hexdigest())
+            for i, t in enumerate(texts)
+            for j, (a, b) in enumerate(strip_boilerplate(t)["spans"])]
+    assert list(per_turn.itertuples(index=False, name=None)) == want
+    assert list(batch.itertuples(index=False, name=None)) == want
 
 
 @pytest.mark.parametrize("poison,variants", [
@@ -447,11 +496,11 @@ def test_extract_batch_falls_back_to_oracle(monkeypatch, poison, variants):
     tools = ["page/v1", "html/v1", "plain", "page/v1", "html/v1", None]
     calls = []
     if poison == "core_raises":
-        def broken_core(text):
-            calls.append(text)
+        def broken_core(texts):
+            calls.append(list(texts))
             raise RuntimeError("engine html core bug")
 
-        monkeypatch.setattr(extract_mod, "strip_html", broken_core)
+        monkeypatch.setattr(extract_mod, "strip_html_batch", broken_core)
     else:
         texts[4] = 3.5  # not a string: both the core and the oracle raise
     pdf = pd.DataFrame({
