@@ -806,12 +806,14 @@ def _extract_html_rows(rows: pd.DataFrame) -> pd.DataFrame:
     """tool='html/v1': DOM boilerplate stripping (north-rule addition).
 
     The batch's html payloads are parsed at once by the engine core
-    ``operators/html.strip_html_batch`` (``tests/test_fuzz.py`` checks it
-    equals the oracle's ``strip_boilerplate``), and the rows are built
-    from its columns. There is no page, so the geometry is fixed and
-    ``right_column`` is always empty. A core exception is not caught
-    here: it sends the whole batch to the per-turn oracle
-    (``_extract_variants``)."""
+    ``operators/html.strip_html_batch``, which parses a payload it cannot
+    reproduce exactly with the oracle's ``strip_boilerplate``
+    (``tests/test_fuzz.py`` checks the core equals that oracle), and the
+    rows are built from its columns. There is no page, so the geometry is
+    fixed and ``right_column`` is always empty. A core exception is not
+    caught here: it sends the whole batch to the per-turn oracle
+    (``_extract_variants``), so every html degrade path ends in
+    ``strip_boilerplate``."""
     if rows.empty:
         return _error_frame(rows["rid"].to_numpy(), rows["turn_idx"], [])
     cols = strip_html_batch(rows["text"])

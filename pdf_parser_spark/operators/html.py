@@ -1,15 +1,15 @@
 """Engine core for html/v1 turns: payload -> boilerplate-stripped layout.
 
-Both html operators read one core: ``extract_layouts`` keeps the header /
-footer / cleaned text and metadata, ``boilerplate_spans`` the span
-offsets. Its output equals the oracle's
-(``oracle/boilerplate.strip_boilerplate``) byte for byte: the tag grammar,
-tag sets, entities and thresholds are imported from the oracle, not
-copied, and ``tests/test_fuzz.py`` checks every field on hostile input.
-The core has two paths with one result.
+Both html operators read one core, ``strip_html_batch``:
+``extract_layouts`` keeps the header / footer / cleaned text and
+metadata, ``boilerplate_spans`` the span offsets. Its output equals the
+reference (``oracle/boilerplate.strip_boilerplate``) byte for byte: the
+tag grammar, tag sets, entities and thresholds are imported from the
+oracle, not copied, and ``tests/test_fuzz.py`` checks every field on
+hostile input.
 
-``strip_html_batch`` parses a whole Arrow batch of payloads at once, with
-no Python loop over tags:
+The core parses a whole Arrow batch of payloads at once, with no Python
+loop over tags:
 
 * the payloads' UTF-8 bytes lie in one buffer; one NumPy scan finds every
   ``<``, ``>``, quote and ``&`` (the special-byte stream). A tag is a
@@ -33,30 +33,26 @@ no Python loop over tags:
   the blocks that fail an RE2 clean-whitespace test are normalized;
   header, footer and content are ``binary_join``-ed per payload.
 
-A payload the vectorized parse cannot reproduce exactly is parsed by
-``strip_html`` and flagged in the ``fallback`` mask. The choice is made
-per payload from the input alone: a pop through or past the top of the
-stack (close-through, or a close tag with nothing of its name on top), a
-tag head with no ``>`` before the next bracket, a quoted ``>`` in a head
-or a quote that does not close before it, a raw-text element that another
-raw-text tag interrupts, an implied-close decision that does not settle,
-and a payload with more than 65,535 tags. The rest (entities, void and
-self-closed tags, comments, implied-close reopens, raw-text elements,
-non-ASCII text and whitespace) stays on the vectorized path.
+A payload the vectorized parse cannot reproduce exactly is parsed by the
+reference ``strip_boilerplate`` itself and flagged in the ``fallback``
+mask, so the core has one parser of its own and one exact fallback. The
+choice is made per payload from the input alone: a pop through or past
+the top of the stack (close-through, or a close tag with nothing of its
+name on top), a tag head with no ``>`` before the next bracket, a quoted
+``>`` in a head or a quote that does not close before it, a raw-text
+element that another raw-text tag interrupts, an implied-close decision
+that does not settle, and a payload with more than 65,535 tags. The rest
+(entities, void and self-closed tags, comments, implied-close reopens,
+raw-text elements, non-ASCII text and whitespace) stays on the
+vectorized path; the generator's payloads, and so every html turn of the
+benchmark workloads, take no fallback.
 
-``strip_html`` stays as the per-payload core: it is the exact path for
-the payloads above, and the per-turn degrade of ``boilerplate_spans``
-when the batch core raises. It is written for the interpreter's per-turn
-cost:
-
-* one ``TAG_RE.split`` per payload and a flat loop over its 5-field
-  stride (text, closing, tag, attrs, self-close) — no ``Match`` objects;
-* an int for the open script/style element instead of a counter lookup
-  per tag; context counters are read only for non-blank text, and link
-  length is measured only inside ``<a>``;
-* no closures: block boundaries are handled inline and blocks are
-  tuples; whitespace is normalized with ``" ".join(s.split())``, which
-  agrees with the oracle's ``\\s+`` regex on every code point.
+The fallback is the reference, not a tuned copy of it, and that is a
+trade: the reference parses a payload about 2.7x slower than a
+hand-tuned per-payload parser did, so on one core a 3,000-payload batch
+in which every payload falls back takes about 700 ms (about 300 ms with
+that parser). No benchmark workload has such a payload; a workload with
+a measurable fallback share is the evidence for a fast per-payload path.
 """
 
 from __future__ import annotations
@@ -79,139 +75,17 @@ from pdf_parser_spark.oracle.boilerplate import (
     TAG_RE,
     VOID_TAGS,
     _unescape,
+    strip_boilerplate,
 )
-
-_QUOTE_OR_SPACE = " \t\r\n'\""
-# an empty non-block tag after the last text segment, so the loop's
-# 5-field stride also covers the tail; pushing "" changes nothing after it
-_END = ("", "", "", "")
-
-
-def _blocks(payload: str) -> list:
-    """Flat text blocks ``(text, depth, link_chars, in_header, in_footer,
-    in_nav)`` — the oracle's ``tokenize_html`` as tuples."""
-    if "<!" in payload:  # every comment / CDATA / declaration starts so
-        payload = _STRIP_RE.sub(" ", payload)
-    parts = TAG_RE.split(payload)
-    parts += _END
-    blocks = []
-    stack = []
-    # open-tag counters (> 0 <=> the tag is on the stack); the context
-    # tags are preset so text segments index them without .get
-    counts = {"header": 0, "footer": 0, "nav": 0, "aside": 0, "a": 0}
-    # 1 while a script/style element is open; no tag opens inside one, so
-    # it is the stack top until its own close tag
-    skip = 0
-    cur = []  # raw text pieces of the open block
-    depth = -1  # stack depth at the block's first non-blank text
-    link = 0
-    in_h = in_f = in_n = False
-    it = iter(parts)
-    for text, closing, tag, attrs, selfclose in zip(it, it, it, it, it):
-        if text and not skip:
-            if "&" in text:
-                text = _unescape(text)
-            if not text.isspace():
-                if depth < 0:
-                    depth = len(stack)
-                if counts["header"]:
-                    in_h = True
-                if counts["footer"]:
-                    in_f = True
-                if counts["nav"] or counts["aside"]:
-                    in_n = True
-                if counts["a"]:
-                    link += len(" ".join(text.split()))
-            cur.append(text)
-
-        tag = tag.lower()
-        if skip:
-            # raw-text element content: only its own close tag ends it
-            if closing and tag == stack[-1]:
-                counts[stack.pop()] -= 1
-                skip = 0
-            continue
-        # a '/' glued to an unquoted attribute value ('<a href=foo/>')
-        # belongs to the value, not a self-close
-        selfclosed = selfclose and (not attrs or attrs[-1] in _QUOTE_OR_SPACE)
-        if tag in BLOCK_TAGS:
-            if cur:  # (with no text the block state is still reset)
-                block = " ".join("".join(cur).split())
-                if block:
-                    blocks.append((block, depth, min(link, len(block)),
-                                   in_h, in_f, in_n))
-                cur = []
-                depth = -1
-                link = 0
-                in_h = in_f = in_n = False
-            if selfclosed:
-                continue
-        elif tag in VOID_TAGS or selfclosed:
-            if cur:
-                cur.append(" ")  # <br>/<img> separate words
-            continue
-        if closing:
-            if counts.get(tag):
-                while (top := stack.pop()) != tag:
-                    counts[top] -= 1
-                counts[tag] -= 1
-        elif not (stack and stack[-1] == tag and tag in IMPLIED_CLOSE_TAGS):
-            # (a same-tag sibling reopen of an implied-close tag leaves the
-            # stack as it was: pop + push)
-            stack.append(tag)
-            counts[tag] = counts.get(tag, 0) + 1
-            if tag in SKIP_CONTENT_TAGS:
-                skip = 1
-
-    if cur:
-        block = " ".join("".join(cur).split())
-        if block:
-            blocks.append((block, depth, min(link, len(block)), in_h, in_f, in_n))
-    return blocks
-
-
-def strip_html(payload: str | None) -> tuple:
-    """html/v1 payload -> ``(header, footer, left_column, spans,
-    metadata)``: the fields of ``strip_boilerplate`` (whose
-    ``right_column`` is always "") with the same values."""
-    blocks = _blocks(payload or "")
-    header, footer, content, spans = [], [], [], []
-    boilerplate = link_chars = offset = 0
-    for text, depth, link, in_h, in_f, in_n in blocks:
-        link_chars += link
-        if in_h:
-            header.append(text)
-        elif in_f:
-            footer.append(text)
-        else:
-            n = len(text)
-            if (in_n or link / n > MAX_LINK_DENSITY or n < MIN_CONTENT_CHARS
-                    or depth > MAX_CONTENT_DEPTH):
-                boilerplate += 1
-            else:
-                content.append(text)
-                spans.append((offset, offset + n))
-                offset += n + 1  # the joining "\n"
-    metadata = {
-        "total_blocks": str(len(blocks)),
-        "content_blocks": str(len(content)),
-        "boilerplate_blocks": str(boilerplate),
-        "header_blocks": str(len(header)),
-        "footer_blocks": str(len(footer)),
-        "total_link_chars": str(link_chars),
-    }
-    return "\n".join(header), "\n".join(footer), "\n".join(content), spans, metadata
-
-
-# --- the batch core ------------------------------------------------------
 
 METADATA_KEYS = ("total_blocks", "content_blocks", "boilerplate_blocks",
                  "header_blocks", "footer_blocks", "total_link_chars")
 
 
 class HtmlColumns(NamedTuple):
-    """``strip_html`` over a batch of payloads, as columns: one entry per
-    payload, and the spans flat in payload order."""
+    """The fields of ``strip_boilerplate`` over a batch of payloads, as
+    columns: one entry per payload, and the spans flat in payload order
+    (``right_column`` is always "" and has no column)."""
 
     header: list
     footer: list
@@ -220,10 +94,10 @@ class HtmlColumns(NamedTuple):
     span_start: np.ndarray
     span_end: np.ndarray
     counts: dict  # METADATA_KEYS -> int64 per payload
-    fallback: np.ndarray  # payloads that went through strip_html
+    fallback: np.ndarray  # payloads that went through strip_boilerplate
 
     def metadata(self) -> list:
-        """Per-payload metadata dicts, as ``strip_html`` returns them."""
+        """Per-payload metadata dicts, as ``strip_boilerplate`` returns them."""
         cols = [self.counts[k].astype(str).tolist() for k in METADATA_KEYS]
         return [dict(zip(METADATA_KEYS, row)) for row in zip(*cols)]
 
@@ -265,7 +139,7 @@ def _byte_table(chars) -> np.ndarray:
     return table
 
 
-_ATTR_END = _byte_table(_QUOTE_OR_SPACE.encode())
+_ATTR_END = _byte_table(b" \t\r\n'\"")
 # every str.isspace() code point (all of them lie below U+3001)
 _WS_CHARS = [c for c in map(chr, range(0x3001)) if c.isspace()]
 _WS_ASCII = _byte_table(ord(c) for c in _WS_CHARS if c < "\x80")
@@ -517,12 +391,12 @@ def _stack_deltas(e_pay, e_open, e_key, e_implied, fallback) -> np.ndarray:
 
 
 def strip_html_batch(texts) -> HtmlColumns:
-    """``strip_html`` over a batch of html/v1 payloads (str or None), as
-    columns: equal to ``[strip_html(t) for t in texts]`` field by field.
-    Payloads the vectorized parse cannot reproduce exactly are parsed by
-    ``strip_html`` and flagged in ``fallback``. The batch is parsed in
-    chunks of about ``_CHUNK_CHARS`` characters, which bounds the size
-    of the per-tag arrays."""
+    """``strip_boilerplate`` over a batch of html/v1 payloads (str or
+    None), as columns: each field equal to the one ``strip_boilerplate``
+    returns for the payload. Payloads the vectorized parse cannot
+    reproduce exactly are parsed by ``strip_boilerplate`` and flagged in
+    ``fallback``. The batch is parsed in chunks of about ``_CHUNK_CHARS``
+    characters, which bounds the size of the per-tag arrays."""
     payloads = list(texts)
     for t in payloads:
         if t is not None and not isinstance(t, str):
@@ -553,7 +427,7 @@ def _strip_chunk(payloads: list) -> HtmlColumns:
     sp, kind = _specials(pad, size)
     fallback = np.zeros(n, bool)
     tags = _read_tags(pad, size, off, sp, kind, fallback)
-    if tags["bang"].size:  # comments, CDATA, declarations: strip_html's substitution
+    if tags["bang"].size:  # comments, CDATA, declarations: the oracle's substitution
         edited = list(payloads)
         for i in tags["bang"].tolist():
             edited[i] = _STRIP_RE.sub(" ", edited[i])
@@ -677,7 +551,7 @@ def _strip_chunk(payloads: list) -> HtmlColumns:
         final[unclean] = len(b_first) + np.arange(len(unclean))
         blocks = pa.concat_arrays([blocks, pa.array(normed, pa.string())])
 
-    # labels, as strip_html assigns them
+    # labels, as the oracle's label_block assigns them
     is_h = b_flags & 1 > 0
     is_f = ~is_h & (b_flags & 2 > 0)
     b_link = np.minimum(b_link, b_len)
@@ -731,18 +605,22 @@ def _empty_columns(n: int) -> HtmlColumns:
 
 
 def _with_fallback(cols: HtmlColumns, payloads: list, fallback: np.ndarray) -> HtmlColumns:
-    """``cols`` with each fallback payload's entries from ``strip_html``."""
+    """``cols`` with each fallback payload's entries as ``strip_boilerplate``
+    returns them."""
     fb = np.flatnonzero(fallback)
     if not fb.size:
         return cols
-    results = [strip_html(payloads[i]) for i in fb.tolist()]
-    for i, (header, footer, main, _spans, _metadata) in zip(fb.tolist(), results):
-        cols.header[i], cols.footer[i], cols.left_column[i] = header, footer, main
-    counts = np.array([[r[4][k] for k in METADATA_KEYS] for r in results]).astype(np.int64)
+    results = [strip_boilerplate(payloads[i]) for i in fb.tolist()]
+    for i, r in zip(fb.tolist(), results):
+        cols.header[i], cols.footer[i], cols.left_column[i] = (
+            r["header"], r["footer"], r["left_column"])
+    counts = np.array([[r["metadata"][k] for k in METADATA_KEYS]
+                       for r in results]).astype(np.int64)
     for k, v in zip(METADATA_KEYS, counts.T):
         cols.counts[k][fb] = v
-    spans = np.array([x for r in results for span in r[3] for x in span], np.int64).reshape(-1, 2)
-    turn = np.r_[cols.span_turn, np.repeat(fb, [len(r[3]) for r in results])]
+    spans = np.array([x for r in results for span in r["spans"] for x in span],
+                     np.int64).reshape(-1, 2)
+    turn = np.r_[cols.span_turn, np.repeat(fb, [len(r["spans"]) for r in results])]
     order = np.argsort(turn, kind="stable")
     return cols._replace(span_turn=turn[order],
                          span_start=np.r_[cols.span_start, spans[:, 0]][order],

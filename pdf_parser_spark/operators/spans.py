@@ -11,8 +11,10 @@ core, offsets and ``block_md5`` against the oracle
 
 The rows are built column-wise from the batch core's span columns; only
 the ``block_md5`` of each span is a Python call. If the batch core raises,
-the batch degrades to the per-turn path: ``strip_html`` on each turn, a
-turn that fails emits no rows and the others emit theirs (D1 semantics).
+the batch degrades to the per-turn path: the oracle's
+``strip_boilerplate`` on each turn (the same reference the batch core
+falls back to per payload), a turn that fails emits no rows and the
+others emit theirs (D1 semantics).
 """
 
 from __future__ import annotations
@@ -25,7 +27,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 
-from pdf_parser_spark.operators.html import strip_html, strip_html_batch
+from pdf_parser_spark.operators.html import strip_html_batch
+from pdf_parser_spark.oracle.boilerplate import strip_boilerplate
 from pdf_parser_spark.pyworker import python_task
 
 SPANS_SCHEMA = (
@@ -60,18 +63,20 @@ def _span_rows(pdf: pd.DataFrame) -> pd.DataFrame:
 
 
 def _span_rows_per_turn(pdf: pd.DataFrame) -> pd.DataFrame:
-    """The span rows of one batch, turn by turn through ``strip_html``."""
+    """The span rows of one batch, turn by turn through the oracle's
+    ``strip_boilerplate``."""
     recs = []
     for conv_id, turn_idx, text in pdf[["conv_id", "turn_idx", "text"]].itertuples(index=False):
         try:
-            _header, _footer, main, spans, _metadata = strip_html(text)
+            layout = strip_boilerplate(text)
+            main = layout["left_column"]
             # accumulate locally and extend() only after the whole
             # turn succeeds — a failure mid-span-list (encode error,
             # int cast) must not leave the turn partially emitted
             # (all-or-nothing per-turn degrade, D1 semantics)
             turn_recs = [
                 (conv_id, int(turn_idx), i, start, end, _md5(main[start:end]))
-                for i, (start, end) in enumerate(spans)
+                for i, (start, end) in enumerate(layout["spans"])
             ]
             recs.extend(turn_recs)
         except Exception:  # noqa: BLE001 — degrade per turn (D1)

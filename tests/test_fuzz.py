@@ -16,7 +16,8 @@ from hypothesis import strategies as st
 from pdf_parser_spark.generator import make_html_payload
 from pdf_parser_spark.goldens import _oracle_blocks
 from pdf_parser_spark.operators.extract import blocks_batch, extract_batch
-from pdf_parser_spark.operators.html import strip_html, strip_html_batch
+from pdf_parser_spark.operators import html
+from pdf_parser_spark.operators.html import strip_html_batch
 from pdf_parser_spark.operators.spans import _span_batches
 from pdf_parser_spark.oracle.boilerplate import strip_boilerplate
 from pdf_parser_spark.oracle.extractor import VARIANTS, extract_turn
@@ -122,6 +123,59 @@ _HTML_FRAGMENTS = (
     ])
 _html_payload = st.lists(st.sampled_from(_HTML_FRAGMENTS),
                          max_size=60).map("".join)
+
+# Well-nested html/v1 documents: every element closes in order, so most
+# draws stay on the batch core's vectorized path (the random fragments
+# above mostly hold a stray or close-through tag, which the core sends to
+# the oracle). Known tags in mixed case with attributes, entities,
+# unicode whitespace, void and self-closed tags, raw-text elements
+# holding tag-like text, comments / CDATA / doctype, nesting past
+# MAX_CONTENT_DEPTH, and implied-close chains (li/p/td/tr/dd), closed or
+# (one in four) left open for the parent to close through. A chain item
+# does not open the chain's own tag, which would reopen the chain.
+_NESTED_TAGS = ("div", "DIV", "section", "article", "main", "header", "footer", "nav",
+                "aside", "h1", "ul", "table", "blockquote", "a", "A", "b", "span", "em",
+                "customelement")
+_nested_attrs = st.sampled_from(["", ' class="x y"', " id='main'", ' href="/a/b?c=1&amp;d=2"',
+                                 " title=\"it's\"", " data-n=1", " href=foo/", " hidden"])
+_nested_text = st.one_of(
+    st.sampled_from(["tiny", "main content words long enough to keep a block",
+                     "&amp;lt;b&amp;gt;", "&lt;i&gt;", "&quot;&#39;", "&nbsp;", "a &amp; b",
+                     "\u3000\xa0", " \n\t", "caf\xe9 \u6f22\u5b57", "1 < 2", "x > y"]),
+    st.text(st.sampled_from("ab \n&;\u2003"), max_size=12),
+)
+_nested_leaf = st.one_of(
+    _nested_text,
+    st.sampled_from(["<br>", "<br/>", "<img src=x>", "<hr />", "<input value='a'>", "<div/>",
+                     '<script>var s = "<p>x</p>"; if (a < b) {}</script>',
+                     "<style>p{}</style>", "<SCRIPT>document.write('</div>')</script>",
+                     "<!-- <p>hidden</p> -->", "<![CDATA[<div>]]>", "<!DOCTYPE html>"]),
+)
+
+
+def _nested_element(children):
+    element = st.builds(lambda tag, attrs, kids: f"<{tag}{attrs}>{''.join(kids)}</{tag}>",
+                        st.sampled_from(_NESTED_TAGS), _nested_attrs,
+                        st.lists(children, max_size=4))
+
+    def chain(tag):
+        item = children.filter(lambda x: not x.lower().startswith(f"<{tag}"))
+        return st.builds(lambda items, close: "".join(f"<{tag}>{x}" for x in items)
+                         + (f"</{tag}>" if close else ""),
+                         st.lists(item, min_size=1, max_size=4),
+                         st.sampled_from([True, True, True, False]))
+
+    return st.one_of(element, element,
+                     st.sampled_from(["li", "p", "td", "tr", "dd"]).flatmap(chain))
+
+
+_nested_html = st.builds(
+    lambda head, nodes, wrap: (f"{head}<html><body>{''.join(nodes)}</body></html>"
+                               if wrap else head + "".join(nodes)),
+    st.sampled_from(["", "<!DOCTYPE html>"]),
+    st.lists(st.recursive(_nested_leaf, _nested_element, max_leaves=25), max_size=6),
+    st.booleans(),
+)
 
 _any_payload = st.one_of(
     _page_payload, _html_payload, _text, st.none(),
@@ -308,12 +362,14 @@ def _assert_html_core_equals_oracle(payload):
     import hashlib
 
     want = strip_boilerplate(payload)
-    header, footer, main, spans, metadata = strip_html(payload)
-    assert header == want["header"], payload
-    assert footer == want["footer"], payload
-    assert main == want["left_column"], payload
+    cols = strip_html_batch([payload])
+    metadata = cols.metadata()[0]
+    assert cols.header == [want["header"]], payload
+    assert cols.footer == [want["footer"]], payload
+    assert cols.left_column == [want["left_column"]], payload
     assert want["right_column"] == ""
-    assert spans == want["spans"], payload
+    assert not cols.span_turn.any()
+    assert list(zip(cols.span_start.tolist(), cols.span_end.tolist())) == want["spans"], payload
     assert metadata == want["metadata"], payload
     assert list(metadata) == list(want["metadata"])
 
@@ -327,7 +383,7 @@ def _assert_html_core_equals_oracle(payload):
 
 
 @settings(max_examples=500, deadline=None)
-@given(st.one_of(_html_payload, _text, st.none()))
+@given(st.one_of(_html_payload, _nested_html, _text, st.none()))
 def test_html_core_equals_oracle_on_fuzz(payload):
     _assert_html_core_equals_oracle(payload)
 
@@ -393,7 +449,7 @@ def _assert_batch_equals_oracle(payloads, fallback=None):
 
 
 _batch_payload = st.one_of(
-    _html_payload, _text, st.none(), st.just(""),
+    _html_payload, _nested_html, _text, st.none(), st.just(""),
     # generator payloads take the vectorized path: mixed in, each batch
     # holds fast-path and fallback payloads
     st.integers(0, 40).map(lambda i: make_html_payload(f"b{i}", i % 7)),
@@ -456,12 +512,35 @@ def test_html_batch_generator_payloads_take_the_vectorized_path():
 
 
 def test_html_batch_rejects_non_string_payloads():
-    """``strip_html`` raises on a payload that is not a string; so does
-    the batch core, which sends the batch to the per-turn degrade."""
-    with pytest.raises(TypeError):
-        strip_html(b"<p>x</p>")
+    """The batch core raises on a payload that is not a string, which
+    sends the batch to the per-turn degrade."""
     with pytest.raises(TypeError):
         strip_html_batch(["<p>x</p>", b"<p>x</p>"])
+
+
+@pytest.mark.parametrize("chunk_chars", [1, 50, 700])
+def test_html_batch_merges_chunks(monkeypatch, chunk_chars):
+    """A batch parsed in many chunks equals the oracle per payload, with
+    its spans in payload order: generator, fallback, ``None`` and ``""``
+    payloads mixed, chunks of one payload, of several and of only
+    empty ones."""
+    fallback = [(p, fb) for p, fb in _ROUTES.values() if fb]
+    payloads, want_fallback = [None, ""], [False, False]
+    for i in range(24):
+        route, fb = fallback[i % len(fallback)] if i % 3 else _ROUTES["entities"]
+        payloads += [make_html_payload(f"m{i}", i % 7), route, [None, "", "<p>x</p>"][i % 3]]
+        want_fallback += [False, fb, False]
+    chunks = []
+    strip_chunk = html._strip_chunk
+    monkeypatch.setattr(html, "_CHUNK_CHARS", chunk_chars)
+    monkeypatch.setattr(html, "_strip_chunk",
+                        lambda chunk: chunks.append(len(chunk)) or strip_chunk(chunk))
+    _assert_batch_equals_oracle(payloads, want_fallback)
+    # strip_html_batch, extract_batch and _span_batches each cut the
+    # batch at least after every generator payload, and the leading
+    # None and "" form a chunk of their own
+    assert len(chunks) >= 3 * 25 and chunks[0] == 2
+    assert sum(want_fallback) == 16
 
 
 def test_html_batch_whitespace_set_is_str_isspace():

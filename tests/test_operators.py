@@ -404,8 +404,9 @@ def test_span_batches_all_or_nothing(monkeypatch):
     """A failure on a later span of a turn must not leave the turn
     partially emitted (per-turn all-or-nothing degrade, D1 semantics).
     The batch core's columns hold a span that cannot be cut, so building
-    the batch's rows fails and the batch degrades to the per-turn core,
-    whose second span of the bad turn is malformed."""
+    the batch's rows fails and the batch degrades to the per-turn oracle
+    (``strip_boilerplate``), whose second span of the bad turn is
+    malformed."""
     import numpy as np
 
     import pdf_parser_spark.operators.spans as spans_mod
@@ -423,14 +424,14 @@ def test_span_batches_all_or_nothing(monkeypatch):
             np.array([3, 6, 3, "end"], dtype=object),  # the bad turn's 2nd span
             {}, np.zeros(n, bool))
 
-    def fake_core(text):
-        if text == "bad":
-            # second span is malformed -> unpack raises mid-turn
-            return "", "", "abcdef", [(0, 3), (3,)], {}
-        return "", "", "abcdef", [(0, 3), (3, 6)], {}
+    def fake_oracle(text):
+        # second span of the bad turn is malformed -> unpack raises mid-turn
+        spans = [(0, 3), (3,)] if text == "bad" else [(0, 3), (3, 6)]
+        return {"header": "", "footer": "", "left_column": "abcdef",
+                "right_column": "", "spans": spans, "metadata": {}}
 
     monkeypatch.setattr(spans_mod, "strip_html_batch", fake_batch_core)
-    monkeypatch.setattr(spans_mod, "strip_html", fake_core)
+    monkeypatch.setattr(spans_mod, "strip_boilerplate", fake_oracle)
     pdf = pd.DataFrame({
         "conv_id": ["c1", "c2"],
         "turn_idx": [0, 1],
@@ -446,7 +447,7 @@ def test_span_batches_all_or_nothing(monkeypatch):
 
 def test_span_batches_degrade_to_per_turn_rows(monkeypatch):
     """A batch core that raises makes ``_span_batches`` emit exactly the
-    per-turn rows: ``strip_html`` on each turn, which equal the batch
+    per-turn rows: ``strip_boilerplate`` on each turn, which equal the batch
     path's rows and the oracle's spans."""
     import hashlib
 
